@@ -670,9 +670,9 @@ def q_fts_hot_covered(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_fts_direct_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ZERO-JOB driver-direct read-through under the oracle (r5):
     the same real index as fts_bm25_index_path, searched with
-    driver_direct forced ON (operators/query.search_index_files_direct
-    — driver-side pyarrow scan of the same task body, numpy scoring,
-    Arrow result relation, no Spark job). Same oracle SQL as
+    driver_direct forced ON (operators/query.search_index_files_batch's
+    direct feeder — driver-side pyarrow scan of the same task body,
+    numpy scoring, Arrow result relation, no Spark job). Same oracle SQL as
     fts_bm25_index_path: cross-engine proof the small-index fast path
     changes execution, not values."""
     import shutil

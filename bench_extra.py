@@ -144,38 +144,37 @@ def main() -> None:
         index.search("warm once more", 10).collect()
 
         from codebased_spark.operators.query import (
-            _batch_result_df,
-            _collect_bounded,
-            _file_candidates_fn,
-            _files_df,
+            BATCH_SCHEMA,
+            _batch_candidates_fn,
             _finish_rows,
-            _parse_single,
-            _prune_posting_files,
-            CAND2_SCHEMA,
+            _parse_batch,
+            _prune_batch,
+            _scan_df,
         )
 
         out: dict = {}
         for name, q in QUERIES.items():
-            got = _parse_single(q, index.n_docs, None)
-            if got is None:
+            parsed, _known = _parse_batch([q], index.n_docs, {})
+            if not parsed:
                 out[name] = {"note": "no-parse"}
                 continue
-            phrases, term_ids, needed, known = got
             t = time.time()
-            files = _prune_posting_files(index.posting_files, term_ids, None,
-                                         index.term_blocks)
+            files, parsed, _known, needed = _prune_batch(
+                index.posting_files, parsed, {}, index.term_blocks)
             prune_s = time.time() - t
-            if not files:
+            if not parsed:
                 out[name] = {"note": "pruned-to-zero",
                              "prune_ms": round(prune_s * 1e3, 2)}
                 continue
+            _qi, phrases, term_ids = parsed[0]
             reps = []
             for _ in range(3):
                 t = time.time()
-                cand = _files_df(spark, files).mapInPandas(
-                    _file_candidates_fn(term_ids, needed, None, 32,
-                                        index.avgdl, None),
-                    CAND2_SCHEMA,
+                cand = _scan_df(
+                    spark, files,
+                    _batch_candidates_fn([(0, term_ids)], needed, None, 32,
+                                         index.avgdl),
+                    BATCH_SCHEMA,
                 )
                 rows = cand.collect()
                 t_collect = time.time() - t
@@ -198,20 +197,6 @@ def main() -> None:
         t = time.time()
         sc.parallelize(range(32), 32).count()
         floors["rdd_count_32tasks_2"] = round(time.time() - t, 3)
-        import pandas as pd
-
-        def _noop(it):
-            for pdf in it:
-                yield pdf
-
-        t = time.time()
-        _files_df(spark, index.posting_files).mapInPandas(
-            _noop, "pblock int, path string").collect()
-        floors["filesdf_noop_mapInPandas"] = round(time.time() - t, 3)
-        t = time.time()
-        _files_df(spark, index.posting_files).mapInPandas(
-            _noop, "pblock int, path string").collect()
-        floors["filesdf_noop_mapInPandas_2"] = round(time.time() - t, 3)
         print(json.dumps({"section": "query_phases", "sf": sf,
                           "queries": out, "floors": floors}))
 

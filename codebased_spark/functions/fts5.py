@@ -17,7 +17,9 @@ Semantics pinned here (each has a probe test):
 - casefold then every contiguous 3-char substring; len<3 -> no tokens.
 - tf counts OVERLAPPING occurrences ("aaaa" contains "aaa" twice).
 - a query is a conjunction (AND) of phrases; each phrase is an exact
-  case-folded substring match; any phrase shorter than 3 chars -> 0 rows.
+  case-folded substring match. A phrase shorter than 3 chars has no
+  trigrams and drops out of the conjunction (``"type" "ab"`` ranks
+  exactly like ``"type"``); a query left with no phrase -> 0 rows.
 - DL (document length) = sum over the 3 columns of max(0, len-2) and is
   whole-row even for column-filtered matches.
 - column-filtered match (``name MATCH q``): n(p) and tf count only that
@@ -79,6 +81,13 @@ def parse_phrases(quoted_query: str) -> list[str]:
 def query_phrases(query: str) -> list[str]:
     """User query -> list of case-folded phrases (the unit of matching)."""
     return [casefold(p) for p in parse_phrases(quote_fts_query(query))]
+
+
+def match_phrases(query: str) -> list[str]:
+    """The phrases a query is matched and ranked on: :func:`query_phrases`
+    minus those shorter than 3 chars, which FTS5 drops from the
+    conjunction. Empty -> the query matches nothing."""
+    return [p for p in query_phrases(query) if len(p) >= 3]
 
 
 def trigrams(text: str) -> list[str]:

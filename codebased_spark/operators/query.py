@@ -1,32 +1,37 @@
 """Index-backed query execution (operators Q1-Q7 of SURVEY.md §2.4).
 
-Per-block candidate generation runs inside one applyInPandas over the
-pruned posting rows; everything after (phrase df, idf, scoring, the
-reference's two-branch union/dedupe/top-k) is JVM-side DataFrame algebra.
+One query path — a single search is a batch of one
+(search_index_files_batch):
 
-Physical plan per query:
+  driver: parse (_parse_batch; sub-trigram phrases drop out, as in
+    |     FTS5) -> presence-prune the shard list (_prune_batch) ->
+    |     candidate-row bound, charged per task (_tail_bound)
+    |  scan feeder, the ONE fork:
+    |    Spark   spark.range over the shard list -> mapInPandas
+    |            (_scan_df): one Spark job
+    |    direct  the same task body run on the driver
+    |            (_direct_scan_rows): no Spark job; small stores only
+    |            (DRIVER_DIRECT_MAX_BYTES / DRIVER_DIRECT_MAX_SHARDS)
+  task body (_batch_candidates_fn), per shard:
+    |  pyarrow read of the row groups holding the query trigrams
+    |  (rows sorted by term; footer min/max pruning) ->
+    |  positional intersection per block: doc-list intersect (rarest
+    |  term first), then shifted position-key intersect; a block
+    |  missing a required trigram is skipped; dl rides in the posting
+    |  rows, so there is no doc_stats join ->
+    |  per task: one summed df-stat row per (query, phrase) and the
+    |  emission-pruned doc rows (<= 2*top_k per query single-phrase,
+    |  a k-skyband multi-phrase)
+  tail (_finish): ONE collect of the candidates -> df agg, idf, BM25
+     sum, two-branch top-k, union/dedupe/top-k per query, in numpy
+     (bit-identical float pipeline); candidate sets beyond
+     DRIVER_FINISH_MAX run the JVM flat plan against the same
+     persisted candidates (reference CTE: codebased/search.py:240-302)
 
-  postings (parquet, partitioned by pblock)
-    |  filter term IN <query trigrams>      <- pushed into the scan:
-    |                                          partition dirs stay pruned,
-    |                                          row-groups skip via min/max
-    |                                          stats (rows sorted by term)
-    |  groupBy(pblock).applyInPandas        <- positional intersection:
-    |                                          doc-list intersect (rarest
-    |                                          term first) then shifted
-    |                                          position-key intersect;
-    |                                          skip-decode when a required
-    |                                          trigram is absent in block
-    |                                          (dl inlined in posting rows
-    |                                          -> no doc_stats join)
-    |  ONE collect of the emission-pruned candidates (bounded:
-    |  2*top_k/block single-phrase, k-skyband multi-phrase) ->
-    |  df agg, idf, BM25 sum, two-branch top-k, union/dedupe/top-k all
-    |  finish driver-side in numpy (bit-identical float pipeline) —
-    |  a single Spark job per query; candidate sets beyond
-    |  DRIVER_FINISH_MAX fall back to the JVM plan (whole-stage
-    |  codegen + TakeOrderedAndProject) against the same persisted
-    |  candidates (reference CTE: codebased/search.py:240-302)
+The generic DataFrame scan (search_index) serves stores pyarrow cannot
+reach: a pushed-down term filter and one applyInPandas group per
+pblock feed per-block candidates, with a literal qid 0, into the same
+tail.
 
 Exactness: identical scores to operators/score.py (brute force) and to
 SQLite FTS5 — phrase tf via consecutive-position intersection equals
@@ -47,11 +52,12 @@ for multi-trigram phrases is irreducible, and what CAN be pruned is:
    groups; the pyarrow scan's term filter reads only groups whose
    [min,max] covers a query trigram (~10x less read per query).
 2. Emission: for single-phrase queries both final branches order by
-   (positive global idf) x norm(tf, dl), so each block emits only its
-   local branch top-k by norm — any doc it drops is beaten by >= k docs
-   from its own block under every possible idf. df stats are taken
-   before pruning. (Multi-phrase scores mix per-phrase idfs unknown at
-   task time; their conjunction already bounds emission.)
+   (positive global idf) x norm(tf, dl), so each block, and then each
+   task across its blocks (_task_emission_prune), emits only its local
+   branch top-k by norm — any doc it drops is beaten by >= k docs it
+   kept under every possible idf. df stats are taken before pruning.
+   Multi-phrase scores mix per-phrase idfs unknown at task time; those
+   emit their Pareto k-skyband (_pareto_survivors).
 3. Block-Max WAND proper: a single-trigram phrase occurring only in the
    content column needs no position verification (tf = trigram tf, df =
    stored row df), so the per-chunk (skip_max_tf, skip_min_dl) bound is
@@ -79,7 +85,7 @@ from codebased_spark.functions.codec import (
     slice_chunks,
 )
 from codebased_spark.functions.fts5 import idf as idf_fn
-from codebased_spark.functions.fts5 import phrase_terms, query_phrases
+from codebased_spark.functions.fts5 import match_phrases, phrase_terms
 
 _POS_BITS = 32  # (local doc index << 32) | shifted position
 
@@ -700,12 +706,13 @@ def _single_trigram_wand(r: _Row, top_k: int, avgdl: float):
     return kd[o], kt[o], kl[o]
 
 
-def _query_block_frames(rows, phrase_term_ids, deleted, qid=None, cache=None,
+def _query_block_frames(rows, phrase_term_ids, deleted, cache=None,
                         top_k=None, avgdl=None, known_idfs=None):
     """One query's per-block computation over pre-built _Row handles:
-    returns (stats_tuples, doc_frame_or_None). Shared by the single-query
-    and batched UDFs; ``cache`` memoizes per-(phrase, col) results so
-    batched queries sharing phrases decode once.
+    returns (stats_tuples, doc_frame_or_None). Shared by the shard-scan
+    task body, the generic applyInPandas scan and the phrase-df stats
+    job; ``cache`` memoizes per-(phrase, col) results so batched
+    queries sharing phrases decode once.
 
     ``top_k``/``avgdl`` enable two EXACT pruning layers (see module
     docstring "Top-k pruning"):
@@ -874,8 +881,9 @@ def _empty_cand_pdf() -> pd.DataFrame:
 
 
 def _block_candidates_pdf(pdf: pd.DataFrame, phrase_term_ids, deleted,
-                          top_k=None, avgdl=None, known_idfs=None) -> pd.DataFrame:
-    """One block's posting rows -> candidate rows.
+                          top_k=None, avgdl=None) -> pd.DataFrame:
+    """One block's posting rows -> candidate rows (the generic scan's
+    and the phrase-df stats job's per-block unit).
 
     Emits TWO row kinds (the conjunction and the per-doc aggregation are
     pushed INTO the block task, so no doc-keyed shuffle ever happens):
@@ -885,28 +893,17 @@ def _block_candidates_pdf(pdf: pd.DataFrame, phrase_term_ids, deleted,
       matching the phrase, before any conjunction, per FTS5 idf).
     - kind=1 (one per SURVIVING doc): docs matching every phrase
       (tf_all>0 for all), with per-phrase tf arrays + dl. The per-doc
-      BM25 sum happens later as a codegen'd projection; survivors of the
+      BM25 sum happens in the scoring tail; survivors of the
       conjunction are typically a small fraction of per-phrase matches.
     """
     rows = {
         (int(r["term"]), int(r["col"])): _Row(r)
         for _, r in pdf.iterrows()
     }
-    return _candidates_from_rows(rows, phrase_term_ids, deleted, top_k,
-                                 avgdl, known_idfs)
-
-
-def _candidates_from_rows(rows: dict, phrase_term_ids, deleted,
-                          top_k=None, avgdl=None, known_idfs=None) -> pd.DataFrame:
-    """Candidate rows from an already-built {(term, col): _Row} dict —
-    the shared tail of the pandas (_block_candidates_pdf) and
-    arrow-native (_file_candidates_fn) block scans."""
     stats, doc_frame = _query_block_frames(
-        rows, phrase_term_ids, deleted, top_k=top_k, avgdl=avgdl,
-        known_idfs=known_idfs,
-    )
+        rows, phrase_term_ids, deleted, top_k=top_k, avgdl=avgdl)
     frames = []
-    if stats and known_idfs is None:  # dfs known globally -> no stat rows
+    if stats:
         frames.append(pd.DataFrame(
             [(0, pi, da, dn, 0, 0, None, None) for pi, da, dn in stats],
             columns=_CAND_COLS))
@@ -938,10 +935,10 @@ def _task_emission_prune(doc_frames, n_ph, top_k, avgdl, known_idfs):
       norm(tf, dl), so a doc outside the task's branch top-k by norm
       is beaten by >= top_k retained task-mates under every idf.
     - multi phrase: Pareto k-skyband over the task's docs.
-    df stats (kind=0 rows) are emitted per block BEFORE this prune,
-    exactly as before — idf stays exact. Ties break on doc_id through
-    the same lexsort keys as _finish_rows, so retained sets agree
-    with the driver's final ranking bit-for-bit.
+    df stats (kind=0 rows) are summed per task from every block's
+    UNPRUNED counts, before this prune — idf stays exact. Ties break
+    on doc_id through the same lexsort keys as _finish_rows, so
+    retained sets agree with the driver's final ranking bit-for-bit.
 
     ``doc_frames``: [(docs, dl, [tf rows], [tf rows])] per block;
     returns the concatenated-and-pruned (docs, dl, ta, tn) with
@@ -976,21 +973,17 @@ def _task_emission_prune(doc_frames, n_ph, top_k, avgdl, known_idfs):
     return common[keep], dl[keep], ta[keep], tn[keep]
 
 
-def _doc_frame_pdf(docs, dl, ta, tn, qid=None) -> pd.DataFrame:
-    cols = {"kind": 1, "phrase": -1, "df_all": 0, "df_name": 0,
-            "doc_id": docs, "dl": dl, "tfs_all": list(ta), "tfs_name": list(tn)}
-    if qid is not None:
-        cols = {"qid": qid, **cols}
-    return pd.DataFrame(cols)
+def _doc_frame_pdf(docs, dl, ta, tn, qid) -> pd.DataFrame:
+    return pd.DataFrame(
+        {"qid": qid, "kind": 1, "phrase": -1, "df_all": 0, "df_name": 0,
+         "doc_id": docs, "dl": dl, "tfs_all": list(ta), "tfs_name": list(tn)})
 
 
-def _candidates_fn(phrase_term_ids: list[list[int]], deleted: "np.ndarray | None" = None,
-                   top_k=None, avgdl=None):
-    """applyInPandas wrapper over :func:`_block_candidates_pdf` with a
-    fixed (driver-provided) tombstone array — the no-deletes path."""
+def _candidates_fn(phrase_term_ids: list[list[int]], top_k=None, avgdl=None):
+    """applyInPandas over one pblock's posting rows (no tombstones)."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _block_candidates_pdf(pdf, phrase_term_ids, deleted, top_k, avgdl)
+        return _block_candidates_pdf(pdf, phrase_term_ids, None, top_k, avgdl)
 
     return fn
 
@@ -1189,12 +1182,20 @@ BATCH_SCHEMA = "qid int, " + CAND2_SCHEMA
 
 def _batch_candidates_fn(queries_terms, needed, deletes_dir=None,
                          top_k=None, avgdl=None, known_idfs_by_qid=None):
-    """mapInPandas over (pblock, path) rows for MANY queries at once:
-    one pyarrow scan + one set of _Row handles per block serves every
-    query; a per-(phrase) memo means queries sharing phrases decode and
-    intersect once. Amortizes the per-job floor across a query batch.
-    Queries present in ``known_idfs_by_qid`` (phrase-df side table
-    coverage) take the covered WAND path and emit no stat rows."""
+    """The candidate-scan task body: a generator over (pblock, path)
+    row batches, run by Spark's mapInPandas or driver-side by
+    :func:`_direct_scan_rows`, for a batch of queries (a single search
+    is a batch of one). Each shard is read through pyarrow with a term
+    filter and column selection — Spark's parquet reader would decode
+    whole row groups of the blob columns first, ~5-10x the work. One
+    read and one set of _Row handles per block serve every query, and
+    a per-(phrase) memo means queries sharing phrases decode and
+    intersect once. Queries present in ``known_idfs_by_qid`` (phrase-df
+    side table coverage) take the covered WAND path and emit no stat
+    rows. Per task the output is one summed df-stat row per (query,
+    phrase) plus each query's doc rows after :func:`_task_emission_prune`
+    — O(top_k) rows per query per task, the unit :func:`_tail_bound`
+    charges."""
     cols = ["qid", "kind", "phrase", "df_all", "df_name", "doc_id", "dl",
             "tfs_all", "tfs_name"]
     known_idfs_by_qid = known_idfs_by_qid or {}
@@ -1229,8 +1230,10 @@ def _batch_candidates_fn(queries_terms, needed, deletes_dir=None,
                     if doc_frame is not None:
                         frames_by_qid.setdefault(qid, []).append(doc_frame)
         if stat_sums:
-            # additive df stats: one partial-sum row per (query,
-            # phrase) per task, not per block (see _file_candidates_fn)
+            # df stats are additive across blocks and every consumer
+            # SUMS them (driver finish and JVM plan alike), so one
+            # partial-sum row per (query, phrase) per task replaces one
+            # row per block
             yield pd.DataFrame(
                 [(qid, 0, pi, da, dn, 0, 0, None, None)
                  for (qid, pi), (da, dn) in sorted(stat_sums.items())],
@@ -1253,33 +1256,23 @@ def _batch_candidates_fn(queries_terms, needed, deletes_dir=None,
     return fn
 
 
-def _files_df(spark, posting_files):
-    """(pblock, path) DataFrame spread over tasks AT CREATION
-    (sc.parallelize with explicit slices) — a repartition() here would
-    be a shuffle exchange that AQE materializes as an extra Spark job
-    per query; this way the shard scan is the query's only job.
-
-    Kept for the generic callers/tests; the engine's query paths use
-    :func:`_scan_df` (JVM range source — r7) instead: a python-RDD
-    source costs ~0.27 s PER JOB in python-partition deserialization
-    round trips before the scan function even runs (measured: a no-op
-    mapInPandas over this DF is 0.58 s vs 0.36 s over a range source)."""
-    n_part = min(len(posting_files), max(2, spark.sparkContext.defaultParallelism))
-    rdd = spark.sparkContext.parallelize(list(posting_files), n_part)
-    return spark.createDataFrame(rdd, "pblock int, path string")
+def _scan_tasks(spark, n_files: int) -> int:
+    """Task count of a Spark shard scan over ``n_files`` shards: the
+    slicing :func:`_scan_df` uses and the task count :func:`_tail_bound`
+    charges on the Spark feeder (one definition, so they cannot drift)."""
+    return min(n_files, max(2, spark.sparkContext.defaultParallelism))
 
 
 def _scan_df(spark, posting_files, fn, schema):
     """``mapInPandas(fn)`` over (pblock, path) rows with a JVM-NATIVE
     range source: the shard list rides in the function closure and is
     resolved inside the SAME python eval that scans, so the query's
-    one Spark job pays exactly one python round trip per task (the
-    python-RDD `_files_df` source paid two — deserialize + scan).
-    Partitioning is identical to `_files_df` (min(len(files),
-    defaultParallelism) contiguous slices); per-block outputs are
-    independent rows, so results do not depend on the slicing."""
+    one Spark job pays exactly one python round trip per task (a
+    python-RDD source pays two — deserialize + scan, ~0.27 s per job).
+    The range splits into :func:`_scan_tasks` contiguous slices;
+    per-block outputs are independent rows, so results do not depend
+    on the slicing."""
     files = list(posting_files)
-    n_part = min(len(files), max(2, spark.sparkContext.defaultParallelism))
 
     def outer(it):
         def chunks():
@@ -1290,6 +1283,7 @@ def _scan_df(spark, posting_files, fn, schema):
                      "path": [files[int(i)][1] for i in ids]})
         yield from fn(chunks())
 
+    n_part = _scan_tasks(spark, len(files))
     return spark.range(0, len(files), 1, n_part).mapInPandas(outer, schema)
 
 
@@ -1303,215 +1297,71 @@ def search_index_files_batch(
     deletes_dir=None,
     phrase_dfs_by_query: "dict[int, list[tuple[int, int]]] | None" = None,
     presence=None,
+    direct: bool = False,
 ) -> DataFrame:
-    """Batched two-branch FTS search: one shared posting scan serves
-    every query, and the scoring tail finishes driver-side — ONE Spark
-    job for the whole batch in the common case (the JVM flat plan
-    remains the fallback above DRIVER_FINISH_MAX candidate rows, one
-    extra job against the same persisted candidates). Returns
-    (qid, doc_id, name_match, rank, score); queries yielding no results
-    (invalid phrases / failed AND) simply have no rows.
+    """Two-branch FTS search of a batch of queries over the posting
+    shards: the engine's query path (FtsIndex.search runs a batch of
+    one). Returns (qid, doc_id, name_match, rank, score); queries
+    yielding no results (no phrase of 3+ chars, failed AND, pruned to
+    zero shards) simply have no rows.
 
-    The scoring plan is FLAT in batch width (VERDICT r02 #5): per-query
-    idf vectors live in a broadcast (qid, idf_all, idf_name) lookup
-    joined to the candidate rows, and ONE zip_with/aggregate expression
-    scores every query — plan size is constant whether the batch holds
-    6 queries or 1,000 (it was previously 2 unioned branches per
-    query). The fold multiplies and adds in the same order as the
-    per-query literal expression chain, so scores stay bit-identical
-    to :func:`search_index_files` (pinned by test)."""
-    from pyspark.sql.window import Window
+    One parse/prune, one task body (:func:`_batch_candidates_fn`) and
+    one scoring tail (:func:`_finish`) serve every caller. The only
+    fork is the scan feeder:
+    - ``direct=False``: Spark (:func:`_scan_df`) — ONE Spark job for
+      the whole batch when the tail finishes on the driver;
+    - ``direct=True``: the same task body run driver-side
+      (:func:`_direct_scan_rows`) — ZERO Spark jobs, the latency floor
+      for small (embedded-regime) stores; FtsIndex picks it by the
+      DRIVER_DIRECT_MAX_BYTES / _MAX_SHARDS gate. Its rows are in driver
+      memory already, so they always finish there; a batch whose
+      candidate bound exceeds DRIVER_FINISH_MAX takes the Spark feeder
+      instead, where the JVM tail can run.
 
-    empty = _batch_result_df(spark, [])
+    ``phrase_dfs_by_query`` ({qid: one (df_all, df_name) per kept
+    phrase}, from the phrase-df side table) enables the covered fast
+    path for those queries: idfs are computed driver-side, blocks run
+    multi-trigram WAND with exact branch-top-k emission, and no df-stat
+    rows flow. ``presence`` (a presence.TermBlocks) prunes
+    provably-irrelevant shards before any read. Results are
+    bit-identical in every combination (pinned by tests)."""
     phrase_dfs_by_query = phrase_dfs_by_query or {}
-    parsed, known_idfs_by_qid, needed = _parse_batch(
+    parsed, known_idfs_by_qid = _parse_batch(
         queries, n_docs, phrase_dfs_by_query)
+    if parsed and posting_files:
+        posting_files, parsed, known_idfs_by_qid, needed = _prune_batch(
+            posting_files, parsed, known_idfs_by_qid, presence)
     if not parsed or not posting_files:
-        return empty
-    posting_files, parsed, known_idfs_by_qid, needed = _prune_batch(
-        posting_files, parsed, known_idfs_by_qid, presence)
-    if not parsed or not posting_files:
-        return empty
-    # Tail routing on the driver-side candidate bound (VERDICT r03 #2,
-    # same derivation as _tail_bound): when even the optimistic bound
-    # exceeds the cap, go straight to the JVM plan with no probe
-    # collect; when the bound is exact (all queries single-phrase or
-    # side-table covered: <= 2*top_k rows/block, no stat rows) and
-    # under the cap, collect plainly with no limit probe.
+        return _batch_result_df(spark, [])
+    # a covered query emits no stat rows and at most the exact union of
+    # its two branch top-ks per task: charged like a single phrase
+    phrase_counts = [1 if qi in known_idfs_by_qid else len(phrases)
+                     for qi, phrases, _ in parsed]
+
+    def task_fn():
+        return _batch_candidates_fn(
+            [(qi, tids) for qi, _, tids in parsed], needed, deletes_dir,
+            top_k, avgdl, known_idfs_by_qid)
+
+    if direct:
+        chunks = _direct_chunks(posting_files)
+        bound, _exact = _tail_bound(len(chunks), phrase_counts, top_k)
+        if bound <= DRIVER_FINISH_MAX:
+            return _driver_tail(spark, _direct_scan_rows(task_fn, chunks),
+                                parsed, phrase_dfs_by_query, n_docs, avgdl,
+                                top_k)
     bound, exact = _tail_bound(
-        len(posting_files),
-        [1 if qi in known_idfs_by_qid else len(phrases)
-         for qi, phrases, _ in parsed],
-        top_k,
-    )
-    cand = _scan_df(
-        spark, posting_files,
-        _batch_candidates_fn([(qi, tids) for qi, _, tids in parsed], needed,
-                             deletes_dir, top_k, avgdl, known_idfs_by_qid),
-        BATCH_SCHEMA,
-    ).persist()
-    try:
-        # one-job driver finish, same as the single-query tail: pull the
-        # emission-pruned candidates once and score every query in numpy
-        if bound > DRIVER_FINISH_MAX:
-            rows = None
-        elif exact:
-            rows = cand.collect()
-        else:
-            rows = _collect_bounded(cand, DRIVER_FINISH_MAX)
-        if rows is not None and len(rows) <= DRIVER_FINISH_MAX:
-            by_q: dict[int, list] = {}
-            for r in rows:
-                by_q.setdefault(int(r["qid"]), []).append(r)
-            out_rows = []
-            for qi, phrases, _tids in parsed:
-                fin = _finish_rows(by_q.get(qi, []), len(phrases),
-                                   n_docs, avgdl, top_k,
-                                   phrase_dfs_by_query.get(qi))
-                out_rows.extend((qi, d, nm, rk, -rk) for d, nm, rk in fin)
-            if not out_rows:
-                return empty
-            return _batch_result_df(spark, out_rows)
-        # fallback: JVM flat plan over the same persisted candidates
-        dfs = {
-            (int(r["qid"]), int(r["phrase"])): (int(r["sa"]), int(r["sn"]))
-            for r in cand.filter(F.col("kind") == 0)
-            .groupBy("qid", "phrase")
-            .agg(F.sum("df_all").alias("sa"), F.sum("df_name").alias("sn"))
-            .collect()
-        }
-        idf_rows = []
-        for qi, phrases, _tids in parsed:
-            n_ph = len(phrases)
-            if qi in known_idfs_by_qid:
-                ia, iname = known_idfs_by_qid[qi]
-                idf_rows.append((qi, list(ia), list(iname)))
-                continue
-            if any((qi, i) not in dfs for i in range(n_ph)):
-                continue  # a phrase matched nothing -> AND fails for this query
-            idf_rows.append((
-                qi,
-                [idf_fn(n_docs, dfs[(qi, i)][0]) for i in range(n_ph)],
-                [idf_fn(n_docs, dfs[(qi, i)][1]) if dfs[(qi, i)][1] else 0.0
-                 for i in range(n_ph)],
-            ))
-        if not idf_rows:
-            return empty
-        idfs_df = spark.createDataFrame(
-            idf_rows, "qid int, idf_all array<double>, idf_name array<double>"
-        )
+        _scan_tasks(spark, len(posting_files)), phrase_counts, top_k)
+    cand = _scan_df(spark, posting_files, task_fn(), BATCH_SCHEMA)
+    return _finish(spark, cand, parsed, phrase_dfs_by_query,
+                   known_idfs_by_qid, n_docs, avgdl, top_k, bound, exact)
 
-        def flat_score(tf_col, idf_col):
-            # same operation order as the single-query literal chain:
-            # ((0.0 + w0*norm0) + w1*norm1) + ... — bit-identical scores
-            return F.aggregate(
-                F.zip_with(
-                    F.col(tf_col), F.col(idf_col),
-                    lambda tf, w: w * _norm(tf, F.col("dl"), avgdl),
-                ),
-                F.lit(0.0), lambda acc, v: acc + v,
-            )
-
-        docs_r = cand.filter(F.col("kind") == 1).join(F.broadcast(idfs_df), "qid")
-        allb = docs_r.select(
-            "qid", "doc_id", F.lit(False).alias("name_match"),
-            (-flat_score("tfs_all", "idf_all")).alias("rank"),
-        ).unionAll(
-            docs_r.filter(F.forall(F.col("tfs_name"), lambda x: x > 0)).select(
-                "qid", "doc_id", F.lit(True).alias("name_match"),
-                (-flat_score("tfs_name", "idf_name")).alias("rank"),
-            )
-        )
-        w_branch = Window.partitionBy("qid", "name_match").orderBy(
-            F.asc("rank"), F.asc("doc_id"))
-        limited = allb.withColumn("rn", F.row_number().over(w_branch)).filter(
-            F.col("rn") <= top_k).drop("rn")
-        mergedq = (
-            limited.groupBy("qid", "doc_id")
-            .agg(F.max("name_match").alias("name_match"), F.min("rank").alias("rank"))
-        )
-        w_final = Window.partitionBy("qid").orderBy(
-            F.desc("name_match"), F.asc("rank"), F.asc("doc_id"))
-        out = (
-            mergedq.withColumn("rn", F.row_number().over(w_final))
-            .filter(F.col("rn") <= top_k)
-            .drop("rn")
-            .withColumn("score", -F.col("rank"))
-            .select("qid", "doc_id", "name_match", "rank", "score")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        cand.unpersist()
-    return out
 
 _POSTING_READ_COLUMNS = [
     "term", "col", "df", "doc_bytes", "tf_bytes", "pos_bytes", "dl_bytes",
     "skip_last", "skip_max_tf", "skip_min_dl",
     "skip_doc_off", "skip_tf_off", "skip_pos_off", "skip_dl_off",
 ]
-
-
-def _file_candidates_fn(phrase_term_ids: list[list[int]], needed: list[int],
-                        deletes_dir=None, top_k=None, avgdl=None,
-                        known_idfs=None):
-    """mapInPandas over rows of (pblock, path): a pyarrow-native posting
-    scan. Spark's vectorized parquet reader must decode a whole row
-    group of the (large) blob columns before filtering; pyarrow's C++
-    reader with a term filter + column selection is ~5-10x cheaper per
-    query, and each task reads only its own block's shard files — the
-    custom-scan escape hatch the DataFrame API can't express.
-
-    Doc frames accumulate across the task's blocks and pass through
-    :func:`_task_emission_prune` once at task end (df stats stay
-    per-block, emitted unpruned), so a task scanning hundreds of
-    blocks ships O(top_k) doc rows, not O(blocks * top_k)."""
-    n_ph = len(phrase_term_ids)
-
-    def fn(it):
-        tomb_cache: dict = {}
-        fs_cache: dict = {}
-        stat_sums: dict = {}
-        frames: list = []
-        for pdf in it:
-            for pblock, path in zip(pdf["pblock"], pdf["path"]):
-                tbl = _read_postings_term_filtered(path, fs_cache, needed)
-                if tbl.num_rows == 0:
-                    continue
-                deleted = _load_block_tombstones(
-                    deletes_dir, pblock, tomb_cache, fs_cache
-                )
-                stats, doc_frame = _query_block_frames(
-                    _rows_from_table(tbl), phrase_term_ids, deleted,
-                    top_k=top_k, avgdl=avgdl, known_idfs=known_idfs,
-                )
-                if stats and known_idfs is None:
-                    for pi, da, dn in stats:
-                        e = stat_sums.setdefault(pi, [0, 0])
-                        e[0] += da
-                        e[1] += dn
-                if doc_frame is not None:
-                    frames.append(doc_frame)
-        if stat_sums:
-            # df stats are additive across blocks and every consumer
-            # SUMS them (driver finish and JVM plan alike), so one
-            # partial-sum row per phrase per task replaces one row per
-            # phrase per block
-            yield pd.DataFrame(
-                [(0, pi, da, dn, 0, 0, None, None)
-                 for pi, (da, dn) in sorted(stat_sums.items())],
-                columns=_CAND_COLS)
-        if frames:
-            if top_k and avgdl is not None:
-                docs, dl, ta, tn = _task_emission_prune(
-                    frames, n_ph, top_k, avgdl, known_idfs)
-            else:
-                docs = np.concatenate([f[0] for f in frames])
-                dl = np.concatenate([f[1] for f in frames])
-                ta = np.vstack([np.vstack(f[2]) for f in frames])
-                tn = np.vstack([np.vstack(f[3]) for f in frames])
-            yield _doc_frame_pdf(docs, dl, ta, tn)
-
-    return fn
 
 
 def _norm(tf_col, dl_col, avgdl):
@@ -1525,30 +1375,29 @@ def search_index(
     n_docs: int,
     avgdl: float,
     top_k: int = DEFAULT_TOP_K,
-    deleted=None,
     deletes: "DataFrame | None" = None,
 ) -> DataFrame:
-    """Full two-branch FTS search over the posting index (the generic
-    DataFrame scan — works against any Spark-readable store).
+    """Two-branch FTS search through the generic DataFrame scan: the
+    path for stores pyarrow cannot reach (FtsIndex force_generic_scan),
+    working against any Spark-readable store. The term filter is pushed
+    into the parquet scan and each pblock's rows run the block machinery
+    in one applyInPandas group; candidate rows carry dl straight from
+    the posting blobs, so no doc-stats join happens at query time.
+    ``deletes`` (a doc_id DataFrame) distributes tombstones by
+    cogrouping them with the posting rows per pblock.
 
-    postings: the posting rows DataFrame (parquet-backed). Candidate
-    rows carry dl straight from the posting blobs, so no doc-stats join
-    happens at query time (join-free scoring).
-    ``deletes`` (a doc_id DataFrame) distributes tombstones by cogrouping
-    them with the posting rows per pblock; ``deleted`` (numpy array) is
-    the legacy driver-side variant kept for tests.
-    Returns (doc_id, name_match, rank, score) best-first.
-    """
+    The candidates (per block: there is no task-level prune here) take
+    a literal qid 0 into the shared tail with no bound — a limit-guarded
+    collect. Returns (doc_id, name_match, rank, score) best-first."""
     from codebased_spark.operators.docs import DOC_ID_BLOCK_BITS
 
     spark = postings.sparkSession
-    empty = _result_df(spark, [])
-    got = _parse_single(query, n_docs, None)
-    if got is None:
-        return empty
-    phrases, term_ids, needed, _known = got
+    parsed, _known = _parse_batch([query], n_docs, {})
+    if not parsed:
+        return _batch_result_df(spark, []).drop("qid")
+    term_ids = parsed[0][2]
 
-    pruned = postings.filter(F.col("term").isin([int(t) for t in needed]))
+    pruned = postings.filter(F.col("term").isin(_needed(parsed)))
     if deletes is not None:
         dd = deletes.select(
             F.shiftright("doc_id", DOC_ID_BLOCK_BITS).cast("int").alias("pblock"),
@@ -1559,98 +1408,29 @@ def search_index(
         )
     else:
         cand = pruned.groupBy("pblock").applyInPandas(
-            _candidates_fn(term_ids, deleted, top_k, avgdl), CAND2_SCHEMA
+            _candidates_fn(term_ids, top_k, avgdl), CAND2_SCHEMA
         )
-    return _score_and_merge(cand, len(phrases), n_docs, avgdl, top_k, empty)
-
-
-def search_index_files(
-    spark,
-    posting_files: list[tuple[int, str]],
-    query: str,
-    n_docs: int,
-    avgdl: float,
-    top_k: int = DEFAULT_TOP_K,
-    deletes_dir=None,
-    phrase_dfs: "list[tuple[int, int]] | None" = None,
-    presence=None,
-) -> DataFrame:
-    """Like search_index, but candidates come from the pyarrow custom
-    scan over (pblock, file) rows — the low-latency path FtsIndex uses.
-    Tombstones are read task-side per pblock from ``deletes_dir``.
-
-    ``phrase_dfs`` (one (df_all, df_name) per parsed phrase, from the
-    phrase-df side table) enables the covered fast path: idfs are
-    computed driver-side, blocks run multi-trigram WAND with exact
-    branch-top-k emission, no df-stat rows flow, and the tail's
-    candidate bound is exact. ``presence`` (a presence.TermBlocks)
-    prunes provably-irrelevant shards from the scan list before the
-    job launches. Results are bit-identical in every combination."""
-    empty = _result_df(spark, [])
-    got = _parse_single(query, n_docs, phrase_dfs)
-    if got is None or not posting_files:
-        return empty
-    phrases, term_ids, needed, known_idfs = got
-    files = _prune_posting_files(posting_files, term_ids, known_idfs, presence)
-    if not files:
-        return empty
-
-    cand = _scan_df(
-        spark, files,
-        _file_candidates_fn(term_ids, needed, deletes_dir, top_k, avgdl,
-                            known_idfs),
-        CAND2_SCHEMA,
-    )
-    return _score_and_merge(cand, len(phrases), n_docs, avgdl, top_k, empty,
-                            n_blocks=len(files),
-                            dfs_override=phrase_dfs)
+    cand = cand.select(F.lit(0).alias("qid"), "*")
+    return _finish(spark, cand, parsed, {}, {}, n_docs, avgdl,
+                   top_k).drop("qid")
 
 
 # Above this many candidate rows the scoring tail runs as a JVM plan
-# (2nd Spark job) instead of finishing on the driver. Emission pruning
-# bounds the common case far below it: single-phrase blocks emit at
-# most 2*top_k docs each, multi-phrase blocks their k-skyband.
+# (extra Spark jobs) instead of finishing on the driver. Emission
+# pruning bounds the common case far below it: per task, single-phrase
+# queries emit at most 2*top_k docs, multi-phrase ones their k-skyband.
 DRIVER_FINISH_MAX = 200_000
-
-def _result_pa_schema():
-    import pyarrow as pa
-
-    return pa.schema([
-        ("doc_id", pa.int64()), ("name_match", pa.bool_()),
-        ("rank", pa.float64()), ("score", pa.float64()),
-    ])
-
-
-def _result_df(spark, final) -> DataFrame:
-    """(doc_id, name_match, rank, score) DataFrame from _finish_rows
-    output [(doc_id, name_match, rank)], via an Arrow local relation:
-    a tuple-list relation costs ~280 ms PER COLLECT in per-row JVM
-    object conversion and an EMPTY pandas frame falls off the Arrow
-    fast path too (~330 ms); a pyarrow Table keeps every case at
-    ~15-30 ms — and every driver-finished query pays this on
-    materialization, so it is the single-query latency floor after the
-    scan itself."""
-    import pyarrow as pa
-
-    n = len(final)
-    rank = np.fromiter((rk for _d, _nm, rk in final), np.float64, count=n)
-    tbl = pa.Table.from_arrays(
-        [
-            pa.array(np.fromiter((d for d, _nm, _rk in final), np.int64,
-                                 count=n), type=pa.int64()),
-            pa.array(np.fromiter((nm for _d, nm, _rk in final), bool,
-                                 count=n), type=pa.bool_()),
-            pa.array(rank, type=pa.float64()),
-            pa.array(-rank, type=pa.float64()),
-        ],
-        schema=_result_pa_schema(),
-    )
-    return spark.createDataFrame(tbl)
 
 
 def _batch_result_df(spark, out_rows) -> DataFrame:
-    """Batch twin of _result_df over (qid, doc_id, name_match, rank,
-    score) tuples."""
+    """(qid, doc_id, name_match, rank, score) DataFrame from driver-side
+    (qid, doc_id, name_match, rank) tuples, score = -rank, via an Arrow
+    local relation: a tuple-list relation costs ~280 ms PER COLLECT in
+    per-row JVM object conversion and an EMPTY pandas frame falls off
+    the Arrow fast path too (~330 ms); a pyarrow Table keeps every case
+    at ~15-30 ms — and every driver-finished query pays this on
+    materialization, so it is the single-query latency floor after the
+    scan itself."""
     import pyarrow as pa
 
     n = len(out_rows)
@@ -1675,9 +1455,9 @@ def _batch_result_df(spark, out_rows) -> DataFrame:
     return spark.createDataFrame(tbl)
 
 
-# Read-through ceiling for the ZERO-JOB direct path (below): an index
-# whose entire posting store is at most this many bytes is "small" —
-# the embedded-engine regime the reference lives in (ONE repository,
+# Read-through ceiling for the ZERO-JOB direct feeder: an index whose
+# entire posting store is at most this many bytes is "small" — the
+# embedded-engine regime the reference lives in (ONE repository,
 # "searches in milliseconds", single process). Measured on this class
 # of hardware (healthy windows): direct wins ~2-4x at a 1.4 MB store
 # (58-158 ms vs 250-331 ms) but already LOSES by a 14 MB store (p50
@@ -1689,8 +1469,8 @@ DRIVER_DIRECT_MAX_BYTES = 4 * 1024 * 1024
 # ~per-block-work x n_blocks, so a small-BYTES store fragmented into
 # many blocks loses to the distributed job floor anyway (measured r6:
 # 32-shard 2 MB store — direct ~0.5 s vs distributed ~0.4 s; 4-shard
-# repo store — direct 0.06-0.16 s vs ~0.4 s). The env override
-# engages the path regardless of both gates.
+# repo store — direct 0.06-0.16 s vs ~0.4 s). Setting
+# FtsIndex.driver_direct pins either route regardless of both gates.
 DRIVER_DIRECT_MAX_SHARDS = 8
 # pyarrow's C++ reader releases the GIL, so a few reader threads
 # overlap I/O+decode without fighting the numpy block machinery
@@ -1702,10 +1482,10 @@ _DIRECT_POOL_LOCK = threading.Lock()
 
 
 def _direct_pool():
-    """Shared lazily-created reader pool for the direct path: spawning
-    a fresh ThreadPoolExecutor costs ~60-70 ms per query in thread
-    startup alone — more than the entire scan on a small index. The
-    pool is process-global and daemon-threaded; concurrent queries
+    """Shared lazily-created reader pool for the direct feeder:
+    spawning a fresh ThreadPoolExecutor costs ~60-70 ms per query in
+    thread startup alone — more than the entire scan on a small index.
+    The pool is process-global and daemon-threaded; concurrent queries
     submit to it safely."""
     global _DIRECT_POOL
     with _DIRECT_POOL_LOCK:
@@ -1718,60 +1498,53 @@ def _direct_pool():
         return _DIRECT_POOL
 
 
-def _direct_scan_rows(make_fn, posting_files):
-    """A candidate-scan task body executed DRIVER-SIDE: ``make_fn()``
-    returns the same generator function Spark's mapInPandas would run
-    (identical reads, identical block machinery, identical emission
-    pruning), fed the shard list directly. LOCAL stores run serially:
-    with the row-group-pruned reader the scan body is GIL-bound
+def _direct_chunks(posting_files) -> list[pd.DataFrame]:
+    """The direct feeder's "tasks": (pblock, path) frames, each scanned
+    by its own task-body instance. LOCAL stores scan serially in ONE
+    chunk: with the row-group-pruned reader the scan body is GIL-bound
     Python/numpy, and thread fan-out only thrashes (measured r6 on a
-    32-shard store: 8 threads 1.0 s vs serial 0.25 s — the r5 pool
-    paid off only while the dataset-API read's GIL-releasing C++
-    dominated). Remote URIs keep the pool: footer/data round-trips
-    release the GIL and genuinely overlap (deterministic gather order;
-    each chunk owns its own fs/tombstone caches via its own fn
-    instance)."""
+    32-shard store: 8 threads 1.0 s vs serial 0.25 s). Remote URIs
+    split over up to DRIVER_DIRECT_THREADS chunks for the reader pool:
+    footer/data round-trips release the GIL and genuinely overlap."""
     from codebased_spark.plans.fsio import _scheme
 
-    fn = lambda chunk: list(make_fn()([chunk]))  # noqa: E731
     local = not posting_files or _scheme(posting_files[0][1]) == ""
-    n_threads = 1 if local else (
-        min(DRIVER_DIRECT_THREADS, len(posting_files)) or 1)
-    chunks = [
-        pd.DataFrame(posting_files[i::n_threads], columns=["pblock", "path"])
-        for i in range(n_threads)
-    ]
-    if n_threads <= 4:
+    n = 1 if local else (min(DRIVER_DIRECT_THREADS, len(posting_files)) or 1)
+    return [pd.DataFrame(posting_files[i::n], columns=["pblock", "path"])
+            for i in range(n)]
+
+
+def _direct_scan_rows(make_fn, chunks):
+    """The candidate-scan task body executed DRIVER-SIDE: ``make_fn()``
+    returns the same generator function Spark's mapInPandas runs
+    (identical reads, block machinery and emission pruning), one fresh
+    instance — with its own fs/tombstone caches — per chunk of
+    :func:`_direct_chunks`. More than a few chunks go through the
+    shared reader pool; rows gather in chunk order, so the result is
+    deterministic."""
+    fn = lambda chunk: list(make_fn()([chunk]))  # noqa: E731
+    if len(chunks) <= 4:
         outs = [fn(c) for c in chunks]
     else:
         outs = list(_direct_pool().map(fn, chunks))
     rows: list = []
-    for out in outs:  # gather in submission order -> deterministic
+    for out in outs:
         for pdf in out:
             rows.extend(pdf.to_dict("records"))
     return rows
 
 
-def _direct_candidate_rows(posting_files, term_ids, needed, deletes_dir,
-                           top_k, avgdl, known_idfs):
-    return _direct_scan_rows(
-        lambda: _file_candidates_fn(term_ids, needed, deletes_dir, top_k,
-                                    avgdl, known_idfs),
-        posting_files,
-    )
-
-
 def _parse_single(query, n_docs, phrase_dfs):
-    """Shared query preamble for the distributed AND direct paths (one
-    source — the twins must never diverge): returns (phrases, term_ids,
-    needed, known_idfs), or None when the query can match nothing
-    (unparseable / sub-trigram phrase / empty corpus / covered phrase
-    with df 0 — the AND fails with no reads at all)."""
-    phrases = query_phrases(query)
-    if not phrases or any(len(p) < 3 for p in phrases) or n_docs == 0:
+    """One query's preamble: (phrases, term_ids, known_idfs), or None
+    when the query can match nothing (no phrase of 3+ chars / empty
+    corpus / covered phrase with df 0 — the AND fails with no reads at
+    all). Sub-trigram phrases drop out of the conjunction, as in FTS5
+    (functions/fts5.match_phrases); ``phrase_dfs`` aligns with the
+    phrases kept."""
+    phrases = match_phrases(query)
+    if not phrases or n_docs == 0:
         return None
     term_ids = [phrase_terms(p) for p in phrases]
-    needed = sorted({int(t) for ts in term_ids for t in ts})
     known_idfs = None
     if phrase_dfs is not None:
         if len(phrase_dfs) != len(phrases):
@@ -1782,26 +1555,29 @@ def _parse_single(query, n_docs, phrase_dfs):
             [idf_fn(n_docs, da) for da, _ in phrase_dfs],
             [idf_fn(n_docs, dn) if dn else 0.0 for _, dn in phrase_dfs],
         )
-    return phrases, term_ids, needed, known_idfs
+    return phrases, term_ids, known_idfs
 
 
 def _parse_batch(queries, n_docs, phrase_dfs_by_query):
-    """Batch twin of _parse_single, shared by the distributed and
-    direct batch paths: (parsed [(qi, phrases, term_ids)],
-    known_idfs_by_qid, needed-term union)."""
+    """(parsed [(qi, phrases, term_ids)], known_idfs_by_qid) over a
+    batch; queries that can match nothing are left out."""
     parsed = []
     known_idfs_by_qid = {}
     for qi, q in enumerate(queries):
         got = _parse_single(q, n_docs, phrase_dfs_by_query.get(qi))
         if got is None:
             continue
-        phrases, term_ids, _needed, known = got
+        phrases, term_ids, known = got
         parsed.append((qi, phrases, term_ids))
         if known is not None:
             known_idfs_by_qid[qi] = known
-    needed = sorted(
-        {int(t) for _, _, tids in parsed for ts in tids for t in ts})
-    return parsed, known_idfs_by_qid, needed
+    return parsed, known_idfs_by_qid
+
+
+def _needed(parsed) -> list[int]:
+    """Sorted union of the parsed queries' trigram ids: the terms the
+    shared scan reads."""
+    return sorted({int(t) for _, _, tids in parsed for ts in tids for t in ts})
 
 
 def _prune_posting_files(posting_files, term_ids, known_idfs, presence):
@@ -1827,7 +1603,7 @@ def _prune_posting_files(posting_files, term_ids, known_idfs, presence):
         # a trigram-less phrase (< 3 chars) carries no presence
         # information — it could match in any block, so pruning has
         # nothing to stand on. Engine paths never get here
-        # (_parse_single rejects such queries) but direct callers
+        # (_parse_single drops such phrases) but direct callers
         # (bench tooling) feed raw phrase_terms() output.
         return posting_files
     covered = presence.covered
@@ -1858,7 +1634,7 @@ def _prune_posting_files(posting_files, term_ids, known_idfs, presence):
 
 
 def _prune_batch(posting_files, parsed, known_idfs_by_qid, presence):
-    """Batch twin of _prune_posting_files: each query keeps its own
+    """Batch form of _prune_posting_files: each query keeps its own
     pruned set; the shared scan runs over the union (a block scanned
     for query B emits nothing for query A whose set excluded it —
     same argument as single-query pruning). Queries whose own set is
@@ -1866,10 +1642,6 @@ def _prune_batch(posting_files, parsed, known_idfs_by_qid, presence):
     (files, parsed, known_idfs_by_qid, needed) where ``needed`` is the
     surviving queries' sorted term-id union — dropped queries' terms
     need not be read in the shared scan."""
-    def _needed(ps):
-        return sorted({int(t) for _, _, tids in ps for ts in tids
-                       for t in ts})
-
     if presence is None or not posting_files:
         return posting_files, parsed, known_idfs_by_qid, _needed(parsed)
     keep_paths: dict = {}
@@ -1889,96 +1661,6 @@ def _prune_batch(posting_files, parsed, known_idfs_by_qid, presence):
     return files, parsed2, known2, _needed(parsed2)
 
 
-def _direct_query_rows(query, posting_files, n_docs, avgdl, top_k,
-                       deletes_dir, phrase_dfs, presence=None):
-    """_finish_rows' [(doc_id, name_match, rank)] output for ONE query
-    via the zero-job direct scan (empty list on no-match/AND-fail).
-    Shares the exact preamble, shard pruning, candidate machinery, and
-    scoring tail with the distributed path, so results are
-    bit-identical (pinned by tests)."""
-    got = _parse_single(query, n_docs, phrase_dfs)
-    if got is None or not posting_files:
-        return []
-    phrases, term_ids, needed, known_idfs = got
-    files = _prune_posting_files(posting_files, term_ids, known_idfs, presence)
-    if not files:
-        return []
-    rows = _direct_candidate_rows(files, term_ids, needed,
-                                  deletes_dir, top_k, avgdl, known_idfs)
-    return _finish_rows(rows, len(phrases), n_docs, avgdl, top_k,
-                        dfs_override=phrase_dfs)
-
-
-def search_index_files_direct(
-    spark,
-    posting_files: list[tuple[int, str]],
-    query: str,
-    n_docs: int,
-    avgdl: float,
-    top_k: int = DEFAULT_TOP_K,
-    deletes_dir=None,
-    phrase_dfs: "list[tuple[int, int]] | None" = None,
-    presence=None,
-) -> DataFrame:
-    """ZERO-Spark-job variant of search_index_files for SMALL indexes
-    (the reference's embedded regime): the driver reads the
-    term-filtered shard slivers through pyarrow and finishes in numpy —
-    single-query latency drops from Spark's ~0.5-1 s job floor to tens
-    of milliseconds. Same reads, same block machinery, same scoring
-    pipeline; bit-identical results (pinned by tests). FtsIndex routes
-    here only when the WHOLE posting store is at most
-    DRIVER_DIRECT_MAX_BYTES — at any real scale the distributed plan
-    runs unchanged, so this is a latency floor for small corpora, not a
-    driver bottleneck waiting to happen."""
-    final = _direct_query_rows(
-        query, posting_files, n_docs, avgdl, top_k, deletes_dir, phrase_dfs,
-        presence=presence)
-    return _result_df(spark, final)
-
-
-def search_index_files_batch_direct(
-    spark,
-    posting_files: list[tuple[int, str]],
-    queries: list[str],
-    n_docs: int,
-    avgdl: float,
-    top_k: int = DEFAULT_TOP_K,
-    deletes_dir=None,
-    phrase_dfs_by_query: "dict[int, list[tuple[int, int]]] | None" = None,
-    presence=None,
-) -> DataFrame:
-    """Batch twin of search_index_files_direct: ONE driver-side scan
-    (the same _batch_candidates_fn task body the distributed batch
-    runs — shared shard reads, per-block phrase memo across queries)
-    serves the whole batch, then each query finishes in numpy. One
-    scan for N queries, exactly like the distributed batch's one job;
-    per-query results are bit-identical to search_index_files_batch
-    (tested)."""
-    phrase_dfs_by_query = phrase_dfs_by_query or {}
-    parsed, known_idfs_by_qid, needed = _parse_batch(
-        queries, n_docs, phrase_dfs_by_query)
-    if not parsed or not posting_files:
-        return _batch_result_df(spark, [])
-    posting_files, parsed, known_idfs_by_qid, needed = _prune_batch(
-        posting_files, parsed, known_idfs_by_qid, presence)
-    if not parsed or not posting_files:
-        return _batch_result_df(spark, [])
-    rows = _direct_scan_rows(
-        lambda: _batch_candidates_fn(
-            [(qi, tids) for qi, _, tids in parsed], needed, deletes_dir,
-            top_k, avgdl, known_idfs_by_qid),
-        posting_files,
-    )
-    by_q: dict[int, list] = {}
-    for r in rows:
-        by_q.setdefault(int(r["qid"]), []).append(r)
-    out_rows: list = []
-    for qi, phrases, _tids in parsed:
-        fin = _finish_rows(by_q.get(qi, []), len(phrases), n_docs, avgdl,
-                           top_k, phrase_dfs_by_query.get(qi))
-        out_rows.extend((qi, d, nm, rk, -rk) for d, nm, rk in fin)
-    return _batch_result_df(spark, out_rows)
-
 # Guards the session-conf set/restore in _collect_bounded: two
 # concurrent query tails on one SparkSession must not interleave the
 # override (ADVICE r03 — one could run its limit probe under the
@@ -1986,35 +1668,35 @@ def search_index_files_batch_direct(
 _LIMIT_CONF_LOCK = threading.Lock()
 
 
-def _tail_bound(n_blocks, phrase_counts, top_k):
+def _tail_bound(n_tasks, phrase_counts, top_k):
     """(upper_bound_on_candidate_rows, is_exact) for the scoring tail,
     computable driver-side for free BEFORE launching any job (VERDICT
     r03 #2 — the driver-finish decision must not cost a doomed
     200k-row probe collect at scale).
 
-    Derivation, per block per query:
-    - kind=0 (df stats): exactly one row per phrase that matches in the
-      block -> <= n_ph rows.
-    - kind=1 (surviving docs), n_ph == 1: emission pruning keeps the
-      union of the two branch top-ks -> <= 2*top_k rows, UNCONDITIONALLY
-      (blocks at or under 2*top_k docs emit themselves; larger blocks
-      are pruned to the union of two top-k lists).
-    - kind=1, n_ph > 1: the exact k-skyband is data-dependent (a block
+    Emission pruning runs per TASK (_batch_candidates_fn /
+    _task_emission_prune), so rows are charged per task: ``n_tasks`` is
+    _scan_tasks() on the Spark feeder and the chunk count on the direct
+    one. Per task per query:
+    - kind=0 (df stats): one summed row per phrase -> <= n_ph rows.
+    - kind=1 (surviving docs), n_ph == 1: the task keeps the union of
+      the two branch top-ks -> <= 2*top_k rows, UNCONDITIONALLY.
+    - kind=1, n_ph > 1: the exact k-skyband is data-dependent (a task
       of mutually non-dominating docs emits everything), so no static
       bound exists. The same shape charged at 4*top_k serves as a
       ROUTING HEURISTIC only — when even that optimistic estimate
-      exceeds the cap (tens of thousands of blocks), the tail goes
-      straight to the JVM plan; below it, the collect stays
-      limit-guarded because the true skyband may still blow past it.
+      exceeds the cap, the tail goes straight to the JVM plan; below
+      it, the collect stays limit-guarded because the true skyband may
+      still blow past it.
 
     exact=True (all queries single-phrase) means the bound is a real
     guarantee: if it is <= the cap, a plain collect cannot exceed the
     cap and needs no limit probe at all."""
     exact = all(p == 1 for p in phrase_counts)
-    per_block = sum(
+    per_task = sum(
         (2 * top_k if p == 1 else 4 * top_k) + p for p in phrase_counts
     )
-    return n_blocks * per_block, exact
+    return n_tasks * per_task, exact
 
 
 def _collect_bounded(df, max_rows: int):
@@ -2038,68 +1720,51 @@ def _collect_bounded(df, max_rows: int):
             spark.conf.set(key, prev)
 
 
-def _score_and_merge(cand, n_ph, n_docs, avgdl, top_k, empty, n_blocks=None,
-                     dfs_override=None):
-    """Scoring tail of a single query: exact phrase df -> idf -> BM25 ->
-    two-branch top-k -> union/dedupe/top-k (reference CTE
-    codebased/search.py:240-302).
+def _finish(spark, cand, parsed, phrase_dfs_by_query, known_idfs_by_qid,
+            n_docs, avgdl, top_k, bound=None, exact=False):
+    """The scoring tail over a BATCH_SCHEMA candidate DataFrame: exact
+    phrase df -> idf -> BM25 -> two-branch top-k -> union/dedupe/top-k
+    per query (reference CTE codebased/search.py:240-302).
 
-    ONE Spark job in the common case: the emission-pruned candidate
-    rows (plus the tiny per-block df stats) are pulled once and the
-    scoring/merge finishes in numpy — _norm_np and the idf/score
-    accumulation mirror the JVM expressions operation-for-operation, so
-    results are bit-identical to the JVM plan (pinned by the parity
-    suite, which runs both paths).
-
-    Tail routing when ``n_blocks`` is known (the posting-shard paths):
-    the candidate-row upper bound is computed driver-side via
-    _tail_bound BEFORE any job runs. Bound over DRIVER_FINISH_MAX ->
-    straight to the JVM plan, no probe collect (at 100x scale every
-    query's bound exceeds the cap — collecting 200k rows only to
-    discard them would be a per-query scale tax). Exact bound at or
-    under the cap -> plain collect, no limit probe needed. Otherwise
-    (multi-phrase, heuristic bound under the cap) the collect stays
-    limit-guarded and adversarial skybands fall back to the JVM plan
-    against the SAME persisted candidates — one extra job, never a
-    rescan."""
-    if n_blocks is not None:
-        if dfs_override is not None:
-            # covered path: blocks emit <= 2*top_k kind=1 rows and no
-            # stat rows -> the bound is exact for ANY phrase count
-            bound, exact = n_blocks * 2 * top_k, True
-        else:
-            bound, exact = _tail_bound(n_blocks, [n_ph], top_k)
-        if bound > DRIVER_FINISH_MAX:
-            cand = cand.persist()
-            try:
-                return _finish_jvm(cand, n_ph, n_docs, avgdl, top_k, empty,
-                                   dfs_override)
-            finally:
-                cand.unpersist()
-        if exact:
-            return _finish_driver(
-                cand.collect(), n_ph, n_docs, avgdl, top_k, empty,
-                dfs_override,
-            )
+    Routing on the candidate ``bound`` (:func:`_tail_bound`):
+    - exact bound at or under DRIVER_FINISH_MAX -> one plain collect
+      and the numpy finish (:func:`_driver_tail`): ONE Spark job in all;
+    - bound over the cap -> straight to the JVM plan
+      (:func:`_jvm_tail`), no probe collect (collecting 200k rows only
+      to discard them would be a per-query scale tax);
+    - otherwise (heuristic multi-phrase bound, or no bound on the
+      generic scan) a limit-guarded collect; a candidate set past the
+      cap falls back to the JVM plan against the SAME persisted
+      candidates — one extra job, never a rescan."""
+    if bound is not None and exact and bound <= DRIVER_FINISH_MAX:
+        return _driver_tail(spark, cand.collect(), parsed,
+                            phrase_dfs_by_query, n_docs, avgdl, top_k)
     cand = cand.persist()
     try:
-        rows = _collect_bounded(cand, DRIVER_FINISH_MAX)
-        if len(rows) <= DRIVER_FINISH_MAX:
-            return _finish_driver(rows, n_ph, n_docs, avgdl, top_k, empty,
-                                  dfs_override)
-        out = _finish_jvm(cand, n_ph, n_docs, avgdl, top_k, empty,
-                          dfs_override)
+        rows = None
+        if bound is None or bound <= DRIVER_FINISH_MAX:
+            rows = _collect_bounded(cand, DRIVER_FINISH_MAX)
+        if rows is not None and len(rows) <= DRIVER_FINISH_MAX:
+            return _driver_tail(spark, rows, parsed, phrase_dfs_by_query,
+                                n_docs, avgdl, top_k)
+        return _jvm_tail(spark, cand, parsed, known_idfs_by_qid, n_docs,
+                         avgdl, top_k)
     finally:
         cand.unpersist()
-    return out
 
 
-def _finish_driver(rows, n_ph, n_docs, avgdl, top_k, empty, dfs_override=None):
-    """Driver-side scoring tail over one query's collected candidates."""
-    final = _finish_rows(rows, n_ph, n_docs, avgdl, top_k, dfs_override)
-    if not final:
-        return empty
-    return _result_df(empty.sparkSession, final)
+def _driver_tail(spark, rows, parsed, phrase_dfs_by_query, n_docs, avgdl,
+                 top_k) -> DataFrame:
+    """Numpy finish of collected candidate rows, query by query."""
+    by_q: dict[int, list] = {}
+    for r in rows:
+        by_q.setdefault(int(r["qid"]), []).append(r)
+    out_rows = []
+    for qi, phrases, _tids in parsed:
+        fin = _finish_rows(by_q.get(qi, []), len(phrases), n_docs, avgdl,
+                           top_k, phrase_dfs_by_query.get(qi))
+        out_rows.extend((qi, d, nm, rk) for d, nm, rk in fin)
+    return _batch_result_df(spark, out_rows)
 
 
 def _finish_rows(rows, n_ph, n_docs, avgdl, top_k, dfs_override=None):
@@ -2163,53 +1828,81 @@ def _finish_rows(rows, n_ph, n_docs, avgdl, top_k, dfs_override=None):
     )[:top_k]
 
 
-def _finish_jvm(cand, n_ph, n_docs, avgdl, top_k, empty, dfs_override=None):
-    """JVM scoring tail (the pre-r3 shape) — the fallback when the
-    candidate set is too large to pull to the driver. ``dfs_override``
-    skips the df aggregation job (the covered path emits no stat rows)."""
-    if dfs_override is not None:
-        if any(da == 0 for da, _dn in dfs_override):
-            return empty
-        dfs = {i: (da, dn) for i, (da, dn) in enumerate(dfs_override)}
-    else:
-        dfs = {
-            int(r["phrase"]): (int(r["sa"]), int(r["sn"]))
-            for r in cand.filter(F.col("kind") == 0)
-            .groupBy("phrase")
-            .agg(F.sum("df_all").alias("sa"), F.sum("df_name").alias("sn"))
-            .collect()
-        }
-        if len(dfs) < n_ph:
-            return empty  # some phrase matches nothing anywhere -> AND fails
-    idf_all = [idf_fn(n_docs, dfs[i][0]) for i in range(n_ph)]
-    idf_name = [idf_fn(n_docs, dfs[i][1]) if dfs[i][1] else 0.0 for i in range(n_ph)]
+def _jvm_tail(spark, cand, parsed, known_idfs_by_qid, n_docs, avgdl,
+              top_k) -> DataFrame:
+    """JVM scoring tail over persisted candidates — the fallback when
+    the candidate set is too large to pull to the driver. The plan is
+    FLAT in batch width (VERDICT r02 #5): per-query idf vectors live in
+    a broadcast (qid, idf_all, idf_name) lookup joined to the candidate
+    rows, and ONE zip_with/aggregate expression scores every query, so
+    plan size is constant whether the batch holds 1 query or 1,000.
+    The fold multiplies and adds in the same order as _rank_rows, so
+    scores stay bit-identical to the driver finish (pinned by test)."""
+    from pyspark.sql.window import Window
 
-    def score_expr(tf_col, idfs):
-        s = F.lit(0.0)
-        for i, w in enumerate(idfs):
-            s = s + F.lit(w) * _norm(F.col(tf_col)[i], F.col("dl"), avgdl)
-        return s
+    dfs = {
+        (int(r["qid"]), int(r["phrase"])): (int(r["sa"]), int(r["sn"]))
+        for r in cand.filter(F.col("kind") == 0)
+        .groupBy("qid", "phrase")
+        .agg(F.sum("df_all").alias("sa"), F.sum("df_name").alias("sn"))
+        .collect()
+    }
+    idf_rows = []
+    for qi, phrases, _tids in parsed:
+        n_ph = len(phrases)
+        if qi in known_idfs_by_qid:
+            ia, iname = known_idfs_by_qid[qi]
+            idf_rows.append((qi, list(ia), list(iname)))
+            continue
+        if any((qi, i) not in dfs for i in range(n_ph)):
+            continue  # a phrase matched nothing -> AND fails for this query
+        idf_rows.append((
+            qi,
+            [idf_fn(n_docs, dfs[(qi, i)][0]) for i in range(n_ph)],
+            [idf_fn(n_docs, dfs[(qi, i)][1]) if dfs[(qi, i)][1] else 0.0
+             for i in range(n_ph)],
+        ))
+    if not idf_rows:
+        return _batch_result_df(spark, [])
+    idfs_df = spark.createDataFrame(
+        idf_rows, "qid int, idf_all array<double>, idf_name array<double>"
+    )
 
-    docs_r = cand.filter(F.col("kind") == 1)
-    all_b = (
-        docs_r.select("doc_id", F.lit(False).alias("name_match"),
-                      (-score_expr("tfs_all", idf_all)).alias("rank"))
-        .orderBy(F.asc("rank"), F.asc("doc_id"))
-        .limit(top_k)
+    def flat_score(tf_col, idf_col):
+        # ((0.0 + w0*norm0) + w1*norm1) + ... — _rank_rows' order
+        return F.aggregate(
+            F.zip_with(
+                F.col(tf_col), F.col(idf_col),
+                lambda tf, w: w * _norm(tf, F.col("dl"), avgdl),
+            ),
+            F.lit(0.0), lambda acc, v: acc + v,
+        )
+
+    docs_r = cand.filter(F.col("kind") == 1).join(F.broadcast(idfs_df), "qid")
+    allb = docs_r.select(
+        "qid", "doc_id", F.lit(False).alias("name_match"),
+        (-flat_score("tfs_all", "idf_all")).alias("rank"),
+    ).unionAll(
+        docs_r.filter(F.forall(F.col("tfs_name"), lambda x: x > 0)).select(
+            "qid", "doc_id", F.lit(True).alias("name_match"),
+            (-flat_score("tfs_name", "idf_name")).alias("rank"),
+        )
     )
-    name_b = (
-        docs_r.filter(F.forall(F.col("tfs_name"), lambda x: x > 0))
-        .select("doc_id", F.lit(True).alias("name_match"),
-                (-score_expr("tfs_name", idf_name)).alias("rank"))
-        .orderBy(F.asc("rank"), F.asc("doc_id"))
-        .limit(top_k)
-    )
-    merged = (
-        name_b.unionAll(all_b)
-        .groupBy("doc_id")
+    w_branch = Window.partitionBy("qid", "name_match").orderBy(
+        F.asc("rank"), F.asc("doc_id"))
+    limited = allb.withColumn("rn", F.row_number().over(w_branch)).filter(
+        F.col("rn") <= top_k).drop("rn")
+    mergedq = (
+        limited.groupBy("qid", "doc_id")
         .agg(F.max("name_match").alias("name_match"), F.min("rank").alias("rank"))
-        .orderBy(F.desc("name_match"), F.asc("rank"), F.asc("doc_id"))
-        .limit(top_k)
-        .withColumn("score", -F.col("rank"))
     )
-    return merged.localCheckpoint(eager=True)
+    w_final = Window.partitionBy("qid").orderBy(
+        F.desc("name_match"), F.asc("rank"), F.asc("doc_id"))
+    return (
+        mergedq.withColumn("rn", F.row_number().over(w_final))
+        .filter(F.col("rn") <= top_k)
+        .drop("rn")
+        .withColumn("score", -F.col("rank"))
+        .select("qid", "doc_id", "name_match", "rank", "score")
+        .localCheckpoint(eager=True)
+    )

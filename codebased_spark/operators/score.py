@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from codebased_spark import B, DEFAULT_TOP_K, K1
 from codebased_spark.functions.fts5 import idf as idf_fn
-from codebased_spark.functions.fts5 import query_phrases
+from codebased_spark.functions.fts5 import match_phrases
 
 
 def _tf_udf(phrases: list[str]):
@@ -115,15 +115,15 @@ def search_bruteforce(
 ) -> DataFrame:
     """The reference's full two-branch search over a docs DataFrame.
 
-    Returns (doc_id, name_match, rank, score) sorted best-first. Empty
-    result when any phrase has <3 chars (no trigrams -> phrase can never
-    match -> conjunction is empty), matching FTS5."""
+    Returns (doc_id, name_match, rank, score) sorted best-first. Phrases
+    under 3 chars have no trigrams and drop out of the conjunction; a
+    query left with none returns nothing, matching FTS5."""
     spark = docs.sparkSession
-    phrases = query_phrases(query)
+    phrases = match_phrases(query)
     empty = spark.createDataFrame(
         [], "doc_id long, name_match boolean, rank double, score double"
     )
-    if not phrases or any(len(p) < 3 for p in phrases):
+    if not phrases:
         return empty
 
     if n_docs is None or avgdl is None:

@@ -147,27 +147,16 @@ class FtsIndex:
         self.postings_bytes = 0
         self.posting_files = self._list_posting_files()
         # zero-job read-through for small (embedded-regime) indexes:
-        # auto when the whole posting store fits the byte gate; env
-        # SPARK_GRAFT_DRIVER_DIRECT=0/1 forces either way (tests, ops)
-        import os as _os
-
+        # on when the whole posting store fits the byte and shard
+        # gates; assigning the attribute pins either route
         from codebased_spark.operators.query import (
             DRIVER_DIRECT_MAX_BYTES,
             DRIVER_DIRECT_MAX_SHARDS,
         )
 
-        _dd = _os.environ.get("SPARK_GRAFT_DRIVER_DIRECT")
-        if _dd is None or _dd == "":
-            self.driver_direct = bool(self.posting_files) and \
-                0 < self.postings_bytes <= DRIVER_DIRECT_MAX_BYTES and \
-                len(self.posting_files) <= DRIVER_DIRECT_MAX_SHARDS
-        elif _dd in ("0", "1"):
-            self.driver_direct = bool(self.posting_files) and _dd == "1"
-        else:
-            # an ops override that silently fell back to the auto gate
-            # would have routing mis-attributed elsewhere — fail loud
-            raise ValueError(
-                f"SPARK_GRAFT_DRIVER_DIRECT must be '0' or '1', got {_dd!r}")
+        self.driver_direct = bool(self.posting_files) and \
+            0 < self.postings_bytes <= DRIVER_DIRECT_MAX_BYTES and \
+            len(self.posting_files) <= DRIVER_DIRECT_MAX_SHARDS
         self.deletes_dir = _join(index_dir, "deletes")
         self.has_deletes = self.fs.exists(self.deletes_dir)
         self._deleted = None
@@ -282,34 +271,19 @@ class FtsIndex:
 
     def search(self, query: str, top_k: int = DEFAULT_TOP_K) -> DataFrame:
         """(doc_id, name_match, rank, score) best-first — rank-identical
-        to the reference's search_once full-text path. Uses the pyarrow
-        shard scan when the shard files are directly readable, else the
-        generic DataFrame scan (same results by test)."""
-        from codebased_spark.operators.query import (
-            search_index,
-            search_index_files,
-            search_index_files_direct,
-        )
+        to the reference's search_once full-text path. Runs as a batch
+        of one through the shard scan when the shard files are directly
+        readable, else through the generic DataFrame scan (same results
+        by test)."""
+        from codebased_spark.operators.query import search_index
 
         self.query_log.append(query)
         key = (query, top_k)
         hit = self._search_cache.get(key)
         if hit is not None:
             return hit
-        if self.posting_files and self.driver_direct:
-            out = search_index_files_direct(
-                self.spark, self.posting_files, query, self.n_docs, self.avgdl,
-                top_k, deletes_dir=self._task_deletes_dir(),
-                phrase_dfs=self._covering_dfs(query),
-                presence=self.term_blocks,
-            )
-        elif self.posting_files:
-            out = search_index_files(
-                self.spark, self.posting_files, query, self.n_docs, self.avgdl,
-                top_k, deletes_dir=self._task_deletes_dir(),
-                phrase_dfs=self._covering_dfs(query),
-                presence=self.term_blocks,
-            )
+        if self.posting_files:
+            out = self._search_files([query], top_k).drop("qid")
         else:
             out = search_index(
                 self.postings, query, self.n_docs, self.avgdl, top_k,
@@ -332,15 +306,11 @@ class FtsIndex:
         return canonical_uri(self.deletes_dir)
 
     def search_batch(self, queries: list[str], top_k: int = DEFAULT_TOP_K) -> DataFrame:
-        """Batched search: one shared posting scan + two Spark jobs for
-        the whole batch (the shape for offline batch scoring). Returns
-        (qid, doc_id, name_match, rank, score); rank-identical per query
-        to :meth:`search` (tested)."""
-        from codebased_spark.operators.query import (
-            search_index_files_batch,
-            search_index_files_batch_direct,
-        )
-
+        """Batched search: one shared posting scan for the whole batch —
+        one Spark job when the tail finishes on the driver, none on the
+        driver-direct route (the shape for offline batch scoring).
+        Returns (qid, doc_id, name_match, rank, score); rank-identical
+        per query to :meth:`search` (tested)."""
         if not self.posting_files and self.n_docs:
             # store unreachable from pyarrow: per-query generic scans,
             # tagged with qid — slower, never wrong (each self.search
@@ -355,9 +325,15 @@ class FtsIndex:
                 ))
             return out
         self.query_log.extend(queries)
-        fn = (search_index_files_batch_direct if self.driver_direct
-              else search_index_files_batch)
-        return fn(
+        return self._search_files(queries, top_k)
+
+    def _search_files(self, queries: list[str], top_k: int) -> DataFrame:
+        """The shard-scan search of a batch, on this index's route
+        (driver-direct or Spark) with its tombstones, phrase-df coverage
+        and presence pruning."""
+        from codebased_spark.operators.query import search_index_files_batch
+
+        return search_index_files_batch(
             self.spark, self.posting_files, queries, self.n_docs, self.avgdl,
             top_k, deletes_dir=self._task_deletes_dir(),
             phrase_dfs_by_query={
@@ -366,17 +342,19 @@ class FtsIndex:
                 ) if dfs is not None
             },
             presence=self.term_blocks,
+            direct=self.driver_direct,
         )
 
     def _covering_dfs(self, query: str) -> "list[tuple[int, int]] | None":
-        """Per-phrase (df_all, df_name) when EVERY parsed phrase of the
-        query is in the phrase-df side table, else None (partial
+        """Per-phrase (df_all, df_name), aligned with the phrases the
+        query is matched on (functions/fts5.match_phrases), when EVERY
+        such phrase is in the phrase-df side table, else None (partial
         coverage can't fix any idf: scoring needs all of them)."""
         if not self.phrase_dfs:
             return None
-        from codebased_spark.functions.fts5 import query_phrases
+        from codebased_spark.functions.fts5 import match_phrases
 
-        phrases = query_phrases(query)
+        phrases = match_phrases(query)
         if not phrases or any(p not in self.phrase_dfs for p in phrases):
             return None
         return [self.phrase_dfs[p] for p in phrases]

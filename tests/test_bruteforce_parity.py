@@ -27,6 +27,8 @@ QUERIES = [
     'hello! "world?" how_are_you',
     "",
     '"' + "a" * 100 + '" ' + "b" * 100,
+    '"hello" "ab"',  # a sub-trigram phrase drops out of the AND
+    '"ab" "cd"',     # ...and a query left with none matches nothing
 ]
 
 

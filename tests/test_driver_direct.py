@@ -3,17 +3,17 @@ small (embedded-regime, single-repo-sized) indexes FtsIndex routes
 search/search_batch through a driver-side pyarrow scan — same reads,
 same block machinery, same scoring pipeline, NO Spark job. Results
 must be bit-identical to the distributed path in every shape (covered,
-uncovered, tombstones, batch, empty), routing must obey the byte gate
-and the env override, and the path must genuinely never launch the
-distributed scan."""
-
-import os
+uncovered, tombstones, batch, empty) and rank-identical to FTS5,
+routing must obey the byte and shard gates and the ``driver_direct``
+pin, and the path must genuinely never launch the distributed scan."""
 
 import pytest
 
 from codebased_spark.operators.phrasedf import build_phrase_df
+from codebased_spark.oracle import Fts5Oracle
 from codebased_spark.plans.engine import FtsIndex, build_index
 from codebased_spark.sources.corpus import fixture_corpus
+from tests.parity import assert_rank_identical, oracle_hits
 
 QUERIES = [
     "hello world",
@@ -22,6 +22,7 @@ QUERIES = [
     "index.js",
     "zqxjkw notthere",   # no hits
     "ab",                # sub-trigram -> empty, no reads
+    "hello ab",          # sub-trigram phrase drops out of the AND
     "print hello",
 ]
 
@@ -31,11 +32,8 @@ def pair(spark, tmp_path_factory):
     idx_dir = str(tmp_path_factory.mktemp("dd") / "idx")
     build_index(spark, fixture_corpus(spark), idx_dir, num_blocks=4)
     direct = FtsIndex(spark, idx_dir)
-    os.environ["SPARK_GRAFT_DRIVER_DIRECT"] = "0"
-    try:
-        dist = FtsIndex(spark, idx_dir)
-    finally:
-        os.environ.pop("SPARK_GRAFT_DRIVER_DIRECT")
+    dist = FtsIndex(spark, idx_dir)
+    dist.driver_direct = False
     return direct, dist, idx_dir
 
 
@@ -44,29 +42,39 @@ def _hits(df):
              float(r["score"])) for r in df.collect()]
 
 
-def test_routing_flags(spark, pair):
+def test_routing_flags(spark, pair, monkeypatch):
+    """The byte and shard gates pick the feeder at load; assigning
+    ``driver_direct`` pins it."""
+    import codebased_spark.operators.query as q
+
     direct, dist, idx_dir = pair
     assert direct.postings_bytes > 0
     assert direct.driver_direct          # tiny index -> auto-on
-    assert not dist.driver_direct        # env force-off respected
-    os.environ["SPARK_GRAFT_DRIVER_DIRECT"] = "1"
-    try:
-        assert FtsIndex(spark, idx_dir).driver_direct
-    finally:
-        os.environ.pop("SPARK_GRAFT_DRIVER_DIRECT")
-    # the byte gate: a store "bigger" than the ceiling routes distributed
-    import codebased_spark.operators.query as q
-
-    big = FtsIndex(spark, idx_dir)
-    big.postings_bytes = q.DRIVER_DIRECT_MAX_BYTES + 1
-    # gate is evaluated at load; re-derive as __init__ would
-    assert not (0 < big.postings_bytes <= q.DRIVER_DIRECT_MAX_BYTES)
+    assert not dist.driver_direct        # attribute pin respected
+    # each gate alone routes a store past it to the Spark feeder
+    monkeypatch.setattr(q, "DRIVER_DIRECT_MAX_BYTES", direct.postings_bytes - 1)
+    assert not FtsIndex(spark, idx_dir).driver_direct
+    monkeypatch.undo()
+    monkeypatch.setattr(q, "DRIVER_DIRECT_MAX_SHARDS",
+                        len(direct.posting_files) - 1)
+    assert not FtsIndex(spark, idx_dir).driver_direct
 
 
 def test_direct_bit_identical_single_and_batch(spark, pair):
+    """Direct feeder == Spark feeder bit for bit, single and batch, and
+    both rank-identical to the FTS5 oracle."""
     direct, dist, _ = pair
+    content = {(r["repo"], r["path"]): r["content"]
+               for r in fixture_corpus(spark).collect()}
+    oracle = Fts5Oracle(
+        (r["doc_id"], r["path"], r["name"], content[(r["repo"], r["path"])])
+        for r in direct.doc_stats.select("doc_id", "repo", "path",
+                                         "name").collect())
     for qq in QUERIES:
-        assert _hits(direct.search(qq, 10)) == _hits(dist.search(qq, 10)), qq
+        got = _hits(direct.search(qq, 10))
+        assert got == _hits(dist.search(qq, 10)), qq
+        assert_rank_identical([(d, nm, s) for d, nm, _rk, s in got],
+                              oracle_hits(oracle.search(qq, 10)), 10)
     got = sorted(tuple(r) for r in direct.search_batch(QUERIES, 10).collect())
     want = sorted(tuple(r) for r in dist.search_batch(QUERIES, 10).collect())
     assert got == want
@@ -98,11 +106,8 @@ def test_direct_covered_and_tombstones(spark, tmp_path):
 
     direct = FtsIndex(spark, idx_dir)
     assert direct.driver_direct
-    os.environ["SPARK_GRAFT_DRIVER_DIRECT"] = "0"
-    try:
-        dist = FtsIndex(spark, idx_dir)
-    finally:
-        os.environ.pop("SPARK_GRAFT_DRIVER_DIRECT")
+    dist = FtsIndex(spark, idx_dir)
+    dist.driver_direct = False
     for qq in ['"hello world"', '"hello world" hello', "hello",
                '"hello world" zqxjkw']:
         assert direct._covering_dfs(qq) is not None, qq
@@ -113,9 +118,9 @@ def test_direct_covered_and_tombstones(spark, tmp_path):
 
 def test_direct_truly_runs_no_spark_scan(spark, pair, monkeypatch):
     """The direct path must never touch the distributed scan: poison
-    _scan_df (the range-sourced mapInPandas feeder) and the legacy
-    _files_df — direct searches still answer, and the same searches on
-    the distributed handle now fail."""
+    _scan_df (the range-sourced mapInPandas feeder) — direct searches
+    still answer, and the same searches on the distributed handle now
+    fail."""
     import codebased_spark.operators.query as q
 
     direct, dist, _ = pair
@@ -123,7 +128,6 @@ def test_direct_truly_runs_no_spark_scan(spark, pair, monkeypatch):
     def boom(*_a, **_k):
         raise AssertionError("distributed scan launched")
 
-    monkeypatch.setattr(q, "_files_df", boom)
     monkeypatch.setattr(q, "_scan_df", boom)
     direct._search_cache.clear()
     assert _hits(direct.search("hello world", 5)) is not None

@@ -16,6 +16,7 @@ from codebased_spark.functions.fts5 import (
     count_overlapping,
     doc_length,
     idf,
+    match_phrases,
     pack_trigram,
     phrase_terms,
     query_phrases,
@@ -101,6 +102,31 @@ def test_name_column_rank_matches_sqlite(fts, q, phrases):
 
 def test_short_phrase_yields_nothing(fts):
     assert fts.execute("select count(*) from fts('\"ab\"')").fetchone()[0] == 0
+
+
+@pytest.mark.parametrize("q,kept", [
+    ('"hello" "ab"', '"hello"'),
+    ('"ab" "hello" "x"', '"hello"'),
+    ('"hello" "world" ")"', '"hello" "world"'),
+    ('"ab" "cd"', None),
+])
+def test_short_phrase_drops_out_of_conjunction(fts, q, kept):
+    """FTS5 drops a phrase under 3 chars from the AND when another
+    phrase remains (identical ranks, in both branches), and matches
+    nothing when none remains — the rule match_phrases encodes."""
+    def ranks(query, where):
+        return fts.execute(
+            f"select rowid, rank from fts where {where} match ? order by rowid",
+            (query,)).fetchall()
+
+    for where in ("fts", "name"):
+        got = ranks(q, where)
+        if kept is None:
+            assert got == []
+        else:
+            assert got and got == ranks(kept, where)
+    want = [] if kept is None else query_phrases(kept)
+    assert match_phrases(q) == want
 
 
 def test_quote_fts_query_matches_reference():

@@ -23,6 +23,8 @@ QUERIES = [
     "express require",  # cross-column conjunction exercise
     "code hello",       # phrases matching in *different* columns
     "",
+    '"hello" "ab"',     # a sub-trigram phrase drops out of the AND
+    '"ab" "cd"',        # ...and a query left with none matches nothing
 ]
 
 
@@ -73,6 +75,73 @@ def test_cross_column_and_matches_sqlite(built):
     assert len(ref) > 0  # the probe is only meaningful if something matches
     ours = spark_hits(index.search("code hello", 10))
     assert_rank_identical(ours, oracle_hits(ref), 10)
+
+
+# FTS5 drops a phrase under 3 chars (no trigrams) from the conjunction
+# when another phrase remains — with identical BM25 scores — and
+# matches nothing when none does (probed against SQLite 3.40.1)
+SUB_TRIGRAM_QUERIES = [
+    '"type"',
+    '"type" "ab"',
+    '"ab" "type" "x"',
+    '"" "type"',
+    '"type" "hello world" ")"',
+    '"type" "hello world")"',   # quotes to the query above
+    '"type" "hello world"',
+    '"ab" "cd"',
+]
+
+
+@pytest.fixture(scope="module")
+def sub_trigram(spark, tmp_path_factory):
+    from codebased_spark.sources.corpus import CORPUS_SCHEMA
+
+    rows = []
+    for i in range(40):
+        parts = ["type " * (1 + i % 4)] if i % 3 == 0 else []
+        if i % 4 == 0:
+            parts.append("hello world")
+        if i % 2 == 0:
+            parts.append("f(x)")
+        parts.append("ab cd x" if i % 5 == 0 else "filler")
+        name = f"types{i}.py" if i % 6 == 0 else f"m{i}.py"
+        rows.append(("r1", f"src/{name}", "c" * 40, "python", " ".join(parts)))
+    corpus = spark.createDataFrame(rows, CORPUS_SCHEMA)
+    index = build_index(spark, corpus,
+                        str(tmp_path_factory.mktemp("st") / "idx"), num_blocks=2)
+    content = {r[1]: r[4] for r in rows}
+    oracle = Fts5Oracle(
+        (r["doc_id"], r["path"], r["name"], content[r["path"]])
+        for r in index.doc_stats.select("doc_id", "path", "name").collect()
+    )
+    return index, oracle, corpus
+
+
+@pytest.mark.parametrize("query", SUB_TRIGRAM_QUERIES)
+def test_sub_trigram_phrase_drops_like_fts5(spark, sub_trigram, query):
+    """Every engine path ranks a query holding a sub-trigram phrase
+    exactly as FTS5 does: the index on both scan feeders, the generic
+    DataFrame scan and the brute-force scan."""
+    from codebased_spark.operators.docs import build_docs
+    from codebased_spark.operators.query import search_index
+
+    index, oracle, corpus = sub_trigram
+    ref = oracle_hits(oracle.search(query, 10))
+    assert ref or query == '"ab" "cd"'  # the probe must match something
+    auto = index.driver_direct
+    try:
+        for direct in (True, False):
+            index.driver_direct = direct
+            index._search_cache.clear()
+            assert_rank_identical(spark_hits(index.search(query, 10)), ref, 10)
+    finally:
+        index.driver_direct = auto
+        index._search_cache.clear()
+    generic = search_index(index.postings, query, index.n_docs, index.avgdl, 10)
+    assert_rank_identical(spark_hits(generic), ref, 10)
+    brute = search_bruteforce(build_docs(corpus, num_blocks=2), query, 10,
+                              index.n_docs, index.avgdl)
+    assert_rank_identical(spark_hits(brute), ref, 10)
 
 
 def test_index_build_deterministic(spark, tmp_path):
@@ -144,39 +213,58 @@ def test_empty_and_single_doc_corpora(spark, tmp_path):
     assert len(hit) == 1 and hit[0]["score"] > 0
 
 
+def _generic_rows(index, query, top_k):
+    """(name_match, rank, doc_id) of the generic DataFrame scan — the
+    independent reference for the shard-scan path (no shard list, no
+    presence pruning, no task-level prune, per-block candidates)."""
+    from codebased_spark.operators.query import search_index
+
+    return sorted(
+        (bool(r["name_match"]), round(float(r["rank"]), 12), int(r["doc_id"]))
+        for r in search_index(index.postings, query, index.n_docs,
+                              index.avgdl, top_k).collect()
+    )
+
+
 def test_batch_search_matches_individual(spark, built):
-    """search_batch must be bit-identical per query to search(), and
-    tolerate invalid/no-match queries mixed into the batch."""
-    index, _ = built
+    """Every query of a search_batch must be bit-identical to the
+    generic DataFrame scan of that query alone and rank-identical to
+    FTS5, with invalid/no-match queries mixed into the batch."""
+    index, oracle = built
     queries = ["Hello world", "Server started", "code hello", "zz", "nomatchxyz", "",
                '"wor"', '"hel" "wor"']  # single-trigram WAND + shared-phrase mix
     batch = index.search_batch(queries, top_k=10)
     by_q = {}
     for r in batch.collect():
         by_q.setdefault(int(r["qid"]), []).append(
-            (bool(r["name_match"]), round(float(r["rank"]), 12), int(r["doc_id"]))
+            (int(r["doc_id"]), bool(r["name_match"]), float(r["score"]))
         )
     for qi, q in enumerate(queries):
-        single = sorted(
-            (bool(r["name_match"]), round(float(r["rank"]), 12), int(r["doc_id"]))
-            for r in index.search(q, 10).collect()
-        )
-        assert sorted(by_q.get(qi, [])) == single, q
+        got = by_q.get(qi, [])
+        assert sorted((nm, round(-s, 12), d) for d, nm, s in got) == \
+            _generic_rows(index, q, 10), q
+        got.sort(key=lambda t: (not t[1], -t[2], t[0]))
+        assert_rank_identical(got, oracle_hits(oracle.search(q, 10)), 10)
     assert 3 not in by_q and 4 not in by_q and 5 not in by_q
 
 
-def test_batch_search_100_queries_flat_plan(spark, built):
+def test_batch_search_100_queries_flat_plan(spark, built, monkeypatch):
     """VERDICT r02 #5: batch width must not grow the plan. 100 queries
-    run through the same single flat plan (broadcast idf lookup + one
-    scoring expression), in wall-time comparable to a 6-query batch —
-    the old shape built 2 unioned branches per query and would spend
-    minutes compiling. Results stay bit-identical to search()."""
+    run through the same single flat JVM plan (broadcast idf lookup +
+    one scoring expression; forced by dropping DRIVER_FINISH_MAX to 0),
+    in wall-time comparable to a 6-query batch — the old shape built 2
+    unioned branches per query and would spend minutes compiling.
+    Results stay bit-identical to the generic scan."""
     import time
+
+    import codebased_spark.operators.query as q
 
     index, _ = built
     words = ["hello", "world", "server", "started", "code", "scan",
              "return", "port", "table", "merge"]
     queries = [f"{words[i % 10]} {words[(i * 3 + 1) % 10]}" for i in range(100)]
+    want = {qi: _generic_rows(index, queries[qi], 10) for qi in range(0, 100, 11)}
+    monkeypatch.setattr(q, "DRIVER_FINISH_MAX", 0)
     t0 = time.time()
     batch = index.search_batch(queries, top_k=10)
     by_q = {}
@@ -186,12 +274,9 @@ def test_batch_search_100_queries_flat_plan(spark, built):
         )
     took = time.time() - t0
     assert took < 90.0  # flat plan: seconds, not branch-compile minutes
-    for qi in range(0, 100, 11):  # sample parity vs single-query search
-        single = sorted(
-            (bool(r["name_match"]), round(float(r["rank"]), 12), int(r["doc_id"]))
-            for r in index.search(queries[qi], 10).collect()
-        )
-        assert sorted(by_q.get(qi, [])) == single, queries[qi]
+    assert any(want.values())
+    for qi, rows in want.items():  # sample parity vs the generic scan
+        assert sorted(by_q.get(qi, [])) == rows, queries[qi]
 
 
 def test_multichunk_selective_decode_parity(spark, tmp_path):
@@ -415,22 +500,59 @@ def test_single_trigram_wand_unit(spark):
         assert (kt == tfs[idx]).all() and (kl == dls[idx]).all()
 
 
+def _brute_dfs(spark, index, phrase):
+    """(df_all, df_name) of a phrase over the fixture corpus, counted in
+    python — the phrase-df side table's values, without building it."""
+    from codebased_spark.functions.fts5 import casefold, count_overlapping
+
+    content = {(r["repo"], r["path"]): r["content"]
+               for r in fixture_corpus(spark).collect()}
+    da = dn = 0
+    for r in index.doc_stats.select("repo", "path", "name").collect():
+        cols = [r["path"], r["name"], content[(r["repo"], r["path"])]]
+        da += any(count_overlapping(casefold(c), phrase) for c in cols)
+        dn += count_overlapping(casefold(r["name"]), phrase) > 0
+    return da, dn
+
+
+def _with_covered(spark, index, monkeypatch):
+    """Give the shared fixture index phrase-df coverage for one
+    multi-phrase query (restored by monkeypatch) and return the query."""
+    covered = "hello print"
+    monkeypatch.setattr(index, "phrase_dfs", {
+        p: _brute_dfs(spark, index, p) for p in ("hello", "print")})
+    assert index._covering_dfs(covered) is not None
+    return covered
+
+
 def test_driver_finish_matches_jvm_tail(spark, built, monkeypatch):
     """The one-job driver-side scoring tail and the JVM fallback plan
     must return identical rows (same doc ids, name_match, and EXACT
-    rank/score doubles) — forced by dropping DRIVER_FINISH_MAX to 0."""
+    rank/score doubles) for single-phrase, multi-phrase and covered
+    queries, single and batched — the fallback forced by dropping
+    DRIVER_FINISH_MAX to 0 (which also moves the fixture index off the
+    direct feeder: its bound no longer fits)."""
     import codebased_spark.operators.query as q
 
     index, _ = built
-    queries = ["Hello world", "Server started", '"wor"', "code hello"]
+    index._search_cache.clear()
+    covered = _with_covered(spark, index, monkeypatch)
+    queries = ["Hello world", "Server started", '"wor"', "code hello", covered]
     fast = {qq: [(int(r["doc_id"]), bool(r["name_match"]), float(r["rank"]))
                  for r in index.search(qq, 10).collect()] for qq in queries}
+    assert fast[covered]
+    assert sorted((nm, round(rk, 12), d) for d, nm, rk in fast[covered]) == \
+        _generic_rows(index, covered, 10)  # the covered dfs are right
     fast_b = sorted(
         (int(r["qid"]), int(r["doc_id"]), bool(r["name_match"]), float(r["rank"]))
         for r in index.search_batch(queries, 10).collect()
     )
     index._search_cache.clear()
     monkeypatch.setattr(q, "DRIVER_FINISH_MAX", 0)
+    jvm_calls = []
+    real_jvm = q._jvm_tail
+    monkeypatch.setattr(
+        q, "_jvm_tail", lambda *a: jvm_calls.append(1) or real_jvm(*a))
     for qq in queries:
         jvm = [(int(r["doc_id"]), bool(r["name_match"]), float(r["rank"]))
                for r in index.search(qq, 10).collect()]
@@ -440,6 +562,7 @@ def test_driver_finish_matches_jvm_tail(spark, built, monkeypatch):
         for r in index.search_batch(queries, 10).collect()
     )
     assert jvm_b == fast_b  # batch fallback identical too
+    assert len(jvm_calls) == len(queries) + 1  # every search took it
     index._search_cache.clear()
 
 
@@ -529,7 +652,8 @@ def test_tail_bound_routing(spark, built, monkeypatch):
     computable candidate bound, never from a doomed probe collect.
 
     - bound > DRIVER_FINISH_MAX  -> straight to the JVM tail, ZERO
-      calls to _collect_bounded (the old 200k-row collect-then-discard);
+      calls to _collect_bounded (the old 200k-row collect-then-discard)
+      — single-phrase, multi-phrase and covered alike;
     - single-phrase (exact bound <= cap) -> plain collect, also zero
       _collect_bounded calls;
     - multi-phrase under the cap -> the limit-guarded collect runs
@@ -537,19 +661,21 @@ def test_tail_bound_routing(spark, built, monkeypatch):
     import codebased_spark.operators.query as q
 
     index, _ = built
-    # this test pins the DISTRIBUTED tail's routing; a fixture-sized
-    # index would otherwise take the zero-job direct path (r5), which
+    # this test pins the Spark feeder's tail routing; a fixture-sized
+    # index would otherwise take the zero-job direct feeder, which
     # never collects at all
     monkeypatch.setattr(index, "driver_direct", False)
+    index._search_cache.clear()
+    covered = _with_covered(spark, index, monkeypatch)
     single, multi = '"world"', "code hello"
     want = {qq: [(int(r["doc_id"]), bool(r["name_match"]), float(r["rank"]))
                  for r in index.search(qq, 10).collect()]
-            for qq in (single, multi)}
+            for qq in (single, multi, covered)}
     want_b = sorted(
         (int(r["qid"]), int(r["doc_id"]), bool(r["name_match"]), float(r["rank"]))
-        for r in index.search_batch([single, multi], 10).collect()
+        for r in index.search_batch([single, multi, covered], 10).collect()
     )
-    assert want[single] and want[multi]
+    assert want[single] and want[multi] and want[covered]
 
     calls = []
     real = q._collect_bounded
@@ -560,13 +686,13 @@ def test_tail_bound_routing(spark, built, monkeypatch):
     # route 1: bound exceeds the cap -> JVM tail, no probe collect
     index._search_cache.clear()
     monkeypatch.setattr(q, "DRIVER_FINISH_MAX", 0)
-    for qq in (single, multi):
+    for qq in (single, multi, covered):
         got = [(int(r["doc_id"]), bool(r["name_match"]), float(r["rank"]))
                for r in index.search(qq, 10).collect()]
         assert got == want[qq], qq
     got_b = sorted(
         (int(r["qid"]), int(r["doc_id"]), bool(r["name_match"]), float(r["rank"]))
-        for r in index.search_batch([single, multi], 10).collect()
+        for r in index.search_batch([single, multi, covered], 10).collect()
     )
     assert got_b == want_b
     assert calls == []  # the scale-killer: no collect-then-discard
@@ -574,9 +700,10 @@ def test_tail_bound_routing(spark, built, monkeypatch):
     # route 2: exact single-phrase bound under the cap -> plain collect
     index._search_cache.clear()
     monkeypatch.setattr(q, "DRIVER_FINISH_MAX", 200_000)
-    got = [(int(r["doc_id"]), bool(r["name_match"]), float(r["rank"]))
-           for r in index.search(single, 10).collect()]
-    assert got == want[single]
+    for qq in (single, covered):
+        got = [(int(r["doc_id"]), bool(r["name_match"]), float(r["rank"]))
+               for r in index.search(qq, 10).collect()]
+        assert got == want[qq], qq
     assert calls == []  # exact bound needs no limit probe either
 
     # route 3: multi-phrase under the cap -> guarded collect runs
@@ -588,19 +715,76 @@ def test_tail_bound_routing(spark, built, monkeypatch):
 
 
 def test_tail_bound_derivation():
-    """_tail_bound mirrors the per-block emission guarantees: n_ph
-    kind=0 rows + 2*top_k (single-phrase, exact) or 4*top_k heuristic
-    (multi-phrase) kind=1 rows, times the block count."""
-    from codebased_spark.operators.query import _tail_bound
+    """_tail_bound mirrors the per-TASK emission guarantees (each task
+    prunes across all its blocks): n_ph summed stat rows + 2*top_k
+    (single-phrase, exact) or 4*top_k heuristic (multi-phrase) doc rows
+    per query, times the task count."""
+    from codebased_spark.operators.query import DRIVER_FINISH_MAX, _tail_bound
 
-    assert _tail_bound(100, [1], 32) == (100 * (2 * 32 + 1), True)
+    assert _tail_bound(4, [1], 32) == (4 * (2 * 32 + 1), True)
     assert _tail_bound(10, [3], 32) == (10 * (4 * 32 + 3), False)
     assert _tail_bound(5, [1, 2], 32) == (
         5 * ((2 * 32 + 1) + (4 * 32 + 2)), False)
-    # the gate at scale: 40k blocks of a single-phrase query exceed the
-    # 200k cap -> the tail must go straight to the JVM plan
-    bound, exact = _tail_bound(40_000, [1], 32)
-    assert exact and bound > 200_000
+    # block count never enters: a 32-task scan keeps a 6-query
+    # single-phrase batch under the cap however many shards it reads
+    assert _tail_bound(32, [1] * 6, 32) == (32 * 6 * 65, True)
+    assert 32 * 6 * 65 <= DRIVER_FINISH_MAX
+    # a bound past the cap still routes straight to the JVM plan
+    bound, exact = _tail_bound(4_000, [1], 32)
+    assert exact and bound > DRIVER_FINISH_MAX
+
+
+def test_tail_bound_charges_per_task(spark, tmp_path, monkeypatch):
+    """A 16-block index with DRIVER_FINISH_MAX set between the per-task
+    and the per-block candidate bounds: a single search and a batch
+    both finish on the driver, each as exactly ONE Spark job. (A
+    per-block charge sends both to the JVM tail — a persist and extra
+    jobs — although per-task emission keeps the rows under the cap.)"""
+    import codebased_spark.operators.query as q
+    from codebased_spark.sources.corpus import CORPUS_SCHEMA
+
+    n_blocks, top_k = 16, 5
+    corpus = spark.createDataFrame(_mk_corpus_rows(600), CORPUS_SCHEMA)
+    index = build_index(spark, corpus, str(tmp_path / "pt"), num_blocks=n_blocks)
+    index.driver_direct = False
+    assert len(index.posting_files) == n_blocks
+    queries = ['"value"', '"val"']  # single-phrase: exact bounds
+    want = {qq: _generic_rows(index, qq, top_k) for qq in queries}
+
+    n_tasks = q._scan_tasks(spark, n_blocks)
+    per_task = q._tail_bound(n_tasks, [1, 1], top_k)[0]
+    per_block = q._tail_bound(n_blocks, [1], top_k)[0]
+    assert per_task < per_block
+    monkeypatch.setattr(q, "DRIVER_FINISH_MAX", (per_task + per_block) // 2)
+
+    def no_jvm_tail(*_a):
+        raise AssertionError("JVM tail taken")
+
+    monkeypatch.setattr(q, "_jvm_tail", no_jvm_tail)
+
+    sc = spark.sparkContext
+
+    def jobs_of(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            out = action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    rows, n_jobs = jobs_of(
+        "per_task_single", lambda: index.search(queries[0], top_k).collect())
+    assert n_jobs == 1
+    assert sorted((bool(r["name_match"]), round(float(r["rank"]), 12),
+                   int(r["doc_id"])) for r in rows) == want[queries[0]]
+
+    rows, n_jobs = jobs_of(
+        "per_task_batch", lambda: index.search_batch(queries, top_k).collect())
+    assert n_jobs == 1
+    for qi, qq in enumerate(queries):
+        assert sorted((bool(r["name_match"]), round(float(r["rank"]), 12),
+                       int(r["doc_id"])) for r in rows
+                      if r["qid"] == qi) == want[qq], qq
 
 
 def test_concurrent_searches_one_session(spark, built):

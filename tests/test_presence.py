@@ -17,7 +17,7 @@ from codebased_spark.operators.presence import (
 )
 from codebased_spark.operators.query import (
     _prune_posting_files,
-    search_index_files,
+    search_index,
     search_index_files_batch,
 )
 from codebased_spark.plans.engine import FtsIndex, build_index
@@ -44,6 +44,21 @@ def _rows(df):
              float(r["score"])) for r in df.collect()]
 
 
+def _pruned_and_unpruned(spark, index, query, presence):
+    """One query's rows through the shard scan with presence pruning on
+    both feeders, and through the generic DataFrame scan — an
+    independent path that reads every block (no shard list at all)."""
+    pruned = [
+        _rows(search_index_files_batch(
+            spark, index.posting_files, [query], index.n_docs, index.avgdl,
+            10, presence=presence, direct=direct).drop("qid"))
+        for direct in (True, False)
+    ]
+    generic = _rows(search_index(
+        index.postings, query, index.n_docs, index.avgdl, 10))
+    return pruned, generic
+
+
 def test_build_creates_manifest_and_matches_bruteforce(spark, built):
     index, idx_dir = built
     tb = index.term_blocks
@@ -68,13 +83,9 @@ def test_build_creates_manifest_and_matches_bruteforce(spark, built):
 @pytest.mark.parametrize("query", QUERIES)
 def test_pruned_search_bit_identical(spark, built, query):
     index, _ = built
-    kw = dict(deletes_dir=None, top_k=10)
-    base = _rows(search_index_files(
-        spark, index.posting_files, query, index.n_docs, index.avgdl, **kw))
-    pruned = _rows(search_index_files(
-        spark, index.posting_files, query, index.n_docs, index.avgdl,
-        presence=index.term_blocks, **kw))
-    assert pruned == base
+    pruned, generic = _pruned_and_unpruned(spark, index, query,
+                                           index.term_blocks)
+    assert pruned == [generic, generic]
 
 
 def test_pruned_batch_bit_identical(spark, built):
@@ -209,14 +220,8 @@ def test_dense_terms_capped_at_build(spark, tmp_path):
     assert all(got[t] == tb.covered for t in dense[:3])
     # and pruned search through the dense-capped table is bit-identical
     for query in ("hello world", "zqxjkwv"):
-        kw = dict(deletes_dir=None, top_k=10)
-        base = _rows(search_index_files(
-            spark, index.posting_files, query, index.n_docs, index.avgdl,
-            **kw))
-        pruned = _rows(search_index_files(
-            spark, index.posting_files, query, index.n_docs, index.avgdl,
-            presence=tb, **kw))
-        assert pruned == base
+        pruned, generic = _pruned_and_unpruned(spark, index, query, tb)
+        assert pruned == [generic, generic]
 
 
 def test_dense_cap_applies_to_large_deltas(spark, tmp_path):
@@ -261,14 +266,9 @@ def test_dense_cap_applies_to_large_deltas(spark, tmp_path):
     assert exact_sentinels == 0 and delta_sentinels > 0
     # mixed-generation lookups and search stay correct
     assert len(idx.search("hello world", 10).collect()) > 0
-    kw = dict(deletes_dir=None, top_k=10)  # add-only commit: no deletes
-    base = _rows(search_index_files(
-        spark, idx.posting_files, "hello world", idx.n_docs, idx.avgdl,
-        **kw))
-    pruned = _rows(search_index_files(
-        spark, idx.posting_files, "hello world", idx.n_docs, idx.avgdl,
-        presence=tb, **kw))
-    assert pruned == base
+    # add-only commit: no deletes to pass
+    pruned, generic = _pruned_and_unpruned(spark, idx, "hello world", tb)
+    assert pruned == [generic, generic]
 
 
 def test_small_writes_stay_exact(built):

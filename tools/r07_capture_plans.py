@@ -64,30 +64,30 @@ def main() -> None:
     # capture BOTH: the scan plan is the evidence the shape claims
     # rest on).
     from codebased_spark.operators.query import (
-        CAND2_SCHEMA,
-        _file_candidates_fn,
-        _parse_single,
-        _prune_posting_files,
+        BATCH_SCHEMA,
+        _batch_candidates_fn,
+        _parse_batch,
+        _prune_batch,
         _scan_df,
     )
 
     for name, q in QUERIES.items():
         index._search_cache.clear()
         write(name, index.search(q, 32))
-        got = _parse_single(q, index.n_docs, None)
-        if got is None:
+        parsed, _known = _parse_batch([q], index.n_docs, {})
+        if not parsed:
             continue
-        phrases, term_ids, needed, _known = got
-        files = _prune_posting_files(index.posting_files, term_ids, None,
-                                     index.term_blocks)
-        if not files:
+        files, parsed, _known, needed = _prune_batch(
+            index.posting_files, parsed, {}, index.term_blocks)
+        if not parsed:
             with open(os.path.join(out_dir, f"{name}_scan_{tag}.txt"), "w") as f:
                 f.write("(presence pruned every shard: zero-job result)\n")
             continue
         cand = _scan_df(
             spark, files,
-            _file_candidates_fn(term_ids, needed, None, 32, index.avgdl, None),
-            CAND2_SCHEMA)
+            _batch_candidates_fn([(0, parsed[0][2])], needed, None, 32,
+                                 index.avgdl),
+            BATCH_SCHEMA)
         write(f"{name}_scan", cand)
     write("batch6", index.search_batch(list(QUERIES.values()), 32))
 

@@ -65,17 +65,17 @@ def main() -> None:
 
     # tail instrumentation: record (tail, candidate_rows) per search
     tails: list[tuple[str, int | None]] = []
-    orig_fd, orig_fj = q._finish_driver, q._finish_jvm
+    orig_fd, orig_fj = q._driver_tail, q._jvm_tail
 
-    def fd(rows, *a, **k):
+    def fd(spark_, rows, *a, **k):
         tails.append(("driver", len(rows)))
-        return orig_fd(rows, *a, **k)
+        return orig_fd(spark_, rows, *a, **k)
 
-    def fj(cand, *a, **k):
+    def fj(*a, **k):
         tails.append(("jvm", None))
-        return orig_fj(cand, *a, **k)
+        return orig_fj(*a, **k)
 
-    q._finish_driver, q._finish_jvm = fd, fj
+    q._driver_tail, q._jvm_tail = fd, fj
 
     for n_files in sizes:
         # same corpus mix as bench.py: the driver's documents table (so
@@ -190,7 +190,7 @@ def main() -> None:
             **presence,
         }), flush=True)
 
-    q._finish_driver, q._finish_jvm = orig_fd, orig_fj
+    q._driver_tail, q._jvm_tail = orig_fd, orig_fj
     spark.stop()
 
 
