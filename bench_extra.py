@@ -1,9 +1,12 @@
 """Round-7 instrumentation harness (bench.py stays FROZEN — guide §1).
 
-Stage-level build timing + query-phase breakdown at a given SF dir.
+Build wall time + query-phase breakdown at a given SF dir.
 Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
        python bench_extra.py [build|query|all]
-Prints one JSON line per section.
+Prints one JSON line per section. The build's per-stage split (docs,
+doc_stats, postings, presence) is what
+``python3 perfbench/run.py --workload search --trace 1`` reports as
+``engine.build.*``.
 """
 
 from __future__ import annotations
@@ -43,20 +46,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
 
-    from pyspark.sql import functions as F
-
-    from codebased_spark.operators.build import build_postings_fused
-    from codebased_spark.operators.docs import DOC_ID_BLOCK_BITS, build_docs
-    from codebased_spark.operators.presence import build_term_blocks
-    from codebased_spark.plans.engine import (
-        POSTING_ROW_GROUP_BYTES,
-        FORMAT_VERSION,
-        FtsIndex,
-        IndexFS,
-        _join,
-        _postings_footer_metrics,
-        _write_manifest,
-    )
+    from codebased_spark.plans.engine import FtsIndex, build_index
     from codebased_spark.sources.corpus import documents_as_corpus, gen_corpus
 
     docs_corpus = documents_as_corpus(spark, sf_dir)
@@ -71,70 +61,12 @@ def main() -> None:
 
     idx_dir = os.path.join(tempfile.gettempdir(), f"benchx_idx_sf{sf}")
 
-    stages: dict[str, float] = {}
-
-    def stage(name):
-        class _T:
-            def __enter__(self):
-                sc.setJobDescription(f"r07-build:{name}")
-                self.t = time.time()
-                return self
-
-            def __exit__(self, *a):
-                stages[name] = round(time.time() - self.t, 3)
-                sc.setJobDescription(None)
-
-        return _T()
-
     if mode in ("build", "all"):
         shutil.rmtree(idx_dir, ignore_errors=True)
-        fs = IndexFS(spark, idx_dir)
-        num_blocks = 32
         t0 = time.time()
-        with stage("docs_persist"):
-            docs = build_docs(corpus, num_blocks=num_blocks).persist()
-            docs.count()
-        with stage("doc_stats_write"):
-            docs.drop("content").write.mode("overwrite").parquet(
-                _join(idx_dir, "doc_stats"))
-        with stage("block_rows_agg"):
-            block_rows = (
-                docs.groupBy(F.shiftright("doc_id", DOC_ID_BLOCK_BITS).alias("pblock"))
-                .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sdl"))
-                .collect()
-            )
-        with stage("corpus_stats_write"):
-            from codebased_spark.session import one_row_df
-
-            n = sum(int(r["n"]) for r in block_rows)
-            total_dl = sum(int(r["sdl"]) for r in block_rows)
-            avgdl = (total_dl / n) if n else 0.0
-            one_row_df(
-                spark,
-                "n_docs long, avgdl double, total_dl long, num_blocks int, version int",
-                (n, avgdl, total_dl, num_blocks, FORMAT_VERSION),
-            ).write.mode("overwrite").parquet(_join(idx_dir, "corpus_stats"))
-        _write_manifest(fs, idx_dir, "doc_stats",
-                        {"stage": "doc_stats", "version": FORMAT_VERSION,
-                         "num_blocks": num_blocks, "docs_per_block": {}})
-        _write_manifest(fs, idx_dir, "corpus_stats",
-                        {"stage": "corpus_stats", "n_docs": n, "avgdl": avgdl,
-                         "version": FORMAT_VERSION})
-        with stage("postings_write"):
-            build_postings_fused(docs).write.mode("overwrite").option(
-                "parquet.block.size", str(POSTING_ROW_GROUP_BYTES)
-            ).partitionBy("pblock").parquet(_join(idx_dir, "postings"))
-        with stage("postings_manifest"):
-            _write_manifest(
-                fs, idx_dir, "postings",
-                {"stage": "postings", "version": FORMAT_VERSION,
-                 "per_block": _postings_footer_metrics(fs, _join(idx_dir, "postings"))})
-        with stage("term_blocks"):
-            build_term_blocks(spark, idx_dir, fs=fs)
-        docs.unpersist()
-        build_total = round(time.time() - t0, 3)
-        print(json.dumps({"section": "build_stages", "sf": sf, "files": n,
-                          "build_total": build_total, "stages": stages,
+        index = build_index(spark, corpus, idx_dir, num_blocks=32)
+        print(json.dumps({"section": "build", "sf": sf, "files": index.n_docs,
+                          "build_total": round(time.time() - t0, 3),
                           "cpus": cpus}))
 
     if mode in ("query", "all"):

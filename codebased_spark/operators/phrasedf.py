@@ -100,9 +100,10 @@ def _ngram_partial_counts(
     - ``split(lower(coalesce(text, '')), r'\\s+')`` with Java's
       ASCII-only ``\\s`` = [ \\t\\n\\x0B\\f\\r] and limit -1 (leading/
       trailing empty tokens kept) — the explicit class below matches
-      Java on ANY input; ``str.lower()`` matches Java's lower for the
-      ASCII corpora this engine targets (same assumption as
-      fts5.casefold).
+      Java on ANY input; ``str.lower()`` equals Spark's ``lower`` on
+      ASCII and on the non-ASCII cases the equality test pins (İ,
+      which lowers to two chars, final Σ, ẞ and titlecase ǅ); other
+      non-ASCII text is unpinned (fts5.casefold assumes the same).
     - unigrams are the raw tokens; an n-gram joins n adjacent tokens
       with a single space (concat_ws keeps empty strings);
     - phrases shorter than 3 chars are dropped (untrigrammable).

@@ -156,49 +156,24 @@ class TermBlocks:
         return {int(t): self._cache[int(t)] for t in terms}
 
 
-def _listed_pblocks(fs, index_dir: str) -> list[int]:
-    """pblock ids of the posting shards currently on disk — what a
-    freshly-loaded index would scan, hence what the manifest may claim
-    to cover."""
-    return sorted({pb for pb, _p in _listed_shards(fs, index_dir)})
-
-
-def _listed_shards(fs, index_dir: str) -> list[tuple[int, str]]:
-    """(pblock, path) of every posting shard file on disk."""
-    from codebased_spark.plans.engine import _join
-
-    out = []
-    for path, _size in fs.list_files(_join(index_dir, "postings")):
-        if not path.endswith(".parquet"):
-            continue
-        seg = [s for s in path.split("/") if s.startswith("pblock=")]
-        if seg:
-            out.append((int(seg[-1].split("=", 1)[1]), path))
-    return out
-
-
 # Above this many shards the presence build keeps the Spark job (the
-# driver-side reader is a per-file loop); below it, reading the tiny
-# dictionary-encoded term column of each shard directly on the driver
-# beats the job + shuffle + single-task-write floor by ~5-10x. Env
-# SPARK_GRAFT_PRESENCE_DRIVER_MAX_SHARDS overrides for ops/benchmarks.
-def _driver_build_max_shards() -> int:
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_PRESENCE_DRIVER_MAX_SHARDS", "256"))
+# driver-side reader is a per-file loop); at or below it, reading the
+# tiny dictionary-encoded term column of each shard directly on the
+# driver beats the job + shuffle + single-task-write floor by ~5-10x.
+PRESENCE_DRIVER_MAX_SHARDS = 256
 
 
 def _use_driver_build(index_dir: str, shards) -> bool:
     """True when the presence table should be built by the driver-side
-    pyarrow reader: LOCAL scheme-less stores under the shard-count gate
-    (any failure there falls back to the Spark job at the call sites'
-    try/except is unnecessary — the gate keeps the driver path on plain
-    POSIX reads only)."""
+    pyarrow reader: a non-empty shard list within
+    PRESENCE_DRIVER_MAX_SHARDS on a LOCAL scheme-less store, so the
+    driver only ever does plain POSIX reads. Every other store takes
+    the Spark job."""
     from codebased_spark.plans.fsio import is_local
 
     return (
         bool(shards)
-        and len(shards) <= _driver_build_max_shards()
+        and len(shards) <= PRESENCE_DRIVER_MAX_SHARDS
         and is_local(index_dir)
         and not index_dir.startswith("file:")
     )
@@ -297,49 +272,19 @@ def build_term_blocks(spark: SparkSession, index_dir: str, fs=None) -> dict:
     """Full build of the presence table from the posting shards (a
     column-pruned scan: only the tiny dictionary-encoded ``term``
     column and the pblock partition value are read — never the posting
-    blobs). Returns the manifest payload."""
-    from codebased_spark.operators.build import POSTING_SCHEMA
-    from codebased_spark.plans.engine import (
-        FORMAT_VERSION,
-        IndexFS,
-        _join,
-        _write_manifest,
-    )
+    blobs): :func:`update_term_blocks`'s extension from empty coverage,
+    overwriting. Returns the manifest payload."""
+    from codebased_spark.plans.engine import IndexFS, _join
 
     fs = fs or IndexFS(spark, index_dir)
-    out_dir = _join(index_dir, TERM_BLOCKS_DIR)
     man = _join(index_dir, "_manifest", f"{TERM_BLOCKS_MANIFEST}.json")
     # manifest gone first: readers fall back to scan-everything while
     # the data is being replaced (stale data + fresh manifest is the
     # only unsafe combination, and this ordering makes it impossible)
     if fs.exists(man):
         fs.delete(man)
-    fs.delete(out_dir)
-    shards = _listed_shards(fs, index_dir)
-    covered = sorted({pb for pb, _p in shards})
-    if _use_driver_build(index_dir, shards):
-        from codebased_spark.plans.fsio import local_path
-
-        _write_pairs_driver(
-            [(pb, local_path(p)) for pb, p in shards],
-            local_path(out_dir), "overwrite", n_scanned_blocks=len(covered),
-        )
-    else:
-        spark.catalog.refreshByPath(_join(index_dir, "postings"))
-        postings = spark.read.schema(POSTING_SCHEMA).parquet(
-            _join(index_dir, "postings"))
-        _write_pairs(
-            spark,
-            postings.select("term", F.col("pblock").cast("int").alias("pblock")),
-            out_dir, "overwrite", n_scanned_blocks=len(covered),
-        )
-    payload = {
-        "stage": TERM_BLOCKS_MANIFEST,
-        "version": FORMAT_VERSION,
-        "covered_pblocks": covered,
-    }
-    _write_manifest(fs, index_dir, TERM_BLOCKS_MANIFEST, payload)
-    return payload
+    fs.delete(_join(index_dir, TERM_BLOCKS_DIR))
+    return _extend_term_blocks(spark, index_dir, fs, set(), "overwrite")
 
 
 def update_term_blocks(
@@ -355,16 +300,9 @@ def update_term_blocks(
     before the manifest leaves the new blocks uncovered (scanned
     unpruned) — correct either way. Coverage is derived purely from
     the manifest (no caller-supplied block offset)."""
-    from codebased_spark.operators.build import POSTING_SCHEMA
-    from codebased_spark.plans.engine import (
-        FORMAT_VERSION,
-        _join,
-        _read_manifest,
-        _write_manifest,
-    )
+    from codebased_spark.plans.engine import FORMAT_VERSION, _join, _read_manifest
 
-    man_path = _join(index_dir, "_manifest", f"{TERM_BLOCKS_MANIFEST}.json")
-    if not fs.exists(man_path):
+    if not fs.exists(_join(index_dir, "_manifest", f"{TERM_BLOCKS_MANIFEST}.json")):
         return None
     try:
         man = _read_manifest(fs, index_dir, TERM_BLOCKS_MANIFEST)
@@ -373,35 +311,48 @@ def update_term_blocks(
     except Exception:
         return None
     already = {int(b) for b in man.get("covered_pblocks", [])}
-    shards = _listed_shards(fs, index_dir)
-    new_shards = [(pb, p) for pb, p in shards if pb not in already]
+    return _extend_term_blocks(spark, index_dir, fs, already, "append")
+
+
+def _extend_term_blocks(
+    spark: SparkSession, index_dir: str, fs, already: set, mode: str
+) -> dict:
+    """Write the term sets of every posting shard outside ``already``
+    (``mode`` overwrite or append), then record the union as
+    ``covered_pblocks`` — data first, manifest after."""
+    from codebased_spark.operators.build import POSTING_SCHEMA
+    from codebased_spark.plans.engine import (
+        FORMAT_VERSION,
+        _join,
+        _posting_shards,
+        _write_manifest,
+    )
+
+    out_dir = _join(index_dir, TERM_BLOCKS_DIR)
+    new_shards = [(pb, p) for pb, p, _size in _posting_shards(fs, index_dir)
+                  if pb not in already]
     new_pbs = sorted({pb for pb, _p in new_shards})
-    if not new_pbs:
-        return man
     if _use_driver_build(index_dir, new_shards):
         from codebased_spark.plans.fsio import local_path
 
         _write_pairs_driver(
             [(pb, local_path(p)) for pb, p in new_shards],
-            local_path(_join(index_dir, TERM_BLOCKS_DIR)), "append",
-            n_scanned_blocks=len(new_pbs),
+            local_path(out_dir), mode, n_scanned_blocks=len(new_pbs),
         )
-    else:
+    elif new_pbs:
         spark.catalog.refreshByPath(_join(index_dir, "postings"))
         postings = spark.read.schema(POSTING_SCHEMA).parquet(
             _join(index_dir, "postings"))
         _write_pairs(
             spark,
-            postings.filter(F.col("pblock").isin([int(b) for b in new_pbs]))
+            postings.filter(F.col("pblock").isin(new_pbs))
             .select("term", F.col("pblock").cast("int").alias("pblock")),
-            _join(index_dir, TERM_BLOCKS_DIR), "append",
-            n_scanned_blocks=len(new_pbs),
+            out_dir, mode, n_scanned_blocks=len(new_pbs),
         )
-    covered = sorted(already | set(new_pbs))
     payload = {
         "stage": TERM_BLOCKS_MANIFEST,
         "version": FORMAT_VERSION,
-        "covered_pblocks": covered,
+        "covered_pblocks": sorted(already | set(new_pbs)),
     }
     _write_manifest(fs, index_dir, TERM_BLOCKS_MANIFEST, payload)
     return payload

@@ -11,11 +11,19 @@ Resumability (north_rule): each stage commits atomically (parquet
 _SUCCESS + a manifest record written after). ``build_index(...,
 resume=True)`` skips stages whose manifest records exist, so a killed
 build re-runs only the missing stages; within a stage, partition-level
-retry/commit is Spark's task-commit protocol. Manifest records carry
-per-pblock row counts and byte sizes — the per-partition lineage +
-metrics record. (Reference analogue: single SQLite transaction + fts
-'optimize' at codebased/index.py:336,668-672; stats dump at
-codebased/stats.py:59-69.)
+retry/commit is Spark's task-commit protocol. The doc_stats and
+corpus_stats writes overlap the posting write in a background thread,
+and the three manifests land only after that thread joins, in
+dependency order (doc_stats, corpus_stats, postings): a postings
+manifest therefore always comes with the doc_stats manifest that
+records its ``num_blocks``. Manifest records carry per-pblock row
+counts and byte sizes — the per-partition lineage + metrics record.
+The full build and the incremental commit
+(streaming/incremental.py) share this module's table writers
+(:func:`_write_postings`, :func:`_write_corpus_stats`) and shard
+listing (:func:`_posting_shards`). (Reference analogue: single SQLite
+transaction + fts 'optimize' at codebased/index.py:336,668-672; stats
+dump at codebased/stats.py:59-69.)
 
 Storage: all lifecycle IO goes through plans/fsio.IndexFS, so the index
 may live on HDFS/S3A as well as local disk. Queries keep the pyarrow
@@ -54,29 +62,68 @@ def _join(base: str, *parts: str) -> str:
     return "/".join([base.rstrip("/"), *parts])
 
 
-def _postings_footer_metrics(fs: IndexFS, postings_dir: str) -> dict:
+def _posting_shards(fs: IndexFS, index_dir: str) -> list[tuple[int, str, int]]:
+    """(pblock, path, size) of every posting shard file under
+    ``index_dir``, sorted — the one parse of the ``pblock=`` layout."""
+    out = []
+    for path, size in fs.list_files(_join(index_dir, "postings")):
+        seg = [s for s in path.split("/") if s.startswith("pblock=")]
+        if path.endswith(".parquet") and seg:
+            out.append((int(seg[-1].split("=", 1)[1]), path, int(size or 0)))
+    return sorted(out)
+
+
+def _postings_footer_metrics(fs: IndexFS, index_dir: str) -> dict:
     """Per-block lineage metrics straight from parquet footers + the
     filesystem — zero Spark jobs (driver-side, O(#files)). On remote
     stores rows come from the footer via the same listing; bytes always
     from FileStatus."""
     out: dict[str, dict] = {}
-    local = is_local(postings_dir)
+    local = is_local(index_dir)
     if local:
         import pyarrow.parquet as pq
-    for path, size in fs.list_files(postings_dir):
-        if not path.endswith(".parquet"):
-            continue
-        seg = [s for s in path.split("/") if s.startswith("pblock=")]
-        if not seg:
-            continue
-        pb = seg[-1].split("=", 1)[1]
-        ent = out.setdefault(pb, {"rows": 0, "bytes": 0})
+    for pb, path, size in _posting_shards(fs, index_dir):
+        ent = out.setdefault(str(pb), {"rows": 0, "bytes": 0})
         ent["bytes"] += size
         if local:
             ent["rows"] += pq.ParquetFile(local_path(path)).metadata.num_rows
         else:
             ent["rows"] = None  # avoid N remote footer round-trips
     return out
+
+
+def _write_postings(docs: DataFrame, index_dir: str, mode: str) -> None:
+    """Encode ``docs`` into posting shards under ``index_dir`` (mode
+    ``overwrite`` for a build, ``append`` for a commit's fresh blocks).
+    Small row groups + rows sorted by term => a query's pyarrow
+    term-filter scan prunes to the few row groups whose [min,max] term
+    range overlaps, instead of decoding every blob column in the shard
+    (measured ~10x less read work per query)."""
+    build_postings_fused(docs).write.mode(mode).option(
+        "parquet.block.size", str(POSTING_ROW_GROUP_BYTES)
+    ).partitionBy("pblock").parquet(_join(index_dir, "postings"))
+
+
+def _write_corpus_stats(spark: SparkSession, index_dir: str, n: int,
+                        total_dl: int, num_blocks: int) -> None:
+    """(Re)write the single-row corpus_stats table."""
+    from codebased_spark.session import one_row_df
+
+    one_row_df(
+        spark,
+        "n_docs long, avgdl double, total_dl long, num_blocks int, version int",
+        (n, (total_dl / n) if n else 0.0, total_dl, num_blocks, FORMAT_VERSION),
+    ).write.mode("overwrite").parquet(_join(index_dir, "corpus_stats"))
+
+
+def get_block_rows(docs: DataFrame) -> list:
+    """(pblock, n, sdl) per doc block: one tiny agg yields BOTH the
+    per-block lineage and the global corpus stats (N, total dl)."""
+    return (
+        docs.groupBy(F.shiftright("doc_id", DOC_ID_BLOCK_BITS).alias("pblock"))
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sdl"))
+        .collect()
+    )
 
 
 def _manifest_path(index_dir: str, stage: str) -> str:
@@ -223,20 +270,13 @@ class FtsIndex:
 
         if self.force_generic_scan:
             return []
-        base = _join(self.index_dir, "postings")
         scheme = "" if is_local(self.index_dir) else "remote"
         if self.index_dir.startswith("file:"):
             scheme = "file"
+        shards = _posting_shards(self.fs, self.index_dir)
+        self.postings_bytes = sum(size for _pb, _p, size in shards)  # direct-path gate
         out = []
-        self.postings_bytes = 0  # total store size: the direct-path gate
-        for path, _size in self.fs.list_files(base):
-            if not path.endswith(".parquet"):
-                continue
-            seg = [s for s in path.split("/") if s.startswith("pblock=")]
-            if not seg:
-                continue
-            self.postings_bytes += int(_size or 0)
-            pb = int(seg[-1].split("=", 1)[1])
+        for pb, path, _size in shards:
             if scheme == "":
                 out.append((pb, local_path(path)))
             elif scheme == "file":
@@ -249,7 +289,6 @@ class FtsIndex:
                 out.append((pb, p))
             else:
                 out.append((pb, canonical_uri(path)))
-        out.sort()
         if out and scheme != "":
             # Reachability probe with a REAL metadata call (ADVICE r03):
             # constructing an S3FileSystem succeeds even with no valid
@@ -404,107 +443,65 @@ def build_index(
         recorded = int(_read_manifest(fs, index_dir, "doc_stats").get(
             "num_blocks", num_blocks))
         num_blocks = recorded
+    todo = [s for s in ("doc_stats", "corpus_stats", "postings")
+            if not (resume and _stage_done(fs, index_dir, s))]
 
-    docs = None
+    if todo:
+        docs = build_docs(corpus, num_blocks=num_blocks, chunk=chunk).persist()
 
-    def get_docs():
-        nonlocal docs
-        if docs is None:
-            docs = build_docs(corpus, num_blocks=num_blocks, chunk=chunk).persist()
-        return docs
+        def write_stats() -> tuple[list, int, int]:
+            """doc_stats and corpus_stats data — everything that reads
+            the persisted docs EXCEPT the posting build. Runs in a
+            background thread OVERLAPPED with the posting write (guide
+            §2.6: actions are only sequential because the driver calls
+            them sequentially): the posting build is the long pole and
+            these small jobs back-fill its idle capacity."""
+            if "doc_stats" in todo:
+                docs.drop("content").write.mode("overwrite").parquet(
+                    _join(index_dir, "doc_stats"))
+            rows = get_block_rows(docs)
+            n = sum(int(r["n"]) for r in rows)
+            total_dl = sum(int(r["sdl"]) for r in rows)
+            if "corpus_stats" in todo:
+                _write_corpus_stats(spark, index_dir, n, total_dl, num_blocks)
+            return rows, n, total_dl
 
-    block_rows = None
+        from concurrent.futures import ThreadPoolExecutor
 
-    def get_block_rows():
-        # one tiny agg yields BOTH the per-block lineage and the global
-        # corpus stats (N, avgdl) — computed at most once per build
-        nonlocal block_rows
-        if block_rows is None:
-            block_rows = (
-                get_docs()
-                .groupBy(F.shiftright("doc_id", DOC_ID_BLOCK_BITS).alias("pblock"))
-                .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sdl"))
-                .collect()
-            )
-        return block_rows
+        try:
+            with ThreadPoolExecutor(1, thread_name_prefix="build-stats") as pool:
+                stats = pool.submit(write_stats)
+                if "postings" in todo:
+                    _write_postings(docs, index_dir, "overwrite")
+                block_rows, n, total_dl = stats.result()
+        finally:
+            docs.unpersist()
 
-    def _stats_stages():
-        """doc_stats write + manifest, corpus_stats write + manifest —
-        everything that consumes the persisted docs EXCEPT the posting
-        build. Runs in a background thread OVERLAPPED with the posting
-        write (guide §2.6: actions are only sequential because the
-        driver calls them sequentially): the posting build is the long
-        pole and these small jobs back-fill its idle capacity instead
-        of extending the critical path. Job descriptions are
-        thread-local, so the UI stays labeled; exceptions re-raise on
-        join. Each stage keeps its own manifest, so a crash anywhere
-        resumes exactly as before."""
-        if not (resume and _stage_done(fs, index_dir, "doc_stats")):
-            d = get_docs()
-            d.drop("content").write.mode("overwrite").parquet(
-                _join(index_dir, "doc_stats")
-            )
+        # manifests only after both writers finished, in dependency
+        # order: a postings manifest implies a doc_stats manifest, so a
+        # resume never pairs committed postings with a regenerated
+        # num_blocks
+        if "doc_stats" in todo:
             _write_manifest(
                 fs, index_dir, "doc_stats",
                 {"stage": "doc_stats", "version": FORMAT_VERSION,
                  "num_blocks": num_blocks,
                  "docs_per_block": {str(r["pblock"]): int(r["n"])
-                                    for r in get_block_rows()}},
+                                    for r in block_rows}},
             )
-
-        if not (resume and _stage_done(fs, index_dir, "corpus_stats")):
-            rows = get_block_rows()
-            n = sum(int(r["n"]) for r in rows)
-            total_dl = sum(int(r["sdl"]) for r in rows)
-            avgdl = (total_dl / n) if n else 0.0
-            from codebased_spark.session import one_row_df
-
-            one_row_df(
-                spark,
-                "n_docs long, avgdl double, total_dl long, num_blocks int, version int",
-                (n, avgdl, total_dl, num_blocks, FORMAT_VERSION),
-            ).write.mode("overwrite").parquet(
-                _join(index_dir, "corpus_stats")
-            )
+        if "corpus_stats" in todo:
             _write_manifest(
                 fs, index_dir, "corpus_stats",
-                {"stage": "corpus_stats", "n_docs": n, "avgdl": avgdl,
+                {"stage": "corpus_stats", "n_docs": n,
+                 "avgdl": (total_dl / n) if n else 0.0,
                  "version": FORMAT_VERSION},
             )
-
-    import threading as _threading
-
-    stats_err: list[BaseException] = []
-
-    def _stats_body():
-        try:
-            _stats_stages()
-        except BaseException as e:  # re-raised on join
-            stats_err.append(e)
-
-    stats_thread = _threading.Thread(target=_stats_body, name="build-stats")
-    stats_thread.start()
-    try:
-        if not (resume and _stage_done(fs, index_dir, "postings")):
-            d = get_docs()
-            # small row groups + rows sorted by term => a query's pyarrow
-            # term-filter scan prunes to the few row groups whose [min,max]
-            # term range overlaps, instead of decoding every blob column in
-            # the shard (measured ~10x less read work per query)
-            build_postings_fused(d).write.mode("overwrite").option(
-                "parquet.block.size", str(POSTING_ROW_GROUP_BYTES)
-            ).partitionBy("pblock").parquet(
-                _join(index_dir, "postings")
-            )
+        if "postings" in todo:
             _write_manifest(
                 fs, index_dir, "postings",
                 {"stage": "postings", "version": FORMAT_VERSION,
-                 "per_block": _postings_footer_metrics(fs, _join(index_dir, "postings"))},
+                 "per_block": _postings_footer_metrics(fs, index_dir)},
             )
-    finally:
-        stats_thread.join()
-    if stats_err:
-        raise stats_err[0]
 
     if not (resume and _stage_done(fs, index_dir, "term_blocks")):
         # term->block presence manifest (operators/presence.py): a
@@ -515,6 +512,4 @@ def build_index(
 
         build_term_blocks(spark, index_dir, fs=fs)
 
-    if docs is not None:
-        docs.unpersist()
     return FtsIndex(spark, index_dir)

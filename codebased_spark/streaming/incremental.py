@@ -32,15 +32,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from codebased_spark.operators.build import build_postings_fused
 from codebased_spark.operators.docs import DOC_ID_BLOCK_BITS, build_docs
 from codebased_spark.plans.engine import (
     FORMAT_VERSION,
-    POSTING_ROW_GROUP_BYTES,
     FtsIndex,
     _join,
     _postings_footer_metrics,
+    _write_corpus_stats,
     _write_manifest,
+    _write_postings,
 )
 
 
@@ -201,9 +201,7 @@ def incremental_update(
                 _join(index_dir, "doc_stats")
             )
             _mark("doc_stats_append")
-            build_postings_fused(new_docs).write.mode("append").option(
-                "parquet.block.size", str(POSTING_ROW_GROUP_BYTES)
-            ).partitionBy("pblock").parquet(_join(index_dir, "postings"))
+            _write_postings(new_docs, index_dir, "append")
             _mark("postings_append")
         if n_dead:
             # partitioned by pblock so query tasks read only their own
@@ -243,18 +241,8 @@ def incremental_update(
             # already exact, and skipping the incr manifest keeps the
             # epoch fingerprint meaning "number of MUTATING commits"
             # (a no-op must not invalidate a still-exact phrase table)
-            n_docs = idx.n_docs - n_dead + n_add
-            total_dl = idx.total_dl - dl_dead + dl_add
-            avgdl = (total_dl / n_docs) if n_docs else 0.0
-            from codebased_spark.session import one_row_df
-
-            one_row_df(
-                spark,
-                "n_docs long, avgdl double, total_dl long, num_blocks int, version int",
-                (n_docs, avgdl, total_dl, n_blocks, FORMAT_VERSION),
-            ).write.mode("overwrite").parquet(
-                _join(index_dir, "corpus_stats")
-            )
+            _write_corpus_stats(spark, index_dir, idx.n_docs - n_dead + n_add,
+                                idx.total_dl - dl_dead + dl_add, n_blocks)
             _mark("corpus_stats_write")
             from codebased_spark.operators.phrasedf import incr_epoch_at
 
@@ -264,8 +252,7 @@ def incremental_update(
                 {"stage": f"incr_{epoch}", "version": FORMAT_VERSION,
                  "docs_added": n_add, "docs_tombstoned": n_dead,
                  "full_snapshot": full_snapshot,
-                 "per_block": _postings_footer_metrics(
-                     idx.fs, _join(index_dir, "postings"))},
+                 "per_block": _postings_footer_metrics(idx.fs, index_dir)},
             )
             _mark("incr_manifest_footer_metrics")
         if n_add:

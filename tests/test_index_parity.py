@@ -144,33 +144,35 @@ def test_sub_trigram_phrase_drops_like_fts5(spark, sub_trigram, query):
     assert_rank_identical(spark_hits(brute), ref, 10)
 
 
+def _postings_digest(spark, d):
+    """(sha256, row count) over every posting row of the index at ``d``."""
+    import hashlib
+
+    h = hashlib.sha256()
+    files = sorted(glob.glob(os.path.join(d, "postings", "**", "*.parquet"), recursive=True))
+    assert files
+    rows = (
+        spark.read.parquet(os.path.join(d, "postings"))
+        .orderBy("pblock", "term", "col")
+        .select("pblock", "term", "col", "df", "doc_bytes", "tf_bytes", "pos_bytes")
+        .collect()
+    )
+    for r in rows:
+        h.update(repr((r["pblock"], r["term"], r["col"], r["df"])).encode())
+        h.update(bytes(r["doc_bytes"]))
+        h.update(bytes(r["tf_bytes"]))
+        h.update(bytes(r["pos_bytes"]))
+    return h.hexdigest(), len(rows)
+
+
 def test_index_build_deterministic(spark, tmp_path):
     """Two builds of the same corpus produce byte-identical posting
     shards (SURVEY.md §5.3 item 6)."""
-    import hashlib
-
-    def digest(d):
-        h = hashlib.sha256()
-        files = sorted(glob.glob(os.path.join(d, "postings", "**", "*.parquet"), recursive=True))
-        assert files
-        rows = (
-            spark.read.parquet(os.path.join(d, "postings"))
-            .orderBy("pblock", "term", "col")
-            .select("pblock", "term", "col", "df", "doc_bytes", "tf_bytes", "pos_bytes")
-            .collect()
-        )
-        for r in rows:
-            h.update(repr((r["pblock"], r["term"], r["col"], r["df"])).encode())
-            h.update(bytes(r["doc_bytes"]))
-            h.update(bytes(r["tf_bytes"]))
-            h.update(bytes(r["pos_bytes"]))
-        return h.hexdigest(), len(rows)
-
     corpus = gen_corpus(spark, n_repos=6, files_per_repo=4, seed=11)
     d1, d2 = str(tmp_path / "a"), str(tmp_path / "b")
     build_index(spark, corpus, d1, num_blocks=4)
     build_index(spark, corpus, d2, num_blocks=4)
-    assert digest(d1) == digest(d2)
+    assert _postings_digest(spark, d1) == _postings_digest(spark, d2)
 
 
 @pytest.mark.parametrize("query", ["Hello world", "Server started", "code hello"])
@@ -366,6 +368,74 @@ def test_resume_rebuilds_stale_format_stages(spark, tmp_path):
     assert rec2["version"] == FORMAT_VERSION  # stage re-ran
     assert idx.posting_files  # shards exist again
     assert idx.postings.count() > 0
+
+
+def test_resume_after_crash_before_stats_manifests(spark, tmp_path, monkeypatch):
+    """A build killed after every table is written but before the
+    doc_stats manifest lands records no stage at all, so a resume with
+    a different num_blocks rebuilds the postings at the block count the
+    resumed doc_stats manifest records — never postings from the killed
+    build paired with a regenerated num_blocks."""
+    import json
+
+    import codebased_spark.plans.engine as engine
+
+    corpus = fixture_corpus(spark)
+    idx_dir = str(tmp_path / "crashed")
+    real = engine._write_manifest
+
+    def crash_on_doc_stats(fs, index_dir, stage, payload):
+        if stage == "doc_stats":
+            raise RuntimeError("killed before the doc_stats manifest")
+        real(fs, index_dir, stage, payload)
+
+    monkeypatch.setattr(engine, "_write_manifest", crash_on_doc_stats)
+    with pytest.raises(RuntimeError, match="killed"):
+        build_index(spark, corpus, idx_dir, num_blocks=4)
+    monkeypatch.setattr(engine, "_write_manifest", real)
+
+    index = build_index(spark, corpus, idx_dir, num_blocks=2, resume=True)
+    with open(os.path.join(idx_dir, "_manifest", "doc_stats.json")) as f:
+        recorded = json.load(f)["num_blocks"]
+    assert index.num_blocks == recorded == 2
+    clean = str(tmp_path / "clean")
+    build_index(spark, corpus, clean, num_blocks=recorded)
+    assert _postings_digest(spark, idx_dir) == _postings_digest(spark, clean)
+
+    full = index.doc_stats.select("doc_id", "repo", "path", "name").collect()
+    content = {(r["repo"], r["path"]): r["content"] for r in corpus.collect()}
+    oracle = Fts5Oracle(
+        (r["doc_id"], r["path"], r["name"], content[(r["repo"], r["path"])])
+        for r in full
+    )
+    for query in QUERIES:
+        assert_rank_identical(spark_hits(index.search(query, 10)),
+                              oracle_hits(oracle.search(query, 10)), 10)
+
+
+def test_build_docs_runs_once_per_build(spark, tmp_path, monkeypatch):
+    """The docs lineage is built once per fresh build (shared by the
+    stats thread and the posting write), and not at all by a resume
+    that only has the presence table left to write."""
+    import codebased_spark.plans.engine as engine
+
+    calls = []
+    real = engine.build_docs
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(engine, "build_docs", counting)
+    idx_dir = str(tmp_path / "once")
+    corpus = fixture_corpus(spark)
+    build_index(spark, corpus, idx_dir, num_blocks=4)
+    assert len(calls) == 1
+    os.remove(os.path.join(idx_dir, "_manifest", "term_blocks.json"))
+    index = build_index(spark, corpus, idx_dir, num_blocks=4, resume=True)
+    assert len(calls) == 1
+    assert index.term_blocks is not None
+    assert index.term_blocks.covered == {pb for pb, _p in index.posting_files}
 
 
 def test_manifest_lineage(spark, tmp_path):

@@ -585,8 +585,9 @@ def test_partial_counts_match_expression_expansion(spark):
     """The r7 task-side n-gram counter (_ngram_partial_counts) must
     reproduce the Catalyst split/transform/explode expansion's counts
     exactly — including empty tokens from leading/trailing/repeated
-    whitespace, null/empty docs, and every ASCII whitespace class
-    member — for text and digest keys alike."""
+    whitespace, null/empty docs, every ASCII whitespace class member,
+    and the non-ASCII case mappings of İ, final Σ, ẞ and ǅ — for text
+    and digest keys alike."""
     from pyspark.sql import functions as F
 
     from codebased_spark.operators.phrasedf import (
@@ -597,7 +598,10 @@ def test_partial_counts_match_expression_expansion(spark):
     rows = [("",), (None,), ("  leading and   multiple   spaces  ",),
             ("tab\tsep\nnewline\x0bvtab\fff\rcr end",),
             ("aa b c dd",), ("hello world hello world hello",),
-            ("x " * 50,), ("trailing space ",), ("UPPER Case MiX",)]
+            ("x " * 50,), ("trailing space ",), ("UPPER Case MiX",),
+            # non-ASCII case mappings: dotted capital I (one char lowers
+            # to two), final sigma, sharp s (upper and lower), titlecase
+            ("İstanbul ΣΊΣΥΦΟΣ STRASSE ẞ ǅ",), ("ΣΊΣΥΦΟΣ İstanbul ẞtraße",)]
     df = spark.createDataFrame(rows, "text string")
     ref = (
         _corpus_ngrams(df, "text", (1, 2))

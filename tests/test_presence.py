@@ -448,8 +448,8 @@ def test_driver_and_spark_builds_agree(spark, tmp_path, monkeypatch):
         return {int(t): sorted(tb.blocks_for([t])[int(t)]) for t in terms}
 
     out = {}
-    for label, gate in (("driver", "256"), ("spark", "0")):
-        monkeypatch.setenv("SPARK_GRAFT_PRESENCE_DRIVER_MAX_SHARDS", gate)
+    for label, gate in (("driver", 256), ("spark", 0)):
+        monkeypatch.setattr(presence_mod, "PRESENCE_DRIVER_MAX_SHARDS", gate)
         idx_dir = str(tmp_path / f"idx_{label}")
         build_index(spark, spark.createDataFrame(rows, CORPUS_SCHEMA),
                     idx_dir, num_blocks=4)

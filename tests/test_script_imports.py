@@ -105,3 +105,28 @@ def test_guard_catches_a_missing_name():
     bad = [(m, n) for m, n, _ in refs if n and not _resolves(m, n)]
     assert bad == [("codebased_spark.operators.query", "_no_such_helper"),
                    ("codebased_spark.operators.query", "_no_such_attr")]
+
+
+def _calls(path, func):
+    """String literals passed as the first argument to ``func(...)``."""
+    tree = ast.parse(path.read_text(), filename=str(path))
+    return [node.args[0].value for node in ast.walk(tree)
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Name)
+            and node.func.id == func and node.args
+            and isinstance(node.args[0], ast.Constant)]
+
+
+def test_engine_names_the_benchmark_reads():
+    """perfbench attributes per-layer metrics by engine names: commit
+    stages by ``incremental_update``'s stage_timings keys (every other
+    key lands in incremental.other_s) and the build's docs stage by the
+    function ``get_block_rows`` in plans/engine.py. A rename there
+    silently zeroes those metrics."""
+    from perfbench.layers import INCR_STAGES
+
+    marks = _calls(ROOT / "codebased_spark" / "streaming" / "incremental.py", "_mark")
+    assert len(marks) >= 10
+    assert sorted(set(marks) - set(INCR_STAGES)) == []
+    engine = ast.parse((ROOT / "codebased_spark" / "plans" / "engine.py").read_text())
+    assert "get_block_rows" in {n.name for n in ast.walk(engine)
+                                if isinstance(n, ast.FunctionDef)}
