@@ -20,10 +20,15 @@ dfs next to the index:
   top-k (<= 2*top_k rows) instead of the k-skyband, the blocks emit no
   df-stat rows at all, and the driver tail's candidate bound becomes
   exact (plain collect, no limit probe — operators/query._tail_bound).
-- Any incremental commit DELETES the table (dfs change with the
-  corpus — streaming/incremental.incremental_update); rebuild it from
-  the same phrase list afterwards. Compaction swaps the whole index
-  dir, which drops it too.
+- Commits keep a live table current: once a commit lands,
+  incremental_update recomputes only the blocks it touched
+  (:func:`update_phrase_df`, a per-block splice). Until then the
+  table's fingerprint no longer matches, so a crash in between leaves
+  an uncovered index, never stale dfs. compact_index rebuilds the
+  table over the compacted index from the same phrase list; a
+  non-resume build_index deletes it.
+- Both query readers serve the stats job: the pyarrow shard reader,
+  or the posting DataFrame on stores pyarrow cannot reach.
 
 Scores are bit-identical with or without the table: the stored dfs
 equal the stats the blocks would have emitted (pinned by test), and the
@@ -372,66 +377,67 @@ def hot_phrases_from_query_log(queries, top_n: int = 64) -> list[str]:
     return [p for p, _n in ranked[:top_n]]
 
 
-def _phrase_stats_fn(phrases_terms, needed, deletes_dir):
-    """mapInPandas over (pblock, path) shard rows -> one (pblock,
-    phrase_idx, df_all, df_name) row per phrase per block, via the same
-    _query_block_frames machinery queries use (stats only; the doc
+def _phrase_stats_body(phrases_terms):
+    """The stats-only block body: (pblock, rows, deleted) blocks from
+    either reader (operators/query._shard_reader / _generic_scan) ->
+    one (pblock, phrase_idx, df_all, df_name) row per phrase per block,
+    via the same _query_block_frames machinery queries use (the doc
     frames are discarded — this is a build-time job). Emitting the
     pblock keeps the stored table PER-BLOCK, which is what makes the
     delta rebuild (:func:`update_phrase_df`) possible: dfs are additive
     across blocks, so only dirty blocks need recomputing."""
-    from codebased_spark.operators.query import (
-        _load_block_tombstones,
-        _query_block_frames,
-        _read_postings_term_filtered,
-        _rows_from_table,
-    )
+    from codebased_spark.operators.query import _query_block_frames
 
-    def fn(it):
-        tomb_cache: dict = {}
-        fs_cache: dict = {}
-        for pdf in it:
-            for pblock, path in zip(pdf["pblock"], pdf["path"]):
-                tbl = _read_postings_term_filtered(path, fs_cache, needed)
-                if tbl.num_rows == 0:
-                    continue
-                rows = _rows_from_table(tbl)
-                deleted = _load_block_tombstones(
-                    deletes_dir, pblock, tomb_cache, fs_cache
-                )
-                out = []
-                for pi, terms in enumerate(phrases_terms):
-                    stats, _frame = _query_block_frames(rows, [terms], deleted)
-                    for _zero, da, dn in stats:
-                        out.append((int(pblock), pi, da, dn))
-                if out:
-                    yield pd.DataFrame(
-                        out,
-                        columns=["pblock", "phrase_idx", "df_all", "df_name"])
+    def body(blocks):
+        for pblock, rows, deleted in blocks:
+            out = []
+            for pi, terms in enumerate(phrases_terms):
+                stats, _frame = _query_block_frames(rows, [terms], deleted)
+                for _zero, da, dn in stats:
+                    out.append((int(pblock), pi, da, dn))
+            if out:
+                yield pd.DataFrame(
+                    out,
+                    columns=["pblock", "phrase_idx", "df_all", "df_name"])
 
-    return fn
+    return body
 
 
 _PHRASE_STATS_SCHEMA = "pblock int, phrase_idx int, df_all long, df_name long"
 
 
-def _phrase_block_stats(spark, index, pts, needed, posting_files):
-    """[(pblock, phrase_idx, df_all, df_name)] over the given shard
-    subset — the one Spark job behind build/update_phrase_df. Row count
+def _phrase_block_stats(spark, index, pts, pblocks=None):
+    """[(pblock, phrase_idx, df_all, df_name)] over every block, or only
+    ``pblocks`` — the one Spark job behind build/update_phrase_df, read
+    by the index's reader: its pyarrow-reachable shards, else the
+    posting DataFrame (the same choice its searches make). Row count
     is bounded by |phrases| x |blocks| (tiny), so no aggregation runs
     in the job; the caller sums driver-side."""
-    from codebased_spark.operators.query import _scan_df
-
-    rows = (
-        _scan_df(
-            spark, posting_files,
-            _phrase_stats_fn(pts, needed, index._task_deletes_dir()),
-            _PHRASE_STATS_SCHEMA,
-        )
-        .collect()
+    from codebased_spark.operators.query import (
+        _generic_scan,
+        _scan_df,
+        _shard_reader,
     )
+
+    body = _phrase_stats_body(pts)
+    needed = sorted({int(t) for ts in pts for t in ts})
+    if index.posting_files:
+        files = [(pb, f) for pb, f in index.posting_files
+                 if pblocks is None or pb in pblocks]
+        if not files:
+            return []
+        stats = _scan_df(
+            spark, files,
+            _shard_reader(needed, index._task_deletes_dir(), body),
+            _PHRASE_STATS_SCHEMA)
+    else:
+        postings = index.postings
+        if pblocks is not None:
+            postings = postings.filter(F.col("pblock").isin(sorted(pblocks)))
+        stats = _generic_scan(postings, index.deletes_df(), needed, body,
+                              _PHRASE_STATS_SCHEMA)
     return [(int(r["pblock"]), int(r["phrase_idx"]),
-             int(r["df_all"]), int(r["df_name"])) for r in rows]
+             int(r["df_all"]), int(r["df_name"])) for r in stats.collect()]
 
 
 def incr_epoch_at(fs, index_dir: str) -> int:
@@ -480,14 +486,14 @@ def _phrase_table_paths(index):
         return None, out_dir
 
 
-def _read_phrase_rows(spark, index) -> "list[dict] | None":
+def _read_phrase_rows(spark, index) -> "list[dict]":
     """The stored table as plain dicts via a DRIVER-side pyarrow read
     (the table is tiny: |phrases| x |blocks| rows), so index loads and
-    delta rebuilds cost no Spark job for it. Returns None when only
-    the Spark reader can reach the store (caller falls back)."""
-    pa_dir, _ = _phrase_table_paths(index)
+    delta rebuilds cost no Spark job for it; a Spark read only where
+    pyarrow cannot reach the store."""
+    pa_dir, spark_dir = _phrase_table_paths(index)
     if pa_dir is None:
-        return None
+        return [r.asDict() for r in spark.read.parquet(spark_dir).collect()]
     from codebased_spark.operators.query import _pa_read_table
 
     return _pa_read_table(pa_dir, {}).to_pylist()
@@ -583,52 +589,15 @@ def build_phrase_df(spark: SparkSession, index, phrases: list[str]) -> dict:
     block_rows: list = []
     term_lists = [(p, phrase_terms(p)) for p in folded if len(p) >= 3]
     if term_lists and index.n_docs:
-        pts = [ts for _, ts in term_lists]
-        needed = sorted({int(t) for ts in pts for t in ts})
-        if index.posting_files:
-            stats = _phrase_block_stats(
-                spark, index, pts, needed, index.posting_files)
-        else:
-            # generic-store fallback: the DataFrame posting scan feeds
-            # the same stats machinery through applyInPandas per pblock
-            from codebased_spark.operators.query import (
-                _block_candidates_pdf,
-            )
-
-            pruned = index.postings.filter(
-                F.col("term").isin([int(t) for t in needed]))
-            deleted = index.deleted
-
-            # fully-annotated signature (incl. the grouping key): under
-            # `from __future__ import annotations` pyspark infers the
-            # two-arg applyInPandas eval type from these hints
-            def per_block(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-                out = []
-                for pi, terms in enumerate(pts):
-                    cand = _block_candidates_pdf(pdf, [terms], deleted)
-                    s = cand[cand["kind"] == 0]
-                    for _, r in s.iterrows():
-                        out.append((int(key[0]), pi,
-                                    int(r["df_all"]), int(r["df_name"])))
-                return pd.DataFrame(
-                    out,
-                    columns=["pblock", "phrase_idx", "df_all", "df_name"])
-
-            stats = [
-                (int(r["pblock"]), int(r["phrase_idx"]),
-                 int(r["df_all"]), int(r["df_name"]))
-                for r in pruned.groupBy("pblock")
-                .applyInPandas(per_block, _PHRASE_STATS_SCHEMA)
-                .collect()
-            ]
+        stats = _phrase_block_stats(
+            spark, index, [ts for _, ts in term_lists])
         block_rows = [
             (term_lists[pi][0], pb, da, dn) for pb, pi, da, dn in stats]
     return _write_phrase_table(spark, index, block_rows, folded)
 
 
-def update_phrase_df(spark: SparkSession, index,
-                     dirty_pblocks,
-                     prior_fingerprint: "tuple | None" = None) -> "dict | None":
+def update_phrase_df(spark: SparkSession, index, dirty_pblocks,
+                     prior_fingerprint: tuple) -> "dict | None":
     """Delta rebuild after a commit: recompute per-block stats ONLY for
     ``dirty_pblocks`` (blocks that gained tombstones or were appended)
     and splice them into the stored per-block table — clean blocks'
@@ -636,7 +605,8 @@ def update_phrase_df(spark: SparkSession, index,
     across blocks). Returns the refreshed dict, or None when no usable
     per-block table exists (caller falls back to a full
     :func:`build_phrase_df`). ``index`` must be the POST-commit handle
-    (the manifest is stamped with its fingerprint).
+    (the manifest is stamped with its fingerprint); either reader
+    serves the dirty blocks (:func:`_phrase_block_stats`).
 
     This is O(changed blocks) instead of O(all blocks) — the shape a
     debounced micro-batch loop needs: a 10-file batch touches 1-2
@@ -644,36 +614,28 @@ def update_phrase_df(spark: SparkSession, index,
     every shard (VERDICT r05 "What's missing" #3).
 
     ``prior_fingerprint`` = (n_docs, total_dl, epoch) of the PRE-commit
-    index the dirty set was derived from (ADVICE r06): when given, the
-    stored table's manifest must match it or the splice refuses
-    (returns None -> full rebuild) — a stale table from some other
-    generation would otherwise be silently stamped fresh, and df=0
-    rows can make covered queries wrongly empty. Callers without the
-    pre-commit state (none in-tree) keep the old trust-the-caller
-    behavior by passing None."""
+    index the dirty set was derived from (ADVICE r06): the stored
+    table's manifest must match it or the splice refuses (returns None
+    -> full rebuild) — a stale table from some other generation would
+    otherwise be silently stamped fresh, and df=0 rows can make covered
+    queries wrongly empty."""
     from codebased_spark.plans.engine import FORMAT_VERSION, _join
 
-    if not index.posting_files:
-        return None
-    if prior_fingerprint is not None:
-        try:
-            man = index.fs.read_json(_join(
-                index.index_dir, "_manifest", f"{PHRASE_DF_MANIFEST}.json"))
-            pn, pdl, pep = prior_fingerprint
-            if (
-                int(man.get("version", -1)) != FORMAT_VERSION
-                or int(man.get("n_docs", -1)) != int(pn)
-                or int(man.get("total_dl", -1)) != int(pdl)
-                or int(man.get("epoch", -1)) != int(pep)
-            ):
-                return None
-        except Exception:
+    try:
+        man = index.fs.read_json(_join(
+            index.index_dir, "_manifest", f"{PHRASE_DF_MANIFEST}.json"))
+        pn, pdl, pep = prior_fingerprint
+        if (
+            int(man.get("version", -1)) != FORMAT_VERSION
+            or int(man.get("n_docs", -1)) != int(pn)
+            or int(man.get("total_dl", -1)) != int(pdl)
+            or int(man.get("epoch", -1)) != int(pep)
+        ):
             return None
+    except Exception:
+        return None
     try:
         old = _read_phrase_rows(spark, index)
-        if old is None:
-            old = [r.asDict() for r in spark.read.parquet(
-                _join(index.index_dir, PHRASE_DF_DIR)).collect()]
     except Exception:
         return None
     if not old or "pblock" not in old[0]:
@@ -687,11 +649,9 @@ def update_phrase_df(spark: SparkSession, index,
     ]
     term_lists = [(p, phrase_terms(p)) for p in phrase_order if len(p) >= 3]
     fresh: list = []
-    dirty_files = [(pb, f) for pb, f in index.posting_files if pb in dirty]
-    if term_lists and index.n_docs and dirty_files:
-        pts = [ts for _, ts in term_lists]
-        needed = sorted({int(t) for ts in pts for t in ts})
-        stats = _phrase_block_stats(spark, index, pts, needed, dirty_files)
+    if term_lists and index.n_docs and dirty:
+        stats = _phrase_block_stats(
+            spark, index, [ts for _, ts in term_lists], dirty)
         fresh = [(term_lists[pi][0], pb, da, dn) for pb, pi, da, dn in stats]
     return _write_phrase_table(spark, index, kept + fresh, phrase_order)
 
@@ -719,9 +679,6 @@ def load_phrase_df(spark: SparkSession, index) -> dict:
         ):
             return {}
         rows = _read_phrase_rows(spark, index)
-        if rows is None:
-            rows = [r.asDict() for r in spark.read.parquet(
-                _join(index.index_dir, PHRASE_DF_DIR)).collect()]
         if rows and "pblock" in rows[0]:
             agg: dict = {}
             for r in rows:  # per-block layout: dfs are additive

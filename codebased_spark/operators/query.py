@@ -12,9 +12,11 @@ One query path — a single search is a batch of one
     |    direct  the same task body run on the driver
     |            (_direct_scan_rows): no Spark job; small stores only
     |            (DRIVER_DIRECT_MAX_BYTES / DRIVER_DIRECT_MAX_SHARDS)
-  task body (_batch_candidates_fn), per shard:
+  pyarrow reader (_shard_reader), per shard:
     |  pyarrow read of the row groups holding the query trigrams
-    |  (rows sorted by term; footer min/max pruning) ->
+    |  (rows sorted by term; footer min/max pruning) and the block's
+    |  tombstones -> one (pblock, rows, deleted) block
+  task body (_candidate_body), over its blocks:
     |  positional intersection per block: doc-list intersect (rarest
     |  term first), then shifted position-key intersect; a block
     |  missing a required trigram is skipped; dl rides in the posting
@@ -28,10 +30,14 @@ One query path — a single search is a batch of one
      DRIVER_FINISH_MAX run the JVM flat plan against the same
      persisted candidates (reference CTE: codebased/search.py:240-302)
 
-The generic DataFrame scan (search_index) serves stores pyarrow cannot
-reach: a pushed-down term filter and one applyInPandas group per
-pblock feed per-block candidates, with a literal qid 0, into the same
-tail.
+Stores pyarrow cannot reach (FtsIndex.posting_files == []) swap the
+pyarrow reader for the Spark reader (_generic_scan, behind
+search_index_batch): a term filter pushed into the posting DataFrame
+scan, one applyInPandas group per pblock cogrouped with the tombstone
+rows, each group one block for the same task body; its candidates
+take the same tail with no bound (a limit-guarded collect). The
+phrase-df stats job (operators/phrasedf.py) runs its own body over
+either reader.
 
 Exactness: identical scores to operators/score.py (brute force) and to
 SQLite FTS5 — phrase tf via consecutive-position intersection equals
@@ -709,10 +715,10 @@ def _single_trigram_wand(r: _Row, top_k: int, avgdl: float):
 def _query_block_frames(rows, phrase_term_ids, deleted, cache=None,
                         top_k=None, avgdl=None, known_idfs=None):
     """One query's per-block computation over pre-built _Row handles:
-    returns (stats_tuples, doc_frame_or_None). Shared by the shard-scan
-    task body, the generic applyInPandas scan and the phrase-df stats
-    job; ``cache`` memoizes per-(phrase, col) results so batched
-    queries sharing phrases decode once.
+    returns (stats_tuples, doc_frame_or_None). Shared by the candidate
+    task body (:func:`_candidate_body`) and the phrase-df stats body,
+    whichever reader feeds them; ``cache`` memoizes per-(phrase, col)
+    results so batched queries sharing phrases decode once.
 
     ``top_k``/``avgdl`` enable two EXACT pruning layers (see module
     docstring "Top-k pruning"):
@@ -863,60 +869,6 @@ def _query_block_frames(rows, phrase_term_ids, deleted, cache=None,
     return stats, doc_frame
 
 
-_CAND_COLS = ["kind", "phrase", "df_all", "df_name", "doc_id", "dl",
-              "tfs_all", "tfs_name"]
-
-
-def _empty_cand_pdf() -> pd.DataFrame:
-    return pd.DataFrame(
-        {"kind": pd.array([], dtype="int32"),
-         "phrase": pd.array([], dtype="int32"),
-         "df_all": pd.array([], dtype="int64"),
-         "df_name": pd.array([], dtype="int64"),
-         "doc_id": pd.array([], dtype="int64"),
-         "dl": pd.array([], dtype="int64"),
-         "tfs_all": pd.Series([], dtype="object"),
-         "tfs_name": pd.Series([], dtype="object")}
-    )
-
-
-def _block_candidates_pdf(pdf: pd.DataFrame, phrase_term_ids, deleted,
-                          top_k=None, avgdl=None) -> pd.DataFrame:
-    """One block's posting rows -> candidate rows (the generic scan's
-    and the phrase-df stats job's per-block unit).
-
-    Emits TWO row kinds (the conjunction and the per-doc aggregation are
-    pushed INTO the block task, so no doc-keyed shuffle ever happens):
-
-    - kind=0 (one per phrase): this block's contribution to the phrase's
-      document frequencies (df_all / df_name — counted over ALL docs
-      matching the phrase, before any conjunction, per FTS5 idf).
-    - kind=1 (one per SURVIVING doc): docs matching every phrase
-      (tf_all>0 for all), with per-phrase tf arrays + dl. The per-doc
-      BM25 sum happens in the scoring tail; survivors of the
-      conjunction are typically a small fraction of per-phrase matches.
-    """
-    rows = {
-        (int(r["term"]), int(r["col"])): _Row(r)
-        for _, r in pdf.iterrows()
-    }
-    stats, doc_frame = _query_block_frames(
-        rows, phrase_term_ids, deleted, top_k=top_k, avgdl=avgdl)
-    frames = []
-    if stats:
-        frames.append(pd.DataFrame(
-            [(0, pi, da, dn, 0, 0, None, None) for pi, da, dn in stats],
-            columns=_CAND_COLS))
-    if doc_frame is not None:
-        common, dl, ta, tn = doc_frame
-        frames.append(pd.DataFrame(
-            {"kind": 1, "phrase": -1, "df_all": 0, "df_name": 0,
-             "doc_id": common, "dl": dl, "tfs_all": ta, "tfs_name": tn}))
-    if not frames:
-        return _empty_cand_pdf()
-    return pd.concat(frames, ignore_index=True)
-
-
 def _task_emission_prune(doc_frames, n_ph, top_k, avgdl, known_idfs):
     """Cross-BLOCK second application of the per-block exact emission
     prune (r7 — the block-count scaling fix): a task scanning many
@@ -977,32 +929,6 @@ def _doc_frame_pdf(docs, dl, ta, tn, qid) -> pd.DataFrame:
     return pd.DataFrame(
         {"qid": qid, "kind": 1, "phrase": -1, "df_all": 0, "df_name": 0,
          "doc_id": docs, "dl": dl, "tfs_all": list(ta), "tfs_name": list(tn)})
-
-
-def _candidates_fn(phrase_term_ids: list[list[int]], top_k=None, avgdl=None):
-    """applyInPandas over one pblock's posting rows (no tombstones)."""
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _block_candidates_pdf(pdf, phrase_term_ids, None, top_k, avgdl)
-
-    return fn
-
-
-def _cogroup_candidates_fn(phrase_term_ids: list[list[int]], top_k=None, avgdl=None):
-    """Cogrouped applyInPandas: (posting rows, tombstone rows) per
-    pblock. Tombstones arrive as ordinary shuffled rows — never through
-    the driver or a UDF closure — so the deleted set scales with the
-    cluster, not the driver heap."""
-
-    def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0:
-            return _empty_cand_pdf()
-        deleted = None
-        if len(right):
-            deleted = np.unique(right["doc_id"].to_numpy().astype("int64"))
-        return _block_candidates_pdf(left, phrase_term_ids, deleted, top_k, avgdl)
-
-    return fn
 
 
 def _pa_read_table(path: str, fs_cache: dict, **kw):
@@ -1172,63 +1098,50 @@ def _load_block_tombstones(deletes_dir, pblock: int, cache: dict, fs_cache: dict
     return out
 
 
-CAND2_SCHEMA = (
-    "kind int, phrase int, df_all long, df_name long, "
+BATCH_SCHEMA = (
+    "qid int, kind int, phrase int, df_all long, df_name long, "
     "doc_id long, dl long, tfs_all array<long>, tfs_name array<long>"
 )
+_BATCH_COLS = ["qid", "kind", "phrase", "df_all", "df_name", "doc_id", "dl",
+               "tfs_all", "tfs_name"]
 
-BATCH_SCHEMA = "qid int, " + CAND2_SCHEMA
 
-
-def _batch_candidates_fn(queries_terms, needed, deletes_dir=None,
-                         top_k=None, avgdl=None, known_idfs_by_qid=None):
-    """The candidate-scan task body: a generator over (pblock, path)
-    row batches, run by Spark's mapInPandas or driver-side by
-    :func:`_direct_scan_rows`, for a batch of queries (a single search
-    is a batch of one). Each shard is read through pyarrow with a term
-    filter and column selection — Spark's parquet reader would decode
-    whole row groups of the blob columns first, ~5-10x the work. One
-    read and one set of _Row handles per block serve every query, and
-    a per-(phrase) memo means queries sharing phrases decode and
-    intersect once. Queries present in ``known_idfs_by_qid`` (phrase-df
-    side table coverage) take the covered WAND path and emit no stat
-    rows. Per task the output is one summed df-stat row per (query,
-    phrase) plus each query's doc rows after :func:`_task_emission_prune`
-    — O(top_k) rows per query per task, the unit :func:`_tail_bound`
-    charges."""
-    cols = ["qid", "kind", "phrase", "df_all", "df_name", "doc_id", "dl",
-            "tfs_all", "tfs_name"]
+def _candidate_body(queries_terms, top_k=None, avgdl=None,
+                    known_idfs_by_qid=None):
+    """The candidate task body for a batch of queries (a single search
+    is a batch of one): a generator function over (pblock, rows,
+    deleted) blocks — ``rows`` the block's {(term, col) -> _Row},
+    ``deleted`` its sorted tombstone doc ids or None — as either reader
+    produces them (:func:`_shard_reader`, :func:`_generic_scan`),
+    yielding BATCH_SCHEMA frames. One set of _Row handles per block
+    serves every query, and a per-(phrase) memo means queries sharing
+    phrases decode and intersect once. Queries present in
+    ``known_idfs_by_qid`` (phrase-df side table coverage) take the
+    covered WAND path and emit no stat rows. The output is one summed
+    df-stat row per (query, phrase) plus each query's doc rows after
+    :func:`_task_emission_prune` — O(top_k) rows per query per task,
+    the unit :func:`_tail_bound` charges."""
     known_idfs_by_qid = known_idfs_by_qid or {}
     n_ph_by_qid = {qid: len(tids) for qid, tids in queries_terms}
 
-    def fn(it):
-        tomb_cache: dict = {}
-        fs_cache: dict = {}
+    def body(blocks):
         stat_sums: dict = {}  # (qid, phrase) -> [df_all, df_name]
         frames_by_qid: dict[int, list] = {}
-        for pdf in it:
-            for pblock, path in zip(pdf["pblock"], pdf["path"]):
-                tbl = _read_postings_term_filtered(path, fs_cache, needed)
-                if tbl.num_rows == 0:
-                    continue
-                deleted = _load_block_tombstones(
-                    deletes_dir, pblock, tomb_cache, fs_cache
+        for _pblock, rows, deleted in blocks:
+            cache: dict = {}
+            for qid, term_ids in queries_terms:
+                covered = known_idfs_by_qid.get(qid)
+                stats, doc_frame = _query_block_frames(
+                    rows, term_ids, deleted, cache=cache,
+                    top_k=top_k, avgdl=avgdl, known_idfs=covered,
                 )
-                rows = _rows_from_table(tbl)
-                cache: dict = {}
-                for qid, term_ids in queries_terms:
-                    covered = known_idfs_by_qid.get(qid)
-                    stats, doc_frame = _query_block_frames(
-                        rows, term_ids, deleted, cache=cache,
-                        top_k=top_k, avgdl=avgdl, known_idfs=covered,
-                    )
-                    if stats and covered is None:
-                        for pi, da, dn in stats:
-                            e = stat_sums.setdefault((qid, pi), [0, 0])
-                            e[0] += da
-                            e[1] += dn
-                    if doc_frame is not None:
-                        frames_by_qid.setdefault(qid, []).append(doc_frame)
+                if stats and covered is None:
+                    for pi, da, dn in stats:
+                        e = stat_sums.setdefault((qid, pi), [0, 0])
+                        e[0] += da
+                        e[1] += dn
+                if doc_frame is not None:
+                    frames_by_qid.setdefault(qid, []).append(doc_frame)
         if stat_sums:
             # df stats are additive across blocks and every consumer
             # SUMS them (driver finish and JVM plan alike), so one
@@ -1237,7 +1150,7 @@ def _batch_candidates_fn(queries_terms, needed, deletes_dir=None,
             yield pd.DataFrame(
                 [(qid, 0, pi, da, dn, 0, 0, None, None)
                  for (qid, pi), (da, dn) in sorted(stat_sums.items())],
-                columns=cols)
+                columns=_BATCH_COLS)
         # one cross-block prune per query at task end (see
         # _task_emission_prune — doc rows per query become
         # O(tasks * top_k), independent of block count)
@@ -1253,7 +1166,82 @@ def _batch_candidates_fn(queries_terms, needed, deletes_dir=None,
                 tn = np.vstack([np.vstack(f[3]) for f in frames])
             yield _doc_frame_pdf(docs, dl, ta, tn, qid=qid)
 
-    return fn
+    return body
+
+
+def _shard_reader(needed, deletes_dir, body):
+    """The pyarrow reader: wraps a block body (:func:`_candidate_body`
+    or the phrase-df stats body) into the function Spark's mapInPandas
+    (:func:`_scan_df`) or :func:`_direct_scan_rows` runs over
+    (pblock, path) row batches. Each shard is read through pyarrow with
+    a term filter and column selection — Spark's parquet reader would
+    decode whole row groups of the blob columns first, ~5-10x the work
+    — and its tombstones are read task-side; shards holding none of
+    the ``needed`` terms are skipped."""
+
+    def blocks(it):
+        tomb_cache: dict = {}
+        fs_cache: dict = {}
+        for pdf in it:
+            for pblock, path in zip(pdf["pblock"], pdf["path"]):
+                tbl = _read_postings_term_filtered(path, fs_cache, needed)
+                if tbl.num_rows == 0:
+                    continue
+                deleted = _load_block_tombstones(
+                    deletes_dir, pblock, tomb_cache, fs_cache
+                )
+                yield pblock, _rows_from_table(tbl), deleted
+
+    return lambda it: body(blocks(it))
+
+
+def _batch_candidates_fn(queries_terms, needed, deletes_dir=None,
+                         top_k=None, avgdl=None, known_idfs_by_qid=None):
+    """The candidate task body behind the pyarrow reader: the function
+    mapInPandas or :func:`_direct_scan_rows` runs over (pblock, path)
+    row batches for a batch of queries."""
+    return _shard_reader(needed, deletes_dir, _candidate_body(
+        queries_terms, top_k, avgdl, known_idfs_by_qid))
+
+
+def _generic_scan(postings: DataFrame, deletes, needed, body, schema: str):
+    """The Spark reader, for stores pyarrow cannot reach: ``postings``
+    (the posting DataFrame) filtered to the ``needed`` terms — the
+    filter is pushed into the parquet scan — and grouped by pblock,
+    each group one (pblock, rows, deleted) block for ``body`` through
+    applyInPandas. ``deletes`` (a doc_id DataFrame, or None) is
+    cogrouped per pblock, so tombstones arrive as shuffled rows, never
+    through the driver or a closure. A group returns everything
+    ``body`` yields for its block, as ``schema`` rows."""
+    import pyarrow as pa
+    from pyspark.sql.types import StructType
+
+    from codebased_spark.operators.docs import DOC_ID_BLOCK_BITS
+
+    names = StructType.fromDDL(schema).names
+
+    def per_group(left, right):
+        frames = []
+        if len(left):
+            deleted = None
+            if right is not None and len(right):
+                deleted = np.unique(right["doc_id"].to_numpy().astype("int64"))
+            rows = _rows_from_table(pa.Table.from_pandas(
+                left[_POSTING_READ_COLUMNS], preserve_index=False))
+            frames = list(body([(int(left["pblock"].iloc[0]), rows, deleted)]))
+        if not frames:
+            return pd.DataFrame(columns=names)
+        return pd.concat(frames, ignore_index=True)
+
+    grouped = postings.filter(F.col("term").isin(needed)) \
+        .select("pblock", *_POSTING_READ_COLUMNS).groupBy("pblock")
+    if deletes is None:
+        return grouped.applyInPandas(lambda pdf: per_group(pdf, None), schema)
+    dd = deletes.select(
+        F.shiftright("doc_id", DOC_ID_BLOCK_BITS).cast("int").alias("pblock"),
+        "doc_id",
+    )
+    return grouped.cogroup(dd.groupBy("pblock")).applyInPandas(per_group, schema)
 
 
 def _scan_tasks(spark, n_files: int) -> int:
@@ -1369,6 +1357,38 @@ def _norm(tf_col, dl_col, avgdl):
     return tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl_col.cast("double") / F.lit(avgdl)))
 
 
+def search_index_batch(
+    postings: DataFrame,
+    queries: list[str],
+    n_docs: int,
+    avgdl: float,
+    top_k: int = DEFAULT_TOP_K,
+    deletes: "DataFrame | None" = None,
+    phrase_dfs_by_query: "dict[int, list[tuple[int, int]]] | None" = None,
+) -> DataFrame:
+    """Two-branch FTS search of a batch of queries through the Spark
+    reader (:func:`_generic_scan`): the route for stores pyarrow cannot
+    reach (FtsIndex.posting_files == []), working against any
+    Spark-readable posting DataFrame. ``deletes`` (a doc_id DataFrame)
+    carries the tombstones; ``phrase_dfs_by_query`` is
+    :func:`search_index_files_batch`'s. The parse, the task body and
+    the tail are the shard scan's; there is no shard list to prune and
+    no candidate bound, so the tail takes a limit-guarded collect.
+    Returns (qid, doc_id, name_match, rank, score)."""
+    spark = postings.sparkSession
+    phrase_dfs_by_query = phrase_dfs_by_query or {}
+    parsed, known_idfs_by_qid = _parse_batch(
+        queries, n_docs, phrase_dfs_by_query)
+    if not parsed:
+        return _batch_result_df(spark, [])
+    body = _candidate_body([(qi, tids) for qi, _, tids in parsed], top_k,
+                           avgdl, known_idfs_by_qid)
+    cand = _generic_scan(postings, deletes, _needed(parsed), body,
+                         BATCH_SCHEMA)
+    return _finish(spark, cand, parsed, phrase_dfs_by_query,
+                   known_idfs_by_qid, n_docs, avgdl, top_k)
+
+
 def search_index(
     postings: DataFrame,
     query: str,
@@ -1377,42 +1397,10 @@ def search_index(
     top_k: int = DEFAULT_TOP_K,
     deletes: "DataFrame | None" = None,
 ) -> DataFrame:
-    """Two-branch FTS search through the generic DataFrame scan: the
-    path for stores pyarrow cannot reach (FtsIndex force_generic_scan),
-    working against any Spark-readable store. The term filter is pushed
-    into the parquet scan and each pblock's rows run the block machinery
-    in one applyInPandas group; candidate rows carry dl straight from
-    the posting blobs, so no doc-stats join happens at query time.
-    ``deletes`` (a doc_id DataFrame) distributes tombstones by
-    cogrouping them with the posting rows per pblock.
-
-    The candidates (per block: there is no task-level prune here) take
-    a literal qid 0 into the shared tail with no bound — a limit-guarded
-    collect. Returns (doc_id, name_match, rank, score) best-first."""
-    from codebased_spark.operators.docs import DOC_ID_BLOCK_BITS
-
-    spark = postings.sparkSession
-    parsed, _known = _parse_batch([query], n_docs, {})
-    if not parsed:
-        return _batch_result_df(spark, []).drop("qid")
-    term_ids = parsed[0][2]
-
-    pruned = postings.filter(F.col("term").isin(_needed(parsed)))
-    if deletes is not None:
-        dd = deletes.select(
-            F.shiftright("doc_id", DOC_ID_BLOCK_BITS).cast("int").alias("pblock"),
-            "doc_id",
-        )
-        cand = pruned.groupBy("pblock").cogroup(dd.groupBy("pblock")).applyInPandas(
-            _cogroup_candidates_fn(term_ids, top_k, avgdl), CAND2_SCHEMA
-        )
-    else:
-        cand = pruned.groupBy("pblock").applyInPandas(
-            _candidates_fn(term_ids, top_k, avgdl), CAND2_SCHEMA
-        )
-    cand = cand.select(F.lit(0).alias("qid"), "*")
-    return _finish(spark, cand, parsed, {}, {}, n_docs, avgdl,
-                   top_k).drop("qid")
+    """:func:`search_index_batch` for a batch of one: (doc_id,
+    name_match, rank, score) best-first."""
+    return search_index_batch(postings, [query], n_docs, avgdl, top_k,
+                              deletes).drop("qid")
 
 
 # Above this many candidate rows the scoring tail runs as a JVM plan
@@ -1732,8 +1720,8 @@ def _finish(spark, cand, parsed, phrase_dfs_by_query, known_idfs_by_qid,
     - bound over the cap -> straight to the JVM plan
       (:func:`_jvm_tail`), no probe collect (collecting 200k rows only
       to discard them would be a per-query scale tax);
-    - otherwise (heuristic multi-phrase bound, or no bound on the
-      generic scan) a limit-guarded collect; a candidate set past the
+    - otherwise (heuristic multi-phrase bound, or no bound behind the
+      Spark reader) a limit-guarded collect; a candidate set past the
       cap falls back to the JVM plan against the SAME persisted
       candidates — one extra job, never a rescan."""
     if bound is not None and exact and bound <= DRIVER_FINISH_MAX:

@@ -27,12 +27,12 @@ dump at codebased/stats.py:59-69.)
 
 Storage: all lifecycle IO goes through plans/fsio.IndexFS, so the index
 may live on HDFS/S3A as well as local disk. Queries keep the pyarrow
-shard fast path on ANY store pyarrow.fs can open (local paths and
+shard reader on ANY store pyarrow.fs can open (local paths and
 file:// / hdfs:// / s3:// URIs alike — tasks read shards and
 tombstones through the resolved filesystem); only stores pyarrow
-cannot reach fall back to the generic DataFrame scan (same results by
-test) with tombstones applied via a per-block cogroup — nothing is
-ever materialized on the driver either way.
+cannot reach swap in the Spark reader (the posting DataFrame grouped
+per pblock and cogrouped with the tombstone rows) under the same task
+body and tail — nothing is ever materialized on the driver either way.
 """
 
 from __future__ import annotations
@@ -206,7 +206,6 @@ class FtsIndex:
             len(self.posting_files) <= DRIVER_DIRECT_MAX_SHARDS
         self.deletes_dir = _join(index_dir, "deletes")
         self.has_deletes = self.fs.exists(self.deletes_dir)
-        self._deleted = None
         # Q13 search cache (codebased/index.py:186-209): per-(query, k)
         # memo of materialized results; a reload (incremental commit
         # returns a fresh FtsIndex) starts clean, mirroring the
@@ -239,22 +238,6 @@ class FtsIndex:
         if not self.has_deletes:
             return None
         return self.spark.read.parquet(self.deletes_dir).select("doc_id")
-
-    @property
-    def deleted(self):
-        """Tombstoned doc_ids as a sorted int64 numpy array — a DRIVER
-        materialization for tests/inspection and tiny indexes only; the
-        query path reads tombstones task-side per pblock."""
-        import numpy as np
-
-        if not self.has_deletes:
-            return None
-        if self._deleted is None:
-            arr = (
-                self.deletes_df().toPandas()["doc_id"].to_numpy()
-            )
-            self._deleted = np.unique(arr.astype("int64")) if arr.size else None
-        return self._deleted
 
     def _list_posting_files(self) -> list[tuple[int, str]]:
         """(pblock, path-or-URI) of posting shards — feeds the pyarrow
@@ -310,24 +293,14 @@ class FtsIndex:
 
     def search(self, query: str, top_k: int = DEFAULT_TOP_K) -> DataFrame:
         """(doc_id, name_match, rank, score) best-first — rank-identical
-        to the reference's search_once full-text path. Runs as a batch
-        of one through the shard scan when the shard files are directly
-        readable, else through the generic DataFrame scan (same results
-        by test)."""
-        from codebased_spark.operators.query import search_index
-
+        to the reference's search_once full-text path. A batch of one
+        (:meth:`search_batch`'s route)."""
         self.query_log.append(query)
         key = (query, top_k)
         hit = self._search_cache.get(key)
         if hit is not None:
             return hit
-        if self.posting_files:
-            out = self._search_files([query], top_k).drop("qid")
-        else:
-            out = search_index(
-                self.postings, query, self.n_docs, self.avgdl, top_k,
-                deletes=self.deletes_df(),
-            )
+        out = self._search_batch([query], top_k).drop("qid")
         self._search_cache[key] = out
         return out
 
@@ -350,36 +323,34 @@ class FtsIndex:
         driver-direct route (the shape for offline batch scoring).
         Returns (qid, doc_id, name_match, rank, score); rank-identical
         per query to :meth:`search` (tested)."""
-        if not self.posting_files and self.n_docs:
-            # store unreachable from pyarrow: per-query generic scans,
-            # tagged with qid — slower, never wrong (each self.search
-            # call logs its query, so no extend here)
-            from codebased_spark.operators.query import _batch_result_df
-
-            out = _batch_result_df(self.spark, [])
-            for qi, q in enumerate(queries):
-                out = out.unionAll(self.search(q, top_k).select(
-                    F.lit(qi).cast("int").alias("qid"),
-                    "doc_id", "name_match", "rank", "score",
-                ))
-            return out
         self.query_log.extend(queries)
-        return self._search_files(queries, top_k)
+        return self._search_batch(queries, top_k)
 
-    def _search_files(self, queries: list[str], top_k: int) -> DataFrame:
-        """The shard-scan search of a batch, on this index's route
-        (driver-direct or Spark) with its tombstones, phrase-df coverage
-        and presence pruning."""
-        from codebased_spark.operators.query import search_index_files_batch
+    def _search_batch(self, queries: list[str], top_k: int) -> DataFrame:
+        """A batch with this index's tombstones and phrase-df coverage,
+        read by the pyarrow shard reader (driver-direct or Spark feeder,
+        presence-pruned) — or, when ``posting_files`` is empty (a store
+        pyarrow cannot reach, or force_generic_scan), by the Spark
+        reader over the posting DataFrame."""
+        from codebased_spark.operators.query import (
+            search_index_batch,
+            search_index_files_batch,
+        )
 
+        phrase_dfs_by_query = {
+            qi: dfs for qi, dfs in (
+                (qi, self._covering_dfs(q)) for qi, q in enumerate(queries)
+            ) if dfs is not None
+        }
+        if not self.posting_files:
+            return search_index_batch(
+                self.postings, queries, self.n_docs, self.avgdl, top_k,
+                deletes=self.deletes_df(),
+                phrase_dfs_by_query=phrase_dfs_by_query)
         return search_index_files_batch(
             self.spark, self.posting_files, queries, self.n_docs, self.avgdl,
             top_k, deletes_dir=self._task_deletes_dir(),
-            phrase_dfs_by_query={
-                qi: dfs for qi, dfs in (
-                    (qi, self._covering_dfs(q)) for qi, q in enumerate(queries)
-                ) if dfs is not None
-            },
+            phrase_dfs_by_query=phrase_dfs_by_query,
             presence=self.term_blocks,
             direct=self.driver_direct,
         )
@@ -433,12 +404,24 @@ def build_index(
 ) -> FtsIndex:
     """Build (or resume building) the index from a corpus DataFrame.
 
-    On resume, ``num_blocks`` is taken from the doc_stats manifest when
+    Without ``resume`` any earlier index in ``index_dir`` is replaced
+    whole: its manifests, tombstones and phrase-df table are deleted
+    first. On resume, ``num_blocks`` is taken from the doc_stats manifest when
     one exists: the completed stage fixed the doc-id partitioning, and
     regenerating later stages with a different block count would write
     postings inconsistent with the persisted doc_stats (ADVICE.md r01).
     """
     fs = IndexFS(spark, index_dir)
+    if not resume:
+        # a fresh build owns the whole dir. Manifests go first, so a
+        # crash from here on resumes onto no stale record; then the
+        # tables the stage writers do not overwrite: tombstones and
+        # the phrase-df table of an earlier generation would otherwise
+        # apply to the new doc ids
+        from codebased_spark.operators.phrasedf import PHRASE_DF_DIR
+
+        for sub in ("_manifest", "deletes", PHRASE_DF_DIR):
+            fs.delete(_join(index_dir, sub))
     if resume and _stage_done(fs, index_dir, "doc_stats"):
         recorded = int(_read_manifest(fs, index_dir, "doc_stats").get(
             "num_blocks", num_blocks))

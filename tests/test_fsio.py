@@ -185,31 +185,99 @@ def test_local_path_authority_handling():
         local_path("file://otherhost/tmp/x")
 
 
+def _hits_close(got, want):
+    """Same (doc_id, name_match) sequence, scores within 1e-9."""
+    assert [(d, n) for d, n, _ in got] == [(d, n) for d, n, _ in want]
+    assert all(abs(g[2] - w[2]) < 1e-9 for g, w in zip(got, want))
+
+
 def test_force_generic_scan_option(spark, tmp_path):
     """ADVICE r03 (engine.py:209): stores whose credentials live only
-    in Hadoop conf can force the generic DataFrame scan; results match
-    the fast path exactly."""
+    in Hadoop conf can force the Spark reader (the generic DataFrame
+    scan). On a tombstoned index with a phrase-df table it returns the
+    pyarrow route's results and FTS5's ranking — uncovered, covered
+    and sub-trigram queries, searched singly and as one batch."""
+    from codebased_spark.operators.phrasedf import build_phrase_df
+    from codebased_spark.oracle import Fts5Oracle
     from codebased_spark.plans.engine import FtsIndex, build_index
     from codebased_spark.sources.corpus import CORPUS_SCHEMA
+    from codebased_spark.streaming.incremental import incremental_update
+    from tests.parity import assert_rank_identical, oracle_hits, spark_hits
 
     rows = [
         ("r1", "a.py", "c" * 40, "python", 'print("hello world")'),
         ("r1", "b.py", "c" * 40, "python", "goodbye cruel world"),
+        ("r1", "c.md", "c" * 40, "text", "hello hello world hello world"),
+        ("r1", "world.txt", "c" * 40, "text", "type ab world"),
+        ("r1", "d.py", "c" * 40, "python", 'print("hello again world")'),
     ]
     idx = str(tmp_path / "fgs_idx")
     build_index(spark, spark.createDataFrame(rows, CORPUS_SCHEMA), idx, num_blocks=2)
+    live = [r for r in rows if r[1] != "d.py"]
+    incremental_update(spark, idx, spark.createDataFrame(live, CORPUS_SCHEMA),
+                       full_snapshot=True)
+    build_phrase_df(spark, FtsIndex(spark, idx), ["hello world", "world"])
 
     fast = FtsIndex(spark, idx)
-    assert fast.posting_files
+    assert fast.posting_files and fast.has_deletes
     slow = FtsIndex(spark, idx, force_generic_scan=True)
     assert slow.posting_files == []  # generic scan serves every query
+    content = {r[1]: r[4] for r in live}
+    dead = {int(r["doc_id"]) for r in fast.deletes_df().collect()}
+    oracle = Fts5Oracle(
+        (int(r["doc_id"]), r["path"], r["name"], content[r["path"]])
+        for r in fast.doc_stats.select("doc_id", "path", "name").collect()
+        if int(r["doc_id"]) not in dead
+    )
 
-    for q in ["hello world", "world"]:
-        want = [(int(r["doc_id"]), round(float(r["score"]), 12))
-                for r in fast.search(q, 10).collect()]
-        got = [(int(r["doc_id"]), round(float(r["score"]), 12))
-               for r in slow.search(q, 10).collect()]
-        assert got == want and want, q
+    queries = ["hello world", "world", '"hello world" world', '"type" "ab"',
+               "goodbye"]
+    assert slow._covering_dfs('"hello world" world') is not None
+    assert slow._covering_dfs("hello world") is None
+    want = {}
+    for q in queries:
+        want[q] = spark_hits(fast.search(q, 10))
+        assert want[q], q
+        got = spark_hits(slow.search(q, 10))
+        _hits_close(got, want[q])
+        assert_rank_identical(got, oracle_hits(oracle.search(q, 10)), 10)
+    batch = slow.search_batch(queries, 10).collect()
+    for qi, q in enumerate(queries):
+        got = sorted(
+            ((int(r["doc_id"]), bool(r["name_match"]), float(r["score"]))
+             for r in batch if r["qid"] == qi),
+            key=lambda h: (not h[1], -h[2], h[0]))
+        _hits_close(got, want[q])
+
+
+def test_generic_batch_is_one_scan(spark, tmp_path):
+    """The Spark reader scans a whole batch at once: a 6-query
+    search_batch runs as many Spark jobs as a 1-query one."""
+    from codebased_spark.plans.engine import FtsIndex, build_index
+    from codebased_spark.sources.corpus import CORPUS_SCHEMA
+
+    rows = [("r1", f"f{i}.py", "c" * 40, "python",
+             f"hello world {i} server started value {i % 3}")
+            for i in range(24)]
+    idx = str(tmp_path / "gjobs")
+    build_index(spark, spark.createDataFrame(rows, CORPUS_SCHEMA), idx, num_blocks=4)
+    queries = ["hello world", "server started", "value", '"world 1"',
+               "hello value", '"started value"']
+    sc = spark.sparkContext
+
+    def jobs_of(group, n):
+        slow = FtsIndex(spark, idx, force_generic_scan=True)
+        sc.setJobGroup(group, group)
+        try:
+            rows = slow.search_batch(queries[:n], 10).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert {int(r["qid"]) for r in rows} == set(range(n))
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    one = jobs_of("generic_batch_1", 1)
+    assert one >= 1
+    assert jobs_of("generic_batch_6", 6) == one
 
 
 def test_remote_probe_requires_readable_shard(spark, tmp_path, monkeypatch):

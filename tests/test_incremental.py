@@ -17,6 +17,13 @@ from codebased_spark.streaming.incremental import (
 )
 from tests.parity import assert_rank_identical, oracle_hits, spark_hits
 
+
+def _deleted(index):
+    """The index's tombstoned doc ids, collected."""
+    d = index.deletes_df()
+    return set() if d is None else {int(r["doc_id"]) for r in d.collect()}
+
+
 V1 = [
     ("r1", "a.py", "c" * 40, "python", 'print("Hello, world!")'),
     ("r1", "b.md", "c" * 40, "text", "Hello, world!"),
@@ -39,7 +46,7 @@ def _live_docs(spark, index, corpus_rows):
     from the corpus rows — input for a fresh FTS5 oracle."""
     content = {(r[0], r[1]): r[4] for r in corpus_rows}
     docs = index.doc_stats.select("doc_id", "repo", "path", "name").collect()
-    dead = set() if index.deleted is None else set(int(x) for x in index.deleted)
+    dead = _deleted(index)
     out = []
     for r in docs:
         if int(r["doc_id"]) in dead:
@@ -59,7 +66,7 @@ def test_incremental_matches_fresh_oracle(spark, tmp_path):
     )
 
     assert index.n_docs == 4  # a.py(new), b.md, srv.js, new.go
-    assert index.deleted is not None and index.deleted.size == 2  # old a.py + gone.py
+    assert len(_deleted(index)) == 2  # old a.py + gone.py
 
     live = _live_docs(spark, index, V2)
     assert len(live) == 4
@@ -74,7 +81,7 @@ def test_incremental_matches_fresh_oracle(spark, tmp_path):
     dls = {
         (r["repo"], r["path"]): int(r["dl"])
         for r in index.doc_stats.collect()
-        if index.deleted is None or int(r["doc_id"]) not in set(map(int, index.deleted))
+        if int(r["doc_id"]) not in _deleted(index)
     }
     assert index.total_dl == sum(dls.values())
     assert index.n_docs == len(dls)
@@ -87,7 +94,7 @@ def test_incremental_noop_when_unchanged(spark, tmp_path):
     before = sorted(os.listdir(os.path.join(idx_dir, "postings")))
     index = incremental_update(spark, idx_dir, v1, full_snapshot=True, num_blocks=2)
     assert index.n_docs == 4
-    assert index.deleted is None
+    assert _deleted(index) == set()
     assert sorted(os.listdir(os.path.join(idx_dir, "postings"))) == before
 
 
@@ -121,10 +128,10 @@ def test_compaction_drops_tombstones_same_results(spark, tmp_path):
         q: [(r["name_match"], round(r["score"], 9)) for r in before.search(q, 10).collect()]
         for q in QUERIES
     }
-    assert before.deleted is not None
+    assert _deleted(before)
 
     compacted = compact_index(spark, idx_dir, v2, num_blocks=2)
-    assert compacted.deleted is None
+    assert _deleted(compacted) == set()
     assert compacted.n_docs == before.n_docs
     assert compacted.doc_stats.count() == 4  # tombstoned rows physically gone
     for q in QUERIES:

@@ -413,6 +413,63 @@ def test_resume_after_crash_before_stats_manifests(spark, tmp_path, monkeypatch)
                               oracle_hits(oracle.search(query, 10)), 10)
 
 
+def test_rebuild_over_existing_index_starts_clean(spark, tmp_path, monkeypatch):
+    """A non-resume build_index over an existing index replaces it
+    whole: the earlier generation's tombstones, incremental manifests
+    and phrase-df table do not survive, so the rebuild equals a fresh
+    build; and a crash inside the rebuild resumes onto none of the
+    earlier generation's manifests."""
+    import codebased_spark.plans.engine as engine
+    from codebased_spark.operators.phrasedf import build_phrase_df
+    from codebased_spark.sources.corpus import CORPUS_SCHEMA
+    from codebased_spark.streaming.incremental import incremental_update
+
+    v = [
+        ("r1", "a.py", "c" * 40, "python", 'print("hello")'),
+        ("r1", "b.py", "c" * 40, "python", "hello again"),
+        ("r1", "c.md", "c" * 40, "text", "hello hello there"),
+    ]
+    corpus = spark.createDataFrame(v, CORPUS_SCHEMA)
+    idx_dir = str(tmp_path / "rebuilt")
+    fresh_dir = str(tmp_path / "fresh")
+    fresh = build_index(spark, corpus, fresh_dir, num_blocks=2)
+    want = spark_hits(fresh.search("hello", 10))
+    assert len(want) == 3
+
+    def earlier_generation():
+        """Build, add a phrase-df table, then commit a snapshot that
+        drops b.py and rewrites c.md (tombstones + appended blocks)."""
+        index = build_index(spark, corpus, idx_dir, num_blocks=2)
+        build_phrase_df(spark, index, ["hello"])
+        batch = [v[0], v[2][:4] + ("hello there again",)]
+        incremental_update(spark, idx_dir,
+                           spark.createDataFrame(batch, CORPUS_SCHEMA),
+                           full_snapshot=True)
+
+    earlier_generation()
+    rebuilt = build_index(spark, corpus, idx_dir, num_blocks=2)
+    assert (rebuilt.n_docs, rebuilt.has_deletes) == (3, False)
+    assert rebuilt.phrase_dfs == {}
+    assert not os.path.exists(os.path.join(idx_dir, "phrase_df"))
+    assert not [f for f in os.listdir(os.path.join(idx_dir, "_manifest"))
+                if f.startswith("incr_")]
+    assert spark_hits(rebuilt.search("hello", 10)) == want
+    assert _postings_digest(spark, idx_dir) == _postings_digest(spark, fresh_dir)
+
+    earlier_generation()
+
+    def killed(*_a, **_k):
+        raise RuntimeError("killed during the posting write")
+
+    monkeypatch.setattr(engine, "_write_postings", killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        build_index(spark, corpus, idx_dir, num_blocks=2)
+    monkeypatch.undo()
+    resumed = build_index(spark, corpus, idx_dir, num_blocks=2, resume=True)
+    assert _postings_digest(spark, idx_dir) == _postings_digest(spark, fresh_dir)
+    assert spark_hits(resumed.search("hello", 10)) == want
+
+
 def test_build_docs_runs_once_per_build(spark, tmp_path, monkeypatch):
     """The docs lineage is built once per fresh build (shared by the
     stats thread and the posting write), and not at all by a resume

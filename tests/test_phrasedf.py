@@ -116,7 +116,10 @@ def test_covered_search_bit_identical(spark, indexed):
 
 def test_covered_path_with_tombstones(spark, tmp_path):
     """Covered search honors tombstones, and an incremental commit
-    invalidates the table (stale dfs must never reach idf)."""
+    refreshes the table for the new generation (stale dfs must never
+    reach idf)."""
+    import shutil
+
     from codebased_spark.sources.corpus import CORPUS_SCHEMA
     from codebased_spark.streaming.incremental import incremental_update
 
@@ -131,14 +134,17 @@ def test_covered_path_with_tombstones(spark, tmp_path):
     build_phrase_df(spark, index, ["hello world", "hello"])
     assert FtsIndex(spark, idx_dir).phrase_dfs
 
-    # tombstone b.py; the commit must drop the table
+    # tombstone b.py; the commit refreshes the table, which equals a
+    # scratch build over the committed index
     index2 = incremental_update(
         spark, idx_dir,
         spark.createDataFrame([v1[0], v1[2]], CORPUS_SCHEMA),
         full_snapshot=True,
     )
-    assert index2.phrase_dfs == {}
-    assert load_phrase_df(spark, index2) == {}
+    scratch = str(tmp_path / "tomb_scratch")
+    shutil.copytree(idx_dir, scratch)
+    assert index2.phrase_dfs == build_phrase_df(
+        spark, FtsIndex(spark, scratch), ["hello world", "hello"])
 
     # rebuild over the new generation: dfs reflect the deletion and the
     # covered path matches the uncovered one under tombstones
@@ -177,9 +183,17 @@ def test_hot_phrases_from_corpus(spark):
     assert all(len(p) >= 3 and p == casefold(p) for p in phrases)
 
 
-def test_generic_store_build_matches_files_build(spark, tmp_path):
-    """build_phrase_df's generic-store fallback (DataFrame posting scan)
-    computes the same dfs as the pyarrow-files path."""
+def test_generic_store_build_matches_files_build(spark, tmp_path, monkeypatch):
+    """On a store only the Spark reader can read (posting_files == []),
+    build_phrase_df computes the pyarrow reader's dfs, and a commit's
+    update_phrase_df splices its dirty blocks (no full rebuild) into a
+    table equal to a scratch build."""
+    import shutil
+
+    import codebased_spark.operators.phrasedf as phrasedf
+    from codebased_spark.sources.corpus import CORPUS_SCHEMA
+    from codebased_spark.streaming.incremental import incremental_update
+
     idx_dir = str(tmp_path / "gen_idx")
     index = build_index(spark, fixture_corpus(spark), idx_dir, num_blocks=4)
     via_files = build_phrase_df(spark, index, PHRASES)
@@ -188,6 +202,38 @@ def test_generic_store_build_matches_files_build(spark, tmp_path):
     blind.posting_files = []  # force the generic branch
     via_generic = build_phrase_df(spark, blind, PHRASES)
     assert via_generic == via_files
+
+    # full snapshot: drop one file, touch another -> tombstones in old
+    # blocks plus fresh appended blocks
+    rows = [tuple(r) for r in fixture_corpus(spark).collect()]
+    batch = rows[1:]
+    batch[0] = batch[0][:4] + (batch[0][4] + "\nhello world server started",)
+    spliced = []
+    real_update = phrasedf.update_phrase_df
+
+    def update(spark_, handle, dirty, prior_fingerprint):
+        assert handle.posting_files == []
+        spliced.append(real_update(spark_, handle, dirty, prior_fingerprint))
+        return spliced[-1]
+
+    def no_full_rebuild(*_a, **_k):
+        raise AssertionError("full build_phrase_df instead of a splice")
+
+    monkeypatch.setattr(phrasedf, "update_phrase_df", update)
+    monkeypatch.setattr(phrasedf, "build_phrase_df", no_full_rebuild)
+    committed = incremental_update(
+        spark, idx_dir, spark.createDataFrame(batch, CORPUS_SCHEMA),
+        full_snapshot=True, force_generic_scan=True)
+    monkeypatch.undo()
+    assert committed.posting_files == [] and committed.has_deletes
+    assert len(spliced) == 1 and spliced[0] is not None
+
+    scratch = str(tmp_path / "gen_scratch")
+    shutil.copytree(idx_dir, scratch)
+    want = build_phrase_df(spark, FtsIndex(spark, scratch), PHRASES)
+    assert spliced[0] == want
+    assert committed.phrase_dfs == want
+    assert FtsIndex(spark, idx_dir).phrase_dfs == want
 
 
 def test_scalars_for_matches_rows_for(spark, indexed):
@@ -339,11 +385,10 @@ def test_hot_phrases_digest_matches_text(spark):
 
 
 def test_incremental_rebuild_phrase_df(spark, tmp_path):
-    """VERDICT r04 #3: rebuild_phrase_df=True on incremental_update
-    re-materializes the side table from the prior generation's phrase
-    list after the commit, so a covered query STILL takes the covered
-    path (without it the first commit silently drops the lever), with
-    dfs correct for the NEW corpus generation."""
+    """VERDICT r04 #3: incremental_update keeps the side table current
+    after every commit, so a covered query STILL takes the covered
+    path, with dfs correct for the NEW corpus generation; compaction
+    carries it across the dir swap."""
     from codebased_spark.sources.corpus import CORPUS_SCHEMA
     from codebased_spark.streaming.incremental import (
         compact_index,
@@ -360,11 +405,11 @@ def test_incremental_rebuild_phrase_df(spark, tmp_path):
         spark, spark.createDataFrame(v1, CORPUS_SCHEMA), idx_dir, num_blocks=2)
     build_phrase_df(spark, index, ["hello world", "hello"])
 
-    # delete b.py with the opt-in: the returned index is covered again
+    # delete b.py: the returned index is covered again
     index2 = incremental_update(
         spark, idx_dir,
         spark.createDataFrame([v1[0], v1[2]], CORPUS_SCHEMA),
-        full_snapshot=True, rebuild_phrase_df=True,
+        full_snapshot=True,
     )
     assert index2.phrase_dfs  # table rebuilt, not silently dropped
     assert index2.phrase_dfs["hello world"] == (2, 0)  # new-generation df
@@ -385,19 +430,22 @@ def test_incremental_rebuild_phrase_df(spark, tmp_path):
     index3 = incremental_update(
         spark, idx_dir,
         spark.createDataFrame([v1[0], v1[2]], CORPUS_SCHEMA),
-        full_snapshot=True, rebuild_phrase_df=True,
+        full_snapshot=True,
     )
     assert index3.phrase_dfs == table_before
 
-    # default stays the documented drop-on-commit behavior
+    # a plain upsert (b.py back) keeps the table too
     index4 = incremental_update(
         spark, idx_dir, spark.createDataFrame([v1[1]], CORPUS_SCHEMA))
-    assert index4.phrase_dfs == {}
+    assert index4.phrase_dfs == {"hello world": (2, 0), "hello": (3, 0)}
+    with pytest.raises(ValueError):
+        incremental_update(spark, idx_dir,
+                           spark.createDataFrame([v1[1]], CORPUS_SCHEMA),
+                           rebuild_phrase_df=False)
 
-    # compaction with the opt-in carries the table across the dir swap
-    build_phrase_df(spark, index4, ["hello world", "hello"])
+    # compaction carries the table across the dir swap
     live = spark.createDataFrame(v1, CORPUS_SCHEMA)
-    index5 = compact_index(spark, idx_dir, live, rebuild_phrase_df=True)
+    index5 = compact_index(spark, idx_dir, live)
     assert index5.phrase_dfs
     # a.py + c.md match; b.py ("hello again world") has no "hello world"
     assert index5.phrase_dfs["hello world"] == (2, 0)
@@ -555,7 +603,7 @@ def test_delta_phrase_rebuild_matches_scratch(spark, tmp_path):
            ("r", "g2.py", "d" * 40, "python", "bravo fresh")]
     idx2 = incremental_update(
         spark, idx_dir, spark.createDataFrame(v2, CORPUS_SCHEMA),
-        full_snapshot=True, rebuild_phrase_df=True)
+        full_snapshot=True)
     got = dict(idx2.phrase_dfs)
 
     # scratch truth: copy the committed index, full-rebuild there

@@ -130,3 +130,95 @@ def test_engine_names_the_benchmark_reads():
     engine = ast.parse((ROOT / "codebased_spark" / "plans" / "engine.py").read_text())
     assert "get_block_rows" in {n.name for n in ast.walk(engine)
                                 if isinstance(n, ast.FunctionDef)}
+
+
+def _engine_callables(tree):
+    """{local name -> engine object} for every engine function or class
+    the file imports by name, and {alias -> engine module} for module
+    imports, over all of its scopes."""
+    names, modules = {}, {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.level == 0 \
+                and node.module and _is_engine(node.module):
+            mod = _module(node.module)
+            for a in node.names:
+                sub = _module(f"{node.module}.{a.name}")
+                if sub is not None:
+                    modules[a.asname or a.name] = sub
+                elif mod is not None and callable(getattr(mod, a.name, None)):
+                    names[a.asname or a.name] = getattr(mod, a.name)
+        elif isinstance(node, ast.Import):
+            for a in node.names:
+                if _is_engine(a.name) and a.asname and _module(a.name):
+                    modules[a.asname] = _module(a.name)
+    return names, modules
+
+
+def _call_mismatches(tree):
+    """(calls checked, [(lineno, name, error)]) over every call to an
+    imported engine callable, listing those whose positional count or
+    keyword names do not bind to its signature. Calls spreading
+    ``*args`` or ``**kwargs`` are skipped: their shape is not known
+    statically."""
+    import inspect
+
+    names, modules = _engine_callables(tree)
+    checked = 0
+    out = []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        f = node.func
+        if isinstance(f, ast.Name) and f.id in names:
+            target, label = names[f.id], f.id
+        elif isinstance(f, ast.Attribute) and isinstance(f.value, ast.Name) \
+                and f.value.id in modules \
+                and callable(getattr(modules[f.value.id], f.attr, None)):
+            target = getattr(modules[f.value.id], f.attr)
+            label = f"{f.value.id}.{f.attr}"
+        else:
+            continue
+        if any(isinstance(a, ast.Starred) for a in node.args) \
+                or any(k.arg is None for k in node.keywords):
+            continue
+        try:
+            sig = inspect.signature(target)
+        except (TypeError, ValueError):
+            continue
+        checked += 1
+        try:
+            sig.bind(*node.args, **{k.arg: k.value for k in node.keywords})
+        except TypeError as e:
+            out.append((node.lineno, label, str(e)))
+    return checked, out
+
+
+def test_script_engine_calls_bind():
+    """Every call the scripts make to an engine function or class they
+    import binds to its current signature: a dropped keyword or a
+    changed positional count cannot silently break a script that only
+    runs by hand."""
+    checked = 0
+    bad = []
+    for path in SCRIPTS:
+        n, mismatches = _call_mismatches(
+            ast.parse(path.read_text(), filename=str(path)))
+        checked += n
+        bad += [f"{path.relative_to(ROOT)}:{ln} {name}: {err}"
+                for ln, name, err in mismatches]
+    assert not bad, "calls that no longer bind:\n" + "\n".join(bad)
+    assert checked > 50  # the walk really saw the scripts' engine calls
+
+
+def test_call_guard_catches_a_changed_signature():
+    tree = ast.parse(
+        "from codebased_spark.streaming.incremental import compact_index\n"
+        "import codebased_spark.operators.query as q\n"
+        "compact_index(spark, d, corpus, rebuild_phrase_df=True)\n"
+        "q._batch_candidates_fn(a, b, c, d, e, f, g)\n"
+        "compact_index(spark, d, corpus, num_blocks=4)\n"
+    )
+    checked, bad = _call_mismatches(tree)
+    assert checked == 3
+    assert [(ln, name) for ln, name, _ in bad] == [
+        (3, "compact_index"), (4, "q._batch_candidates_fn")]

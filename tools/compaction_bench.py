@@ -9,7 +9,7 @@ content-touch batch to a copy of one shared base index, then measures:
   per ratio: tombstoned arm and compacted arm alternate reps),
 - compact_index duration (a full rebuild of live paths + dir swap),
 - store bytes and shard counts before/after,
-- whether the hot-phrase table survives (rebuild_phrase_df=True).
+- whether the hot-phrase table survives (commits and compaction keep it).
 
 Usage: python tools/compaction_bench.py [n_files] [ratios_pct...]
 Defaults: 200000 1 10 30. Prints one JSON line.
@@ -116,7 +116,7 @@ def main() -> None:
                    ).otherwise(F.col("content")),
         )
         t0 = time.time()
-        idx = incremental_update(spark, d, changed, rebuild_phrase_df=True)
+        idx = incremental_update(spark, d, changed)
         commit_sec = round(time.time() - t0, 3)
         ratio = round(tombstone_ratio(idx), 4)
         idx.driver_direct = False
@@ -124,7 +124,7 @@ def main() -> None:
         pre = dir_stats(d)
         pre_p50 = p50(idx)
         t0 = time.time()
-        cidx = compact_index(spark, d, live_corpus, rebuild_phrase_df=True)
+        cidx = compact_index(spark, d, live_corpus)
         compact_sec = round(time.time() - t0, 3)
         cidx.driver_direct = False
         cidx.search("warmup", 10).collect()

@@ -3,7 +3,7 @@ correctness-tested but were never timed. Measures, at ~200k files:
 
 - commit latency for a 1%-changed batch (sha gate -> re-chunk ->
   append postings -> tombstone superseded docs -> exact stats update
-  -> phrase-df rebuild via rebuild_phrase_df=True), and
+  -> phrase-df delta rebuild), and
 - the no-op commit (same batch re-applied: every sha matches, the
   gate passes nothing through),
 
@@ -90,8 +90,7 @@ def main() -> None:
     breakdown: dict = {}
     t0 = time.time()
     index2 = incremental_update(
-        spark, idx_dir, changed, rebuild_phrase_df=True,
-        stage_timings=breakdown)
+        spark, idx_dir, changed, stage_timings=breakdown)
     commit_sec = round(time.time() - t0, 3)
     assert index2.phrase_dfs, "phrase-df table must survive the commit"
     assert index2.n_docs == index.n_docs, "upsert must not change doc count"
@@ -100,8 +99,7 @@ def main() -> None:
     noop_breakdown: dict = {}
     t0 = time.time()
     index3 = incremental_update(
-        spark, idx_dir, changed, rebuild_phrase_df=True,
-        stage_timings=noop_breakdown)
+        spark, idx_dir, changed, stage_timings=noop_breakdown)
     noop_sec = round(time.time() - t0, 3)
 
     # the POST-COMMIT FIRST query, before any warmup — the reload
