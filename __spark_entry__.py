@@ -33,6 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from codebased_spark import B, K1  # noqa: E402
 from codebased_spark.operators.docs import with_doc_lengths  # noqa: E402
 from codebased_spark.operators.score import search_bruteforce  # noqa: E402
+from codebased_spark.operators.textops import TRIGRAM_KEY_MOD  # noqa: E402
 
 K_ALL = 100000  # effectively "no limit": avoids tie-at-boundary ambiguity
 
@@ -158,6 +159,20 @@ _TRI_NUMBERS = """
 """
 
 
+# (doc_id, i, code): the positional trigram codes of the case-folded
+# text, c0*2^42 + c1*2^21 + c2 over code points (textops.trigram_codes),
+# spelled independently in DuckDB SQL; use sites take DISTINCT or the
+# hash key (code % TRIGRAM_KEY_MOD) themselves.
+_TRI_CODES = f"""{_TRI_NUMBERS.strip()},
+  tri_codes AS (
+    SELECT d.doc_id, n.i,
+           ascii(substr(lower(coalesce(d.text, '')), n.i, 1))::BIGINT * 4398046511104
+         + ascii(substr(lower(coalesce(d.text, '')), n.i + 1, 1))::BIGINT * 2097152
+         + ascii(substr(lower(coalesce(d.text, '')), n.i + 2, 1))::BIGINT AS code
+    FROM documents d JOIN nums n ON n.i <= length(coalesce(d.text, '')) - 2
+  )"""
+
+
 def q_trigram_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     from codebased_spark.operators.textops import trigram_document_frequency
 
@@ -228,16 +243,14 @@ def q_doc_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DOC_DIGEST_SQL = f"""
-WITH {_TRI_NUMBERS},
+WITH {_TRI_CODES},
 fp AS (
-  SELECT d.doc_id,
-         cast(sum((ascii(substr(lower(coalesce(d.text, '')), n.i, 1)) * 4398046511104
-                 + ascii(substr(lower(coalesce(d.text, '')), n.i + 1, 1)) * 2097152
-                 + ascii(substr(lower(coalesce(d.text, '')), n.i + 2, 1)))
-                 * ((n.i - 1) % 64 + 1)) % 2305843009213693951 as bigint) AS fingerprint,
+  SELECT doc_id,
+         cast(sum((code % {TRIGRAM_KEY_MOD}) * ((i - 1) % 64 + 1))
+              % 2305843009213693951 as bigint) AS fingerprint,
          count(*) AS n_trigrams
-  FROM documents d JOIN nums n ON n.i <= length(coalesce(d.text, '')) - 2
-  GROUP BY d.doc_id
+  FROM tri_codes
+  GROUP BY doc_id
 )
 SELECT d.doc_id, sha256(coalesce(d.text, '')) AS sha256,
        coalesce(fp.fingerprint, 0) AS fingerprint,
@@ -278,24 +291,22 @@ def q_jaccard_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 JACCARD_SQL = f"""
-WITH {_TRI_NUMBERS},
-tri AS (
-  SELECT DISTINCT d.doc_id,
-         ascii(substr(lower(coalesce(d.text, '')), n.i, 1)) * 4398046511104
-       + ascii(substr(lower(coalesce(d.text, '')), n.i + 1, 1)) * 2097152
-       + ascii(substr(lower(coalesce(d.text, '')), n.i + 2, 1)) AS code
-  FROM documents d JOIN nums n ON n.i <= length(coalesce(d.text, '')) - 2
-),
+WITH {_TRI_CODES},
+tri AS (SELECT DISTINCT doc_id, code FROM tri_codes),
 sizes AS (SELECT doc_id, count(*) AS set_size FROM tri GROUP BY 1),
 probe AS (SELECT code FROM tri WHERE doc_id = 0),
 probe_size AS (SELECT count(*) AS probe_size FROM probe),
 inter AS (
   SELECT t.doc_id, count(*) AS inter FROM tri t JOIN probe p ON t.code = p.code GROUP BY 1
 )
-SELECT s.doc_id,
+-- from documents: a sub-3-char doc has an EMPTY trigram set, which
+-- Spark scores 0 against the probe — keep its row, as _minhash_sql does
+SELECT d.doc_id,
        round(cast(coalesce(i.inter, 0) as double)
-             / cast(s.set_size + ps.probe_size - coalesce(i.inter, 0) as double), 6) AS jaccard
-FROM sizes s LEFT JOIN inter i ON s.doc_id = i.doc_id, probe_size ps
+             / cast(coalesce(s.set_size, 0) + ps.probe_size - coalesce(i.inter, 0) as double),
+             6) AS jaccard
+FROM documents d LEFT JOIN sizes s ON d.doc_id = s.doc_id
+LEFT JOIN inter i ON d.doc_id = i.doc_id, probe_size ps
 """
 
 
@@ -305,27 +316,26 @@ def q_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_signatures(_documents(spark, sf_dir), n_hashes=4)
 
 
-def _minhash_sql(n_hashes: int = 4) -> str:
+def _sig_mins(n_hashes: int) -> str:
+    """The MinHash signature aggregates over tri_codes ``t``."""
     from codebased_spark.operators.dedup import MINHASH_PRIME, _A, _B
 
-    mins = ", ".join(
-        f"min(({_A[i]} * t.code + {_B[i]}) % {MINHASH_PRIME}) AS sig{i}"
+    return ", ".join(
+        f"min(({_A[i]} * (t.code % {TRIGRAM_KEY_MOD}) + {_B[i]}) % {MINHASH_PRIME})"
+        f" AS sig{i}"
         for i in range(n_hashes)
     )
+
+
+def _minhash_sql(n_hashes: int = 4) -> str:
+    mins = _sig_mins(n_hashes)
     sig_cols = ", ".join(f"s.sig{i}" for i in range(n_hashes))
     # LEFT JOIN: sub-3-char docs have an EMPTY trigram set, so Spark
     # emits null signatures for them — the oracle must keep their rows
     # (with nulls) rather than drop them in the inner join
     return f"""
-WITH {_TRI_NUMBERS},
-tri AS (
-  SELECT d.doc_id,
-         ascii(substr(lower(coalesce(d.text, '')), n.i, 1)) * 4398046511104
-       + ascii(substr(lower(coalesce(d.text, '')), n.i + 1, 1)) * 2097152
-       + ascii(substr(lower(coalesce(d.text, '')), n.i + 2, 1)) AS code
-  FROM documents d JOIN nums n ON n.i <= length(coalesce(d.text, '')) - 2
-),
-sigs AS (SELECT t.doc_id, {mins} FROM tri t GROUP BY t.doc_id)
+WITH {_TRI_CODES},
+sigs AS (SELECT t.doc_id, {mins} FROM tri_codes t GROUP BY t.doc_id)
 SELECT d.doc_id, {sig_cols}
 FROM documents d LEFT JOIN sigs s ON d.doc_id = s.doc_id
 """
@@ -430,15 +440,10 @@ def _simhash_sql() -> str:
 
     a, b = _A[0], _B[0]
     return f"""
-WITH {_TRI_NUMBERS},
-tri AS (
-  SELECT DISTINCT d.doc_id,
-         ascii(substr(lower(coalesce(d.text, '')), n.i, 1)) * 4398046511104
-       + ascii(substr(lower(coalesce(d.text, '')), n.i + 1, 1)) * 2097152
-       + ascii(substr(lower(coalesce(d.text, '')), n.i + 2, 1)) AS code
-  FROM documents d JOIN nums n ON n.i <= length(coalesce(d.text, '')) - 2
-),
-h AS (SELECT doc_id, ({a} * code + {b}) % {MINHASH_PRIME} AS h FROM tri),
+WITH {_TRI_CODES},
+tri AS (SELECT DISTINCT doc_id, code FROM tri_codes),
+h AS (SELECT doc_id, ({a} * (code % {TRIGRAM_KEY_MOD}) + {b}) % {MINHASH_PRIME} AS h
+      FROM tri),
 n_tri AS (SELECT doc_id, count(*) AS n FROM h GROUP BY 1),
 bits AS (
   SELECT h.doc_id, k.k,
@@ -468,12 +473,7 @@ def _lsh_pairs_sql(n_hashes: int = 16, band_size: int = 4, max_bucket: int = 64)
     MinHash signatures, identical md5-of-'|'-joined band buckets
     (portable by construction — see dedup._lsh_bands), same bucket cap
     applied before the self-join."""
-    from codebased_spark.operators.dedup import MINHASH_PRIME, _A, _B
-
-    mins = ", ".join(
-        f"min(({_A[i]} * t.code + {_B[i]}) % {MINHASH_PRIME}) AS sig{i}"
-        for i in range(n_hashes)
-    )
+    mins = _sig_mins(n_hashes)
     n_bands = n_hashes // band_size
     band_selects = "\n  UNION ALL ".join(
         f"SELECT doc_id, {b} AS band, md5(concat_ws('|', "
@@ -482,15 +482,8 @@ def _lsh_pairs_sql(n_hashes: int = 16, band_size: int = 4, max_bucket: int = 64)
         for b in range(n_bands)
     )
     return f"""
-WITH {_TRI_NUMBERS},
-tri AS (
-  SELECT d.doc_id,
-         ascii(substr(lower(coalesce(d.text, '')), n.i, 1)) * 4398046511104
-       + ascii(substr(lower(coalesce(d.text, '')), n.i + 1, 1)) * 2097152
-       + ascii(substr(lower(coalesce(d.text, '')), n.i + 2, 1)) AS code
-  FROM documents d JOIN nums n ON n.i <= length(coalesce(d.text, '')) - 2
-),
-sigs AS (SELECT t.doc_id, {mins} FROM tri t GROUP BY t.doc_id),
+WITH {_TRI_CODES},
+sigs AS (SELECT t.doc_id, {mins} FROM tri_codes t GROUP BY t.doc_id),
 bands AS (
   {band_selects}
 ),

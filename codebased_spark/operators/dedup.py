@@ -19,10 +19,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-# Deterministic universal-hash parameters. Multipliers are 13-bit primes
-# so a*code < 2^13 * 2^49 = 2^62 never overflows int64 — keeping the
+from codebased_spark.operators.textops import TRIGRAM_KEY_MOD, trigram_codes
+
+# Deterministic universal-hash parameters over the 49-bit trigram key
+# (textops.TRIGRAM_KEY_MOD). Multipliers are 13-bit primes so
+# a*key < 2^13 * 2^49 = 2^62 never overflows int64 — keeping the
 # arithmetic identical in engines that promote (DuckDB -> HUGEINT) and
-# engines that wrap (Spark non-ANSI).
+# engines that check or wrap (Spark ANSI / non-ANSI).
 MINHASH_PRIME = 2305843009213693951  # 2^61 - 1
 _A = [8191, 5381, 7919, 6151, 4093, 3571, 2861, 1777,
       7507, 6827, 5749, 4957, 4231, 3917, 3259, 2741]
@@ -31,23 +34,10 @@ _B = [2654435769, 2246822519, 3266489917, 668265263,
       15485863, 32452843, 49979687, 67867967,
       86028121, 104395301, 122949823, 141650939]
 
-# Guarded: Spark's sequence(1, 0) DESCENDS to [1, 0] instead of being
-# empty, which fabricated a phantom trigram code for sub-3-char docs
-# (code-review r3) — short docs must yield an EMPTY trigram set.
-_TRI_SET = (
-    "CASE WHEN length(lc) >= 3 THEN "
-    "array_distinct(transform(sequence(1, length(lc) - 2),"
-    " i -> ascii(substring(lc, i, 1)) * 4398046511104"
-    "    + ascii(substring(lc, i+1, 1)) * 2097152"
-    "    + ascii(substring(lc, i+2, 1)))) "
-    "ELSE CAST(array() AS array<bigint>) END"
-)
-
-
 def _with_trigram_codes(docs: DataFrame, text_col: str) -> DataFrame:
-    return docs.withColumn(
-        "lc", F.lower(F.coalesce(F.col(text_col), F.lit("")))
-    ).withColumn("tri_codes", F.expr(_TRI_SET))
+    """docs + ``tri_codes``: the distinct trigram codes of the text."""
+    lc = F.lower(F.coalesce(F.col(text_col), F.lit("")))
+    return docs.withColumn("tri_codes", F.array_distinct(trigram_codes(lc)))
 
 
 def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -111,15 +101,15 @@ def jaccard_to_probe(docs: DataFrame, probe_doc_id: int, text_col: str = "text")
 
 
 def minhash_signatures(docs: DataFrame, text_col: str = "text", n_hashes: int = 8) -> DataFrame:
-    """MinHash signature per doc: sig_i = min over trigram codes of
-    (a_i * code + b_i) mod (2^61-1). Deterministic, engine-portable
-    (unsigned-safe: constants are reduced mod p first)."""
+    """MinHash signature per doc: sig_i = min over trigram keys of
+    (a_i * key + b_i) mod (2^61-1), key = code % (2^49-1). Deterministic
+    and engine-portable: every term stays below 2^63 for any code point."""
     assert n_hashes <= len(_A)
     coded = _with_trigram_codes(docs, text_col)
     sigs = [
         F.expr(
             f"array_min(transform(tri_codes, c -> "
-            f"(({_A[i]}L * c + {_B[i]}L) % {MINHASH_PRIME}L)))"
+            f"(({_A[i]}L * (c % {TRIGRAM_KEY_MOD}L) + {_B[i]}L) % {MINHASH_PRIME}L)))"
         ).alias(f"sig{i}")
         for i in range(n_hashes)
     ]
@@ -139,27 +129,25 @@ def _lsh_bands(docs: DataFrame, text_col: str, n_hashes: int, band_size: int) ->
     # docs with no trigrams (< 3 chars) have null signatures: MinHash is
     # undefined on the empty set, so they get NO bands (and thus can
     # never pair) — matching the SQL oracle, where such docs simply
-    # produce no signature row
-    sigs = minhash_signatures(docs, text_col, n_hashes).filter(
-        F.col("sig0").isNotNull()
-    )
+    # produce no signature row. A null array explodes to no rows; a
+    # Filter on sig0 instead is pushed below the signature projection
+    # and computes every doc's trigram codes a second time.
+    sigs = minhash_signatures(docs, text_col, n_hashes)
     n_bands = n_hashes // band_size
     return sigs.select(
         "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.md5(F.concat_ws("|", *[
-                            F.col(f"sig{b * band_size + j}").cast("string")
-                            for j in range(band_size)
-                        ])).alias("bucket"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bb"),
+        F.explode(F.when(F.col("sig0").isNotNull(), F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.md5(F.concat_ws("|", *[
+                        F.col(f"sig{b * band_size + j}").cast("string")
+                        for j in range(band_size)
+                    ])).alias("bucket"),
+                )
+                for b in range(n_bands)
+            ]
+        ))).alias("bb"),
     ).select("doc_id", "bb.band", "bb.bucket")
 
 
@@ -197,22 +185,24 @@ def lsh_candidate_pairs(
       otherwise O(|bucket|²) regardless of banding.
       :func:`lsh_bucket_stats` reports exactly what was dropped.
 
-    Physical shape (r7): ONE pass over the corpus. The former
-    size-count + semi-join + self-join spelling referenced the bands
-    subtree (trigram expansion + 16 MinHash folds — the expensive
-    part) from four places and the optimizer reused none of them: the
-    plan held EIGHT scans of the corpus (measured 5.9 s at 500 docs).
-    Grouping each bucket's (capped, sorted) doc list and expanding
-    i<j pairs with array transforms keeps one scan + two exchanges
-    and returns the identical pair set (the bucket cap becomes a
-    HAVING on the collected size; pairs are ordered because the list
-    is sorted). Oracle-pinned (lsh_candidate_pairs gate entry).
+    Physical shape: ONE scan of the corpus, one exchange of band rows.
+    A size-count + semi-join spelling references the bands subtree
+    (trigram expansion + 16 MinHash folds) from several places and
+    the optimizer reused none of them (EIGHT scans, 5.9 s at 500 docs).
+    A window count over (band, bucket) — a spillable buffer — drops
+    rows of buckets outside [2, max_bucket] BEFORE ``collect_list``
+    gathers each bucket's sorted doc list, so a degenerate bucket is
+    never collected into one array; i<j pairs expand with array
+    transforms (ordered: the list is sorted). Oracle-pinned
+    (lsh_candidate_pairs gate entry).
     """
     bands = _lsh_bands(docs, text_col, n_hashes, band_size)
+    size = F.count(F.lit(1)).over(Window.partitionBy("band", "bucket"))
     grouped = (
-        bands.groupBy("band", "bucket")
+        bands.withColumn("size", size)
+        .filter((F.col("size") >= 2) & (F.col("size") <= max_bucket))
+        .groupBy("band", "bucket")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .filter((F.size("ids") >= 2) & (F.size("ids") <= max_bucket))
     )
     # all i<j pairs of the sorted list: for element x at 0-based
     # position i, pair with every element after it (slice is 1-based)
@@ -234,11 +224,11 @@ def lsh_candidate_pairs(
 
 def simhash64(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """61-bit SimHash over trigram codes: bit k of the hash is the sign
-    of sum over trigrams of (bit k of h(code) ? +1 : -1), h = one
-    universal hash. The per-bit tally is a dense 61-wide popcount — a
-    shape Catalyst's interpreted lambda algebra evaluates ~100x slower
-    than numpy, so this one runs as an Arrow-batched pandas UDF over the
-    (JVM-computed) trigram-code arrays."""
+    of sum over trigrams of (bit k of h(key) ? +1 : -1), h = one
+    universal hash of the trigram key. The per-bit tally is a dense
+    61-wide popcount — a shape Catalyst's interpreted lambda algebra
+    evaluates ~100x slower than numpy, so this one runs as an
+    Arrow-batched pandas UDF over the (JVM-computed) trigram-code arrays."""
     import numpy as np
     import pandas as pd
 
@@ -248,7 +238,7 @@ def simhash64(docs: DataFrame, text_col: str = "text") -> DataFrame:
         shifts = np.arange(61, dtype=np.uint64)
         out = np.zeros(len(codes), dtype=np.int64)
         for i, arr in enumerate(codes):
-            c = np.asarray(arr, dtype=np.int64)
+            c = np.asarray(arr, dtype=np.int64) % TRIGRAM_KEY_MOD
             if c.size == 0:
                 continue
             h = ((a * c + b) % MINHASH_PRIME).astype(np.uint64)

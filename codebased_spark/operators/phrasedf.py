@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from codebased_spark.functions.fts5 import casefold, phrase_terms
+from codebased_spark.operators.textops import joined_ngrams
 
 PHRASE_DF_DIR = "phrase_df"
 PHRASE_DF_MANIFEST = "phrase_df"
@@ -64,20 +65,7 @@ def _corpus_ngrams(
     hot set can never cover it."""
     w = F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), r"\s+")
 
-    def ngram_expr(n: int):
-        # the transform lambda must be unary (pyspark derives the
-        # higher-order function's arity from the signature) — bind n
-        # via closure, never a default arg
-        return F.when(
-            F.size(w) >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.size(w) - n + 1),
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at(w, i + j) for j in range(n)]),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-
-    parts = [w if n == 1 else ngram_expr(n) for n in ngrams]
+    parts = [w if n == 1 else joined_ngrams(w, n) for n in ngrams]
     allgrams = parts[0] if len(parts) == 1 else F.concat(*parts)
     return (
         corpus.select(F.explode(allgrams).alias("phrase"))

@@ -5,27 +5,60 @@ in the hot path), so they run inside whole-stage codegen and scale
 linearly with the scan: token counting, quality scoring, language-ID
 scoring, and a deterministic trigram fingerprint.
 
+The n-gram window, the trigram code and its hash key are defined here
+once; dedup, trainprep and phrasedf build on them.
+
 Every operator here has an exact ANSI-SQL oracle (see __spark_entry__)
 — expressions are chosen to be bit-reproducible across engines.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-# Deterministic trigram code: (c0<<42)|(c1<<21)|c2 on ASCII codepoints —
-# the same packing as functions/fts5.pack_trigram, expressed in SQL so
-# DuckDB can reproduce it exactly.
-_TRI_CODE = (
-    "ascii(substring(lc, i, 1)) * 4398046511104 "
-    "+ ascii(substring(lc, i+1, 1)) * 2097152 "
-    "+ ascii(substring(lc, i+2, 1))"
-)
 
 FINGERPRINT_MOD = 2305843009213693951  # 2^61 - 1 (Mersenne prime)
 
+# Trigram hash key = code % (2^49 - 1), taken wherever a code is
+# multiplied: the identity on every ASCII trigram (all are < 2^49 - 1),
+# and for any code point MinHash's a*key + b stays below 2^62 and the
+# fingerprint's key*64 below 2^55, in engines that wrap or promote.
+TRIGRAM_KEY_MOD = 562949953421311  # 2^49 - 1
+
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")
+
+
+def ngram_windows(arr: Column, n: int) -> Column:
+    """The n-wide sliding windows over ``arr`` as structs with fields
+    "0".."n-1" (empty under n elements): the zip of n shifted slices,
+    linear however the optimizer inlines ``arr``. A lambda reading
+    ``arr[i]`` per index is re-evaluated per element once ``arr`` is
+    inlined into it — quadratic."""
+    m = F.greatest(F.size(arr) - (n - 1), F.lit(0))
+    return F.arrays_zip(*[F.slice(arr, j + 1, m) for j in range(n)])
+
+
+def joined_ngrams(words: Column, n: int) -> Column:
+    """The n-grams of the string array ``words``, in order, each joined
+    with single spaces; empty when there are fewer than n words."""
+    return F.transform(
+        ngram_windows(words, n),
+        lambda g: F.concat_ws(" ", *[g[str(j)] for j in range(n)]),
+    )
+
+
+def trigram_codes(lc: Column) -> Column:
+    """Positional trigram codes of the case-folded string ``lc`` as
+    array<bigint>: c0*2^42 + c1*2^21 + c2 over code points, the packing
+    of functions/fts5.pack_trigram (injective: code points are < 2^21).
+    Strings under 3 code points give an empty array."""
+    # the empty pattern splits on code points, as length()/substring() count
+    cps = F.transform(F.split(lc, ""), lambda c: F.ascii(c))
+    return F.transform(
+        ngram_windows(cps, 3),
+        lambda w: w["0"].cast("bigint") * 4398046511104
+        + w["1"].cast("bigint") * 2097152 + w["2"],
+    )
 
 
 def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -88,27 +121,19 @@ def lang_marker_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 def trigram_fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Deterministic positional document fingerprint:
-    sum_i code(trigram_i) * ((i-1) % 64 + 1)  mod  (2^61-1).
-    Pure SQL expressions (transform + aggregate over a generated index
-    sequence) — reproducible in any ANSI engine, no UDF."""
-    # codes are < 2^49 (ASCII), multiplier <= 64 -> x < 2^55; acc stays
-    # < 2^61 after each mod, so everything fits in int64 in any engine.
-    # len < 3 guard: Spark's sequence(1, 0) DESCENDS to [1, 0] instead
-    # of being empty — short docs must fingerprint to 0 (code-review r3)
-    expr = f"""
-      CASE WHEN length(lc) >= 3 THEN
-      aggregate(
-        transform(sequence(1, length(lc) - 2),
-                  i -> ({_TRI_CODE}) * ((i-1) % 64 + 1)),
-        cast(0 as bigint),
-        (acc, x) -> (acc + x) % {FINGERPRINT_MOD}
-      ) ELSE cast(0 as bigint) END
-    """
+    sum_i key(trigram_i) * ((i-1) % 64 + 1)  mod  (2^61-1).
+    Pure SQL expressions (transform + aggregate over the trigram
+    codes) — reproducible in any ANSI engine, no UDF."""
+    # key*64 < 2^55 and acc < 2^61 after each mod: int64 in any engine
+    keyed = F.transform(trigram_codes(F.col("lc")),
+                        lambda c, i: (c % TRIGRAM_KEY_MOD) * (i % 64 + 1))
+    fp = F.aggregate(keyed, F.lit(0).cast("bigint"),
+                     lambda acc, x: (acc + x) % FINGERPRINT_MOD)
     return (
         docs.withColumn("lc", F.lower(F.coalesce(F.col(text_col), F.lit(""))))
         .select(
             "doc_id",
-            F.expr(expr).cast("long").alias("fingerprint"),
+            fp.alias("fingerprint"),
             F.greatest(F.length("lc") - 2, F.lit(0)).alias("n_trigrams"),
         )
     )
@@ -146,13 +171,10 @@ def trigram_document_frequency(docs: DataFrame, text_col: str = "text") -> DataF
     trigram set per doc, aggregate document frequency per trigram. (The
     posting build in operators/build.py does this inside one UDF pass;
     this variant is the pure-Catalyst cross-check.)"""
-    # len < 3 guard: sequence(1, 0) DESCENDS — short docs have NO trigrams
-    tri = F.expr(
-        "CASE WHEN length(lc) >= 3 THEN "
-        "array_distinct(transform(sequence(1, length(lc) - 2),"
-        " i -> substring(lc, i, 3))) "
-        "ELSE CAST(array() AS array<string>) END"
-    )
+    tri = F.array_distinct(F.transform(
+        ngram_windows(F.split(F.col("lc"), ""), 3),
+        lambda w: F.concat(w["0"], w["1"], w["2"]),
+    ))
     return (
         docs.withColumn("lc", F.lower(F.coalesce(F.col(text_col), F.lit(""))))
         .select("doc_id", F.explode(tri).alias("trigram"))

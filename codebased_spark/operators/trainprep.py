@@ -33,23 +33,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from codebased_spark.operators.textops import joined_ngrams
+
 EMAIL_RE = r"[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}"
 IPV4_RE = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
 LONGNUM_RE = r"\b\d{9,}\b"
 
 
+def _ngram_array(text_col: str, n: int):
+    """The whitespace n-grams of the lowercased text, in order, as
+    space-joined strings; empty when the text has fewer than n tokens."""
+    w = F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), " +")
+    return joined_ngrams(w, n)
+
+
 def _word_ngrams(docs: DataFrame, text_col: str, n: int, distinct: bool):
     """(doc_id, ngram) rows: whitespace n-grams of the lowercased text.
-    Docs with fewer than n tokens contribute nothing (guarded — Spark's
-    sequence(1, 0) would DESCEND, not return empty)."""
-    w = F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), " +")
-    grams = F.when(
-        F.size(w) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(w) - (n - 1)),
-            lambda i: F.array_join(F.slice(w, i, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    Docs with fewer than n tokens contribute nothing."""
+    grams = _ngram_array(text_col, n)
     if distinct:
         grams = F.array_distinct(grams)
     return docs.select("doc_id", F.explode(grams).alias("ngram"))
@@ -159,16 +160,8 @@ def repetition_ratios(docs: DataFrame, text_col: str = "text") -> DataFrame:
     Gopher-rules family of quality gates thresholds exactly these
     signals to drop boilerplate/spam. All array algebra inside one
     projection — no explode, no shuffle."""
-    w = F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), " +")
-
     def dup_frac(n: int):
-        grams = F.when(
-            F.size(w) >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.size(w) - (n - 1)),
-                lambda i: F.array_join(F.slice(w, i, n), " "),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
+        grams = _ngram_array(text_col, n)
         total = F.size(grams)
         return F.round(
             F.when(

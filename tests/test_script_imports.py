@@ -222,3 +222,16 @@ def test_call_guard_catches_a_changed_signature():
     assert checked == 3
     assert [(ln, name) for ln, name, _ in bad] == [
         (3, "compact_index"), (4, "q._batch_candidates_fn")]
+
+
+def test_trigram_code_defined_once():
+    """The trigram packing (c0*2^42 + c1*2^21 + c2) is spelled in one
+    engine module and once in the oracle SQL, and no engine window
+    reads the case-folded text by position: the n-gram window, the
+    trigram code and its hash key live in operators/textops.py."""
+    engine = sorted((ROOT / "codebased_spark").rglob("*.py"))
+    packers = [p.relative_to(ROOT).as_posix() for p in engine
+               if "4398046511104" in p.read_text()]
+    assert packers == ["codebased_spark/operators/textops.py"]
+    assert (ROOT / "__spark_entry__.py").read_text().count("4398046511104") == 1
+    assert [p.name for p in engine if "substring(lc" in p.read_text()] == []
