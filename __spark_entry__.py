@@ -389,7 +389,7 @@ WITH t AS (
 w AS (
   SELECT doc_id, lc, length(lc) AS n,
          list_filter(string_split_regex(trim(lc), ' +'), x -> length(x) > 0) AS words,
-         length(lc) - length(regexp_replace(lc, '[^a-z0-9 ]', '', 'g')) AS n_punct
+         length(lc) - length(regexp_replace(lc, '[^\\p{L}\\p{N} ]', '', 'g')) AS n_punct
   FROM t
 )
 SELECT doc_id, n AS n_chars, len(words) AS n_words,
@@ -829,7 +829,7 @@ WITH flagged AS (
   SELECT doc_id,
          length(lower(coalesce(text, ''))) AS n_chars,
          round((length(lower(coalesce(text, '')))
-                - length(regexp_replace(lower(coalesce(text, '')), '[^a-z0-9 ]', '', 'g')))::DOUBLE
+                - length(regexp_replace(lower(coalesce(text, '')), '[^\\p{L}\\p{N} ]', '', 'g')))::DOUBLE
                / greatest(length(lower(coalesce(text, ''))), 1), 6) AS punct_ratio,
          min(doc_id) OVER (PARTITION BY md5(coalesce(text, ''))) AS exact_canon,
          -- canon only among length-gate passers (matches curate.py):

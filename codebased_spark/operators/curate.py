@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from codebased_spark.operators.textops import PUNCT_RE
+
 DEFAULT_MIN_CHARS = 20
 DEFAULT_MAX_CHARS = 100_000
 DEFAULT_MAX_PUNCT_RATIO = 0.30
@@ -47,7 +49,7 @@ def curate_corpus(
     candidate pair (reason ``near_duplicate_minhash``)."""
     t = F.lower(F.coalesce(F.col(text_col), F.lit("")))
     n = F.length(t)
-    n_punct = n - F.length(F.regexp_replace(t, "[^a-z0-9 ]", ""))
+    n_punct = n - F.length(F.regexp_replace(t, PUNCT_RE, ""))
     punct_ratio = F.round(
         n_punct.cast("double") / F.greatest(n, F.lit(1)).cast("double"), 6
     )

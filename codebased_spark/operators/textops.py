@@ -26,6 +26,9 @@ FINGERPRINT_MOD = 2305843009213693951  # 2^61 - 1 (Mersenne prime)
 TRIGRAM_KEY_MOD = 562949953421311  # 2^49 - 1
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")
+# a punctuation char is any char but a letter, a digit or a space, in
+# any script (on lowercased ASCII the same set as [^a-z0-9 ])
+PUNCT_RE = "[^\\p{L}\\p{N} ]"
 
 
 def ngram_windows(arr: Column, n: int) -> Column:
@@ -83,7 +86,7 @@ def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     n = F.length(t)
     words = F.filter(F.split(F.trim(t), " +"), lambda w: F.length(w) > 0)
     n_words = F.size(words)
-    n_punct = n - F.length(F.regexp_replace(t, "[^a-z0-9 ]", ""))
+    n_punct = n - F.length(F.regexp_replace(t, PUNCT_RE, ""))
     n_stop = F.size(F.filter(words, lambda w: w.isin(*STOPWORDS)))
     safe = lambda num, den: F.round(num.cast("double") / F.greatest(den, F.lit(1)).cast("double"), 6)
     return docs.select(

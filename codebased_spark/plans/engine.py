@@ -11,19 +11,24 @@ Resumability (north_rule): each stage commits atomically (parquet
 _SUCCESS + a manifest record written after). ``build_index(...,
 resume=True)`` skips stages whose manifest records exist, so a killed
 build re-runs only the missing stages; within a stage, partition-level
-retry/commit is Spark's task-commit protocol. The doc_stats and
-corpus_stats writes overlap the posting write in a background thread,
-and the three manifests land only after that thread joins, in
-dependency order (doc_stats, corpus_stats, postings): a postings
-manifest therefore always comes with the doc_stats manifest that
-records its ``num_blocks``. Manifest records carry per-pblock row
-counts and byte sizes — the per-partition lineage + metrics record.
-The full build and the incremental commit
-(streaming/incremental.py) share this module's table writers
-(:func:`_write_postings`, :func:`_write_corpus_stats`) and shard
-listing (:func:`_posting_shards`). (Reference analogue: single SQLite
-transaction + fts 'optimize' at codebased/index.py:336,668-672; stats
-dump at codebased/stats.py:59-69.)
+retry/commit is Spark's task-commit protocol. The build and the
+incremental commit (streaming/incremental.py) share one write step,
+:func:`_overlapped_write`: a helper thread with the caller's local
+properties runs the small jobs while the calling thread writes the
+postings. A build's thread writes doc_stats, runs the per-block agg
+and writes corpus_stats, and its three manifests land only after the
+step returns, in dependency order (doc_stats, corpus_stats,
+postings): a postings manifest therefore always comes with the
+doc_stats manifest that records its ``num_blocks``. A commit mutates
+a live index, so it keeps its tables in the order doc_stats, postings,
+tombstones, corpus_stats and only the per-block agg overlaps its
+posting append (see ``incremental_update``). Manifest records carry
+per-pblock row counts and byte sizes — the per-partition lineage +
+metrics record. The tables are written and read back with fixed
+schemas (``*_SCHEMA``), so opening an index infers nothing.
+(Reference analogue: single SQLite transaction + fts 'optimize' at
+codebased/index.py:336,668-672; stats dump at
+codebased/stats.py:59-69.)
 
 Storage: all lifecycle IO goes through plans/fsio.IndexFS, so the index
 may live on HDFS/S3A as well as local disk. Queries keep the pyarrow
@@ -53,6 +58,17 @@ FORMAT_VERSION = 2
 # shard, so the per-query term filter prunes to O(1) row groups; small
 # groups make that pruning fine-grained while keeping footers tiny.
 POSTING_ROW_GROUP_BYTES = 512 * 1024
+# The fixed schemas the index tables are written with and read back
+# with: opening an index pays no parquet footer-inference job. Each
+# sits beside its writer; doc_stats is DOCS_COLUMNS minus content (a
+# chunked build's extra chunk-geometry columns stay on disk, unread).
+CORPUS_STATS_SCHEMA = "n_docs long, avgdl double, total_dl long, num_blocks int, version int"
+DOC_STATS_SCHEMA = (
+    "doc_id long, repo string, path string, commit string, lang string, "
+    "name string, kind string, byte_start long, byte_end long, sha256 string, "
+    "dl_path long, dl_name long, dl_content long, dl long"
+)
+DELETES_SCHEMA = "doc_id long, pblock int"
 # rolling per-index query-log capacity (driver memory: ~a few MB of
 # strings at worst); mining needs frequency ranks, not full history
 QUERY_LOG_MAX = 10_000
@@ -110,10 +126,52 @@ def _write_corpus_stats(spark: SparkSession, index_dir: str, n: int,
     from codebased_spark.session import one_row_df
 
     one_row_df(
-        spark,
-        "n_docs long, avgdl double, total_dl long, num_blocks int, version int",
+        spark, CORPUS_STATS_SCHEMA,
         (n, (total_dl / n) if n else 0.0, total_dl, num_blocks, FORMAT_VERSION),
     ).write.mode("overwrite").parquet(_join(index_dir, "corpus_stats"))
+
+
+def _append_deletes(dead: DataFrame, index_dir: str) -> None:
+    """Append the ``doc_id`` rows of ``dead`` to the tombstone table,
+    partitioned by pblock so query tasks read only their own block's
+    tombstones."""
+    dead.select(
+        "doc_id",
+        F.shiftright("doc_id", DOC_ID_BLOCK_BITS).cast("int").alias("pblock"),
+    ).write.mode("append").partitionBy("pblock").parquet(_join(index_dir, "deletes"))
+
+
+def _write_doc_stats(docs: DataFrame, index_dir: str, mode: str) -> None:
+    """Write ``docs`` minus their content as doc_stats rows
+    (:data:`DOC_STATS_SCHEMA`)."""
+    docs.drop("content").write.mode(mode).parquet(_join(index_dir, "doc_stats"))
+
+
+def _overlapped_write(spark: SparkSession, docs: DataFrame, index_dir: str,
+                      mode: str, side, postings: bool = True):
+    """The write step of a build and of a commit: ``side()`` runs in a
+    helper thread while the calling thread writes the postings of
+    ``docs`` (when ``postings``), the long pole (actions are only
+    sequential because the driver calls them sequentially). Returns
+    ``side()``'s result. The thread runs with a copy of the caller's
+    local properties, so its jobs carry the caller's job group and
+    description."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    jsc = spark.sparkContext._jsc.sc()
+    props = jsc.getLocalProperties().clone()
+
+    def run_side():
+        # copied here rather than through pyspark.inheritable_thread_target,
+        # whose wrapper frame would become every job's call site
+        jsc.setLocalProperties(props)
+        return side()
+
+    with ThreadPoolExecutor(1, thread_name_prefix="write-stats") as pool:
+        result = pool.submit(run_side)
+        if postings:
+            _write_postings(docs, index_dir, mode)
+        return result.result()
 
 
 def get_block_rows(docs: DataFrame) -> list:
@@ -170,8 +228,9 @@ class FtsIndex:
         self.index_dir = index_dir
         self.force_generic_scan = force_generic_scan
         self.fs = IndexFS(spark, index_dir, force_jvm=force_jvm)
-        stats = spark.read.parquet(_join(index_dir, "corpus_stats")).collect()[0]
-        version = int(stats.asDict().get("version", 0))
+        stats = spark.read.schema(CORPUS_STATS_SCHEMA).parquet(
+            _join(index_dir, "corpus_stats")).collect()[0]
+        version = int(stats["version"] or 0)
         if version != FORMAT_VERSION:
             raise ValueError(
                 f"index at {index_dir} has format v{version}, engine expects "
@@ -180,8 +239,8 @@ class FtsIndex:
             )
         self.n_docs = int(stats["n_docs"])
         self.avgdl = float(stats["avgdl"])
-        d = stats.asDict()
-        self.total_dl = int(d.get("total_dl", round(self.avgdl * self.n_docs)))
+        self.total_dl = int(stats["total_dl"] if stats["total_dl"] is not None
+                            else round(self.avgdl * self.n_docs))
         self.num_blocks = int(stats["num_blocks"])
         from codebased_spark.operators.build import POSTING_SCHEMA
 
@@ -190,7 +249,8 @@ class FtsIndex:
         self.postings = spark.read.schema(POSTING_SCHEMA).parquet(
             _join(index_dir, "postings")
         )
-        self.doc_stats = spark.read.parquet(_join(index_dir, "doc_stats"))
+        self.doc_stats = spark.read.schema(DOC_STATS_SCHEMA).parquet(
+            _join(index_dir, "doc_stats"))
         self.postings_bytes = 0
         self.posting_files = self._list_posting_files()
         # zero-job read-through for small (embedded-regime) indexes:
@@ -237,7 +297,8 @@ class FtsIndex:
         distributed handle every engine path uses; nothing is collected."""
         if not self.has_deletes:
             return None
-        return self.spark.read.parquet(self.deletes_dir).select("doc_id")
+        return self.spark.read.schema(DELETES_SCHEMA).parquet(
+            self.deletes_dir).select("doc_id")
 
     def _list_posting_files(self) -> list[tuple[int, str]]:
         """(pblock, path-or-URI) of posting shards — feeds the pyarrow
@@ -436,12 +497,10 @@ def build_index(
             """doc_stats and corpus_stats data — everything that reads
             the persisted docs EXCEPT the posting build. Runs in a
             background thread OVERLAPPED with the posting write (guide
-            §2.6: actions are only sequential because the driver calls
-            them sequentially): the posting build is the long pole and
-            these small jobs back-fill its idle capacity."""
+            §2.6): the posting build is the long pole and these small
+            jobs back-fill its idle capacity."""
             if "doc_stats" in todo:
-                docs.drop("content").write.mode("overwrite").parquet(
-                    _join(index_dir, "doc_stats"))
+                _write_doc_stats(docs, index_dir, "overwrite")
             rows = get_block_rows(docs)
             n = sum(int(r["n"]) for r in rows)
             total_dl = sum(int(r["sdl"]) for r in rows)
@@ -449,14 +508,9 @@ def build_index(
                 _write_corpus_stats(spark, index_dir, n, total_dl, num_blocks)
             return rows, n, total_dl
 
-        from concurrent.futures import ThreadPoolExecutor
-
         try:
-            with ThreadPoolExecutor(1, thread_name_prefix="build-stats") as pool:
-                stats = pool.submit(write_stats)
-                if "postings" in todo:
-                    _write_postings(docs, index_dir, "overwrite")
-                block_rows, n, total_dl = stats.result()
+            block_rows, n, total_dl = _overlapped_write(
+                spark, docs, index_dir, "overwrite", write_stats, "postings" in todo)
         finally:
             docs.unpersist()
 

@@ -32,9 +32,7 @@ UNICODE_DOCS = [
     (7, ""),
     (8, None),
     # near-identical pairs that differ in their 2nd word, so the prefix
-    # rule keeps both and only MinHash-LSH pairs them; curate's
-    # punctuation rule (anything outside [a-z0-9 ]) drops the Cyrillic
-    # pair first, the mostly-Latin pair survives to the LSH stage
+    # rule keeps both and only MinHash-LSH pairs them
     (9, _PAIR),
     (10, _PAIR.replace("утром", "вечером", 1)),
     (11, "мир мир мир мир мир мир мир мир мир мир"),
@@ -45,6 +43,7 @@ GATE_ENTRIES = [
     "doc_digest_fingerprint", "jaccard_to_probe", "minhash_signatures",
     "simhash64", "lsh_candidate_pairs", "trigram_document_frequency",
     "repetition_ratios", "duplicate_ngram_spans", "curate_corpus",
+    "quality_scores",
 ]
 
 
@@ -69,15 +68,11 @@ def test_gate_entry_matches_oracle_on_unicode(spark, unicode_sf, name):
     import __spark_entry__ as entry
     from tools.check_entry import normalize
 
-    def rows(df):  # NaN (a null in a float column) equals NaN here
-        return [tuple(None if isinstance(v, float) and v != v else v for v in r)
-                for r in normalize(df)]
-
-    got = rows(entry.queries()[name](spark, unicode_sf).toPandas())
+    got = normalize(entry.queries()[name](spark, unicode_sf).toArrow())
     con = duckdb.connect()
     con.execute("create view documents as select * from "
                 f"read_parquet('{unicode_sf}/documents.parquet')")
-    want = rows(con.execute(entry.oracle_sql()[name]).df())
+    want = normalize(con.execute(entry.oracle_sql()[name]).arrow())
     assert got, name  # the corpus exercises the entry
     assert got == want
 
@@ -91,9 +86,11 @@ def test_curate_near_dup_on_unicode(spark, unicode_sf):
 
     docs = spark.read.parquet(f"{unicode_sf}/documents.parquet")
     plain = {r["doc_id"]: r["drop_reason"] for r in curate_corpus(docs).collect()}
+    # letters and digits of every script count as text, not punctuation
+    assert all(plain[d] is None for d in (0, 1, 9, 10, 11))
     doc_bs = {r["doc_b"] for r in lsh_candidate_pairs(docs).collect()}
     survivors = {d for d in doc_bs if plain[d] is None}
-    assert survivors == {13}
+    assert survivors == {10, 13}
 
     nd = {r["doc_id"]: (r["keep"], r["drop_reason"])
           for r in curate_corpus(docs, near_dup=True).collect()}

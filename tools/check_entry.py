@@ -7,6 +7,7 @@ Usage: python tools/check_entry.py [sf_dir]
 
 from __future__ import annotations
 
+import datetime
 import os
 import sys
 
@@ -20,18 +21,38 @@ TABLES = [
 ]
 
 
-def normalize(df):
-    """Sort columns by name, round floats, sort rows -> list of tuples."""
-    import pandas as pd
+def _value(v):
+    """One result value in comparable form: a float rounded to 6
+    decimals, an aware timestamp as naive UTC (DuckDB returns TIMESTAMP
+    naive)."""
+    if isinstance(v, float):
+        return round(v, 6)
+    if isinstance(v, datetime.datetime) and v.tzinfo is not None:
+        return v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+    return v
 
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if df[c].dtype == "float64" or df[c].dtype == "float32":
-            df[c] = df[c].astype("float64").round(6)
-        if df[c].dtype == "object":
-            df[c] = df[c].astype(str)
-    rows = sorted(map(tuple, df.itertuples(index=False, name=None)), key=repr)
-    return rows
+
+def normalize(table):
+    """Sort columns by name, normalize values (:func:`_value`), sort
+    rows -> list of tuples. Takes a pyarrow Table (Spark
+    ``DataFrame.toArrow()``, DuckDB ``.arrow()``), so a bigint stays an
+    exact Python int and a null stays None. A pandas frame is converted
+    to Arrow first; its bigint columns that hold a null have already
+    become float64 there."""
+    import pyarrow as pa
+
+    if not isinstance(table, pa.Table):
+        table = pa.Table.from_pandas(table, preserve_index=False)
+
+    def values(col):
+        # microseconds, Spark's precision: a nanosecond column (pandas)
+        # would list as pandas Timestamps, which sort apart from datetimes
+        if pa.types.is_timestamp(col.type):
+            col = col.cast(pa.timestamp("us", col.type.tz))
+        return [_value(v) for v in col.to_pylist()]
+
+    columns = [values(table.column(c)) for c in sorted(table.column_names)]
+    return sorted(zip(*columns), key=repr)
 
 
 def main():
@@ -60,16 +81,16 @@ def main():
         if only and name not in only:
             continue
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            sdf = fn(spark, sf_dir).toArrow()
         except Exception as e:
             failures.append((name, f"SPARK ERROR: {e}"))
             print(f"FAIL  {name}: spark error {str(e)[:200]}")
             continue
         if name not in oracles:
-            print(f"ROWS  {name}: {len(sdf)} rows (no oracle)")
+            print(f"ROWS  {name}: {sdf.num_rows} rows (no oracle)")
             continue
         try:
-            odf = con.execute(oracles[name]).df()
+            odf = con.execute(oracles[name]).arrow()
         except Exception as e:
             failures.append((name, f"ORACLE ERROR: {e}"))
             print(f"FAIL  {name}: oracle error {str(e)[:200]}")
