@@ -11,15 +11,21 @@ multi-trigram latency. This module materializes their exact per-branch
 dfs next to the index:
 
 - :func:`build_phrase_df`: one stats-only job over the posting shards
-  (same block machinery as search, tombstones honored) writes
-  ``<index>/phrase_df/`` parquet plus a generation-fingerprint manifest.
+  writes ``<index>/phrase_df/`` parquet plus a generation-fingerprint
+  manifest. Its block body counts each phrase's live matches with the
+  per-phrase pass the uncovered search path takes its df stats from
+  (operators/query._phrase_block_docs: rarest-first intersection,
+  position verification, tombstones dropped), so the stored dfs are
+  the ones a search would count.
 - :class:`~codebased_spark.plans.engine.FtsIndex` loads the table when
   its fingerprint matches the live corpus_stats; a query whose EVERY
   phrase is covered skips df verification and tightens emission: with
   every idf known in-task, multi-phrase blocks emit their exact branch
-  top-k (<= 2*top_k rows) instead of the k-skyband, the blocks emit no
-  df-stat rows at all, and the driver tail's candidate bound becomes
-  exact (plain collect, no limit probe — operators/query._tail_bound).
+  top-k (<= 2*top_k rows) instead of the k-skyband (one emission
+  prune, operators/query._emission_prune, serves both), the blocks
+  emit no df-stat rows at all, and the driver tail's candidate bound
+  becomes exact (plain collect, no limit probe —
+  operators/query._tail_bound).
 - Commits keep a live table current: once a commit lands,
   incremental_update recomputes only the blocks it touched
   (:func:`update_phrase_df`, a per-block splice). Until then the
@@ -368,21 +374,24 @@ def hot_phrases_from_query_log(queries, top_n: int = 64) -> list[str]:
 def _phrase_stats_body(phrases_terms):
     """The stats-only block body: (pblock, rows, deleted) blocks from
     either reader (operators/query._shard_reader / _generic_scan) ->
-    one (pblock, phrase_idx, df_all, df_name) row per phrase per block,
-    via the same _query_block_frames machinery queries use (the doc
-    frames are discarded — this is a build-time job). Emitting the
-    pblock keeps the stored table PER-BLOCK, which is what makes the
-    delta rebuild (:func:`update_phrase_df`) possible: dfs are additive
-    across blocks, so only dirty blocks need recomputing."""
-    from codebased_spark.operators.query import _query_block_frames
+    one (pblock, phrase_idx, df_all, df_name) row per phrase matching
+    in a block. Each phrase's live matches come from
+    query._phrase_block_docs, the per-phrase pass the uncovered query
+    path takes its df stats from. Emitting the pblock keeps the stored
+    table PER-BLOCK, which is what makes the delta rebuild
+    (:func:`update_phrase_df`) possible: dfs are additive across
+    blocks, so only dirty blocks need recomputing."""
+    from codebased_spark.operators.query import _phrase_block_docs
 
     def body(blocks):
         for pblock, rows, deleted in blocks:
             out = []
             for pi, terms in enumerate(phrases_terms):
-                stats, _frame = _query_block_frames(rows, [terms], deleted)
-                for _zero, da, dn in stats:
-                    out.append((int(pblock), pi, da, dn))
+                got = _phrase_block_docs(rows, terms, deleted)
+                if got is not None:
+                    docs, _dl, _ta, tn = got
+                    out.append((int(pblock), pi, int(docs.size),
+                                int((tn > 0).sum())))
             if out:
                 yield pd.DataFrame(
                     out,

@@ -17,12 +17,14 @@ One query path — a single search is a batch of one
     |  (rows sorted by term; footer min/max pruning) and the block's
     |  tombstones -> one (pblock, rows, deleted) block
   task body (_candidate_body), over its blocks:
-    |  positional intersection per block: doc-list intersect (rarest
-    |  term first), then shifted position-key intersect; a block
-    |  missing a required trigram is skipped; dl rides in the posting
-    |  rows, so there is no doc_stats join ->
-    |  per task: one summed df-stat row per (query, phrase) and the
-    |  emission-pruned doc rows (<= 2*top_k per query single-phrase,
+    |  per phrase per block (_phrase_block_docs): doc-list intersect
+    |  (_intersect, rarest term first), then shifted position-key
+    |  intersect; a block missing a required trigram is skipped; dl
+    |  rides in the posting rows, so there is no doc_stats join ->
+    |  phrase conjunction (_conjoin) and the emission prune
+    |  (_emission_prune) per block, then once more across the task's
+    |  blocks -> per task: one summed df-stat row per (query, phrase)
+    |  and the surviving doc rows (<= 2*top_k per query single-phrase,
     |  a k-skyband multi-phrase)
   tail (_finish): ONE collect of the candidates -> df agg, idf, BM25
      sum, two-branch top-k, union/dedupe/top-k per query, in numpy
@@ -37,7 +39,8 @@ scan, one applyInPandas group per pblock cogrouped with the tombstone
 rows, each group one block for the same task body; its candidates
 take the same tail with no bound (a limit-guarded collect). The
 phrase-df stats job (operators/phrasedf.py) runs its own body over
-either reader.
+either reader; it counts each phrase's block df from the same
+_phrase_block_docs pass.
 
 Exactness: identical scores to operators/score.py (brute force) and to
 SQLite FTS5 — phrase tf via consecutive-position intersection equals
@@ -57,20 +60,28 @@ for multi-trigram phrases is irreducible, and what CAN be pruned is:
 1. Row groups: shards store term-sorted rows in small parquet row
    groups; the pyarrow scan's term filter reads only groups whose
    [min,max] covers a query trigram (~10x less read per query).
-2. Emission: for single-phrase queries both final branches order by
+2. Emission (_emission_prune — one function, called by the uncovered
+   and covered block paths and once more by the task body across its
+   blocks): for single-phrase queries both final branches order by
    (positive global idf) x norm(tf, dl), so each block, and then each
-   task across its blocks (_task_emission_prune), emits only its local
-   branch top-k by norm — any doc it drops is beaten by >= k docs it
-   kept under every possible idf. df stats are taken before pruning.
-   Multi-phrase scores mix per-phrase idfs unknown at task time; those
-   emit their Pareto k-skyband (_pareto_survivors).
+   task across its blocks, emits only its local branch top-k by norm —
+   any doc it drops is beaten by >= k docs it kept under every
+   possible idf. df stats
+   are taken before pruning. Multi-phrase scores mix per-phrase idfs
+   unknown at task time; those emit their Pareto k-skyband
+   (_pareto_survivors). Queries whose phrase dfs are all known (the
+   phrase-df side table) rank exactly and emit the union of their
+   branch top-ks.
 3. Block-Max WAND proper: a single-trigram phrase occurring only in the
    content column needs no position verification (tf = trigram tf, df =
    stored row df), so the per-chunk (skip_max_tf, skip_min_dl) bound is
    sound: chunks are visited bound-descending and decoding stops at the
    running k-th norm — cold chunks are never decoded at all
    (_single_trigram_wand; bounds share _norm_np's float pipeline with
-   the JVM expression, so ordering decisions are bit-consistent).
+   the JVM expression, so ordering decisions are bit-consistent). With
+   every phrase df known, the same bound argument extends to
+   multi-trigram phrases through per-doc tf upper bounds
+   (_covered_block_frame).
 """
 
 from __future__ import annotations
@@ -109,8 +120,9 @@ def _rank_rows(tf_mat, dl, idfs, avgdl: float):
 
     THE accumulation-order-defining loop: the JVM literal chain
     (lit(0.0) + w0*n0 + w1*n1 + ...), the driver tail (_finish_rows),
-    and the covered-WAND in-task emission (_covered_block_frame) must
-    all rank through the SAME float pipeline, or a doc pruned in a
+    the covered-WAND bounds (_covered_block_frame) and the known-idf
+    emission prune (_emission_prune) must all rank through the SAME
+    float pipeline, or a doc pruned in a
     block could tie-break differently at the driver. Every numpy site
     calls this one helper — do not re-inline it."""
     s = np.zeros(tf_mat.shape[0])
@@ -164,6 +176,14 @@ class _Row:
     def skip_min_dl(self):
         return np.asarray(self._raw["skip_min_dl"], dtype=np.int64)
 
+    def _stream(self, name: str, cid: int) -> bytes:
+        """The bytes of one chunk of the ``name`` stream (doc, tf, pos
+        or dl), cut at its recorded skip offset."""
+        r = self._raw
+        buf = r[f"{name}_bytes"]
+        return slice_chunks(buf, np.asarray(r[f"skip_{name}_off"]),
+                            np.array([cid]), len(buf))[0]
+
     def chunk_scalars(self, cid: int):
         """(docs, tfs, dls) of one chunk WITHOUT touching the position
         stream — the decode the block-max path uses (positions are the
@@ -176,16 +196,10 @@ class _Row:
         got = self._scalar_chunks.get(cid)
         if got is not None:
             return got
-        r = self._raw
-        docs_b = slice_chunks(r["doc_bytes"], np.asarray(r["skip_doc_off"]),
-                              np.array([cid]), len(r["doc_bytes"]))[0]
-        tf_b = slice_chunks(r["tf_bytes"], np.asarray(r["skip_tf_off"]),
-                            np.array([cid]), len(r["tf_bytes"]))[0]
-        dl_b = slice_chunks(r["dl_bytes"], np.asarray(r["skip_dl_off"]),
-                            np.array([cid]), len(r["dl_bytes"]))[0]
-        docs = np.cumsum(decode_varint(docs_b), dtype=np.int64)
-        got = (docs, decode_varint(tf_b), decode_varint(dl_b))
-        if len(r["skip_last"]) > 1:
+        docs = np.cumsum(decode_varint(self._stream("doc", cid)), dtype=np.int64)
+        got = (docs, decode_varint(self._stream("tf", cid)),
+               decode_varint(self._stream("dl", cid)))
+        if len(self._raw["skip_last"]) > 1:
             self._scalar_chunks[cid] = got
         return got
 
@@ -215,26 +229,17 @@ class _Row:
         return self._pos
 
     def _chunk(self, cid: int):
-        """Decode one chunk on demand (docs, tfs, pos, pos_offs, dls)."""
+        """One chunk with its positions (docs, tfs, pos, pos_offs, dls):
+        the scalars come from :meth:`chunk_scalars` (so a chunk that
+        :meth:`members` already scalar-decoded is not decoded again) and
+        only the position stream is decoded here."""
         got = self._chunks.get(cid)
         if got is not None:
             return got
-        r = self._raw
-        n_chunks = len(r["skip_last"])
-        docs_b = slice_chunks(r["doc_bytes"], np.asarray(r["skip_doc_off"]),
-                              np.array([cid]), len(r["doc_bytes"]))[0]
-        tf_b = slice_chunks(r["tf_bytes"], np.asarray(r["skip_tf_off"]),
-                            np.array([cid]), len(r["tf_bytes"]))[0]
-        pos_b = slice_chunks(r["pos_bytes"], np.asarray(r["skip_pos_off"]),
-                             np.array([cid]), len(r["pos_bytes"]))[0]
-        dl_b = slice_chunks(r["dl_bytes"], np.asarray(r["skip_dl_off"]),
-                            np.array([cid]), len(r["dl_bytes"]))[0]
-        docs = np.cumsum(decode_varint(docs_b), dtype=np.int64)
-        tfs = decode_varint(tf_b)
-        pos = decode_positions(pos_b, tfs)
-        dls = decode_varint(dl_b)
+        docs, tfs, dls = self.chunk_scalars(cid)
+        pos = decode_positions(self._stream("pos", cid), tfs)
         got = (docs, tfs, pos, np.cumsum(tfs) - tfs, dls)
-        if n_chunks > 1:  # caching only pays when the row is chunked
+        if len(self._raw["skip_last"]) > 1:  # caching only pays when chunked
             self._chunks[cid] = got
         return got
 
@@ -313,11 +318,6 @@ class _Row:
             return e, e, e
         return np.concatenate(parts_p), np.concatenate(parts_l), np.concatenate(parts_d)
 
-    def positions_for(self, doc_subset: np.ndarray):
-        """(flat positions, lens) for the given (sorted) subset of docs."""
-        p, lens, _ = self.rows_for(doc_subset)
-        return p, lens
-
 
 def _verify_positions(recs, common: np.ndarray):
     """Exact phrase tfs over a candidate doc set: positions shifted by
@@ -341,33 +341,146 @@ def _verify_positions(recs, common: np.ndarray):
     return tf.astype(np.int64), dls
 
 
-def _phrase_block_tfs(rows: dict, terms: list[int], col: int):
-    """(doc_ids, tfs, dls) of a phrase within one block+column, or None.
-
-    Exact FTS5 phrase matching: doc lists intersected rarest-first
-    (scalar streams only), then position verification via
-    :func:`_verify_positions` over the survivors. dls ride along from
-    the posting rows (no doc_stats lookup needed)."""
+def _intersect(rows: dict, terms: list[int], col: int):
+    """(recs, docs) for one (phrase, col) of one block, or None: the
+    phrase's posting rows and the docs holding every member trigram —
+    doc lists intersected rarest-first on the scalar streams, so a rare
+    trigram against a huge list decodes only the chunks the rare docs
+    could live in. None when a required trigram is absent (the whole
+    block is skipped) or the intersection is empty."""
     recs = []
     for t in terms:
         r = rows.get((t, col))
         if r is None:
-            return None  # a required trigram is absent -> whole block skipped
-        recs.append(r)
-    if len(recs) == 1:
-        r = recs[0]
-        return r.docs, r.tfs, r.dls
-    order = sorted(range(len(recs)), key=lambda i: recs[i].df)
-    common = recs[order[0]].docs  # rarest list drives; it IS the candidate set
-    for i in order[1:]:
-        common = recs[i].members(common)  # chunk-selective membership test
-        if common.size == 0:
             return None
+        recs.append(r)
+    order = sorted(range(len(recs)), key=lambda i: recs[i].df)
+    docs = recs[order[0]].docs  # rarest list drives; it IS the candidate set
+    for i in order[1:]:
+        docs = recs[i].members(docs)  # chunk-selective membership test
+        if docs.size == 0:
+            return None
+    return recs, docs
+
+
+def _phrase_block_tfs(rows: dict, terms: list[int], col: int):
+    """(doc_ids, tfs, dls) of a phrase within one block+column, or None.
+
+    Exact FTS5 phrase matching: :func:`_intersect`, then position
+    verification via :func:`_verify_positions` over the survivors. dls
+    ride along from the posting rows (no doc_stats lookup needed)."""
+    got = _intersect(rows, terms, col)
+    if got is None:
+        return None
+    recs, common = got
+    if len(recs) == 1:
+        return common, recs[0].tfs, recs[0].dls
     tf, dls = _verify_positions(recs, common)
     hit = tf > 0
     if not hit.any():
         return None
     return common[hit], tf[hit], dls[hit]
+
+
+def _phrase_col_candidates(rows: dict, terms: list[int], col: int):
+    """Scalar-stream candidate pass for one (phrase, col): docs where
+    every member trigram is present (:func:`_intersect`), their dl, and
+    either the EXACT tf (single-trigram phrase — no positions exist to
+    verify) or the upper bound min(member trigram tfs) >= true phrase
+    tf. Returns (docs, tf_or_ub, dls, recs, exact) or None."""
+    got = _intersect(rows, terms, col)
+    if got is None:
+        return None
+    recs, common = got
+    if len(recs) == 1:
+        return common, recs[0].tfs, recs[0].dls, recs, True
+    ub = None
+    dls = None
+    for r in recs:
+        tfs, d = r.scalars_for(common)
+        ub = tfs if ub is None else np.minimum(ub, tfs)
+        if dls is None:
+            dls = d
+    return common, ub, dls, recs, False
+
+
+def _merge_cols(per_col: dict):
+    """One phrase's per-column results {col: (docs, tf, dl, ...)} merged
+    over their doc union: (docs, dl, tf_all, tf_name) — tf_all sums the
+    columns, tf_name is the name column's (col 1) alone."""
+    docs = np.unique(np.concatenate([g[0] for g in per_col.values()]))
+    tf_all = np.zeros(docs.size, dtype=np.int64)
+    tf_name = np.zeros(docs.size, dtype=np.int64)
+    dl = np.zeros(docs.size, dtype=np.int64)
+    for col, (d, tf, dlv, *_rest) in per_col.items():
+        ix = np.searchsorted(docs, d)
+        tf_all[ix] += tf
+        dl[ix] = dlv
+        if col == 1:
+            tf_name[ix] += tf
+    return docs, dl, tf_all, tf_name
+
+
+def _conjoin(per_phrase: list):
+    """The phrase conjunction: the docs in every phrase's (docs, dl,
+    tf_all, tf_name) set, as (docs, dl, tf_all, tf_name) with one
+    column per phrase in the (n, n_ph) tf matrices, or None when no doc
+    has every phrase."""
+    docs = per_phrase[0][0]
+    for p in per_phrase[1:]:
+        docs = docs[np.isin(docs, p[0], assume_unique=True)]
+    if docs.size == 0:
+        return None
+    ta = np.empty((docs.size, len(per_phrase)), dtype=np.int64)
+    tn = np.empty_like(ta)
+    for i, (d, dlv, a, n) in enumerate(per_phrase):
+        ix = np.searchsorted(d, docs)
+        ta[:, i] = a[ix]
+        tn[:, i] = n[ix]
+        if i == 0:
+            dl = dlv[ix]
+    return docs, dl, ta, tn
+
+
+def _live(frame, deleted):
+    """``frame`` (docs, dl, tf_all, tf_name) without the docs in the
+    sorted tombstone array ``deleted``, or None when no doc is left."""
+    if frame is None:
+        return None
+    if deleted is not None and deleted.size:
+        live = ~np.isin(frame[0], deleted, assume_unique=True)
+        frame = tuple(a[live] for a in frame)
+    return frame if frame[0].size else None
+
+
+_MISS = object()
+
+
+def _memo(cache, key, make):
+    """``make()``, memoized under ``key`` in ``cache`` — a per-block
+    dict shared by a batch's queries, or None (no memo)."""
+    if cache is None:
+        return make()
+    got = cache.get(key, _MISS)
+    if got is _MISS:
+        got = cache[key] = make()
+    return got
+
+
+def _phrase_block_docs(rows, terms, deleted, cache=None):
+    """One phrase's live matches in one block: (docs, dl, tf_all,
+    tf_name) with exact (position-verified) tfs, tombstoned docs
+    dropped, or None when no live doc matches. The phrase's block df
+    stats are (docs.size, count of tf_name > 0) — the uncovered query
+    path and the phrase-df stats body both read them here. Memoized per
+    phrase in ``cache``, so batched queries sharing a phrase decode and
+    intersect it once per block."""
+    def make():
+        per_col = {c: g for c in (0, 1, 2)
+                   if (g := _phrase_block_tfs(rows, terms, c)) is not None}
+        return _live(_merge_cols(per_col) if per_col else None, deleted)
+
+    return _memo(cache, (tuple(terms),), make)
 
 
 def _pareto_survivors(tfs, dl, doc_ids, avgdl, top_k, chunk=1024):
@@ -449,35 +562,50 @@ def _pareto_survivors(tfs, dl, doc_ids, avgdl, top_k, chunk=1024):
     return keep
 
 
-def _phrase_col_candidates(rows: dict, terms: list[int], col: int):
-    """Scalar-stream candidate pass for one (phrase, col): docs where
-    every member trigram is present, their dl, and either the EXACT tf
-    (single-trigram phrase — no positions exist to verify) or the upper
-    bound min(member trigram tfs) >= true phrase tf. Returns
-    (recs, docs, tf_or_ub, dls, exact) or None."""
-    recs = []
-    for t in terms:
-        r = rows.get((t, col))
-        if r is None:
-            return None
-        recs.append(r)
-    if len(recs) == 1:
-        r = recs[0]
-        return recs, r.docs, r.tfs, r.dls, True
-    order = sorted(range(len(recs)), key=lambda i: recs[i].df)
-    common = recs[order[0]].docs
-    for i in order[1:]:
-        common = recs[i].members(common)
-        if common.size == 0:
-            return None
-    ub = None
-    dls = None
-    for r in recs:
-        tfs, d = r.scalars_for(common)
-        ub = tfs if ub is None else np.minimum(ub, tfs)
-        if dls is None:
-            dls = d
-    return recs, common, ub, dls, False
+def _emission_prune(docs, dl, ta, tn, n_ph, top_k, avgdl, known_idfs):
+    """THE emission prune: the rows of a query's candidate set (docs,
+    dl, and the (n, n_ph) tf matrices ``ta``/``tn``, one row per doc)
+    that can still reach its global two-branch top-k. The uncovered and
+    covered block paths run it over a block's candidates (the
+    single-trigram WAND path emits its exact top-k by norm already),
+    and the task body runs it again over the concatenation of its
+    blocks' frames, so candidate rows per query are O(tasks * top_k)
+    whatever the block count.
+
+    Exact: a dropped doc is beaten by >= top_k kept docs on every
+    branch it is eligible for (the name branch holds the docs with
+    every tf_name > 0), under every idf the driver can assign:
+    - ``known_idfs`` = (idf_all, idf_name) from the phrase-df side
+      table: exact branch ranks; the union of the branch top-ks;
+    - n_ph == 1: both branches rank by a positive constant (the global
+      idf) times norm(tf, dl), so the branch top-k by norm suffices;
+    - n_ph > 1: rank = sum_i idf_i * norm_i with every idf_i > 0
+      unknown here — no total order exists, but Pareto dominance does
+      (:func:`_pareto_survivors`, the exact k-skyband).
+    Ties break on doc_id through the same lexsort keys as
+    :func:`_finish_rows`, so kept sets agree with the driver's final
+    ranking bit-for-bit. The argument never uses the fact that
+    competitors share a block, only that they all reach the driver, and
+    df stats are taken from the unpruned sets, so idf stays exact. Sets
+    of at most 2*top_k rows are returned as they are."""
+    if docs.size <= 2 * top_k:
+        return docs, dl, ta, tn
+    idf_all, idf_name = known_idfs if known_idfs is not None else (None, None)
+
+    def survivors(sel, tfs, idfs):
+        ids, dls = docs[sel], dl[sel]
+        if known_idfs is not None:
+            return sel[np.lexsort((ids, _rank_rows(tfs, dls, idfs, avgdl)))[:top_k]]
+        if n_ph == 1:
+            return sel[np.lexsort((ids, -_norm_np(tfs[:, 0], dls, avgdl)))[:top_k]]
+        return sel[_pareto_survivors(tfs, dls, ids, avgdl, top_k)]
+
+    keep = np.zeros(docs.size, dtype=bool)
+    keep[survivors(np.arange(docs.size), ta, idf_all)] = True
+    named = np.flatnonzero((tn > 0).all(axis=1))
+    if named.size:
+        keep[survivors(named, tn[named], idf_name)] = True
+    return docs[keep], dl[keep], ta[keep], tn[keep]
 
 
 def _covered_block_frame(rows, phrase_term_ids, deleted, idf_all, idf_name,
@@ -492,15 +620,16 @@ def _covered_block_frame(rows, phrase_term_ids, deleted, idf_all, idf_name,
     phrase start position maps injectively to an occurrence of every
     member trigram — and BM25's norm is monotone in tf, so
     sum_i idf_i * norm(ub_tf_i, dl) upper-bounds the doc's exact score
-    on each branch. Candidates are position-verified in best-ub-first
-    order; once a doc's bound is STRICTLY below the running exact k-th
-    rank of every branch it is eligible for, its position streams are
-    never decoded. Verified survivors then emit the exact union of
-    block-local branch top-ks (<= 2*top_k rows; same lexsort keys as
-    _finish_rows, so block decisions agree with the driver's final
-    ranking bit-for-bit).
+    on each branch. Candidates (:func:`_phrase_col_candidates` per
+    column, :func:`_merge_cols`, :func:`_conjoin`, then the tombstones
+    dropped) are position-verified in best-ub-first order; once a doc's
+    bound is STRICTLY below the running exact k-th rank of every branch
+    it is eligible for, its position streams are never decoded.
+    Verified survivors then go through :func:`_emission_prune` with the
+    known idfs (<= 2*top_k rows).
 
-    Returns (doc_ids, dl, tfs_all list, tfs_name list) or None.
+    Returns (doc_ids, dl, tfs_all, tfs_name) — (n, n_ph) tf matrices —
+    or None.
 
     ``cache`` (batch mode) memoizes the QUERY-INDEPENDENT candidate
     pass — per-(phrase, cols) doc sets, upper-bound tfs, dls — under
@@ -508,57 +637,23 @@ def _covered_block_frame(rows, phrase_term_ids, deleted, idf_all, idf_name,
     phrase intersect and bound once per block (the verification loop
     stays per-query: thresholds depend on the query's idf mix)."""
     n_ph = len(phrase_term_ids)
-    per_phrase = []  # (docs, ub_all, ub_name, dl, cols) ; cols: col -> pass
+
+    def candidates(terms):
+        per_col = {c: g for c in (0, 1, 2)
+                   if (g := _phrase_col_candidates(rows, terms, c)) is not None}
+        return (_merge_cols(per_col), per_col) if per_col else None
+
+    per_phrase = []  # (merged (docs, dl, ub_all, ub_name), {col: pass})
     for terms in phrase_term_ids:
-        ck = ("cov", tuple(terms))
-        got = cache.get(ck) if cache is not None else None
+        got = _memo(cache, ("cov", tuple(terms)), lambda: candidates(terms))
         if got is None:
-            per_col = {}
-            for col in (0, 1, 2):
-                g = _phrase_col_candidates(rows, terms, col)
-                if g is not None:
-                    per_col[col] = g
-            if not per_col:
-                got = False  # phrase matches nothing in this block
-            else:
-                docs_u = np.unique(
-                    np.concatenate([g[1] for g in per_col.values()]))
-                ub_all = np.zeros(docs_u.size, dtype=np.int64)
-                ub_name = np.zeros(docs_u.size, dtype=np.int64)
-                dl = np.zeros(docs_u.size, dtype=np.int64)
-                for col, (_recs, d, tf, dlv, _exact) in per_col.items():
-                    ix = np.searchsorted(docs_u, d)
-                    ub_all[ix] += tf
-                    dl[ix] = dlv
-                    if col == 1:
-                        ub_name[ix] += tf
-                got = (docs_u, ub_all, ub_name, dl, per_col)
-            if cache is not None:
-                cache[ck] = got
-        if got is False:
             return None  # AND fails in this block
         per_phrase.append(got)
-
-    common = per_phrase[0][0]
-    for p in per_phrase[1:]:
-        common = common[np.isin(common, p[0], assume_unique=True)]
-        if common.size == 0:
-            return None
-    if deleted is not None and deleted.size:
-        common = common[~np.isin(common, deleted, assume_unique=True)]
-        if common.size == 0:
-            return None
-
+    conj = _live(_conjoin([merged for merged, _ in per_phrase]), deleted)
+    if conj is None:
+        return None
+    common, dl, ub_all, ub_name = conj
     n = common.size
-    ub_all = np.empty((n, n_ph), dtype=np.int64)
-    ub_name = np.empty((n, n_ph), dtype=np.int64)
-    dl = None
-    for i, (docs_u, ua, un, dlv, _per_col) in enumerate(per_phrase):
-        ix = np.searchsorted(docs_u, common)
-        ub_all[:, i] = ua[ix]
-        ub_name[:, i] = un[ix]
-        if dl is None:
-            dl = dlv[ix]
 
     def rank_np(tf_mat, dls, idfs):
         return _rank_rows(tf_mat, dls, idfs, avgdl)
@@ -616,8 +711,8 @@ def _covered_block_frame(rows, phrase_term_ids, deleted, idf_all, idf_name,
         sub = common[batch]
         tf_all = np.zeros((sub.size, n_ph), dtype=np.int64)
         tf_name = np.zeros((sub.size, n_ph), dtype=np.int64)
-        for i, (_docs_u, _ua, _un, _dlv, per_col) in enumerate(per_phrase):
-            for col, (recs, cand, tf_or_ub, _cd, exact) in per_col.items():
+        for i, (_merged, per_col) in enumerate(per_phrase):
+            for col, (cand, tf_or_ub, _cd, recs, exact) in per_col.items():
                 inter = sub[np.isin(sub, cand, assume_unique=True)]
                 if inter.size == 0:
                     continue
@@ -658,24 +753,10 @@ def _covered_block_frame(rows, phrase_term_ids, deleted, idf_all, idf_name,
     if not v_docs:
         return None
     docs = np.concatenate(v_docs)
-    ta = np.vstack(v_ta)
-    tn = np.vstack(v_tn)
-    dls = np.concatenate(v_dl)
     o = np.argsort(docs)
-    docs, ta, tn, dls = docs[o], ta[o], tn[o], dls[o]
-
-    # exact emission: union of the block-local branch top-ks (the
-    # known-idf generalization of the n_ph == 1 prune)
-    if docs.size > 2 * top_k:
-        keep = np.zeros(docs.size, dtype=bool)
-        ra = rank_np(ta, dls, idf_all)
-        keep[np.lexsort((docs, ra))[:top_k]] = True
-        named = np.flatnonzero((tn > 0).all(axis=1))
-        if named.size:
-            rn = rank_np(tn[named], dls[named], idf_name)
-            keep[named[np.lexsort((docs[named], rn))[:top_k]]] = True
-        docs, ta, tn, dls = docs[keep], ta[keep], tn[keep], dls[keep]
-    return docs, dls, list(ta), list(tn)
+    return _emission_prune(
+        docs[o], np.concatenate(v_dl)[o], np.vstack(v_ta)[o],
+        np.vstack(v_tn)[o], n_ph, top_k, avgdl, (idf_all, idf_name))
 
 
 def _single_trigram_wand(r: _Row, top_k: int, avgdl: float):
@@ -712,217 +793,60 @@ def _single_trigram_wand(r: _Row, top_k: int, avgdl: float):
     return kd[o], kt[o], kl[o]
 
 
-def _query_block_frames(rows, phrase_term_ids, deleted, cache=None,
-                        top_k=None, avgdl=None, known_idfs=None):
+def _query_block_frames(rows, phrase_term_ids, deleted, top_k, avgdl,
+                        cache=None, known_idfs=None):
     """One query's per-block computation over pre-built _Row handles:
-    returns (stats_tuples, doc_frame_or_None). Shared by the candidate
-    task body (:func:`_candidate_body`) and the phrase-df stats body,
-    whichever reader feeds them; ``cache`` memoizes per-(phrase, col)
-    results so batched queries sharing phrases decode once.
+    returns (stats, frame) — stats one (phrase_idx, df_all, df_name)
+    tuple per phrase matching in the block, frame the block's
+    emission-pruned (docs, dl, tfs_all, tfs_name) or None. Called by
+    the candidate task body (:func:`_candidate_body`), whichever reader
+    feeds it; ``cache`` memoizes per-phrase results so batched queries
+    sharing phrases decode once.
 
-    ``top_k``/``avgdl`` enable two EXACT pruning layers (see module
-    docstring "Top-k pruning"):
-    - single-trigram content-only queries take the Block-Max WAND path
-      (skip-metadata chunk skipping; memoized under a dedicated cache
-      key in batch mode so a multi-phrase query sharing the trigram
-      still sees the UNPRUNED per-phrase frames);
-    - single-phrase queries emit only their block-local branch top-k,
-      multi-phrase queries their Pareto non-dominated set, instead of
-      all matching docs (df stats stay full either way).
-
-    ``known_idfs`` = (idf_all, idf_name) from the phrase-df side table
-    routes to :func:`_covered_block_frame` instead: multi-trigram WAND
-    (bound-ordered lazy position verification) + exact branch-top-k
-    emission, stats skipped entirely (dfs are already known globally).
+    Routes (see module docstring "Top-k pruning"):
+    - ``known_idfs`` = (idf_all, idf_name) from the phrase-df side
+      table: :func:`_covered_block_frame` (multi-trigram WAND with
+      bound-ordered lazy position verification), no stats (dfs are
+      known globally);
+    - single-trigram content-only queries: the Block-Max WAND path
+      (:func:`_single_trigram_wand`, skip-metadata chunk skipping;
+      memoized under a dedicated cache key in batch mode so a
+      multi-phrase query sharing the trigram still sees the UNPRUNED
+      per-phrase sets); its stats row is the posting row's df;
+    - otherwise: :func:`_phrase_block_docs` per phrase (stats from the
+      full sets), :func:`_conjoin` and :func:`_emission_prune`.
     """
     n_ph = len(phrase_term_ids)
-    if known_idfs is not None and top_k and avgdl is not None:
-        if not (
-            n_ph == 1 and len(phrase_term_ids[0]) == 1 and deleted is None
-        ):
-            # (single-trigram content-only queries fall through to the
-            # chunk-skipping WAND path below — strictly better there)
-            frame = _covered_block_frame(
-                rows, phrase_term_ids, deleted,
-                known_idfs[0], known_idfs[1], top_k, avgdl, cache=cache,
-            )
-            return [], frame
-    if (
-        n_ph == 1 and len(phrase_term_ids[0]) == 1
-        and deleted is None
-        and top_k and avgdl is not None
-    ):
+    one_trigram = n_ph == 1 and len(phrase_term_ids[0]) == 1 and deleted is None
+    if known_idfs is not None and not one_trigram:
+        # (single-trigram content-only queries take the chunk-skipping
+        # WAND path below — strictly better there)
+        return [], _covered_block_frame(
+            rows, phrase_term_ids, deleted, known_idfs[0], known_idfs[1],
+            top_k, avgdl, cache=cache)
+    if one_trigram:
         t = phrase_term_ids[0][0]
         if rows.get((t, 0)) is None and rows.get((t, 1)) is None:
-            ck = (int(t), "wand", int(top_k))
-            got = cache.get(ck) if cache is not None else None
-            if got is not None:
-                return got
-            r = rows.get((t, 2))
-            if r is None:
-                out = ([], None)
-            else:
+            def wand():
+                r = rows.get((t, 2))
+                if r is None:
+                    return [], None
                 docs, tfs, dls = _single_trigram_wand(r, top_k, avgdl)
-                tfs_name = np.zeros(docs.size, dtype=np.int64)
-                out = (
-                    [(0, int(r.df), 0)],
-                    (docs, dls, list(tfs.reshape(-1, 1)),
-                     list(tfs_name.reshape(-1, 1))),
-                )
-            if cache is not None:
-                cache[ck] = out
-            return out
-    stats = []
-    per_phrase = []
-    for pi, terms in enumerate(phrase_term_ids):
-        ck = (tuple(terms),)
-        got_all = cache.get(ck) if cache is not None else None
-        if got_all is None:
-            per_col = {}
-            for col in (0, 1, 2):
-                got = _phrase_block_tfs(rows, terms, col)
-                if got is not None:
-                    per_col[col] = got
-            if not per_col:
-                got_all = None
-            else:
-                all_docs = np.unique(np.concatenate([d for d, _, _ in per_col.values()]))
-                tf_all = np.zeros(all_docs.size, dtype=np.int64)
-                tf_name = np.zeros(all_docs.size, dtype=np.int64)
-                dl = np.zeros(all_docs.size, dtype=np.int64)
-                for col, (d, t, dlv) in per_col.items():
-                    ix = np.searchsorted(all_docs, d)
-                    tf_all[ix] += t
-                    dl[ix] = dlv
-                    if col == 1:
-                        tf_name[ix] += t
-                if deleted is not None and deleted.size:
-                    live = ~np.isin(all_docs, deleted, assume_unique=True)
-                    all_docs, tf_all, tf_name, dl = (
-                        all_docs[live], tf_all[live], tf_name[live], dl[live]
-                    )
-                got_all = (all_docs, tf_all, tf_name, dl) if all_docs.size else None
-            if cache is not None:
-                cache[ck] = got_all if got_all is not None else False
-        elif got_all is False:
-            got_all = None
-        if got_all is None:
-            per_phrase.append(None)
-            continue
-        all_docs, tf_all, tf_name, _dl = got_all
-        stats.append((pi, int(all_docs.size), int((tf_name > 0).sum())))
-        per_phrase.append(got_all)
+                return [(0, int(r.df), 0)], (
+                    docs, dls, tfs.reshape(-1, 1),
+                    np.zeros((docs.size, 1), dtype=np.int64))
 
-    doc_frame = None
+            return _memo(cache, (int(t), "wand", int(top_k)), wand)
+    per_phrase = [_phrase_block_docs(rows, terms, deleted, cache)
+                  for terms in phrase_term_ids]
+    stats = [(pi, int(p[0].size), int((p[3] > 0).sum()))
+             for pi, p in enumerate(per_phrase) if p is not None]
+    frame = None
     if n_ph and all(p is not None for p in per_phrase):
-        common = per_phrase[0][0]
-        for p in per_phrase[1:]:
-            common = common[np.isin(common, p[0], assume_unique=True)]
-            if common.size == 0:
-                break
-        if common.size:
-            tfs_all = np.empty((common.size, n_ph), dtype=np.int64)
-            tfs_name = np.empty((common.size, n_ph), dtype=np.int64)
-            dl = None
-            for i, (docs, ta, tn, dlv) in enumerate(per_phrase):
-                ix = np.searchsorted(docs, common)
-                tfs_all[:, i] = ta[ix]
-                tfs_name[:, i] = tn[ix]
-                if dl is None:
-                    dl = dlv[ix]
-            if (
-                top_k and avgdl is not None
-                and common.size > 2 * top_k
-            ):
-                # EXACT emission pruning. df stats (kind=0 rows) were
-                # taken above, BEFORE pruning — idf is exact.
-                #
-                # n_ph == 1: both final branches rank by a positive
-                # constant (the global idf) times norm(tf, dl), so any
-                # doc outside its block's branch top-k by norm is beaten
-                # by >= top_k docs globally too.
-                #
-                # n_ph > 1: rank = sum_i idf_i * norm_i with idf_i > 0
-                # unknown at task time — no total order exists, but
-                # PARETO DOMINANCE does: if norm_i(Y) >= norm_i(X) for
-                # every phrase (doc_id breaking full ties), Y outranks X
-                # under EVERY weight vector. A doc dominated by >= top_k
-                # block-mates cannot reach the global branch top-k.
-                keep = np.zeros(common.size, dtype=bool)
-                named = np.flatnonzero((tfs_name > 0).all(axis=1))
-                if n_ph == 1:
-                    na = _norm_np(tfs_all[:, 0], dl, avgdl)
-                    keep[np.lexsort((common, -na))[:top_k]] = True
-                    if named.size:
-                        nn = _norm_np(tfs_name[named, 0], dl[named], avgdl)
-                        keep[named[np.lexsort((common[named], -nn))[:top_k]]] = True
-                else:
-                    keep |= _pareto_survivors(tfs_all, dl, common, avgdl, top_k)
-                    if named.size:
-                        sub = _pareto_survivors(
-                            tfs_name[named], dl[named], common[named], avgdl, top_k
-                        )
-                        keep[named[sub]] = True
-                common, dl = common[keep], dl[keep]
-                tfs_all, tfs_name = tfs_all[keep], tfs_name[keep]
-            doc_frame = (common, dl, list(tfs_all), list(tfs_name))
-    return stats, doc_frame
-
-
-def _task_emission_prune(doc_frames, n_ph, top_k, avgdl, known_idfs):
-    """Cross-BLOCK second application of the per-block exact emission
-    prune (r7 — the block-count scaling fix): a task scanning many
-    blocks concatenates their doc frames and keeps only docs that
-    could still reach the global branch top-k, so candidate rows per
-    query become O(tasks * top_k) instead of O(blocks * top_k)
-    (measured: 34k -> 12k rows for the 6-query batch at 160 blocks,
-    and independent of block count from here up).
-
-    Exactness is the SAME argument as the per-block prune, applied to
-    a bigger doc set (the proofs in _query_block_frames /
-    _pareto_survivors / _covered_block_frame never use the fact that
-    competitors share a block — only that they flow to the driver):
-    - known idfs: exact branch ranks; union of branch top-ks.
-    - single phrase: both final branches order by (positive idf) x
-      norm(tf, dl), so a doc outside the task's branch top-k by norm
-      is beaten by >= top_k retained task-mates under every idf.
-    - multi phrase: Pareto k-skyband over the task's docs.
-    df stats (kind=0 rows) are summed per task from every block's
-    UNPRUNED counts, before this prune — idf stays exact. Ties break
-    on doc_id through the same lexsort keys as _finish_rows, so
-    retained sets agree with the driver's final ranking bit-for-bit.
-
-    ``doc_frames``: [(docs, dl, [tf rows], [tf rows])] per block;
-    returns the concatenated-and-pruned (docs, dl, ta, tn) with
-    ta/tn as (n, n_ph) matrices."""
-    common = np.concatenate([f[0] for f in doc_frames])
-    dl = np.concatenate([f[1] for f in doc_frames])
-    ta = np.vstack([np.vstack(f[2]) for f in doc_frames])
-    tn = np.vstack([np.vstack(f[3]) for f in doc_frames])
-    if common.size <= 2 * top_k:
-        return common, dl, ta, tn
-    keep = np.zeros(common.size, dtype=bool)
-    named = np.flatnonzero((tn > 0).all(axis=1))
-    if known_idfs is not None:
-        idf_all, idf_name = known_idfs
-        ra = _rank_rows(ta, dl, idf_all, avgdl)
-        keep[np.lexsort((common, ra))[:top_k]] = True
-        if named.size:
-            rn = _rank_rows(tn[named], dl[named], idf_name, avgdl)
-            keep[named[np.lexsort((common[named], rn))[:top_k]]] = True
-    elif n_ph == 1:
-        na = _norm_np(ta[:, 0], dl, avgdl)
-        keep[np.lexsort((common, -na))[:top_k]] = True
-        if named.size:
-            nn = _norm_np(tn[named, 0], dl[named], avgdl)
-            keep[named[np.lexsort((common[named], -nn))[:top_k]]] = True
-    else:
-        keep |= _pareto_survivors(ta, dl, common, avgdl, top_k)
-        if named.size:
-            sub = _pareto_survivors(
-                tn[named], dl[named], common[named], avgdl, top_k)
-            keep[named[sub]] = True
-    return common[keep], dl[keep], ta[keep], tn[keep]
+        conj = _conjoin(per_phrase)
+        if conj is not None:
+            frame = _emission_prune(*conj, n_ph, top_k, avgdl, None)
+    return stats, frame
 
 
 def _doc_frame_pdf(docs, dl, ta, tn, qid) -> pd.DataFrame:
@@ -982,7 +906,7 @@ _PF_META_LOCK = threading.Lock()
 _PF_META_CACHE: dict = {}
 
 
-def _posting_file_meta(path: str, fs_cache: dict):
+def _posting_file_meta(path: str):
     """(ParquetFile-metadata, term-column-index) for a LOCAL posting
     shard, cached process-wide keyed by (path, size, mtime_ns) — shards
     are immutable once written, and the stat key makes the cache safe
@@ -1039,7 +963,7 @@ def _read_postings_term_filtered(path: str, fs_cache: dict, needed):
             path, fs_cache, filters=[("term", "in", needed)],
             columns=_POSTING_READ_COLUMNS,
         )
-    md, ci = _posting_file_meta(path, fs_cache)
+    md, ci = _posting_file_meta(path)
     rgs = []
     for rg in range(md.num_row_groups):
         if ci is None:
@@ -1106,8 +1030,7 @@ _BATCH_COLS = ["qid", "kind", "phrase", "df_all", "df_name", "doc_id", "dl",
                "tfs_all", "tfs_name"]
 
 
-def _candidate_body(queries_terms, top_k=None, avgdl=None,
-                    known_idfs_by_qid=None):
+def _candidate_body(queries_terms, top_k, avgdl, known_idfs_by_qid=None):
     """The candidate task body for a batch of queries (a single search
     is a batch of one): a generator function over (pblock, rows,
     deleted) blocks — ``rows`` the block's {(term, col) -> _Row},
@@ -1119,8 +1042,9 @@ def _candidate_body(queries_terms, top_k=None, avgdl=None,
     ``known_idfs_by_qid`` (phrase-df side table coverage) take the
     covered WAND path and emit no stat rows. The output is one summed
     df-stat row per (query, phrase) plus each query's doc rows after
-    :func:`_task_emission_prune` — O(top_k) rows per query per task,
-    the unit :func:`_tail_bound` charges."""
+    one more :func:`_emission_prune` across the task's blocks —
+    O(top_k) rows per query per task, the unit :func:`_tail_bound`
+    charges."""
     known_idfs_by_qid = known_idfs_by_qid or {}
     n_ph_by_qid = {qid: len(tids) for qid, tids in queries_terms}
 
@@ -1131,17 +1055,16 @@ def _candidate_body(queries_terms, top_k=None, avgdl=None,
             cache: dict = {}
             for qid, term_ids in queries_terms:
                 covered = known_idfs_by_qid.get(qid)
-                stats, doc_frame = _query_block_frames(
-                    rows, term_ids, deleted, cache=cache,
-                    top_k=top_k, avgdl=avgdl, known_idfs=covered,
-                )
-                if stats and covered is None:
+                stats, frame = _query_block_frames(
+                    rows, term_ids, deleted, top_k, avgdl, cache=cache,
+                    known_idfs=covered)
+                if covered is None:
                     for pi, da, dn in stats:
                         e = stat_sums.setdefault((qid, pi), [0, 0])
                         e[0] += da
                         e[1] += dn
-                if doc_frame is not None:
-                    frames_by_qid.setdefault(qid, []).append(doc_frame)
+                if frame is not None:
+                    frames_by_qid.setdefault(qid, []).append(frame)
         if stat_sums:
             # df stats are additive across blocks and every consumer
             # SUMS them (driver finish and JVM plan alike), so one
@@ -1151,19 +1074,10 @@ def _candidate_body(queries_terms, top_k=None, avgdl=None,
                 [(qid, 0, pi, da, dn, 0, 0, None, None)
                  for (qid, pi), (da, dn) in sorted(stat_sums.items())],
                 columns=_BATCH_COLS)
-        # one cross-block prune per query at task end (see
-        # _task_emission_prune — doc rows per query become
-        # O(tasks * top_k), independent of block count)
         for qid, frames in frames_by_qid.items():
-            if top_k and avgdl is not None:
-                docs, dl, ta, tn = _task_emission_prune(
-                    frames, n_ph_by_qid[qid], top_k, avgdl,
-                    known_idfs_by_qid.get(qid))
-            else:
-                docs = np.concatenate([f[0] for f in frames])
-                dl = np.concatenate([f[1] for f in frames])
-                ta = np.vstack([np.vstack(f[2]) for f in frames])
-                tn = np.vstack([np.vstack(f[3]) for f in frames])
+            docs, dl, ta, tn = _emission_prune(
+                *(np.concatenate(parts) for parts in zip(*frames)),
+                n_ph_by_qid[qid], top_k, avgdl, known_idfs_by_qid.get(qid))
             yield _doc_frame_pdf(docs, dl, ta, tn, qid=qid)
 
     return body
@@ -1195,8 +1109,8 @@ def _shard_reader(needed, deletes_dir, body):
     return lambda it: body(blocks(it))
 
 
-def _batch_candidates_fn(queries_terms, needed, deletes_dir=None,
-                         top_k=None, avgdl=None, known_idfs_by_qid=None):
+def _batch_candidates_fn(queries_terms, needed, deletes_dir, top_k, avgdl,
+                         known_idfs_by_qid=None):
     """The candidate task body behind the pyarrow reader: the function
     mapInPandas or :func:`_direct_scan_rows` runs over (pblock, path)
     row batches for a batch of queries."""
@@ -1291,7 +1205,7 @@ def search_index_files_batch(
     shards: the engine's query path (FtsIndex.search runs a batch of
     one). Returns (qid, doc_id, name_match, rank, score); queries
     yielding no results (no phrase of 3+ chars, failed AND, pruned to
-    zero shards) simply have no rows.
+    zero shards, top_k < 1) simply have no rows.
 
     One parse/prune, one task body (:func:`_batch_candidates_fn`) and
     one scoring tail (:func:`_finish`) serve every caller. The only
@@ -1319,7 +1233,7 @@ def search_index_files_batch(
     if parsed and posting_files:
         posting_files, parsed, known_idfs_by_qid, needed = _prune_batch(
             posting_files, parsed, known_idfs_by_qid, presence)
-    if not parsed or not posting_files:
+    if not parsed or not posting_files or top_k < 1:
         return _batch_result_df(spark, [])
     # a covered query emits no stat rows and at most the exact union of
     # its two branch top-ks per task: charged like a single phrase
@@ -1379,7 +1293,7 @@ def search_index_batch(
     phrase_dfs_by_query = phrase_dfs_by_query or {}
     parsed, known_idfs_by_qid = _parse_batch(
         queries, n_docs, phrase_dfs_by_query)
-    if not parsed:
+    if not parsed or top_k < 1:
         return _batch_result_df(spark, [])
     body = _candidate_body([(qi, tids) for qi, _, tids in parsed], top_k,
                            avgdl, known_idfs_by_qid)
@@ -1522,6 +1436,14 @@ def _direct_scan_rows(make_fn, chunks):
     return rows
 
 
+def _idf_pair(n_docs, dfs):
+    """(idf_all, idf_name) for per-phrase (df_all, df_name) pairs — the
+    one spelling shared by the covered preamble, the numpy tail and the
+    JVM tail; a phrase never matched in a name weighs 0 there."""
+    return ([idf_fn(n_docs, da) for da, _ in dfs],
+            [idf_fn(n_docs, dn) if dn else 0.0 for _, dn in dfs])
+
+
 def _parse_single(query, n_docs, phrase_dfs):
     """One query's preamble: (phrases, term_ids, known_idfs), or None
     when the query can match nothing (no phrase of 3+ chars / empty
@@ -1539,10 +1461,7 @@ def _parse_single(query, n_docs, phrase_dfs):
             raise ValueError("phrase_dfs must align with the parsed phrases")
         if any(da == 0 for da, _dn in phrase_dfs):
             return None
-        known_idfs = (
-            [idf_fn(n_docs, da) for da, _ in phrase_dfs],
-            [idf_fn(n_docs, dn) if dn else 0.0 for _, dn in phrase_dfs],
-        )
+        known_idfs = _idf_pair(n_docs, phrase_dfs)
     return phrases, term_ids, known_idfs
 
 
@@ -1662,8 +1581,8 @@ def _tail_bound(n_tasks, phrase_counts, top_k):
     r03 #2 — the driver-finish decision must not cost a doomed
     200k-row probe collect at scale).
 
-    Emission pruning runs per TASK (_batch_candidates_fn /
-    _task_emission_prune), so rows are charged per task: ``n_tasks`` is
+    Emission pruning runs once more per TASK across its blocks
+    (_candidate_body / _emission_prune), so rows are charged per task: ``n_tasks`` is
     _scan_tasks() on the Spark feeder and the chunk count on the direct
     one. Per task per query:
     - kind=0 (df stats): one summed row per phrase -> <= n_ph rows.
@@ -1781,8 +1700,7 @@ def _finish_rows(rows, n_ph, n_docs, avgdl, top_k, dfs_override=None):
             return []  # some phrase matches nothing anywhere -> AND fails
     if not docs:
         return []
-    idf_all = [idf_fn(n_docs, dfs[i][0]) for i in range(n_ph)]
-    idf_name = [idf_fn(n_docs, dfs[i][1]) if dfs[i][1] else 0.0 for i in range(n_ph)]
+    idf_all, idf_name = _idf_pair(n_docs, [dfs[i] for i in range(n_ph)])
 
     n = len(docs)
     doc_id = np.fromiter((r["doc_id"] for r in docs), dtype=np.int64, count=n)
@@ -1844,12 +1762,8 @@ def _jvm_tail(spark, cand, parsed, known_idfs_by_qid, n_docs, avgdl,
             continue
         if any((qi, i) not in dfs for i in range(n_ph)):
             continue  # a phrase matched nothing -> AND fails for this query
-        idf_rows.append((
-            qi,
-            [idf_fn(n_docs, dfs[(qi, i)][0]) for i in range(n_ph)],
-            [idf_fn(n_docs, dfs[(qi, i)][1]) if dfs[(qi, i)][1] else 0.0
-             for i in range(n_ph)],
-        ))
+        ia, iname = _idf_pair(n_docs, [dfs[(qi, i)] for i in range(n_ph)])
+        idf_rows.append((qi, ia, iname))
     if not idf_rows:
         return _batch_result_df(spark, [])
     idfs_df = spark.createDataFrame(

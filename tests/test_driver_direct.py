@@ -78,6 +78,10 @@ def test_direct_bit_identical_single_and_batch(spark, pair):
     got = sorted(tuple(r) for r in direct.search_batch(QUERIES, 10).collect())
     want = sorted(tuple(r) for r in dist.search_batch(QUERIES, 10).collect())
     assert got == want
+    # top_k < 1 asks for no rows: an empty result on both feeders (a
+    # single-trigram query would otherwise reach the chunk-skipping WAND)
+    for qq in ("hel", "hello world"):
+        assert _hits(direct.search(qq, 0)) == _hits(dist.search(qq, 0)) == []
     # schemas agree exactly (the gate hashes sorted columns + dtypes)
     assert direct.search("hello world", 5).schema \
         == dist.search("hello world", 5).schema
