@@ -35,9 +35,8 @@ import numpy as np
 
 from codebased_spark import B, IDF_CLAMP, K1
 
-# FTS documents have exactly these columns, in this order
-# (000_initial.sql:39: fts5(path, name, content, ...)).
-FTS_COLUMNS = ("path", "name", "content")
+# FTS documents have exactly the columns path, name, content, in this
+# order (000_initial.sql:39: fts5(path, name, content, ...)).
 COL_PATH, COL_NAME, COL_CONTENT = 0, 1, 2
 
 _quote_fts_re = re.compile(r'\s+|(".*?")')

@@ -466,21 +466,14 @@ def _phrase_table_paths(index):
     phrase table — None means pyarrow cannot reach the store and the
     Spark reader/writer must serve."""
     from codebased_spark.plans.engine import _join
-    from codebased_spark.plans.fsio import (
-        canonical_uri,
-        is_local,
-        local_path,
-        pyarrow_fs_path,
-    )
+    from codebased_spark.plans.fsio import canonical_uri, pyarrow_fs_path
 
     out_dir = _join(index.index_dir, PHRASE_DF_DIR)
-    if is_local(index.index_dir) and not index.index_dir.startswith("file:"):
-        return local_path(out_dir), out_dir
     try:
-        fs, _real = pyarrow_fs_path(canonical_uri(out_dir))
-        return (canonical_uri(out_dir) if fs is not None else None), out_dir
+        pyarrow_fs_path(out_dir)
     except Exception:
         return None, out_dir
+    return canonical_uri(out_dir), out_dir
 
 
 def _read_phrase_rows(spark, index) -> "list[dict]":
@@ -505,7 +498,12 @@ def _write_phrase_table(spark, index, block_rows, phrase_order) -> dict:
     whenever the store is pyarrow-reachable — the table is tiny, and
     skipping the Spark write removes a whole job from every (re)build;
     only unreachable stores pay the Spark path."""
-    from codebased_spark.plans.engine import FORMAT_VERSION, _join
+    from codebased_spark.plans.engine import (
+        FORMAT_VERSION,
+        _join,
+        _manifest_path,
+        _write_manifest,
+    )
 
     have = {p for p, _pb, _da, _dn in block_rows}
     table_rows = list(block_rows) + [
@@ -513,8 +511,7 @@ def _write_phrase_table(spark, index, block_rows, phrase_order) -> dict:
     out_dir = _join(index.index_dir, PHRASE_DF_DIR)
     # manifest first, then data: a crash can leave data-without-manifest
     # (harmless — load ignores it) but never manifest-without-data
-    index.fs.delete(_join(index.index_dir, "_manifest",
-                          f"{PHRASE_DF_MANIFEST}.json"))
+    index.fs.delete(_manifest_path(index.index_dir, PHRASE_DF_MANIFEST))
     index.fs.delete(out_dir)
     pa_dir, _ = _phrase_table_paths(index)
     if pa_dir is not None:
@@ -545,18 +542,15 @@ def _write_phrase_table(spark, index, block_rows, phrase_order) -> dict:
             spark.sparkContext.parallelize(table_rows, 1),
             "phrase string, pblock int, df_all long, df_name long",
         ).write.mode("overwrite").parquet(out_dir)
-    index.fs.write_json(
-        _join(index.index_dir, "_manifest", f"{PHRASE_DF_MANIFEST}.json"),
-        {
-            "stage": PHRASE_DF_MANIFEST,
-            "version": FORMAT_VERSION,
-            "layout": "per_block",
-            "n_docs": index.n_docs,
-            "total_dl": index.total_dl,
-            "epoch": _incr_epoch(index),
-            "n_phrases": len(phrase_order),
-        },
-    )
+    _write_manifest(index.fs, index.index_dir, PHRASE_DF_MANIFEST, {
+        "stage": PHRASE_DF_MANIFEST,
+        "version": FORMAT_VERSION,
+        "layout": "per_block",
+        "n_docs": index.n_docs,
+        "total_dl": index.total_dl,
+        "epoch": _incr_epoch(index),
+        "n_phrases": len(phrase_order),
+    })
     agg: dict = {p: [0, 0] for p in phrase_order}
     for p, _pb, da, dn in table_rows:
         agg[p][0] += da
@@ -616,27 +610,14 @@ def update_phrase_df(spark: SparkSession, index, dirty_pblocks,
     -> full rebuild) — a stale table from some other generation would
     otherwise be silently stamped fresh, and df=0 rows can make covered
     queries wrongly empty."""
-    from codebased_spark.plans.engine import FORMAT_VERSION, _join
-
-    try:
-        man = index.fs.read_json(_join(
-            index.index_dir, "_manifest", f"{PHRASE_DF_MANIFEST}.json"))
-        pn, pdl, pep = prior_fingerprint
-        if (
-            int(man.get("version", -1)) != FORMAT_VERSION
-            or int(man.get("n_docs", -1)) != int(pn)
-            or int(man.get("total_dl", -1)) != int(pdl)
-            or int(man.get("epoch", -1)) != int(pep)
-        ):
-            return None
-    except Exception:
+    if _stored_fingerprint(index) != tuple(int(x) for x in prior_fingerprint):
         return None
     try:
         old = _read_phrase_rows(spark, index)
     except Exception:
         return None
-    if not old or "pblock" not in old[0]:
-        return None  # pre-per-block layout: full rebuild required
+    if not old:
+        return None
     phrase_order = list(dict.fromkeys(r["phrase"] for r in old))
     dirty = {int(b) for b in dirty_pblocks}
     kept = [
@@ -653,37 +634,35 @@ def update_phrase_df(spark: SparkSession, index, dirty_pblocks,
     return _write_phrase_table(spark, index, kept + fresh, phrase_order)
 
 
+def _stored_fingerprint(index) -> "tuple | None":
+    """(n_docs, total_dl, epoch) the stored table's manifest was stamped
+    with, or None when the manifest is absent, of another format, or
+    lacks a field (a table from before per-block rows and epochs reads
+    as absent)."""
+    from codebased_spark.plans.engine import _current_manifest
+
+    man = _current_manifest(index.fs, index.index_dir, PHRASE_DF_MANIFEST)
+    try:
+        return tuple(int(man[k]) for k in ("n_docs", "total_dl", "epoch"))
+    except (KeyError, TypeError, ValueError):
+        return None
+
+
 def load_phrase_df(spark: SparkSession, index) -> dict:
     """The phrase-df dict for ``index``, or {} when absent or STALE
     (fingerprint mismatch — the corpus changed since the table was
     built, so its dfs would silently corrupt idf)."""
-    from codebased_spark.plans.engine import FORMAT_VERSION, _join
-
-    man_path = _join(index.index_dir, "_manifest", f"{PHRASE_DF_MANIFEST}.json")
-    if not index.fs.exists(man_path):
+    stored = _stored_fingerprint(index)
+    if stored is None or \
+            stored != (index.n_docs, index.total_dl, _incr_epoch(index)):
         return {}
     try:
-        man = index.fs.read_json(man_path)
-    except Exception:
-        return {}
-    try:
-        if (
-            int(man.get("version", -1)) != FORMAT_VERSION
-            or int(man.get("n_docs", -1)) != index.n_docs
-            or int(man.get("total_dl", -1)) != index.total_dl
-            or ("epoch" in man
-                and int(man["epoch"]) != _incr_epoch(index))
-        ):
-            return {}
-        rows = _read_phrase_rows(spark, index)
-        if rows and "pblock" in rows[0]:
-            agg: dict = {}
-            for r in rows:  # per-block layout: dfs are additive
-                a = agg.setdefault(r["phrase"], [0, 0])
-                a[0] += int(r["df_all"])
-                a[1] += int(r["df_name"])
-            return {p: (a, b) for p, (a, b) in agg.items()}
-        return {r["phrase"]: (int(r["df_all"]), int(r["df_name"])) for r in rows}
+        agg: dict = {}
+        for r in _read_phrase_rows(spark, index):  # per block: additive
+            a = agg.setdefault(r["phrase"], [0, 0])
+            a[0] += int(r["df_all"])
+            a[1] += int(r["df_name"])
+        return {p: (a, b) for p, (a, b) in agg.items()}
     except Exception:
         # a manifest surviving a crash window whose data dir is gone
         # must disable the table, never make the index unopenable

@@ -169,13 +169,12 @@ def _use_driver_build(index_dir: str, shards) -> bool:
     PRESENCE_DRIVER_MAX_SHARDS on a LOCAL scheme-less store, so the
     driver only ever does plain POSIX reads. Every other store takes
     the Spark job."""
-    from codebased_spark.plans.fsio import is_local
+    from codebased_spark.plans.fsio import _scheme
 
     return (
         bool(shards)
         and len(shards) <= PRESENCE_DRIVER_MAX_SHARDS
-        and is_local(index_dir)
-        and not index_dir.startswith("file:")
+        and _scheme(index_dir) == ""
     )
 
 
@@ -274,10 +273,10 @@ def build_term_blocks(spark: SparkSession, index_dir: str, fs=None) -> dict:
     column and the pblock partition value are read — never the posting
     blobs): :func:`update_term_blocks`'s extension from empty coverage,
     overwriting. Returns the manifest payload."""
-    from codebased_spark.plans.engine import IndexFS, _join
+    from codebased_spark.plans.engine import IndexFS, _join, _manifest_path
 
     fs = fs or IndexFS(spark, index_dir)
-    man = _join(index_dir, "_manifest", f"{TERM_BLOCKS_MANIFEST}.json")
+    man = _manifest_path(index_dir, TERM_BLOCKS_MANIFEST)
     # manifest gone first: readers fall back to scan-everything while
     # the data is being replaced (stale data + fresh manifest is the
     # only unsafe combination, and this ordering makes it impossible)
@@ -300,15 +299,10 @@ def update_term_blocks(
     before the manifest leaves the new blocks uncovered (scanned
     unpruned) — correct either way. Coverage is derived purely from
     the manifest (no caller-supplied block offset)."""
-    from codebased_spark.plans.engine import FORMAT_VERSION, _join, _read_manifest
+    from codebased_spark.plans.engine import _current_manifest
 
-    if not fs.exists(_join(index_dir, "_manifest", f"{TERM_BLOCKS_MANIFEST}.json")):
-        return None
-    try:
-        man = _read_manifest(fs, index_dir, TERM_BLOCKS_MANIFEST)
-        if int(man.get("version", -1)) != FORMAT_VERSION:
-            return None
-    except Exception:
+    man = _current_manifest(fs, index_dir, TERM_BLOCKS_MANIFEST)
+    if man is None:
         return None
     already = {int(b) for b in man.get("covered_pblocks", [])}
     return _extend_term_blocks(spark, index_dir, fs, already, "append")
@@ -362,28 +356,13 @@ def load_term_blocks(index) -> "TermBlocks | None":
     """The index's presence handle, or None when absent/unreadable/
     version-mismatched (queries then scan every shard — slower, never
     wrong)."""
-    from codebased_spark.plans.engine import FORMAT_VERSION, _join
+    from codebased_spark.plans.engine import _current_manifest, _join
+    from codebased_spark.plans.fsio import canonical_uri
 
-    man_path = _join(index.index_dir, "_manifest",
-                     f"{TERM_BLOCKS_MANIFEST}.json")
-    if not index.fs.exists(man_path):
-        return None
-    try:
-        man = index.fs.read_json(man_path)
-        if int(man.get("version", -1)) != FORMAT_VERSION:
-            return None
-        covered = man.get("covered_pblocks", [])
-    except Exception:
-        return None
+    man = _current_manifest(index.fs, index.index_dir, TERM_BLOCKS_MANIFEST)
     data_dir = _join(index.index_dir, TERM_BLOCKS_DIR)
-    if not index.fs.exists(data_dir):
+    if man is None or not index.fs.exists(data_dir):
         return None
-    from codebased_spark.plans.fsio import canonical_uri, is_local, local_path
-
-    if is_local(index.index_dir) and not index.index_dir.startswith("file:"):
-        data = local_path(data_dir)
-    else:
-        data = canonical_uri(data_dir)
     try:
         table_bytes = sum(sz for p, sz in index.fs.list_files(data_dir)
                           if p.endswith(".parquet"))
@@ -393,4 +372,5 @@ def load_term_blocks(index) -> "TermBlocks | None":
     # line matches the direct-path regime where cold-lookup latency
     # (~27 ms) would be a meaningful share of a ~20 ms query
     preload = table_bytes is not None and 0 < table_bytes <= 4 * 1024 * 1024
-    return TermBlocks(data, covered, preload=preload)
+    return TermBlocks(canonical_uri(data_dir), man.get("covered_pblocks", []),
+                      preload=preload)

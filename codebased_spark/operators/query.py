@@ -42,6 +42,18 @@ phrase-df stats job (operators/phrasedf.py) runs its own body over
 either reader; it counts each phrase's block df from the same
 _phrase_block_docs pass.
 
+Every search fills one trace record (the ``trace`` dict argument;
+FtsIndex keeps it as ``last_trace``) from values the path computes
+anyway, so tracing adds no job, no collect and no branch: ``route``
+(direct / spark / generic, or none when nothing is scanned),
+``shards_total`` and ``shards_scanned`` (before and after presence
+pruning; None behind the Spark reader, which has no shard list),
+``covered`` (phrase-df-covered queries), ``candidate_rows`` (rows the
+driver collected; None on the JVM tail), ``tail`` (driver / jvm) and
+seconds for ``parse_prune_s``, ``scan_collect_s`` and ``finish_s``.
+On the JVM tail the scan runs inside the tail's first job, so
+``finish_s`` holds it.
+
 Exactness: identical scores to operators/score.py (brute force) and to
 SQLite FTS5 — phrase tf via consecutive-position intersection equals
 overlapping substring count; df/idf semantics per branch as probed in
@@ -87,6 +99,7 @@ for multi-trigram phrases is irreducible, and what CAN be pruned is:
 from __future__ import annotations
 
 import threading
+import time
 
 import numpy as np
 import pandas as pd
@@ -1200,6 +1213,7 @@ def search_index_files_batch(
     phrase_dfs_by_query: "dict[int, list[tuple[int, int]]] | None" = None,
     presence=None,
     direct: bool = False,
+    trace: "dict | None" = None,
 ) -> DataFrame:
     """Two-branch FTS search of a batch of queries over the posting
     shards: the engine's query path (FtsIndex.search runs a batch of
@@ -1226,15 +1240,21 @@ def search_index_files_batch(
     multi-trigram WAND with exact branch-top-k emission, and no df-stat
     rows flow. ``presence`` (a presence.TermBlocks) prunes
     provably-irrelevant shards before any read. Results are
-    bit-identical in every combination (pinned by tests)."""
+    bit-identical in every combination (pinned by tests). ``trace``
+    (a dict) receives the search's record (module docstring)."""
+    t0 = time.perf_counter()
+    trace = _new_trace(trace, len(posting_files))
     phrase_dfs_by_query = phrase_dfs_by_query or {}
     parsed, known_idfs_by_qid = _parse_batch(
         queries, n_docs, phrase_dfs_by_query)
+    trace["covered"] = len(known_idfs_by_qid)
     if parsed and posting_files:
         posting_files, parsed, known_idfs_by_qid, needed = _prune_batch(
             posting_files, parsed, known_idfs_by_qid, presence)
+    trace["parse_prune_s"] = time.perf_counter() - t0
     if not parsed or not posting_files or top_k < 1:
         return _batch_result_df(spark, [])
+    trace["shards_scanned"] = len(posting_files)
     # a covered query emits no stat rows and at most the exact union of
     # its two branch top-ks per task: charged like a single phrase
     phrase_counts = [1 if qi in known_idfs_by_qid else len(phrases)
@@ -1249,14 +1269,18 @@ def search_index_files_batch(
         chunks = _direct_chunks(posting_files)
         bound, _exact = _tail_bound(len(chunks), phrase_counts, top_k)
         if bound <= DRIVER_FINISH_MAX:
+            trace["route"] = "direct"
+            t = time.perf_counter()
             return _driver_tail(spark, _direct_scan_rows(task_fn, chunks),
                                 parsed, phrase_dfs_by_query, n_docs, avgdl,
-                                top_k)
+                                top_k, trace, t)
+    trace["route"] = "spark"
     bound, exact = _tail_bound(
         _scan_tasks(spark, len(posting_files)), phrase_counts, top_k)
     cand = _scan_df(spark, posting_files, task_fn(), BATCH_SCHEMA)
     return _finish(spark, cand, parsed, phrase_dfs_by_query,
-                   known_idfs_by_qid, n_docs, avgdl, top_k, bound, exact)
+                   known_idfs_by_qid, n_docs, avgdl, top_k, trace, bound,
+                   exact)
 
 
 _POSTING_READ_COLUMNS = [
@@ -1279,28 +1303,35 @@ def search_index_batch(
     top_k: int = DEFAULT_TOP_K,
     deletes: "DataFrame | None" = None,
     phrase_dfs_by_query: "dict[int, list[tuple[int, int]]] | None" = None,
+    trace: "dict | None" = None,
 ) -> DataFrame:
     """Two-branch FTS search of a batch of queries through the Spark
     reader (:func:`_generic_scan`): the route for stores pyarrow cannot
     reach (FtsIndex.posting_files == []), working against any
     Spark-readable posting DataFrame. ``deletes`` (a doc_id DataFrame)
-    carries the tombstones; ``phrase_dfs_by_query`` is
-    :func:`search_index_files_batch`'s. The parse, the task body and
-    the tail are the shard scan's; there is no shard list to prune and
-    no candidate bound, so the tail takes a limit-guarded collect.
-    Returns (qid, doc_id, name_match, rank, score)."""
+    carries the tombstones; ``phrase_dfs_by_query`` and
+    ``trace`` are :func:`search_index_files_batch`'s. The parse, the
+    task body and the tail are the shard scan's; there is no shard
+    list to prune and no candidate bound, so the tail takes a
+    limit-guarded collect. Returns (qid, doc_id, name_match, rank,
+    score)."""
+    t0 = time.perf_counter()
+    trace = _new_trace(trace, None)
     spark = postings.sparkSession
     phrase_dfs_by_query = phrase_dfs_by_query or {}
     parsed, known_idfs_by_qid = _parse_batch(
         queries, n_docs, phrase_dfs_by_query)
+    trace.update(covered=len(known_idfs_by_qid),
+                 parse_prune_s=time.perf_counter() - t0)
     if not parsed or top_k < 1:
         return _batch_result_df(spark, [])
+    trace.update(route="generic", shards_scanned=None)
     body = _candidate_body([(qi, tids) for qi, _, tids in parsed], top_k,
                            avgdl, known_idfs_by_qid)
     cand = _generic_scan(postings, deletes, _needed(parsed), body,
                          BATCH_SCHEMA)
     return _finish(spark, cand, parsed, phrase_dfs_by_query,
-                   known_idfs_by_qid, n_docs, avgdl, top_k)
+                   known_idfs_by_qid, n_docs, avgdl, top_k, trace)
 
 
 def search_index(
@@ -1322,6 +1353,16 @@ def search_index(
 # pruning bounds the common case far below it: per task, single-phrase
 # queries emit at most 2*top_k docs, multi-phrase ones their k-skyband.
 DRIVER_FINISH_MAX = 200_000
+
+
+def _new_trace(trace, shards_total, route="none") -> dict:
+    """``trace`` (or a fresh dict) reset to the record of a search
+    that scans nothing; the query path fills in what it does."""
+    trace = {} if trace is None else trace
+    trace.update(route=route, tail=None, shards_total=shards_total,
+                 shards_scanned=0, covered=0, candidate_rows=0,
+                 parse_prune_s=0.0, scan_collect_s=0.0, finish_s=0.0)
+    return trace
 
 
 def _batch_result_df(spark, out_rows) -> DataFrame:
@@ -1628,7 +1669,7 @@ def _collect_bounded(df, max_rows: int):
 
 
 def _finish(spark, cand, parsed, phrase_dfs_by_query, known_idfs_by_qid,
-            n_docs, avgdl, top_k, bound=None, exact=False):
+            n_docs, avgdl, top_k, trace, bound=None, exact=False):
     """The scoring tail over a BATCH_SCHEMA candidate DataFrame: exact
     phrase df -> idf -> BM25 -> two-branch top-k -> union/dedupe/top-k
     per query (reference CTE codebased/search.py:240-302).
@@ -1642,10 +1683,13 @@ def _finish(spark, cand, parsed, phrase_dfs_by_query, known_idfs_by_qid,
     - otherwise (heuristic multi-phrase bound, or no bound behind the
       Spark reader) a limit-guarded collect; a candidate set past the
       cap falls back to the JVM plan against the SAME persisted
-      candidates — one extra job, never a rescan."""
+      candidates — one extra job, never a rescan.
+    ``trace`` receives the tail, the candidate rows and the timings."""
+    t = time.perf_counter()
     if bound is not None and exact and bound <= DRIVER_FINISH_MAX:
         return _driver_tail(spark, cand.collect(), parsed,
-                            phrase_dfs_by_query, n_docs, avgdl, top_k)
+                            phrase_dfs_by_query, n_docs, avgdl, top_k,
+                            trace, t)
     cand = cand.persist()
     try:
         rows = None
@@ -1653,16 +1697,26 @@ def _finish(spark, cand, parsed, phrase_dfs_by_query, known_idfs_by_qid,
             rows = _collect_bounded(cand, DRIVER_FINISH_MAX)
         if rows is not None and len(rows) <= DRIVER_FINISH_MAX:
             return _driver_tail(spark, rows, parsed, phrase_dfs_by_query,
-                                n_docs, avgdl, top_k)
-        return _jvm_tail(spark, cand, parsed, known_idfs_by_qid, n_docs,
-                         avgdl, top_k)
+                                n_docs, avgdl, top_k, trace, t)
+        t_jvm = time.perf_counter()
+        out = _jvm_tail(spark, cand, parsed, known_idfs_by_qid, n_docs,
+                        avgdl, top_k)
+        trace.update(tail="jvm", candidate_rows=None,
+                     scan_collect_s=t_jvm - t,
+                     finish_s=time.perf_counter() - t_jvm)
+        return out
     finally:
         cand.unpersist()
 
 
 def _driver_tail(spark, rows, parsed, phrase_dfs_by_query, n_docs, avgdl,
-                 top_k) -> DataFrame:
-    """Numpy finish of collected candidate rows, query by query."""
+                 top_k, trace, t_scan) -> DataFrame:
+    """Numpy finish of collected candidate rows, query by query;
+    ``trace`` gets the rows, the seconds since ``t_scan`` (the scan's
+    start) and the finish's own."""
+    t = time.perf_counter()
+    trace.update(tail="driver", candidate_rows=len(rows),
+                 scan_collect_s=t - t_scan)
     by_q: dict[int, list] = {}
     for r in rows:
         by_q.setdefault(int(r["qid"]), []).append(r)
@@ -1671,7 +1725,9 @@ def _driver_tail(spark, rows, parsed, phrase_dfs_by_query, n_docs, avgdl,
         fin = _finish_rows(by_q.get(qi, []), len(phrases), n_docs, avgdl,
                            top_k, phrase_dfs_by_query.get(qi))
         out_rows.extend((qi, d, nm, rk) for d, nm, rk in fin)
-    return _batch_result_df(spark, out_rows)
+    out = _batch_result_df(spark, out_rows)
+    trace["finish_s"] = time.perf_counter() - t
+    return out
 
 
 def _finish_rows(rows, n_ph, n_docs, avgdl, top_k, dfs_override=None):

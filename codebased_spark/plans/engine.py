@@ -188,24 +188,19 @@ def _manifest_path(index_dir: str, stage: str) -> str:
     return _join(index_dir, "_manifest", f"{stage}.json")
 
 
-def _stage_done(fs: IndexFS, index_dir: str, stage: str) -> bool:
-    """A stage counts as done only if its manifest exists AND records the
-    current FORMAT_VERSION: resuming over an older-format partial build
-    must re-run the stage, or the finished index would mix formats (e.g.
-    v1 posting shards without skip metadata under a v2 stamp) and fail
-    at query time (ADVICE r02)."""
+def _current_manifest(fs: IndexFS, index_dir: str, stage: str) -> "dict | None":
+    """The stage's manifest record when it exists, parses and records
+    the current FORMAT_VERSION, else None — the one gate for build
+    resume and for the presence and phrase-df tables. An older-format
+    record counts as absent: resuming over it must re-run the stage, or
+    the finished index would mix formats (e.g. v1 posting shards
+    without skip metadata under a v2 stamp) and fail at query time."""
     path = _manifest_path(index_dir, stage)
-    if not fs.exists(path):
-        return False
     try:
-        rec = _read_manifest(fs, index_dir, stage)
+        rec = fs.read_json(path) if fs.exists(path) else {}
+        return rec if int(rec.get("version", -1)) == FORMAT_VERSION else None
     except Exception:
-        return False  # unreadable manifest -> treat as not done
-    return int(rec.get("version", 0)) == FORMAT_VERSION
-
-
-def _read_manifest(fs: IndexFS, index_dir: str, stage: str) -> dict:
-    return fs.read_json(_manifest_path(index_dir, stage))
+        return None  # unreadable manifest -> treat as absent
 
 
 def _write_manifest(fs: IndexFS, index_dir: str, stage: str, payload: dict) -> None:
@@ -213,7 +208,16 @@ def _write_manifest(fs: IndexFS, index_dir: str, stage: str, payload: dict) -> N
 
 
 class FtsIndex:
-    """A loaded index: handles to the tables + broadcast scalars."""
+    """A loaded index: handles to the tables + broadcast scalars.
+
+    ``last_trace`` is the record of the most recent :meth:`search` or
+    :meth:`search_batch` to return (None before the first): a plain
+    dict with the route (direct, spark, generic, cache for a search
+    cache hit, none when nothing was scanned), shard counts before and
+    after presence pruning, the phrase-df-covered query count, the
+    candidate rows collected, the tail (driver or jvm) and seconds for
+    parse+prune, scan+collect and finish. operators/query.py's module
+    docstring defines the fields; recording it costs no Spark job."""
 
     def __init__(self, spark: SparkSession, index_dir: str, force_jvm: bool = False,
                  force_generic_scan: bool = False):
@@ -291,6 +295,7 @@ class FtsIndex:
         from collections import deque
 
         self.query_log: "deque[str]" = deque(maxlen=QUERY_LOG_MAX)
+        self.last_trace: "dict | None" = None
 
     def deletes_df(self) -> "DataFrame | None":
         """Tombstoned doc_ids as a DataFrame (None when absent) — the
@@ -360,23 +365,21 @@ class FtsIndex:
         key = (query, top_k)
         hit = self._search_cache.get(key)
         if hit is not None:
+            from codebased_spark.operators.query import _new_trace
+
+            self.last_trace = _new_trace(None, None, "cache")
             return hit
         out = self._search_batch([query], top_k).drop("qid")
         self._search_cache[key] = out
         return out
 
     def _task_deletes_dir(self) -> "str | None":
-        """Tombstone dir as query tasks should open it: a POSIX path for
-        scheme-less local indexes, a canonical URI (pyarrow.fs-opened)
-        otherwise — always the SAME store the posting shards use, so
-        the fast path never silently drops tombstones."""
+        """Tombstone dir as query tasks open it (fsio.canonical_uri) —
+        always the SAME store the posting shards use, so the fast path
+        never silently drops tombstones."""
         from codebased_spark.plans.fsio import canonical_uri
 
-        if not self.has_deletes:
-            return None
-        if is_local(self.index_dir) and not self.index_dir.startswith("file:"):
-            return local_path(self.deletes_dir)
-        return canonical_uri(self.deletes_dir)
+        return canonical_uri(self.deletes_dir) if self.has_deletes else None
 
     def search_batch(self, queries: list[str], top_k: int = DEFAULT_TOP_K) -> DataFrame:
         """Batched search: one shared posting scan for the whole batch —
@@ -403,18 +406,22 @@ class FtsIndex:
                 (qi, self._covering_dfs(q)) for qi, q in enumerate(queries)
             ) if dfs is not None
         }
+        trace: dict = {}
         if not self.posting_files:
-            return search_index_batch(
+            out = search_index_batch(
                 self.postings, queries, self.n_docs, self.avgdl, top_k,
                 deletes=self.deletes_df(),
-                phrase_dfs_by_query=phrase_dfs_by_query)
-        return search_index_files_batch(
-            self.spark, self.posting_files, queries, self.n_docs, self.avgdl,
-            top_k, deletes_dir=self._task_deletes_dir(),
-            phrase_dfs_by_query=phrase_dfs_by_query,
-            presence=self.term_blocks,
-            direct=self.driver_direct,
-        )
+                phrase_dfs_by_query=phrase_dfs_by_query, trace=trace)
+        else:
+            out = search_index_files_batch(
+                self.spark, self.posting_files, queries, self.n_docs,
+                self.avgdl, top_k, deletes_dir=self._task_deletes_dir(),
+                phrase_dfs_by_query=phrase_dfs_by_query,
+                presence=self.term_blocks,
+                direct=self.driver_direct, trace=trace,
+            )
+        self.last_trace = trace
+        return out
 
     def _covering_dfs(self, query: str) -> "list[tuple[int, int]] | None":
         """Per-phrase (df_all, df_name), aligned with the phrases the
@@ -483,12 +490,11 @@ def build_index(
 
         for sub in ("_manifest", "deletes", PHRASE_DF_DIR):
             fs.delete(_join(index_dir, sub))
-    if resume and _stage_done(fs, index_dir, "doc_stats"):
-        recorded = int(_read_manifest(fs, index_dir, "doc_stats").get(
-            "num_blocks", num_blocks))
-        num_blocks = recorded
+    recorded = _current_manifest(fs, index_dir, "doc_stats") if resume else None
+    if recorded is not None:
+        num_blocks = int(recorded.get("num_blocks", num_blocks))
     todo = [s for s in ("doc_stats", "corpus_stats", "postings")
-            if not (resume and _stage_done(fs, index_dir, s))]
+            if not (resume and _current_manifest(fs, index_dir, s))]
 
     if todo:
         docs = build_docs(corpus, num_blocks=num_blocks, chunk=chunk).persist()
@@ -540,7 +546,7 @@ def build_index(
                  "per_block": _postings_footer_metrics(fs, index_dir)},
             )
 
-    if not (resume and _stage_done(fs, index_dir, "term_blocks")):
+    if not (resume and _current_manifest(fs, index_dir, "term_blocks")):
         # term->block presence manifest (operators/presence.py): a
         # column-pruned scan of just the term column — cheap relative
         # to the posting build, and it makes per-query shard touch

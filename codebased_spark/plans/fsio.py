@@ -73,7 +73,10 @@ def canonical_uri(path: str) -> str:
     """Normalize a URI for pyarrow.fs.FileSystem.from_uri: Hadoop's
     scheme:/path spelling becomes scheme:///path, and Hadoop-only
     scheme aliases (s3a/s3n) map to the pyarrow scheme for the same
-    store; RFC-form URIs and plain paths otherwise pass through."""
+    store; RFC-form URIs and plain paths otherwise pass through. This
+    is the one rule for how pyarrow readers name a table inside an
+    index (tombstones, presence, phrase-df): a scheme-less index keeps
+    plain POSIX paths, any other gets canonical URIs."""
     scheme = _scheme(path)
     if not scheme:
         return path

@@ -267,10 +267,3 @@ def read_corpus(spark: SparkSession, path_or_table: str) -> DataFrame:
         return spark.read.parquet(path_or_table).select(
             *CORPUS_SCHEMA.fieldNames()
         )
-
-
-def with_sha256(df: DataFrame) -> DataFrame:
-    """Attach the per-row invariant ``sha256(content)`` (input_hint;
-    reference computes it at codebased/index.py:434 and re-verifies at
-    search.py:440-442). JVM-side F.sha2 — no Python in the loop."""
-    return df.withColumn("sha256", F.sha2(F.col("content").cast("binary"), 256))

@@ -276,6 +276,41 @@ def test_manifest_without_data_is_ignored(spark, tmp_path):
     assert reopened.search("hello world", 5).count() >= 0
 
 
+def test_manifest_without_epoch_reads_absent(spark, tmp_path):
+    """Every table this engine writes stamps its manifest with the
+    commit epoch; a manifest without one (a table from before per-block
+    rows) reads as absent, and searches rank as FTS5 does."""
+    import json
+    import os
+
+    from codebased_spark.oracle import Fts5Oracle
+    from tests.parity import assert_rank_identical, oracle_hits, spark_hits
+
+    idx_dir = str(tmp_path / "no_epoch_idx")
+    corpus = fixture_corpus(spark)
+    index = build_index(spark, corpus, idx_dir, num_blocks=2)
+    build_phrase_df(spark, index, ["server started"])
+    assert FtsIndex(spark, idx_dir).phrase_dfs
+    man = os.path.join(idx_dir, "_manifest", "phrase_df.json")
+    rec = json.load(open(man))
+    del rec["epoch"]
+    json.dump(rec, open(man, "w"))
+
+    reopened = FtsIndex(spark, idx_dir)
+    assert load_phrase_df(spark, reopened) == {}
+    assert reopened.phrase_dfs == {}
+    content = {(r["repo"], r["path"]): r["content"] for r in corpus.collect()}
+    oracle = Fts5Oracle(
+        (r["doc_id"], r["path"], r["name"], content[(r["repo"], r["path"])])
+        for r in reopened.doc_stats.select("doc_id", "repo", "path",
+                                           "name").collect())
+    for q in ['"server started"', "hello world"]:
+        got = spark_hits(reopened.search(q, 10))
+        assert got, q
+        assert reopened.last_trace["covered"] == 0
+        assert_rank_identical(got, oracle_hits(oracle.search(q, 10)), 10)
+
+
 def test_covered_block_frame_prunes_and_stays_exact(spark, tmp_path, monkeypatch):
     """The lazy-verification loop's pruning branches (ub-ordered
     batches, in-batch dead filtering, early break) only ENGAGE on

@@ -1,9 +1,12 @@
 """Spark-free guard for the scripts around the engine: every name that
-bench.py, bench_extra.py, tools/, scripts/ and perfbench/ take from
-``codebased_spark`` — ``from codebased_spark... import name`` at any
-depth, and ``alias.attr`` on an imported engine module — must still
-resolve, so renaming or deleting an engine helper cannot silently break
-a script that only runs by hand."""
+bench.py, tools/, scripts/ and perfbench/ take from ``codebased_spark``
+— ``from codebased_spark... import name`` at any depth, and
+``alias.attr`` on an imported engine module — must still resolve, so
+renaming or deleting an engine helper cannot silently break a script
+that only runs by hand. tools/ and scripts/ take no underscore-prefixed
+engine name at all: they read what the engine reports (such as
+``FtsIndex.last_trace``) instead of re-deriving it from private
+helpers."""
 
 import ast
 import importlib
@@ -11,7 +14,7 @@ import pathlib
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 SCRIPTS = sorted(
-    [ROOT / "bench.py", ROOT / "bench_extra.py"]
+    [ROOT / "bench.py"]
     + [p for d in ("tools", "scripts", "perfbench")
        for p in (ROOT / d).glob("*.py")]
 )
@@ -105,6 +108,40 @@ def test_guard_catches_a_missing_name():
     bad = [(m, n) for m, n, _ in refs if n and not _resolves(m, n)]
     assert bad == [("codebased_spark.operators.query", "_no_such_helper"),
                    ("codebased_spark.operators.query", "_no_such_attr")]
+
+
+def _private_refs(tree):
+    """(lineno, dotted name) of every underscore-prefixed engine name
+    the tree imports, reads or assigns (module-level dunders such as
+    ``__version__`` are public)."""
+    return [(ln, f"{m}.{n}") for m, n, ln in _engine_refs(tree)
+            if any(part.startswith("_") and not part.startswith("__")
+                   for part in (f"{m}.{n}" if n else m).split("."))]
+
+
+def test_tools_take_no_private_engine_names():
+    """tools/ and scripts/ read the engine's records, never its private
+    helpers (bench.py is frozen and perfbench/ is the benchmark; both
+    are exempt)."""
+    paths = [p for d in ("tools", "scripts") for p in (ROOT / d).glob("*.py")]
+    assert len(paths) > 5
+    bad = [f"{p.relative_to(ROOT)}:{ln} {name}" for p in paths
+           for ln, name in _private_refs(ast.parse(p.read_text()))]
+    assert not bad, "private engine names in scripts:\n" + "\n".join(bad)
+
+
+def test_private_guard_catches_a_tail_patch_and_a_helper_import():
+    tree = ast.parse(
+        "import codebased_spark.operators.query as q\n"
+        "from codebased_spark.operators.query import _prune_posting_files\n"
+        "from codebased_spark.plans.engine import FtsIndex\n"
+        "def main():\n"
+        "    q._driver_tail = fd\n"
+        "    return q.DRIVER_FINISH_MAX\n"
+    )
+    assert sorted(_private_refs(tree)) == [
+        (2, "codebased_spark.operators.query._prune_posting_files"),
+        (5, "codebased_spark.operators.query._driver_tail")]
 
 
 def _calls(path, func):

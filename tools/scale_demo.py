@@ -1,8 +1,9 @@
 """Scale demonstration (VERDICT r03 #3): build + query at 10x-50x the
 bench corpus (200k and ~1M files), recording build throughput, per-query
-latency (cold path and phrase-df-covered path), WHICH tail each query
-took (driver vs JVM), and the candidate-row count the driver pulled —
-the honest sandbox proxy for "would these plans survive 100x".
+latency (cold path and phrase-df-covered path), and from each search's
+``index.last_trace`` WHICH tail it took (driver vs JVM), the
+candidate-row count the driver pulled and the shards presence pruning
+left it — the honest sandbox proxy for "would these plans survive 100x".
 
 Hot-vs-cold comparison is INTERLEAVED per query (hot first, then cold,
 3 reps each, best-of per arm) rather than sequential passes: this VM's
@@ -55,27 +56,12 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    import codebased_spark.operators.query as q
     from codebased_spark.functions.fts5 import query_phrases
     from codebased_spark.operators.phrasedf import build_phrase_df
     from codebased_spark.plans.engine import build_index
     from codebased_spark.sources.corpus import documents_as_corpus, gen_corpus
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-    # tail instrumentation: record (tail, candidate_rows) per search
-    tails: list[tuple[str, int | None]] = []
-    orig_fd, orig_fj = q._driver_tail, q._jvm_tail
-
-    def fd(spark_, rows, *a, **k):
-        tails.append(("driver", len(rows)))
-        return orig_fd(spark_, rows, *a, **k)
-
-    def fj(*a, **k):
-        tails.append(("jvm", None))
-        return orig_fj(*a, **k)
-
-    q._driver_tail, q._jvm_tail = fd, fj
 
     for n_files in sizes:
         # same corpus mix as bench.py: the driver's documents table (so
@@ -120,20 +106,17 @@ def main() -> None:
             np.sort(a)
             return round(time.time() - t, 3)
 
-        def timed(qq: str) -> tuple[float, tuple[str, int | None]]:
+        def timed(qq: str) -> tuple[float, dict]:
             index._search_cache.clear()
-            tails.clear()
             t = time.time()
             index.search(qq, 32).collect()
-            return round(time.time() - t, 3), (
-                tails[-1] if tails else ("none", None))
+            return round(time.time() - t, 3), index.last_trace
 
         probe_before = probe()
         reps = 3
         cold, hot = {}, {}
         for name, qq in QUERIES.items():
             hot_secs, cold_secs = [], []
-            hot_meta = cold_meta = ("none", None)
             for _ in range(reps):
                 index.phrase_dfs = saved_dfs          # hot arm first
                 sec, hot_meta = timed(qq)
@@ -142,32 +125,16 @@ def main() -> None:
                 sec, cold_meta = timed(qq)
                 cold_secs.append(sec)
             hot[name] = {"sec": min(hot_secs), "reps": hot_secs,
-                         "tail": hot_meta[0], "cand_rows": hot_meta[1]}
+                         "trace": hot_meta}
             cold[name] = {"sec": min(cold_secs), "reps": cold_secs,
-                          "tail": cold_meta[0], "cand_rows": cold_meta[1]}
+                          "trace": cold_meta}
         probe_after = probe()
 
         index.phrase_dfs = saved_dfs
         index._search_cache.clear()
-        tails.clear()
         tb = time.time()
         index.search_batch(list(QUERIES.values()), 32).count()
         batch_sec = round(time.time() - tb, 3)
-
-        # presence pruning at this block count (driver-side, free):
-        # shards each query would schedule vs the total
-        presence = {}
-        if index.term_blocks is not None:
-            from codebased_spark.functions.fts5 import phrase_terms
-
-            shards = {}
-            for name, qq in QUERIES.items():
-                tids = [phrase_terms(p) for p in query_phrases(qq)]
-                shards[name] = len(q._prune_posting_files(
-                    index.posting_files, tids, None, index.term_blocks))
-            presence = {"presence": {
-                "n_shards_total": len(index.posting_files),
-                "shards_scanned": shards}}
 
         lat = sorted(v["sec"] for v in cold.values())
         lat_hot = sorted(v["sec"] for v in hot.values())
@@ -182,15 +149,14 @@ def main() -> None:
             "p50_hot_sec": lat_hot[len(lat_hot) // 2],
             "phrase_df_build_sec": phrase_df_sec,
             "batch6_per_query_sec": round(batch_sec / len(QUERIES), 3),
+            "batch6_trace": index.last_trace,
             "interleaved_reps": reps,
             "hw_np_sort8M_before_sec": probe_before,
             "hw_np_sort8M_after_sec": probe_after,
             "queries": cold,
             "queries_hot": hot,
-            **presence,
         }), flush=True)
 
-    q._driver_tail, q._jvm_tail = orig_fd, orig_fj
     spark.stop()
 
 
