@@ -318,10 +318,11 @@ def q_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sig_mins(n_hashes: int) -> str:
     """The MinHash signature aggregates over tri_codes ``t``."""
-    from codebased_spark.operators.dedup import MINHASH_PRIME, _A, _B
+    from codebased_spark.operators.dedup import MINHASH_A, MINHASH_B, MINHASH_PRIME
 
     return ", ".join(
-        f"min(({_A[i]} * (t.code % {TRIGRAM_KEY_MOD}) + {_B[i]}) % {MINHASH_PRIME})"
+        f"min(({MINHASH_A[i]} * (t.code % {TRIGRAM_KEY_MOD}) + {MINHASH_B[i]})"
+        f" % {MINHASH_PRIME})"
         f" AS sig{i}"
         for i in range(n_hashes)
     )
@@ -436,9 +437,9 @@ def _simhash_sql() -> str:
     (a0, b0 mod 2^61-1) over DISTINCT trigram codes, bit k set iff
     2 * popcount_k > n_trigrams. The 61-bit reassembly sum is HUGEINT in
     DuckDB -> CAST to BIGINT (the sessionize lesson)."""
-    from codebased_spark.operators.dedup import MINHASH_PRIME, _A, _B
+    from codebased_spark.operators.dedup import MINHASH_A, MINHASH_B, MINHASH_PRIME
 
-    a, b = _A[0], _B[0]
+    a, b = MINHASH_A[0], MINHASH_B[0]
     return f"""
 WITH {_TRI_CODES},
 tri AS (SELECT DISTINCT doc_id, code FROM tri_codes),
@@ -502,17 +503,17 @@ def _ann_lsh_sql(dim: int = 64, n_planes: int = 16, probe: int = 0,
                  k: int = 10, max_hamming: int = 3) -> str:
     """DuckDB replica of simsearch.ann_topk_indexed over hyperplane
     signatures. The plane weights are dyadic rationals from the same
-    pure function (_plane_weight), embedded as exact literals; each
+    pure function (plane_weight), embedded as exact literals; each
     plane's dot product is spelled as the same left-associated
     float->double product chain Spark's fold evaluates, so the SIGN of
     every projection is bit-identical across engines. The exact cosine
     re-rank rounds to 6 like the Spark side (same as COSINE_SQL)."""
-    from codebased_spark.operators.simsearch import _plane_weight
+    from codebased_spark.operators.simsearch import plane_weight
 
     planes = []
     for p in range(n_planes):
         dot = " + ".join(
-            f"embedding[{j + 1}]::DOUBLE * ({_plane_weight(p, j)!r})"
+            f"embedding[{j + 1}]::DOUBLE * ({plane_weight(p, j)!r})"
             for j in range(dim)
         )
         planes.append(f"(CASE WHEN ({dot}) >= 0 THEN {1 << p} ELSE 0 END)")
@@ -643,7 +644,7 @@ def q_fts_hot_covered(spark: SparkSession, sf_dir: str) -> DataFrame:
         index = build_index(spark, corpus, idx_dir, num_blocks=8)
         index.driver_direct = False  # pin the DISTRIBUTED covered plan
         build_phrase_df(spark, index, ["table", "merge"])
-        assert index._covering_dfs("table merge") is not None  # covered
+        assert {"table", "merge"} <= set(index.phrase_dfs)  # covered
         hits = index.search("table merge", K_ALL)
         out = (
             index.doc_stats.select("doc_id", "path")

@@ -27,12 +27,12 @@ from codebased_spark.operators.textops import TRIGRAM_KEY_MOD, trigram_codes
 # arithmetic identical in engines that promote (DuckDB -> HUGEINT) and
 # engines that check or wrap (Spark ANSI / non-ANSI).
 MINHASH_PRIME = 2305843009213693951  # 2^61 - 1
-_A = [8191, 5381, 7919, 6151, 4093, 3571, 2861, 1777,
-      7507, 6827, 5749, 4957, 4231, 3917, 3259, 2741]
-_B = [2654435769, 2246822519, 3266489917, 668265263,
-      374761393, 2166136261, 40503, 65599,
-      15485863, 32452843, 49979687, 67867967,
-      86028121, 104395301, 122949823, 141650939]
+MINHASH_A = [8191, 5381, 7919, 6151, 4093, 3571, 2861, 1777,
+             7507, 6827, 5749, 4957, 4231, 3917, 3259, 2741]
+MINHASH_B = [2654435769, 2246822519, 3266489917, 668265263,
+             374761393, 2166136261, 40503, 65599,
+             15485863, 32452843, 49979687, 67867967,
+             86028121, 104395301, 122949823, 141650939]
 
 def _with_trigram_codes(docs: DataFrame, text_col: str) -> DataFrame:
     """docs + ``tri_codes``: the distinct trigram codes of the text."""
@@ -104,12 +104,12 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text", n_hashes: int = 
     """MinHash signature per doc: sig_i = min over trigram keys of
     (a_i * key + b_i) mod (2^61-1), key = code % (2^49-1). Deterministic
     and engine-portable: every term stays below 2^63 for any code point."""
-    assert n_hashes <= len(_A)
+    assert n_hashes <= len(MINHASH_A)
     coded = _with_trigram_codes(docs, text_col)
     sigs = [
         F.expr(
             f"array_min(transform(tri_codes, c -> "
-            f"(({_A[i]}L * (c % {TRIGRAM_KEY_MOD}L) + {_B[i]}L) % {MINHASH_PRIME}L)))"
+            f"(({MINHASH_A[i]}L * (c % {TRIGRAM_KEY_MOD}L) + {MINHASH_B[i]}L) % {MINHASH_PRIME}L)))"
         ).alias(f"sig{i}")
         for i in range(n_hashes)
     ]
@@ -232,7 +232,7 @@ def simhash64(docs: DataFrame, text_col: str = "text") -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    a, b = _A[0], _B[0]
+    a, b = MINHASH_A[0], MINHASH_B[0]
 
     def _simhash(codes):
         shifts = np.arange(61, dtype=np.uint64)

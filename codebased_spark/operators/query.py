@@ -1183,7 +1183,8 @@ def _scan_df(spark, posting_files, fn, schema):
     range source: the shard list rides in the function closure and is
     resolved inside the SAME python eval that scans, so the query's
     one Spark job pays exactly one python round trip per task (a
-    python-RDD source pays two — deserialize + scan, ~0.27 s per job).
+    python-RDD source pays two — deserialize + scan: a bare 4-task
+    job took 0.34-0.37 s against 0.16 s, local[4] on 4 cores).
     The range splits into :func:`_scan_tasks` contiguous slices;
     per-block outputs are independent rows, so results do not depend
     on the slicing."""
@@ -1401,18 +1402,18 @@ def _batch_result_df(spark, out_rows) -> DataFrame:
 # Read-through ceiling for the ZERO-JOB direct feeder: an index whose
 # entire posting store is at most this many bytes is "small" — the
 # embedded-engine regime the reference lives in (ONE repository,
-# "searches in milliseconds", single process). Measured on this class
-# of hardware (healthy windows): direct wins ~2-4x at a 1.4 MB store
-# (58-158 ms vs 250-331 ms) but already LOSES by a 14 MB store (p50
-# 0.94 s vs 0.66 s — the GIL-bound block machinery can't overlap once
-# term-filtered reads grow), so the gate sits at the conservative end
-# of the crossover; above it every query keeps the distributed plan.
+# "searches in milliseconds", single process). Median single search
+# over gen_corpus stores (local[4], 4 cores): direct wins ~3x at a
+# 1.5 MB, 4-shard store (60 ms vs 193 ms) but LOSES at a 14.8 MB,
+# 16-shard store (0.31 s vs 0.23 s — the GIL-bound block machinery
+# can't overlap once term-filtered reads grow), so the gate sits at
+# the conservative end of the crossover; above it every query keeps
+# the distributed plan.
 DRIVER_DIRECT_MAX_BYTES = 4 * 1024 * 1024
 # ...and at most this many shards: the serial driver scan costs
 # ~per-block-work x n_blocks, so a small-BYTES store fragmented into
-# many blocks loses to the distributed job floor anyway (measured r6:
-# 32-shard 2 MB store — direct ~0.5 s vs distributed ~0.4 s; 4-shard
-# repo store — direct 0.06-0.16 s vs ~0.4 s). Setting
+# many blocks meets the distributed job floor (same probe: a 2.2 MB,
+# 32-shard store — direct 0.18 s vs distributed 0.17 s). Setting
 # FtsIndex.driver_direct pins either route regardless of both gates.
 DRIVER_DIRECT_MAX_SHARDS = 8
 # pyarrow's C++ reader releases the GIL, so a few reader threads

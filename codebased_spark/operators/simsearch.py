@@ -74,7 +74,7 @@ def cosine_topk(
     )
 
 
-def _plane_weight(p: int, j: int) -> float:
+def plane_weight(p: int, j: int) -> float:
     """Deterministic pseudo-random weight in [-1, 1) for plane p, dim j —
     a pure function (no RNG state) so every engine/run agrees."""
     x = (1103515245 * (p * 131071 + j) + 12345) % (1 << 31)
@@ -87,7 +87,7 @@ def hyperplane_signatures(
     """Sign-of-projection LSH signature (one int column) per vector."""
     sig = F.lit(0).cast("long")
     for p in range(n_planes):
-        w = F.array(*[F.lit(_plane_weight(p, j)) for j in range(dim)])
+        w = F.array(*[F.lit(plane_weight(p, j)) for j in range(dim)])
         sig = sig + F.when(_dot(F.col(vec_col), w) >= 0, F.lit(1 << p)).otherwise(F.lit(0))
     return embeddings.select("vec_id", F.col(vec_col), sig.alias("lsh_sig"))
 

@@ -42,6 +42,9 @@ body and tail — nothing is ever materialized on the driver either way.
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict, deque
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -72,6 +75,10 @@ DELETES_SCHEMA = "doc_id long, pblock int"
 # rolling per-index query-log capacity (driver memory: ~a few MB of
 # strings at worst); mining needs frequency ranks, not full history
 QUERY_LOG_MAX = 10_000
+# per-handle search cache capacity (least recently used entry goes
+# first): each entry holds a top-k result DataFrame and its Arrow
+# local relation
+SEARCH_CACHE_MAX = 256
 
 
 def _join(base: str, *parts: str) -> str:
@@ -273,8 +280,10 @@ class FtsIndex:
         # Q13 search cache (codebased/index.py:186-209): per-(query, k)
         # memo of materialized results; a reload (incremental commit
         # returns a fresh FtsIndex) starts clean, mirroring the
-        # clear-on-commit at codebased/index.py:668-669.
-        self._search_cache: dict[tuple[str, int], DataFrame] = {}
+        # clear-on-commit at codebased/index.py:668-669. An LRU of
+        # SEARCH_CACHE_MAX entries, so a long-lived handle stays bounded.
+        self._search_cache: "OrderedDict[tuple[str, int], DataFrame]" = OrderedDict()
+        self._search_cache_lock = threading.Lock()
         # hot-phrase df side table (operators/phrasedf.py): {} when
         # absent or stale; queries whose every phrase is covered take
         # the known-idf WAND fast path (bit-identical results)
@@ -292,8 +301,6 @@ class FtsIndex:
         # query_log(index.query_log) replaces the corpus-bigram
         # bootstrap once real traffic exists. A deque so a long-lived
         # service never grows it unbounded.
-        from collections import deque
-
         self.query_log: "deque[str]" = deque(maxlen=QUERY_LOG_MAX)
         self.last_trace: "dict | None" = None
 
@@ -363,15 +370,28 @@ class FtsIndex:
         (:meth:`search_batch`'s route)."""
         self.query_log.append(query)
         key = (query, top_k)
-        hit = self._search_cache.get(key)
+        with self._search_cache_lock:
+            hit = self._search_cache.pop(key, None)
+            if hit is not None:  # re-inserted as the most recent
+                self._search_cache[key] = hit
         if hit is not None:
             from codebased_spark.operators.query import _new_trace
 
             self.last_trace = _new_trace(None, None, "cache")
             return hit
         out = self._search_batch([query], top_k).drop("qid")
-        self._search_cache[key] = out
+        with self._search_cache_lock:
+            self._search_cache[key] = out
+            while len(self._search_cache) > SEARCH_CACHE_MAX:
+                self._search_cache.popitem(last=False)
         return out
+
+    def clear_search_cache(self) -> None:
+        """Forget every memoized search, so the next search of each
+        (query, top_k) runs its scan (what a timing of uncached
+        searches needs)."""
+        with self._search_cache_lock:
+            self._search_cache.clear()
 
     def _task_deletes_dir(self) -> "str | None":
         """Tombstone dir as query tasks open it (fsio.canonical_uri) —

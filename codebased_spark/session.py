@@ -38,12 +38,13 @@ def one_row_df(spark: SparkSession, schema: str, row: tuple):
     """Single-row DataFrame as ONE JVM-native task (a 1-partition
     range + literal projection).
 
-    The obvious ``createDataFrame([row]).coalesce(1)`` costs ~5 s per
-    write on a 32-core session: the local relation parallelizes into
+    The obvious ``createDataFrame([row]).coalesce(1)`` is several
+    times slower: the local relation parallelizes into
     ``defaultParallelism`` python slices and ``coalesce(1)`` folds them
     into a single task that replays every python partition
-    sequentially (one python-worker round trip each). Measured r7:
-    5.5-7.2 s vs ~0.2 s for this shape — and the engine writes a
+    sequentially, so its cost grows with the core count. A one-row
+    parquet write took 0.75-0.78 s that way against 0.13-0.16 s for
+    this shape (local[4], 4 cores) — and the engine writes a
     single-row table (corpus_stats, IVF centroids) on every build and
     every incremental commit. ``schema`` is a DDL string
     (``StructType.fromDDL``), so a parameterized type such as

@@ -107,7 +107,7 @@ def test_concurrent_cache_clear_is_safe(spark, shared_index):
         out = {}
         for q in QUERIES:
             out[q] = _hits(index, q)
-            index._search_cache.clear()
+            index.clear_search_cache()
         return out
 
     with ThreadPoolExecutor(max_workers=8) as ex:

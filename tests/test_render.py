@@ -2,7 +2,9 @@
 reference's own unit expectations (tests/test_main.py:854-1035) ported
 verbatim, plus merge/render/cache behavior."""
 
+import sys
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from codebased_spark.operators.render import (
     Query,
@@ -151,3 +153,58 @@ def test_search_cache(spark, tmp_path):
     t0 = time.time()
     a.collect()
     assert time.time() - t0 < 2.0
+
+
+def test_search_cache_is_a_bounded_lru(spark, tmp_path, monkeypatch):
+    from codebased_spark.plans.engine import SEARCH_CACHE_MAX, build_index
+    from codebased_spark.sources.corpus import SIMPLE_REPO, fixture_corpus
+
+    idx = build_index(spark, fixture_corpus(spark, SIMPLE_REPO),
+                      str(tmp_path / "c"), num_blocks=2)
+    scans = []
+
+    class Result:
+        def __init__(self, key):
+            self.key = key
+
+        def drop(self, _col):
+            return self
+
+    def fake_batch(queries, top_k):  # the cache, not the scan, is under test
+        scans.append(queries[0])
+        return Result((queries[0], top_k))
+
+    monkeypatch.setattr(idx, "_search_batch", fake_batch)
+    kept = idx.search("q0", 10)
+    for i in range(1, SEARCH_CACHE_MAX + 5):
+        idx.search(f"q{i}", 10)
+        if i % 8 == 0:
+            assert idx.search("q0", 10) is kept  # a hit refreshes recency
+    assert len(idx._search_cache) == SEARCH_CACHE_MAX
+    assert ("q0", 10) in idx._search_cache
+    assert ("q1", 10) not in idx._search_cache  # least recently used
+    assert scans.count("q0") == 1 and len(scans) == SEARCH_CACHE_MAX + 5
+    idx.clear_search_cache()
+    assert len(idx._search_cache) == 0
+    idx.search("q0", 10)
+    assert scans.count("q0") == 2
+
+    # concurrent searches and clears: the bound holds and no entry is
+    # filed under another key
+    def worker(w):
+        for i in range(400):
+            key = f"s{(w * 7 + i * 13) % (SEARCH_CACHE_MAX + 40)}"
+            assert idx.search(key, 10).key == (key, 10)
+            if i % 97 == 0:
+                idx.clear_search_cache()
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as ex:
+            for f in [ex.submit(worker, w) for w in range(8)]:
+                f.result(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(idx._search_cache) <= SEARCH_CACHE_MAX
+    assert all(v.key == k for k, v in idx._search_cache.items())

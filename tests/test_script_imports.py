@@ -119,15 +119,72 @@ def _private_refs(tree):
                    for part in (f"{m}.{n}" if n else m).split("."))]
 
 
+def _index_private_members():
+    """Underscore-prefixed methods and ``self._x`` attributes of
+    ``plans.engine.FtsIndex``, read from its source."""
+    tree = ast.parse((ROOT / "codebased_spark/plans/engine.py").read_text())
+    cls = next(n for n in tree.body
+               if isinstance(n, ast.ClassDef) and n.name == "FtsIndex")
+    names = {n.name for n in cls.body if isinstance(n, ast.FunctionDef)}
+    names |= {n.attr for n in ast.walk(cls) if isinstance(n, ast.Attribute)
+              and isinstance(n.value, ast.Name) and n.value.id == "self"}
+    return {n for n in names if n.startswith("_") and not n.startswith("__")}
+
+
+def _private_index_attrs(tree, private=None):
+    """(lineno, name) of every attribute access, on any object, to a
+    private ``FtsIndex`` member (an index handle is not an engine module
+    alias, so ``_private_refs`` cannot see it)."""
+    private = _index_private_members() if private is None else private
+    return [(n.lineno, n.attr) for n in ast.walk(tree)
+            if isinstance(n, ast.Attribute) and n.attr in private]
+
+
 def test_tools_take_no_private_engine_names():
     """tools/ and scripts/ read the engine's records, never its private
-    helpers (bench.py is frozen and perfbench/ is the benchmark; both
-    are exempt)."""
+    helpers or an index handle's private members (bench.py is frozen
+    and perfbench/ is the benchmark; both are exempt)."""
     paths = [p for d in ("tools", "scripts") for p in (ROOT / d).glob("*.py")]
     assert len(paths) > 5
-    bad = [f"{p.relative_to(ROOT)}:{ln} {name}" for p in paths
-           for ln, name in _private_refs(ast.parse(p.read_text()))]
+    private = _index_private_members()
+    assert "_search_cache" in private
+    bad = []
+    for p in paths:
+        tree = ast.parse(p.read_text())
+        bad += [f"{p.relative_to(ROOT)}:{ln} {name}"
+                for ln, name in _private_refs(tree)
+                + _private_index_attrs(tree, private)]
     assert not bad, "private engine names in scripts:\n" + "\n".join(bad)
+
+
+def test_entry_takes_no_private_engine_names():
+    """The driver contract writes its oracle SQL from public engine
+    names, and that SQL is byte-identical to what the private names
+    produced (sha256 of each affected query's text)."""
+    import hashlib
+
+    import __spark_entry__ as entry
+
+    tree = ast.parse((ROOT / "__spark_entry__.py").read_text())
+    assert _private_refs(tree) == [] and _private_index_attrs(tree) == []
+    sql = entry.oracle_sql()
+    assert {name: hashlib.sha256(sql[name].encode()).hexdigest()[:16] for name in (
+        "minhash_signatures", "simhash64", "lsh_candidate_pairs", "ann_topk_lsh")} == {
+        "minhash_signatures": "86d0e8fadf96fd0a",
+        "simhash64": "3a603ce57e7be85b",
+        "lsh_candidate_pairs": "ea93fe241d63bebf",
+        "ann_topk_lsh": "82fe5a0679b0ba58",
+    }
+
+
+def test_private_guard_catches_a_search_cache_reach_in():
+    tree = ast.parse(
+        "def main(index):\n"
+        "    index._search_cache.clear()\n"
+        "    index.clear_search_cache()\n"
+        "    return index.last_trace\n"
+    )
+    assert _private_index_attrs(tree) == [(2, "_search_cache")]
 
 
 def test_private_guard_catches_a_tail_patch_and_a_helper_import():

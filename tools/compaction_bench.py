@@ -89,7 +89,7 @@ def main() -> None:
         for q in QUERIES:
             best = None
             for _ in range(reps):
-                index._search_cache.clear()
+                index.clear_search_cache()
                 t = time.time()
                 index.search(q, 32).collect()
                 el = time.time() - t

@@ -121,14 +121,14 @@ def main() -> None:
 
     # phase 2: throughput on distinct queries (cache-proof)
     pool = _distinct_pool(48)
-    index._search_cache.clear()
+    index.clear_search_cache()
     t0 = time.time()
     for q in pool:
         index.search(q, 16).collect()
     seq_sec = time.time() - t0
 
     pool2 = [q + " batch" for q in pool]  # distinct from phase-2a too
-    index._search_cache.clear()
+    index.clear_search_cache()
     chunks = [pool2[i::n_threads] for i in range(n_threads)]
     t0 = time.time()
     with ThreadPoolExecutor(max_workers=n_threads) as ex:

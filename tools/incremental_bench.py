@@ -107,7 +107,7 @@ def main() -> None:
     t = time.time()
     index3.search("hello world", 32).count()
     q_cold_first_sec = round(time.time() - t, 3)
-    index3._search_cache.clear()
+    index3.clear_search_cache()
 
     index3.search("warmup", 10).collect()
     q_times = {}

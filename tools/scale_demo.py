@@ -107,7 +107,7 @@ def main() -> None:
             return round(time.time() - t, 3)
 
         def timed(qq: str) -> tuple[float, dict]:
-            index._search_cache.clear()
+            index.clear_search_cache()
             t = time.time()
             index.search(qq, 32).collect()
             return round(time.time() - t, 3), index.last_trace
@@ -131,7 +131,7 @@ def main() -> None:
         probe_after = probe()
 
         index.phrase_dfs = saved_dfs
-        index._search_cache.clear()
+        index.clear_search_cache()
         tb = time.time()
         index.search_batch(list(QUERIES.values()), 32).count()
         batch_sec = round(time.time() - tb, 3)
