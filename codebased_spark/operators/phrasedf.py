@@ -23,9 +23,10 @@ dfs next to the index:
   every idf known in-task, multi-phrase blocks emit their exact branch
   top-k (<= 2*top_k rows) instead of the k-skyband (one emission
   prune, operators/query._emission_prune, serves both), the blocks
-  emit no df-stat rows at all, and the driver tail's candidate bound
-  becomes exact (plain collect, no limit probe —
-  operators/query._tail_bound).
+  emit no df-stat rows at all, and no per-task share caps them
+  (operators/query._tail_bound). A query whose skyband outgrows its
+  share is rescanned through the same covered path, with the dfs its
+  first pass summed.
 - Commits keep a live table current: once a commit lands,
   incremental_update recomputes only the blocks it touched
   (:func:`update_phrase_df`, a per-block splice). Until then the

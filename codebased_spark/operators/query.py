@@ -5,7 +5,9 @@ One query path — a single search is a batch of one
 
   driver: parse (_parse_batch; sub-trigram phrases drop out, as in
     |     FTS5) -> presence-prune the shard list (_prune_batch) ->
-    |     candidate-row bound, charged per task (_tail_bound)
+    |     exact candidate-row bound and per-task share (_tail_bound),
+    |     charged per task; a batch over DRIVER_FINISH_MAX splits into
+    |     sub-batches that fit (_sub_batches)
     |  scan feeder, the ONE fork:
     |    Spark   spark.range over the shard list -> mapInPandas
     |            (_scan_df): one Spark job
@@ -24,22 +26,22 @@ One query path — a single search is a batch of one
     |  phrase conjunction (_conjoin) and the emission prune
     |  (_emission_prune) per block, then once more across the task's
     |  blocks -> per task: one summed df-stat row per (query, phrase)
-    |  and the surviving doc rows (<= 2*top_k per query single-phrase,
-    |  a k-skyband multi-phrase)
-  tail (_finish): ONE collect of the candidates -> df agg, idf, BM25
-     sum, two-branch top-k, union/dedupe/top-k per query, in numpy
-     (bit-identical float pipeline); candidate sets beyond
-     DRIVER_FINISH_MAX run the JVM flat plan against the same
-     persisted candidates (reference CTE: codebased/search.py:240-302)
+    |  and the surviving doc rows (<= 2*top_k per query single-phrase
+    |  or covered; a k-skyband multi-phrase, capped at the query's
+    |  share: past it, one overflow marker row replaces the doc rows)
+  tail (_finish): plain collects of at most DRIVER_FINISH_MAX rows,
+     each finished on the driver in numpy (_driver_tail); a query that
+     carried a marker already has its exact dfs (stat rows are taken
+     before any prune), so it is rescanned as a covered query.
 
 Stores pyarrow cannot reach (FtsIndex.posting_files == []) swap the
 pyarrow reader for the Spark reader (_generic_scan, behind
 search_index_batch): a term filter pushed into the posting DataFrame
-scan, one applyInPandas group per pblock cogrouped with the tombstone
-rows, each group one block for the same task body; its candidates
-take the same tail with no bound (a limit-guarded collect). The
-phrase-df stats job (operators/phrasedf.py) runs its own body over
-either reader; it counts each phrase's block df from the same
+scan, the rows (and tombstones, as tagged rows) hash-partitioned by
+pblock into _scan_tasks tasks and sorted, each task's pblock runs its
+blocks for the same task body; its candidates take the same bound and
+tail. The phrase-df stats job (operators/phrasedf.py) runs its own body
+over either reader; it counts each phrase's block df from the same
 _phrase_block_docs pass.
 
 Every search fills one trace record (the ``trace`` dict argument;
@@ -48,11 +50,11 @@ anyway, so tracing adds no job, no collect and no branch: ``route``
 (direct / spark / generic, or none when nothing is scanned),
 ``shards_total`` and ``shards_scanned`` (before and after presence
 pruning; None behind the Spark reader, which has no shard list),
-``covered`` (phrase-df-covered queries), ``candidate_rows`` (rows the
-driver collected; None on the JVM tail), ``tail`` (driver / jvm) and
-seconds for ``parse_prune_s``, ``scan_collect_s`` and ``finish_s``.
-On the JVM tail the scan runs inside the tail's first job, so
-``finish_s`` holds it.
+``covered`` (phrase-df-covered queries), ``rescanned`` (queries re-run
+with the dfs their first pass counted), ``collects`` (the rows of each
+collect, first-pass sub-batches then rescans), ``candidate_rows``
+(their sum) and seconds for ``parse_prune_s``, ``scan_collect_s`` and
+``finish_s`` (the last two summed over the collects).
 
 Exactness: identical scores to operators/score.py (brute force) and to
 SQLite FTS5 — phrase tf via consecutive-position intersection equals
@@ -72,25 +74,18 @@ for multi-trigram phrases is irreducible, and what CAN be pruned is:
 1. Row groups: shards store term-sorted rows in small parquet row
    groups; the pyarrow scan's term filter reads only groups whose
    [min,max] covers a query trigram (~10x less read per query).
-2. Emission (_emission_prune — one function, called by the uncovered
-   and covered block paths and once more by the task body across its
-   blocks): for single-phrase queries both final branches order by
-   (positive global idf) x norm(tf, dl), so each block, and then each
-   task across its blocks, emits only its local branch top-k by norm —
-   any doc it drops is beaten by >= k docs it kept under every
-   possible idf. df stats
-   are taken before pruning. Multi-phrase scores mix per-phrase idfs
-   unknown at task time; those emit their Pareto k-skyband
-   (_pareto_survivors). Queries whose phrase dfs are all known (the
-   phrase-df side table) rank exactly and emit the union of their
-   branch top-ks.
+2. Emission (_emission_prune, per block and once more per task): a
+   single-phrase or covered query emits the union of its branch
+   top-ks, a multi-phrase one its Pareto k-skyband; df stats are taken
+   before pruning. The skyband alone has no static size, hence the
+   per-task share and the rescan.
 3. Block-Max WAND proper: a single-trigram phrase occurring only in the
    content column needs no position verification (tf = trigram tf, df =
    stored row df), so the per-chunk (skip_max_tf, skip_min_dl) bound is
    sound: chunks are visited bound-descending and decoding stops at the
    running k-th norm — cold chunks are never decoded at all
    (_single_trigram_wand; bounds share _norm_np's float pipeline with
-   the JVM expression, so ordering decisions are bit-consistent). With
+   the driver finish, so ordering decisions are bit-consistent). With
    every phrase df known, the same bound argument extends to
    multi-trigram phrases through per-doc tf upper bounds
    (_covered_block_frame).
@@ -100,6 +95,7 @@ from __future__ import annotations
 
 import threading
 import time
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -121,9 +117,9 @@ _POS_BITS = 32  # (local doc index << 32) | shifted position
 
 
 def _norm_np(tf, dl, avgdl: float):
-    """BM25 tf-normalization, numpy mirror of :func:`_norm` — SAME
-    operation order as the Catalyst expression so task-side ranking
-    decisions agree with the JVM scores bit-for-bit."""
+    """BM25 tf-normalization: the one spelling every ranking site uses
+    (task-side prunes, WAND bounds, the driver finish), so task-side
+    ranking decisions agree with the final scores bit-for-bit."""
     tf = tf.astype(np.float64)
     return tf * (K1 + 1.0) / (tf + K1 * ((1.0 - B) + (B * dl.astype(np.float64)) / avgdl))
 
@@ -131,8 +127,8 @@ def _norm_np(tf, dl, avgdl: float):
 def _rank_rows(tf_mat, dl, idfs, avgdl: float):
     """rank = -sum_i idf_i * norm(tf_i, dl) over a (n, n_ph) tf matrix.
 
-    THE accumulation-order-defining loop: the JVM literal chain
-    (lit(0.0) + w0*n0 + w1*n1 + ...), the driver tail (_finish_rows),
+    THE accumulation-order-defining loop ((0.0 + w0*n0) + w1*n1 + ...):
+    the driver tail (_finish_rows),
     the covered-WAND bounds (_covered_block_frame) and the known-idf
     emission prune (_emission_prune) must all rank through the SAME
     float pipeline, or a doc pruned in a
@@ -262,10 +258,8 @@ class _Row:
     def members(self, doc_subset: np.ndarray) -> np.ndarray:
         """Subset of doc_subset present in this posting list — decodes
         only the chunks the candidates could live in, and only their
-        SCALAR streams (r4: this previously went through _chunk and
-        paid the position decode for every touched chunk; positions are
-        now first decoded by rows_for, for the post-intersection
-        survivors only)."""
+        SCALAR streams (positions are decoded by rows_for, for the
+        post-intersection survivors only)."""
         cids = self._chunks_for(doc_subset)
         cids = cids[cids < self.skip_last.size]
         if cids.size == 0:
@@ -507,10 +501,9 @@ def _pareto_survivors(tfs, dl, doc_ids, avgdl, top_k, chunk=1024):
     doc with >= top_k dominators can never reach the global branch
     top-k.
 
-    Sort-filter-skyline sweep (replaces the r2 O(n²·p) all-pairs matrix
-    and its 8,192-doc cap — VERDICT r02 #4): docs are visited in a
-    LINEAR EXTENSION of the dominance order, (-sum of norms, doc_id) —
-    any dominator of X sorts strictly before X (strict dominance raises
+    Sort-filter-skyline sweep: docs are visited in a LINEAR EXTENSION
+    of the dominance order, (-sum of norms, doc_id) — any dominator of
+    X sorts strictly before X (strict dominance raises
     the norm sum; all-equal tie-dominance has the smaller doc_id). Each
     chunk counts its true dominators among (a) previously KEPT docs and
     (b) earlier rows of its own chunk, both plain `>=`-all tests: a
@@ -782,8 +775,8 @@ def _single_trigram_wand(r: _Row, top_k: int, avgdl: float):
 
     Exactness: norm is monotone in tf (+) and dl (-), so
     norm(chunk_max_tf, chunk_min_dl) >= norm(tf_d, dl_d) for every doc d
-    in the chunk; bounds and norms share one float pipeline (_norm_np ==
-    JVM _norm bit-for-bit), and chunks at bound == threshold are still
+    in the chunk; bounds and norms share one float pipeline (_norm_np),
+    and chunks at bound == threshold are still
     decoded so doc_id tie-breaks stay exact."""
     bounds = _norm_np(r.skip_max_tf, r.skip_min_dl, avgdl)
     order = np.argsort(-bounds, kind="stable")
@@ -1043,7 +1036,8 @@ _BATCH_COLS = ["qid", "kind", "phrase", "df_all", "df_name", "doc_id", "dl",
                "tfs_all", "tfs_name"]
 
 
-def _candidate_body(queries_terms, top_k, avgdl, known_idfs_by_qid=None):
+def _candidate_body(queries_terms, top_k, avgdl, known_idfs_by_qid=None, *,
+                    share=None):
     """The candidate task body for a batch of queries (a single search
     is a batch of one): a generator function over (pblock, rows,
     deleted) blocks — ``rows`` the block's {(term, col) -> _Row},
@@ -1055,9 +1049,10 @@ def _candidate_body(queries_terms, top_k, avgdl, known_idfs_by_qid=None):
     ``known_idfs_by_qid`` (phrase-df side table coverage) take the
     covered WAND path and emit no stat rows. The output is one summed
     df-stat row per (query, phrase) plus each query's doc rows after
-    one more :func:`_emission_prune` across the task's blocks —
-    O(top_k) rows per query per task, the unit :func:`_tail_bound`
-    charges."""
+    one more :func:`_emission_prune` across the task's blocks.
+    ``share`` (:func:`_tail_bound`'s; None = no cap) caps an uncovered
+    query's doc rows per task: past it the query yields one overflow
+    marker row (kind 2) in their place, beside its full stat rows."""
     known_idfs_by_qid = known_idfs_by_qid or {}
     n_ph_by_qid = {qid: len(tids) for qid, tids in queries_terms}
 
@@ -1079,10 +1074,9 @@ def _candidate_body(queries_terms, top_k, avgdl, known_idfs_by_qid=None):
                 if frame is not None:
                     frames_by_qid.setdefault(qid, []).append(frame)
         if stat_sums:
-            # df stats are additive across blocks and every consumer
-            # SUMS them (driver finish and JVM plan alike), so one
-            # partial-sum row per (query, phrase) per task replaces one
-            # row per block
+            # df stats are additive across blocks and the driver sums
+            # them, so one partial-sum row per (query, phrase) per task
+            # replaces one row per block
             yield pd.DataFrame(
                 [(qid, 0, pi, da, dn, 0, 0, None, None)
                  for (qid, pi), (da, dn) in sorted(stat_sums.items())],
@@ -1091,7 +1085,12 @@ def _candidate_body(queries_terms, top_k, avgdl, known_idfs_by_qid=None):
             docs, dl, ta, tn = _emission_prune(
                 *(np.concatenate(parts) for parts in zip(*frames)),
                 n_ph_by_qid[qid], top_k, avgdl, known_idfs_by_qid.get(qid))
-            yield _doc_frame_pdf(docs, dl, ta, tn, qid=qid)
+            if (share is not None and docs.size > share
+                    and qid not in known_idfs_by_qid):
+                yield pd.DataFrame([(qid, 2, -1, 0, 0, 0, 0, None, None)],
+                                   columns=_BATCH_COLS)
+            else:
+                yield _doc_frame_pdf(docs, dl, ta, tn, qid=qid)
 
     return body
 
@@ -1123,59 +1122,73 @@ def _shard_reader(needed, deletes_dir, body):
 
 
 def _batch_candidates_fn(queries_terms, needed, deletes_dir, top_k, avgdl,
-                         known_idfs_by_qid=None):
+                         known_idfs_by_qid=None, *, share=None):
     """The candidate task body behind the pyarrow reader: the function
     mapInPandas or :func:`_direct_scan_rows` runs over (pblock, path)
     row batches for a batch of queries."""
     return _shard_reader(needed, deletes_dir, _candidate_body(
-        queries_terms, top_k, avgdl, known_idfs_by_qid))
+        queries_terms, top_k, avgdl, known_idfs_by_qid, share=share))
 
 
 def _generic_scan(postings: DataFrame, deletes, needed, body, schema: str):
     """The Spark reader, for stores pyarrow cannot reach: ``postings``
     (the posting DataFrame) filtered to the ``needed`` terms — the
-    filter is pushed into the parquet scan — and grouped by pblock,
-    each group one (pblock, rows, deleted) block for ``body`` through
-    applyInPandas. ``deletes`` (a doc_id DataFrame, or None) is
-    cogrouped per pblock, so tombstones arrive as shuffled rows, never
-    through the driver or a closure. A group returns everything
-    ``body`` yields for its block, as ``schema`` rows."""
+    filter is pushed into the parquet scan — hash-partitioned by pblock
+    into :func:`_scan_tasks` tasks and sorted, so ``body`` runs once per
+    task over its pblock runs as (pblock, rows, deleted) blocks.
+    ``deletes`` (a doc_id DataFrame, or None) rides the same shuffle as
+    tagged rows (``dead`` >= 0), never through the driver or a closure.
+    Returns everything ``body`` yields, as ``schema`` rows."""
     import pyarrow as pa
-    from pyspark.sql.types import StructType
 
     from codebased_spark.operators.docs import DOC_ID_BLOCK_BITS
 
-    names = StructType.fromDDL(schema).names
+    rows = postings.filter(F.col("term").isin(needed)).select(
+        "pblock", F.lit(-1).cast("long").alias("dead"),
+        *_POSTING_READ_COLUMNS)
+    if deletes is not None:
+        # -1, not null, in the integer columns: a null makes a pandas
+        # column float64, and trigram ids need all 64 bits
+        types = {f.name: f.dataType for f in rows.schema.fields}
+        rows = rows.unionByName(deletes.select(
+            F.shiftright("doc_id", DOC_ID_BLOCK_BITS).alias("pblock"),
+            F.col("doc_id").alias("dead"),
+            *[F.lit(-1 if c in ("term", "col", "df") else None)
+              .cast(types[c]).alias(c) for c in _POSTING_READ_COLUMNS]))
 
-    def per_group(left, right):
-        frames = []
-        if len(left):
-            deleted = None
-            if right is not None and len(right):
-                deleted = np.unique(right["doc_id"].to_numpy().astype("int64"))
-            rows = _rows_from_table(pa.Table.from_pandas(
-                left[_POSTING_READ_COLUMNS], preserve_index=False))
-            frames = list(body([(int(left["pblock"].iloc[0]), rows, deleted)]))
-        if not frames:
-            return pd.DataFrame(columns=names)
-        return pd.concat(frames, ignore_index=True)
+    def block(run):
+        part = pd.concat([p for _, p in run])
+        dead = part["dead"].to_numpy()
+        tomb = dead >= 0
+        if not tomb.all():  # else: tombstones of a block without hits
+            yield int(run[0][0]), _rows_from_table(pa.Table.from_pandas(
+                part.loc[~tomb, _POSTING_READ_COLUMNS], preserve_index=False)
+            ), np.unique(dead[tomb]) if tomb.any() else None
 
-    grouped = postings.filter(F.col("term").isin(needed)) \
-        .select("pblock", *_POSTING_READ_COLUMNS).groupBy("pblock")
-    if deletes is None:
-        return grouped.applyInPandas(lambda pdf: per_group(pdf, None), schema)
-    dd = deletes.select(
-        F.shiftright("doc_id", DOC_ID_BLOCK_BITS).cast("int").alias("pblock"),
-        "doc_id",
-    )
-    return grouped.cogroup(dd.groupBy("pblock")).applyInPandas(per_group, schema)
+    def blocks(it):
+        # every body consumes all its blocks, so ``it`` is drained: a
+        # Python worker whose function leaves input unread is not reused
+        run: list = []  # (pblock, frame) pieces of the run in progress
+        for pdf in it:
+            for pb, part in pdf.groupby("pblock", sort=False):
+                if run and run[0][0] != pb:
+                    yield from block(run)
+                    run = []
+                run.append((pb, part))
+        if run:
+            yield from block(run)
+
+    n_tasks = _scan_tasks(postings.sparkSession)
+    return rows.repartition(n_tasks, "pblock").sortWithinPartitions(
+        "pblock").mapInPandas(lambda it: body(blocks(it)), schema)
 
 
-def _scan_tasks(spark, n_files: int) -> int:
-    """Task count of a Spark shard scan over ``n_files`` shards: the
-    slicing :func:`_scan_df` uses and the task count :func:`_tail_bound`
-    charges on the Spark feeder (one definition, so they cannot drift)."""
-    return min(n_files, max(2, spark.sparkContext.defaultParallelism))
+def _scan_tasks(spark, n_files: "int | None" = None) -> int:
+    """Task count of a Spark scan over ``n_files`` shards (None: the
+    generic reader's pblock partitions), as :func:`_scan_df`,
+    :func:`_generic_scan` and :func:`_tail_bound` use it."""
+    n = max(2, spark.sparkContext.defaultParallelism)
+    return n if n_files is None else min(n_files, n)
 
 
 def _scan_df(spark, posting_files, fn, schema):
@@ -1225,15 +1238,13 @@ def search_index_files_batch(
     One parse/prune, one task body (:func:`_batch_candidates_fn`) and
     one scoring tail (:func:`_finish`) serve every caller. The only
     fork is the scan feeder:
-    - ``direct=False``: Spark (:func:`_scan_df`) — ONE Spark job for
-      the whole batch when the tail finishes on the driver;
+    - ``direct=False``: Spark (:func:`_scan_df`) — ONE Spark job for a
+      batch that fits DRIVER_FINISH_MAX and needs no rescan;
     - ``direct=True``: the same task body run driver-side
       (:func:`_direct_scan_rows`) — ZERO Spark jobs, the latency floor
       for small (embedded-regime) stores; FtsIndex picks it by the
-      DRIVER_DIRECT_MAX_BYTES / _MAX_SHARDS gate. Its rows are in driver
-      memory already, so they always finish there; a batch whose
-      candidate bound exceeds DRIVER_FINISH_MAX takes the Spark feeder
-      instead, where the JVM tail can run.
+      DRIVER_DIRECT_MAX_BYTES / _MAX_SHARDS gate. Sub-batches and
+      rescans stay on it.
 
     ``phrase_dfs_by_query`` ({qid: one (df_all, df_name) per kept
     phrase}, from the phrase-df side table) enables the covered fast
@@ -1249,39 +1260,34 @@ def search_index_files_batch(
     parsed, known_idfs_by_qid = _parse_batch(
         queries, n_docs, phrase_dfs_by_query)
     trace["covered"] = len(known_idfs_by_qid)
-    if parsed and posting_files:
-        posting_files, parsed, known_idfs_by_qid, needed = _prune_batch(
-            posting_files, parsed, known_idfs_by_qid, presence)
+    files = posting_files if parsed else []
+    if files:
+        files, parsed, known_idfs_by_qid, _ = _prune_batch(
+            files, parsed, known_idfs_by_qid, presence)
     trace["parse_prune_s"] = time.perf_counter() - t0
-    if not parsed or not posting_files or top_k < 1:
+    if not parsed or not files or top_k < 1:
         return _batch_result_df(spark, [])
-    trace["shards_scanned"] = len(posting_files)
-    # a covered query emits no stat rows and at most the exact union of
-    # its two branch top-ks per task: charged like a single phrase
-    phrase_counts = [1 if qi in known_idfs_by_qid else len(phrases)
-                     for qi, phrases, _ in parsed]
+    trace.update(route="direct" if direct else "spark",
+                 shards_scanned=len(files))
 
-    def task_fn():
-        return _batch_candidates_fn(
-            [(qi, tids) for qi, _, tids in parsed], needed, deletes_dir,
-            top_k, avgdl, known_idfs_by_qid)
+    def feed(batch, known):
+        files_b, batch, known, needed = _prune_batch(
+            files, batch, known, presence)
+        chunks = _direct_chunks(files_b) if direct else None
+        n_tasks = len(chunks) if direct else _scan_tasks(spark, len(files_b))
 
-    if direct:
-        chunks = _direct_chunks(posting_files)
-        bound, _exact = _tail_bound(len(chunks), phrase_counts, top_k)
-        if bound <= DRIVER_FINISH_MAX:
-            trace["route"] = "direct"
-            t = time.perf_counter()
-            return _driver_tail(spark, _direct_scan_rows(task_fn, chunks),
-                                parsed, phrase_dfs_by_query, n_docs, avgdl,
-                                top_k, trace, t)
-    trace["route"] = "spark"
-    bound, exact = _tail_bound(
-        _scan_tasks(spark, len(posting_files)), phrase_counts, top_k)
-    cand = _scan_df(spark, posting_files, task_fn(), BATCH_SCHEMA)
-    return _finish(spark, cand, parsed, phrase_dfs_by_query,
-                   known_idfs_by_qid, n_docs, avgdl, top_k, trace, bound,
-                   exact)
+        def collect(share):
+            fn = partial(_batch_candidates_fn,
+                         [(qi, tids) for qi, _, tids in batch], needed,
+                         deletes_dir, top_k, avgdl, known, share=share)
+            if direct:
+                return _direct_scan_rows(fn, chunks)
+            return _scan_df(spark, files_b, fn(), BATCH_SCHEMA).collect()
+
+        return batch, n_tasks, collect
+
+    return _finish(spark, feed, parsed, known_idfs_by_qid,
+                   phrase_dfs_by_query, n_docs, avgdl, top_k, trace)
 
 
 _POSTING_READ_COLUMNS = [
@@ -1289,11 +1295,6 @@ _POSTING_READ_COLUMNS = [
     "skip_last", "skip_max_tf", "skip_min_dl",
     "skip_doc_off", "skip_tf_off", "skip_pos_off", "skip_dl_off",
 ]
-
-
-def _norm(tf_col, dl_col, avgdl):
-    tf = tf_col.cast("double")
-    return tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl_col.cast("double") / F.lit(avgdl)))
 
 
 def search_index_batch(
@@ -1312,10 +1313,9 @@ def search_index_batch(
     Spark-readable posting DataFrame. ``deletes`` (a doc_id DataFrame)
     carries the tombstones; ``phrase_dfs_by_query`` and
     ``trace`` are :func:`search_index_files_batch`'s. The parse, the
-    task body and the tail are the shard scan's; there is no shard
-    list to prune and no candidate bound, so the tail takes a
-    limit-guarded collect. Returns (qid, doc_id, name_match, rank,
-    score)."""
+    task body, the candidate bound and the tail are the shard scan's;
+    there is no shard list to prune. Returns (qid, doc_id, name_match,
+    rank, score)."""
     t0 = time.perf_counter()
     trace = _new_trace(trace, None)
     spark = postings.sparkSession
@@ -1327,12 +1327,18 @@ def search_index_batch(
     if not parsed or top_k < 1:
         return _batch_result_df(spark, [])
     trace.update(route="generic", shards_scanned=None)
-    body = _candidate_body([(qi, tids) for qi, _, tids in parsed], top_k,
-                           avgdl, known_idfs_by_qid)
-    cand = _generic_scan(postings, deletes, _needed(parsed), body,
-                         BATCH_SCHEMA)
-    return _finish(spark, cand, parsed, phrase_dfs_by_query,
-                   known_idfs_by_qid, n_docs, avgdl, top_k, trace)
+
+    def feed(batch, known):
+        def collect(share):
+            body = _candidate_body([(qi, tids) for qi, _, tids in batch],
+                                   top_k, avgdl, known, share=share)
+            return _generic_scan(postings, deletes, _needed(batch), body,
+                                 BATCH_SCHEMA).collect()
+
+        return batch, _scan_tasks(spark), collect
+
+    return _finish(spark, feed, parsed, known_idfs_by_qid,
+                   phrase_dfs_by_query, n_docs, avgdl, top_k, trace)
 
 
 def search_index(
@@ -1349,10 +1355,9 @@ def search_index(
                               deletes).drop("qid")
 
 
-# Above this many candidate rows the scoring tail runs as a JVM plan
-# (extra Spark jobs) instead of finishing on the driver. Emission
-# pruning bounds the common case far below it: per task, single-phrase
-# queries emit at most 2*top_k docs, multi-phrase ones their k-skyband.
+# The most candidate rows one collect brings to the driver: _tail_bound
+# sizes every (sub-)batch and each multi-phrase query's per-task share
+# from it, so every search finishes on the driver.
 DRIVER_FINISH_MAX = 200_000
 
 
@@ -1360,9 +1365,10 @@ def _new_trace(trace, shards_total, route="none") -> dict:
     """``trace`` (or a fresh dict) reset to the record of a search
     that scans nothing; the query path fills in what it does."""
     trace = {} if trace is None else trace
-    trace.update(route=route, tail=None, shards_total=shards_total,
-                 shards_scanned=0, covered=0, candidate_rows=0,
-                 parse_prune_s=0.0, scan_collect_s=0.0, finish_s=0.0)
+    trace.update(route=route, rescanned=0, shards_total=shards_total,
+                 shards_scanned=0, covered=0, collects=[],
+                 candidate_rows=0, parse_prune_s=0.0, scan_collect_s=0.0,
+                 finish_s=0.0)
     return trace
 
 
@@ -1480,8 +1486,8 @@ def _direct_scan_rows(make_fn, chunks):
 
 def _idf_pair(n_docs, dfs):
     """(idf_all, idf_name) for per-phrase (df_all, df_name) pairs — the
-    one spelling shared by the covered preamble, the numpy tail and the
-    JVM tail; a phrase never matched in a name weighs 0 there."""
+    one spelling shared by the covered preamble, the rescan and the
+    numpy tail; a phrase never matched in a name weighs 0 there."""
     return ([idf_fn(n_docs, da) for da, _ in dfs],
             [idf_fn(n_docs, dn) if dn else 0.0 for _, dn in dfs])
 
@@ -1610,151 +1616,137 @@ def _prune_batch(posting_files, parsed, known_idfs_by_qid, presence):
     return files, parsed2, known2, _needed(parsed2)
 
 
-# Guards the session-conf set/restore in _collect_bounded: two
-# concurrent query tails on one SparkSession must not interleave the
-# override (ADVICE r03 — one could run its limit probe under the
-# other's restored value, or restore the wrong previous value).
-_LIMIT_CONF_LOCK = threading.Lock()
-
-
 def _tail_bound(n_tasks, phrase_counts, top_k):
-    """(upper_bound_on_candidate_rows, is_exact) for the scoring tail,
-    computable driver-side for free BEFORE launching any job (VERDICT
-    r03 #2 — the driver-finish decision must not cost a doomed
-    200k-row probe collect at scale).
-
-    Emission pruning runs once more per TASK across its blocks
-    (_candidate_body / _emission_prune), so rows are charged per task: ``n_tasks`` is
-    _scan_tasks() on the Spark feeder and the chunk count on the direct
-    one. Per task per query:
-    - kind=0 (df stats): one summed row per phrase -> <= n_ph rows.
-    - kind=1 (surviving docs), n_ph == 1: the task keeps the union of
-      the two branch top-ks -> <= 2*top_k rows, UNCONDITIONALLY.
-    - kind=1, n_ph > 1: the exact k-skyband is data-dependent (a task
-      of mutually non-dominating docs emits everything), so no static
-      bound exists. The same shape charged at 4*top_k serves as a
-      ROUTING HEURISTIC only — when even that optimistic estimate
-      exceeds the cap, the tail goes straight to the JVM plan; below
-      it, the collect stays limit-guarded because the true skyband may
-      still blow past it.
-
-    exact=True (all queries single-phrase) means the bound is a real
-    guarantee: if it is <= the cap, a plain collect cannot exceed the
-    cap and needs no limit probe at all."""
-    exact = all(p == 1 for p in phrase_counts)
-    per_task = sum(
-        (2 * top_k if p == 1 else 4 * top_k) + p for p in phrase_counts
-    )
-    return n_tasks * per_task, exact
+    """(bound, share) before any job: the most rows one collect of this
+    batch can return, and each uncovered multi-phrase query's per-task
+    doc-row cap. Per task (``n_tasks``: :func:`_scan_tasks` on the Spark
+    feeders, the chunk count on the direct one) and query (of
+    ``phrase_counts``; 1 for a covered query): a stat row per phrase,
+    plus <= 2*top_k doc rows (single-phrase or covered: the union of
+    the branch top-ks) or the share (multi-phrase: an even split of
+    what the rest leave of DRIVER_FINISH_MAX / n_tasks, never under
+    2*top_k; a larger k-skyband yields one marker row instead)."""
+    fixed = sum(p + (2 * top_k if p == 1 else 0) for p in phrase_counts)
+    n_multi = sum(p > 1 for p in phrase_counts)
+    share = 2 * top_k
+    if n_multi:
+        share = max(share, (DRIVER_FINISH_MAX // n_tasks - fixed) // n_multi)
+    return n_tasks * (fixed + n_multi * share), share
 
 
-def _collect_bounded(df, max_rows: int):
-    """limit(max_rows+1).collect() in ONE Spark job. The default
-    incremental-limit execution (1 partition, then scaleUpFactor more,
-    a separate JOB per round) would cost the query tail 2-3 extra
-    scheduling rounds — but raising
-    spark.sql.limit.initialNumPartitions SESSION-wide would turn every
-    ad-hoc df.limit(1) existence probe into a full scan, so the
-    override is scoped to exactly this collect (set/restore), under
-    _LIMIT_CONF_LOCK so concurrent query tails on one session
-    serialize the conf window instead of racing it."""
-    spark = df.sparkSession
-    key = "spark.sql.limit.initialNumPartitions"
-    with _LIMIT_CONF_LOCK:
-        prev = spark.conf.get(key)
-        spark.conf.set(key, "100000")
-        try:
-            return df.limit(max_rows + 1).collect()
-        finally:
-            spark.conf.set(key, prev)
+def _sub_batches(parsed, known_idfs_by_qid, n_tasks, top_k):
+    """[(sub-batch, share)]: ``parsed`` cut, in order, into runs whose
+    :func:`_tail_bound` fits DRIVER_FINISH_MAX, each holding at least
+    one query (a lone query over the cap runs on its own). A covered
+    query is charged like a single phrase: it emits the exact union of
+    its branch top-ks."""
+    subs: list = []  # [(queries, phrase counts)]
+    for p in parsed:
+        n_ph = 1 if p[0] in known_idfs_by_qid else len(p[1])
+        if not subs or _tail_bound(n_tasks, subs[-1][1] + [n_ph],
+                                   top_k)[0] > DRIVER_FINISH_MAX:
+            subs.append(([], []))
+        subs[-1][0].append(p)
+        subs[-1][1].append(n_ph)
+    return [(sub, _tail_bound(n_tasks, counts, top_k)[1])
+            for sub, counts in subs]
 
 
-def _finish(spark, cand, parsed, phrase_dfs_by_query, known_idfs_by_qid,
-            n_docs, avgdl, top_k, trace, bound=None, exact=False):
-    """The scoring tail over a BATCH_SCHEMA candidate DataFrame: exact
-    phrase df -> idf -> BM25 -> two-branch top-k -> union/dedupe/top-k
-    per query (reference CTE codebased/search.py:240-302).
+def _finish(spark, feed, parsed, known_idfs_by_qid, phrase_dfs_by_query,
+            n_docs, avgdl, top_k, trace):
+    """The scoring tail, always on the driver (reference CTE
+    codebased/search.py:240-302). ``feed(batch, known_idfs)`` gives a
+    (sub-)batch's (batch, n_tasks, collect(share)) on the caller's
+    feeder, presence-pruned to its queries. A batch runs as
+    :func:`_sub_batches`, one plain collect each, finished by
+    :func:`_driver_tail` as it lands; queries that carried a marker
+    then run once more as covered queries with their summed dfs."""
+    out_rows: list = []
 
-    Routing on the candidate ``bound`` (:func:`_tail_bound`):
-    - exact bound at or under DRIVER_FINISH_MAX -> one plain collect
-      and the numpy finish (:func:`_driver_tail`): ONE Spark job in all;
-    - bound over the cap -> straight to the JVM plan
-      (:func:`_jvm_tail`), no probe collect (collecting 200k rows only
-      to discard them would be a per-query scale tax);
-    - otherwise (heuristic multi-phrase bound, or no bound behind the
-      Spark reader) a limit-guarded collect; a candidate set past the
-      cap falls back to the JVM plan against the SAME persisted
-      candidates — one extra job, never a rescan.
-    ``trace`` receives the tail, the candidate rows and the timings."""
+    def run_pass(batch, known, dfs_by_qid):
+        batch, n_tasks, collect = feed(batch, known)
+        subs = _sub_batches(batch, known, n_tasks, top_k)
+        rescan: dict = {}
+        for sub, share in subs:
+            if len(subs) > 1:  # its own, narrower shard list
+                sub, _n, collect = feed(sub, known)
+            t = time.perf_counter()
+            rows = collect(share)
+            t_fin = time.perf_counter()
+            got, marked = _driver_tail(rows, sub, dfs_by_qid, n_docs,
+                                       avgdl, top_k)
+            out_rows.extend(got)
+            rescan.update(marked)
+            trace["collects"].append(len(rows))
+            trace["scan_collect_s"] += t_fin - t
+            trace["finish_s"] += time.perf_counter() - t_fin
+        return rescan
+
+    rescan = run_pass(parsed, known_idfs_by_qid, phrase_dfs_by_query)
+    if rescan:
+        trace["rescanned"] = len(rescan)
+        run_pass([p for p in parsed if p[0] in rescan],
+                 {qi: _idf_pair(n_docs, dfs) for qi, dfs in rescan.items()},
+                 rescan)
     t = time.perf_counter()
-    if bound is not None and exact and bound <= DRIVER_FINISH_MAX:
-        return _driver_tail(spark, cand.collect(), parsed,
-                            phrase_dfs_by_query, n_docs, avgdl, top_k,
-                            trace, t)
-    cand = cand.persist()
-    try:
-        rows = None
-        if bound is None or bound <= DRIVER_FINISH_MAX:
-            rows = _collect_bounded(cand, DRIVER_FINISH_MAX)
-        if rows is not None and len(rows) <= DRIVER_FINISH_MAX:
-            return _driver_tail(spark, rows, parsed, phrase_dfs_by_query,
-                                n_docs, avgdl, top_k, trace, t)
-        t_jvm = time.perf_counter()
-        out = _jvm_tail(spark, cand, parsed, known_idfs_by_qid, n_docs,
-                        avgdl, top_k)
-        trace.update(tail="jvm", candidate_rows=None,
-                     scan_collect_s=t_jvm - t,
-                     finish_s=time.perf_counter() - t_jvm)
-        return out
-    finally:
-        cand.unpersist()
+    out_rows.sort(key=lambda r: r[0])  # stable: batch order, best-first
+    out = _batch_result_df(spark, out_rows)
+    trace["candidate_rows"] = sum(trace["collects"])
+    trace["finish_s"] += time.perf_counter() - t
+    return out
 
 
-def _driver_tail(spark, rows, parsed, phrase_dfs_by_query, n_docs, avgdl,
-                 top_k, trace, t_scan) -> DataFrame:
-    """Numpy finish of collected candidate rows, query by query;
-    ``trace`` gets the rows, the seconds since ``t_scan`` (the scan's
-    start) and the finish's own."""
-    t = time.perf_counter()
-    trace.update(tail="driver", candidate_rows=len(rows),
-                 scan_collect_s=t - t_scan)
+def _summed_dfs(rows) -> dict:
+    """{phrase index: [df_all, df_name]} summed over a query's stat rows
+    (kind 0); a phrase with no row matched nowhere."""
+    dfs: dict = {}
+    for r in rows:
+        if r["kind"] == 0:
+            e = dfs.setdefault(int(r["phrase"]), [0, 0])
+            e[0] += int(r["df_all"])
+            e[1] += int(r["df_name"])
+    return dfs
+
+
+def _driver_tail(rows, parsed, dfs_by_qid, n_docs, avgdl, top_k):
+    """Numpy finish of one collect, query by query: ([(qid, doc_id,
+    name_match, rank)], {qid: exact per-phrase (df_all, df_name)} of
+    the queries that carried an overflow marker (kind 2), summed from
+    their stat rows, for :func:`_finish` to rescan; one whose dfs miss
+    a phrase fails its AND and is left out)."""
     by_q: dict[int, list] = {}
     for r in rows:
         by_q.setdefault(int(r["qid"]), []).append(r)
-    out_rows = []
+    out, rescan = [], {}
     for qi, phrases, _tids in parsed:
-        fin = _finish_rows(by_q.get(qi, []), len(phrases), n_docs, avgdl,
-                           top_k, phrase_dfs_by_query.get(qi))
-        out_rows.extend((qi, d, nm, rk) for d, nm, rk in fin)
-    out = _batch_result_df(spark, out_rows)
-    trace["finish_s"] = time.perf_counter() - t
-    return out
+        q_rows = by_q.get(qi, [])
+        if any(r["kind"] == 2 for r in q_rows):
+            dfs = _summed_dfs(q_rows)
+            if len(dfs) == len(phrases):
+                rescan[qi] = [tuple(dfs[i]) for i in range(len(phrases))]
+            continue
+        fin = _finish_rows(q_rows, len(phrases), n_docs, avgdl, top_k,
+                           dfs_by_qid.get(qi))
+        out.extend((qi, d, nm, rk) for d, nm, rk in fin)
+    return out, rescan
 
 
 def _finish_rows(rows, n_ph, n_docs, avgdl, top_k, dfs_override=None):
     """Numpy scoring tail over ONE query's candidate rows: returns
-    [(doc_id, name_match, rank)] best-first (empty on AND-fail) —
-    bit-identical to the JVM expressions (shared _norm_np float
-    pipeline, same accumulation order). ``dfs_override`` (the phrase-df
-    side table's per-phrase (df_all, df_name)) replaces the kind=0
-    stat rows, which the covered path does not emit."""
+    [(doc_id, name_match, rank)] best-first (empty on AND-fail), ranked
+    through the same _rank_rows float pipeline as every task-side
+    prune. ``dfs_override`` (the phrase-df side table's, or a rescan's,
+    per-phrase (df_all, df_name)) replaces the kind=0 stat rows, which
+    the covered path does not emit."""
     if dfs_override is not None:
         if any(da == 0 for da, _dn in dfs_override):
             return []  # some phrase matches nothing anywhere -> AND fails
-        dfs = {i: [da, dn] for i, (da, dn) in enumerate(dfs_override)}
-        docs = [r for r in rows if r["kind"] == 1]
+        dfs = dict(enumerate(dfs_override))
     else:
-        dfs = {}
-        docs = []
-        for r in rows:
-            if r["kind"] == 0:
-                e = dfs.setdefault(int(r["phrase"]), [0, 0])
-                e[0] += int(r["df_all"])
-                e[1] += int(r["df_name"])
-            else:
-                docs.append(r)
+        dfs = _summed_dfs(rows)
         if len(dfs) < n_ph:
             return []  # some phrase matches nothing anywhere -> AND fails
+    docs = [r for r in rows if r["kind"] == 1]
     if not docs:
         return []
     idf_all, idf_name = _idf_pair(n_docs, [dfs[i] for i in range(n_ph)])
@@ -1789,79 +1781,3 @@ def _finish_rows(rows, n_ph, n_docs, avgdl, top_k, dfs_override=None):
         ((d, nm, rk) for d, (nm, rk) in merged.items()),
         key=lambda t: (not t[1], t[2], t[0]),
     )[:top_k]
-
-
-def _jvm_tail(spark, cand, parsed, known_idfs_by_qid, n_docs, avgdl,
-              top_k) -> DataFrame:
-    """JVM scoring tail over persisted candidates — the fallback when
-    the candidate set is too large to pull to the driver. The plan is
-    FLAT in batch width (VERDICT r02 #5): per-query idf vectors live in
-    a broadcast (qid, idf_all, idf_name) lookup joined to the candidate
-    rows, and ONE zip_with/aggregate expression scores every query, so
-    plan size is constant whether the batch holds 1 query or 1,000.
-    The fold multiplies and adds in the same order as _rank_rows, so
-    scores stay bit-identical to the driver finish (pinned by test)."""
-    from pyspark.sql.window import Window
-
-    dfs = {
-        (int(r["qid"]), int(r["phrase"])): (int(r["sa"]), int(r["sn"]))
-        for r in cand.filter(F.col("kind") == 0)
-        .groupBy("qid", "phrase")
-        .agg(F.sum("df_all").alias("sa"), F.sum("df_name").alias("sn"))
-        .collect()
-    }
-    idf_rows = []
-    for qi, phrases, _tids in parsed:
-        n_ph = len(phrases)
-        if qi in known_idfs_by_qid:
-            ia, iname = known_idfs_by_qid[qi]
-            idf_rows.append((qi, list(ia), list(iname)))
-            continue
-        if any((qi, i) not in dfs for i in range(n_ph)):
-            continue  # a phrase matched nothing -> AND fails for this query
-        ia, iname = _idf_pair(n_docs, [dfs[(qi, i)] for i in range(n_ph)])
-        idf_rows.append((qi, ia, iname))
-    if not idf_rows:
-        return _batch_result_df(spark, [])
-    idfs_df = spark.createDataFrame(
-        idf_rows, "qid int, idf_all array<double>, idf_name array<double>"
-    )
-
-    def flat_score(tf_col, idf_col):
-        # ((0.0 + w0*norm0) + w1*norm1) + ... — _rank_rows' order
-        return F.aggregate(
-            F.zip_with(
-                F.col(tf_col), F.col(idf_col),
-                lambda tf, w: w * _norm(tf, F.col("dl"), avgdl),
-            ),
-            F.lit(0.0), lambda acc, v: acc + v,
-        )
-
-    docs_r = cand.filter(F.col("kind") == 1).join(F.broadcast(idfs_df), "qid")
-    allb = docs_r.select(
-        "qid", "doc_id", F.lit(False).alias("name_match"),
-        (-flat_score("tfs_all", "idf_all")).alias("rank"),
-    ).unionAll(
-        docs_r.filter(F.forall(F.col("tfs_name"), lambda x: x > 0)).select(
-            "qid", "doc_id", F.lit(True).alias("name_match"),
-            (-flat_score("tfs_name", "idf_name")).alias("rank"),
-        )
-    )
-    w_branch = Window.partitionBy("qid", "name_match").orderBy(
-        F.asc("rank"), F.asc("doc_id"))
-    limited = allb.withColumn("rn", F.row_number().over(w_branch)).filter(
-        F.col("rn") <= top_k).drop("rn")
-    mergedq = (
-        limited.groupBy("qid", "doc_id")
-        .agg(F.max("name_match").alias("name_match"), F.min("rank").alias("rank"))
-    )
-    w_final = Window.partitionBy("qid").orderBy(
-        F.desc("name_match"), F.asc("rank"), F.asc("doc_id"))
-    return (
-        mergedq.withColumn("rn", F.row_number().over(w_final))
-        .filter(F.col("rn") <= top_k)
-        .drop("rn")
-        .withColumn("score", -F.col("rank"))
-        .select("qid", "doc_id", "name_match", "rank", "score")
-        .localCheckpoint(eager=True)
-    )

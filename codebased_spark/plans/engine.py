@@ -222,8 +222,9 @@ class FtsIndex:
     dict with the route (direct, spark, generic, cache for a search
     cache hit, none when nothing was scanned), shard counts before and
     after presence pruning, the phrase-df-covered query count, the
-    candidate rows collected, the tail (driver or jvm) and seconds for
-    parse+prune, scan+collect and finish. operators/query.py's module
+    queries rescanned with the dfs their first pass counted, the rows
+    of each collect and their sum, and seconds for parse+prune,
+    scan+collect and finish. operators/query.py's module
     docstring defines the fields; recording it costs no Spark job."""
 
     def __init__(self, spark: SparkSession, index_dir: str, force_jvm: bool = False,
@@ -403,8 +404,9 @@ class FtsIndex:
 
     def search_batch(self, queries: list[str], top_k: int = DEFAULT_TOP_K) -> DataFrame:
         """Batched search: one shared posting scan for the whole batch —
-        one Spark job when the tail finishes on the driver, none on the
-        driver-direct route (the shape for offline batch scoring).
+        one Spark job unless it overflows DRIVER_FINISH_MAX or needs a
+        rescan, none on the driver-direct route (the shape for offline
+        batch scoring).
         Returns (qid, doc_id, name_match, rank, score); rank-identical
         per query to :meth:`search` (tested)."""
         self.query_log.extend(queries)

@@ -52,3 +52,19 @@ def spark_hits(df):
 
 def oracle_hits(hits):
     return [(h.doc_id, bool(h.name_match), h.score) for h in hits]
+
+
+def skyband_rows(n=400):
+    """CORPUS_SCHEMA rows whose multi-phrase queries over "value", "xke"
+    and "merge" have large k-skybands: the three tfs are
+    anti-correlated, dl varies, tie groups repeat, and every fourth
+    path names both "value" and "xke" (name-branch candidates)."""
+    rows = []
+    for i in range(n):
+        a, b, c = 1 + i % 5, 1 + (i * 7) % 4, 1 + (i * 3) % 6
+        if i % 13 == 0:
+            a, b, c = 2, 2, 2
+        body = ("value " * a) + ("xke " * b) + ("merge " * c) + "z" * (i % 50)
+        path = f"value_xke_{i:04d}.txt" if i % 4 == 0 else f"p{i:04d}.txt"
+        rows.append(("r1", path, "c" * 40, "text", body))
+    return rows

@@ -3,7 +3,7 @@
 The engine's "build once, query many" story implies many callers hit
 one index handle from threads (Spark supports concurrent actions from
 driver threads). Shared mutable state under test: the search cache,
-the limit-conf lock (operators/query._LIMIT_CONF_LOCK), and the
+the per-search trace records, and the
 covered-path memoization — results must be deterministic and identical
 to single-thread execution, covered and uncovered alike."""
 
@@ -34,7 +34,7 @@ def _conc_idx_dir(spark, tmp_path_factory):
 
 
 # both routes race in every test: "distributed" pins the Spark-job path
-# (limit-conf lock, concurrent collects), "direct" the zero-job
+# (concurrent plain collects), "direct" the zero-job
 # driver-side scan (shared reader pool). A fixture-sized index would
 # otherwise auto-route direct and leave the distributed state untested.
 @pytest.fixture(scope="module", params=["distributed", "direct"])

@@ -4,7 +4,10 @@ The uncovered and covered block paths and the task body prune their
 candidate docs through one function; these tests pin that it is exact (the driver's final
 top-k over the survivors equals the top-k over every candidate) and
 that the covered-block, uncovered-block and task-level paths all reach
-it, and nothing else ranks or prunes emissions on its own."""
+it, and nothing else ranks or prunes emissions on its own. They also
+pin the per-task share: a capped query yields its full stat rows and
+one overflow marker, and its rescan with the summed dfs finishes as
+the uncapped run does."""
 
 import ast
 import sys
@@ -140,6 +143,79 @@ def test_every_block_path_prunes_through_the_one_function(monkeypatch):
     assert len(doc_rows) <= 2 * top_k
 
 
+def _multi_block(rng, base, n, phrases):
+    """One block where each two-trigram phrase of ``phrases`` matches
+    every doc in the content column, and every third doc in the name
+    column: the second phrase's tf mirrors the first's (6 - tf), so
+    the multi-phrase k-skyband is large."""
+    docs = base + np.arange(n, dtype=np.int64)
+    dls = rng.choice(np.array([40, 57, 80], dtype=np.int64), size=n)
+    nm = np.arange(0, n, 3)
+    zero = np.zeros(n, dtype=np.int64)
+    one = np.ones(nm.size, dtype=np.int64)
+    first = rng.integers(1, 6, size=n).astype(np.int64)
+    rows = {}
+    for i, (a, b) in enumerate(phrases):
+        tfs = 6 - first if i == 1 else (
+            first if i == 0 else rng.integers(1, 6, size=n).astype(np.int64))
+        rows[(a, 2)] = _row(a, 2, docs, tfs, zero, dls)
+        rows[(b, 2)] = _row(b, 2, docs, tfs, zero + 1, dls)
+        rows[(a, 1)] = _row(a, 1, docs[nm], one, zero[nm], dls[nm])
+        rows[(b, 1)] = _row(b, 1, docs[nm], one, zero[nm] + 1, dls[nm])
+    return rows
+
+
+def _records(frames):
+    return [r for pdf in frames for r in pdf.to_dict("records")]
+
+
+def test_share_overflow_marks_and_rescan_finishes_exactly():
+    rng = np.random.default_rng(11)
+    phrases = [[11, 12], [21, 22], [31, 32]]
+    for n_ph, top_k in [(2, 2), (3, 2), (2, 3), (3, 1)]:
+        blocks = [(0, _multi_block(rng, 0, 80, phrases[:n_ph]), None),
+                  (1, _multi_block(rng, 1 << 40, 80, phrases[:n_ph]),
+                   np.array([(1 << 40) + 5]))]
+        batch = [(0, phrases[:n_ph]), (1, [[11, 12]])]
+        share = 2 * top_k
+        full = _records(q._candidate_body(batch, top_k, AVGDL)(blocks))
+        capped = _records(q._candidate_body(batch, top_k, AVGDL,
+                                            share=share)(blocks))
+        of = {k: [r for r in rows if r["qid"] == 0]
+              for k, rows in (("full", full), ("capped", capped))}
+        assert sum(r["kind"] == 1 for r in of["full"]) > share  # overflows
+        # the full stat rows, one marker, no doc rows
+        assert [r for r in of["capped"] if r["kind"] == 0] == \
+            [r for r in of["full"] if r["kind"] == 0]
+        assert [r["kind"] for r in of["capped"]].count(2) == 1
+        assert not any(r["kind"] == 1 for r in of["capped"])
+        # the single-phrase query is untouched by the share
+        assert [r for r in capped if r["qid"] == 1] == \
+            [r for r in full if r["qid"] == 1]
+        parsed = [(qi, [None] * len(tids), tids) for qi, tids in batch]
+        out, rescan = q._driver_tail(capped, parsed, {}, N_DOCS, AVGDL, top_k)
+        assert list(rescan) == [0] and {r[0] for r in out} == {1}
+        dfs = rescan[0]
+        assert len(dfs) == n_ph and all(da > 0 for da, _dn in dfs)
+        again = _records(q._candidate_body(
+            [batch[0]], top_k, AVGDL, {0: q._idf_pair(N_DOCS, dfs)},
+            share=share)(blocks))
+        assert not any(r["kind"] != 1 for r in again)
+        assert len(again) <= len(blocks) * 2 * top_k
+        want = q._finish_rows(of["full"], n_ph, N_DOCS, AVGDL, top_k)
+        assert want and q._finish_rows(again, n_ph, N_DOCS, AVGDL, top_k,
+                                       dfs) == want
+
+
+def test_share_overflow_of_a_failed_and_rescans_nothing():
+    """A capped query whose summed stat rows miss a phrase fails its
+    AND: no rescan, no rows."""
+    rows = [{"qid": 0, "kind": 0, "phrase": 0, "df_all": 9, "df_name": 1},
+            {"qid": 0, "kind": 2, "phrase": -1, "df_all": 0, "df_name": 0}]
+    parsed = [(0, [None, None], [[1], [2]])]
+    assert q._driver_tail(rows, parsed, {}, N_DOCS, AVGDL, 3) == ([], {})
+
+
 def test_block_kernel_helpers_have_one_caller_each():
     """The rarest-first intersection, the per-column merge, the phrase
     conjunction and the Pareto skyband are each reached from one place
@@ -162,3 +238,25 @@ def test_block_kernel_helpers_have_one_caller_each():
     assert callers["_emission_prune"] == {"_query_block_frames",
                                           "_covered_block_frame",
                                           "_candidate_body"}
+
+
+def test_one_scoring_tail():
+    """The scoring tail has one finisher: the numpy driver tail, which
+    alone reaches the per-query finish; no Spark window plan remains."""
+    tree = ast.parse(Path(q.__file__).read_text())
+    fns = {fn.name: fn for fn in tree.body if isinstance(fn, ast.FunctionDef)}
+    calls = {name: {node.func.id for node in ast.walk(fn)
+                    if isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Name)} & set(fns)
+             for name, fn in fns.items()}
+    finishers = {"_driver_tail", "_finish_rows", "_jvm_tail"}
+    assert calls["_finish"] & finishers == {"_driver_tail"}
+    assert {n for n, c in calls.items() if "_finish_rows" in c} == \
+        {"_driver_tail"}
+    assert "_jvm_tail" not in fns and "_collect_bounded" not in fns
+    imported = {a.name if isinstance(node, ast.Import) else node.module
+                for node in ast.walk(tree)
+                if isinstance(node, (ast.Import, ast.ImportFrom))
+                for a in (node.names if isinstance(node, ast.Import)
+                          else [node])}
+    assert not any("window" in (m or "") for m in imported)

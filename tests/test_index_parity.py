@@ -250,32 +250,34 @@ def test_batch_search_matches_individual(spark, built):
     assert 3 not in by_q and 4 not in by_q and 5 not in by_q
 
 
-def test_batch_search_100_queries_flat_plan(spark, built, monkeypatch):
-    """VERDICT r02 #5: batch width must not grow the plan. 100 queries
-    run through the same single flat JVM plan (broadcast idf lookup +
-    one scoring expression; forced by dropping DRIVER_FINISH_MAX to 0),
-    in wall-time comparable to a 6-query batch — the old shape built 2
-    unioned branches per query and would spend minutes compiling.
-    Results stay bit-identical to the generic scan."""
-    import time
-
+def test_batch_search_100_queries_sub_batches(spark, built, monkeypatch):
+    """A batch whose candidate bound exceeds DRIVER_FINISH_MAX splits,
+    in order, into sub-batches that each fit: 100 two-phrase queries
+    under a cap of ten queries' bound run as several collects, none
+    over the cap, bit-identical to the generic scan."""
     import codebased_spark.operators.query as q
 
     index, _ = built
+    index._search_cache.clear()
     words = ["hello", "world", "server", "started", "code", "scan",
              "return", "port", "table", "merge"]
     queries = [f"{words[i % 10]} {words[(i * 3 + 1) % 10]}" for i in range(100)]
     want = {qi: _generic_rows(index, queries[qi], 10) for qi in range(0, 100, 11)}
-    monkeypatch.setattr(q, "DRIVER_FINISH_MAX", 0)
-    t0 = time.time()
+    n_tasks = len(q._direct_chunks(index.posting_files))
+    cap = 10 * n_tasks * (2 + 2 * 10)  # ten queries at a 2*top_k share
+    monkeypatch.setattr(q, "DRIVER_FINISH_MAX", cap)
     batch = index.search_batch(queries, top_k=10)
+    trace = index.last_trace
+    assert trace["route"] == "direct" and trace["rescanned"] == 0
+    # the queries presence leaves (some fail their AND with no read)
+    # run ten to a collect
+    assert len(trace["collects"]) >= 2 and max(trace["collects"]) <= cap
+    assert trace["candidate_rows"] == sum(trace["collects"])
     by_q = {}
     for r in batch.collect():
         by_q.setdefault(int(r["qid"]), []).append(
             (bool(r["name_match"]), round(float(r["rank"]), 12), int(r["doc_id"]))
         )
-    took = time.time() - t0
-    assert took < 90.0  # flat plan: seconds, not branch-compile minutes
     assert any(want.values())
     for qi, rows in want.items():  # sample parity vs the generic scan
         assert sorted(by_q.get(qi, [])) == rows, queries[qi]
@@ -652,45 +654,105 @@ def _with_covered(spark, index, monkeypatch):
     return covered
 
 
-def test_driver_finish_matches_jvm_tail(spark, built, monkeypatch):
-    """The one-job driver-side scoring tail and the JVM fallback plan
-    must return identical rows (same doc ids, name_match, and EXACT
-    rank/score doubles) for single-phrase, multi-phrase and covered
-    queries, single and batched — the fallback forced by dropping
-    DRIVER_FINISH_MAX to 0 (which also moves the fixture index off the
-    direct feeder: its bound no longer fits)."""
+SKY_QUERIES = ['"value"', "value xke", "value xke merge", "xke merge"]
+SKY_COVERED = "xke merge"  # every phrase in the fixture's phrase-df table
+SKY_TOP_K = 3
+
+
+@pytest.fixture(scope="module")
+def skyband(spark, tmp_path_factory):
+    """A 4-block index whose multi-phrase k-skybands outgrow a small
+    per-task share (tests.parity.skyband_rows), with a phrase-df table
+    covering SKY_COVERED, and its FTS5 oracle."""
+    from codebased_spark.operators.phrasedf import build_phrase_df
+    from codebased_spark.sources.corpus import CORPUS_SCHEMA
+    from tests.parity import skyband_rows
+
+    rows = skyband_rows()
+    idx_dir = str(tmp_path_factory.mktemp("sky") / "idx")
+    index = build_index(spark, spark.createDataFrame(rows, CORPUS_SCHEMA),
+                        idx_dir, num_blocks=4)
+    build_phrase_df(spark, index, ["merge", "xke"])
+    content = {r[1]: r[4] for r in rows}
+    oracle = Fts5Oracle(
+        (r["doc_id"], r["path"], r["name"], content[r["path"]])
+        for r in index.doc_stats.select("doc_id", "path", "name").collect())
+    return idx_dir, oracle
+
+
+def _readers(spark, idx_dir):
+    """{reader: (FtsIndex, task count)} over one index: the direct and
+    Spark feeders of the pyarrow reader, and the generic reader."""
+    import codebased_spark.operators.query as q
+    from codebased_spark.plans.engine import FtsIndex
+
+    direct, spark_fed = FtsIndex(spark, idx_dir), FtsIndex(spark, idx_dir)
+    direct.driver_direct, spark_fed.driver_direct = True, False
+    generic = FtsIndex(spark, idx_dir, force_generic_scan=True)
+    files = direct.posting_files
+    return {"direct": (direct, len(q._direct_chunks(files))),
+            "spark": (spark_fed, q._scan_tasks(spark, len(files))),
+            "generic": (generic, q._scan_tasks(spark))}
+
+
+def _forced_cap(n_tasks):
+    """A DRIVER_FINISH_MAX that fits one single-phrase or covered query
+    per task (2*top_k + 1 rows) or one two-phrase query at a 2*top_k
+    share, and no more: below the skyband fixture's multi-phrase
+    skybands, above one query's covered bound."""
+    return n_tasks * (2 * SKY_TOP_K + 2)
+
+
+def _ranked(df, with_qid=False):
+    rows = [((int(r["qid"]),) if with_qid else ())
+            + (int(r["doc_id"]), bool(r["name_match"]), float(r["rank"]))
+            for r in df.collect()]
+    return sorted(rows) if with_qid else rows
+
+
+def test_overflow_rescan_matches_unforced(spark, skyband, monkeypatch):
+    """Forced overflow on every reader: under a cap below the
+    multi-phrase skybands, each multi-phrase query yields markers and
+    is rescanned with the dfs its first pass summed, the batch splits
+    into sub-batches, no collect exceeds the cap, and every result is
+    bit-identical to the unforced run (itself equal across the three
+    readers, so to the generic scan) and rank-identical to FTS5."""
     import codebased_spark.operators.query as q
 
-    index, _ = built
-    index._search_cache.clear()
-    covered = _with_covered(spark, index, monkeypatch)
-    queries = ["Hello world", "Server started", '"wor"', "code hello", covered]
-    fast = {qq: [(int(r["doc_id"]), bool(r["name_match"]), float(r["rank"]))
-                 for r in index.search(qq, 10).collect()] for qq in queries}
-    assert fast[covered]
-    assert sorted((nm, round(rk, 12), d) for d, nm, rk in fast[covered]) == \
-        _generic_rows(index, covered, 10)  # the covered dfs are right
-    fast_b = sorted(
-        (int(r["qid"]), int(r["doc_id"]), bool(r["name_match"]), float(r["rank"]))
-        for r in index.search_batch(queries, 10).collect()
-    )
-    index._search_cache.clear()
-    monkeypatch.setattr(q, "DRIVER_FINISH_MAX", 0)
-    jvm_calls = []
-    real_jvm = q._jvm_tail
-    monkeypatch.setattr(
-        q, "_jvm_tail", lambda *a: jvm_calls.append(1) or real_jvm(*a))
-    for qq in queries:
-        jvm = [(int(r["doc_id"]), bool(r["name_match"]), float(r["rank"]))
-               for r in index.search(qq, 10).collect()]
-        assert jvm == fast[qq], qq
-    jvm_b = sorted(
-        (int(r["qid"]), int(r["doc_id"]), bool(r["name_match"]), float(r["rank"]))
-        for r in index.search_batch(queries, 10).collect()
-    )
-    assert jvm_b == fast_b  # batch fallback identical too
-    assert len(jvm_calls) == len(queries) + 1  # every search took it
-    index._search_cache.clear()
+    idx_dir, oracle = skyband
+    unforced = None
+    for reader, (index, n_tasks) in _readers(spark, idx_dir).items():
+        assert index._covering_dfs(SKY_COVERED) is not None
+        monkeypatch.setattr(q, "DRIVER_FINISH_MAX", 200_000)
+        want = {qq: _ranked(index.search(qq, SKY_TOP_K)) for qq in SKY_QUERIES}
+        want_b = _ranked(index.search_batch(SKY_QUERIES, SKY_TOP_K), True)
+        assert index.last_trace["rescanned"] == 0
+        for qq in SKY_QUERIES:
+            assert len(want[qq]) == SKY_TOP_K
+            assert_rank_identical([(d, nm, -rk) for d, nm, rk in want[qq]],
+                                  oracle_hits(oracle.search(qq, SKY_TOP_K)),
+                                  SKY_TOP_K)
+        if unforced is None:
+            unforced = (want, want_b)
+        assert (want, want_b) == unforced, reader
+
+        cap = _forced_cap(n_tasks)
+        monkeypatch.setattr(q, "DRIVER_FINISH_MAX", cap)
+        index.clear_search_cache()
+        for qq in SKY_QUERIES:
+            assert _ranked(index.search(qq, SKY_TOP_K)) == want[qq], (reader, qq)
+            trace = index.last_trace
+            multi = qq in ("value xke", "value xke merge")
+            assert trace["rescanned"] == int(multi), (reader, qq)
+            assert len(trace["collects"]) == 1 + int(multi)
+            assert max(trace["collects"]) <= cap
+        got_b = _ranked(index.search_batch(SKY_QUERIES, SKY_TOP_K), True)
+        assert got_b == want_b, reader
+        trace = index.last_trace
+        assert trace["rescanned"] == 2
+        assert len(trace["collects"]) == len(SKY_QUERIES) + 2  # one each
+        assert max(trace["collects"]) <= cap
+        index.clear_search_cache()
 
 
 def test_pareto_skyband_matches_bruteforce():
@@ -774,99 +836,116 @@ def test_multiphrase_pareto_pruning_exact(spark, tmp_path, query, top_k):
     assert got == want
 
 
-def test_tail_bound_routing(spark, built, monkeypatch):
-    """VERDICT r03 #2: the driver-finish decision is made from the
-    computable candidate bound, never from a doomed probe collect.
+def _jobs_of(spark, group, action):
+    """(action(), Spark jobs it ran), counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
-    - bound > DRIVER_FINISH_MAX  -> straight to the JVM tail, ZERO
-      calls to _collect_bounded (the old 200k-row collect-then-discard)
-      — single-phrase, multi-phrase and covered alike;
-    - single-phrase (exact bound <= cap) -> plain collect, also zero
-      _collect_bounded calls;
-    - multi-phrase under the cap -> the limit-guarded collect runs
-      (the skyband is data-dependent, the guard must stay)."""
+
+def test_tail_bound_routing(spark, skyband, monkeypatch):
+    """Every route ends in one plain collect per (sub-)batch finished
+    on the driver: no persist, no limit. Under the default cap each
+    query is one Spark job. Under a forced cap, single-phrase and
+    covered queries still are, and exactly the queries that carried an
+    overflow marker are rescanned, each with one more job."""
+    from pyspark.sql import DataFrame
+
     import codebased_spark.operators.query as q
 
-    index, _ = built
-    # this test pins the Spark feeder's tail routing; a fixture-sized
-    # index would otherwise take the zero-job direct feeder, which
-    # never collects at all
-    monkeypatch.setattr(index, "driver_direct", False)
-    index._search_cache.clear()
-    covered = _with_covered(spark, index, monkeypatch)
-    single, multi = '"world"', "code hello"
-    want = {qq: [(int(r["doc_id"]), bool(r["name_match"]), float(r["rank"]))
-                 for r in index.search(qq, 10).collect()]
-            for qq in (single, multi, covered)}
-    want_b = sorted(
-        (int(r["qid"]), int(r["doc_id"]), bool(r["name_match"]), float(r["rank"]))
-        for r in index.search_batch([single, multi, covered], 10).collect()
-    )
-    assert want[single] and want[multi] and want[covered]
+    idx_dir, _ = skyband
+    index, n_tasks = _readers(spark, idx_dir)["spark"]
 
-    calls = []
-    real = q._collect_bounded
-    monkeypatch.setattr(
-        q, "_collect_bounded", lambda df, m: calls.append(m) or real(df, m)
-    )
+    def refused(*_a, **_k):
+        raise AssertionError("the query path persisted or limited")
 
-    # route 1: bound exceeds the cap -> JVM tail, no probe collect
-    index._search_cache.clear()
-    monkeypatch.setattr(q, "DRIVER_FINISH_MAX", 0)
-    for qq in (single, multi, covered):
-        got = [(int(r["doc_id"]), bool(r["name_match"]), float(r["rank"]))
-               for r in index.search(qq, 10).collect()]
-        assert got == want[qq], qq
-    got_b = sorted(
-        (int(r["qid"]), int(r["doc_id"]), bool(r["name_match"]), float(r["rank"]))
-        for r in index.search_batch([single, multi, covered], 10).collect()
-    )
-    assert got_b == want_b
-    assert calls == []  # the scale-killer: no collect-then-discard
+    monkeypatch.setattr(DataFrame, "persist", refused)
+    monkeypatch.setattr(DataFrame, "limit", refused)
+    marked = []
+    real_tail = q._driver_tail
 
-    # route 2: exact single-phrase bound under the cap -> plain collect
-    index._search_cache.clear()
-    monkeypatch.setattr(q, "DRIVER_FINISH_MAX", 200_000)
-    for qq in (single, covered):
-        got = [(int(r["doc_id"]), bool(r["name_match"]), float(r["rank"]))
-               for r in index.search(qq, 10).collect()]
-        assert got == want[qq], qq
-    assert calls == []  # exact bound needs no limit probe either
+    def spy(*a):
+        out, rescan = real_tail(*a)
+        marked.extend(rescan)
+        return out, rescan
 
-    # route 3: multi-phrase under the cap -> guarded collect runs
-    got = [(int(r["doc_id"]), bool(r["name_match"]), float(r["rank"]))
-           for r in index.search(multi, 10).collect()]
-    assert got == want[multi]
-    assert calls == [200_000]
-    index._search_cache.clear()
+    monkeypatch.setattr(q, "_driver_tail", spy)
+    for cap in (200_000, _forced_cap(n_tasks)):
+        monkeypatch.setattr(q, "DRIVER_FINISH_MAX", cap)
+        for qq in SKY_QUERIES:
+            index.clear_search_cache()
+            del marked[:]
+            _, n_jobs = _jobs_of(spark, f"route_{cap}_{qq}",
+                                 lambda: index.search(qq, SKY_TOP_K).collect())
+            overflow = cap < 200_000 and qq in ("value xke", "value xke merge")
+            assert marked == ([0] if overflow else []), (cap, qq)
+            assert index.last_trace["rescanned"] == len(marked)
+            assert n_jobs == 1 + int(overflow), (cap, qq)
+        del marked[:]
+        index.search_batch(SKY_QUERIES, SKY_TOP_K).collect()
+        assert sorted(marked) == ([1, 2] if cap < 200_000 else [])
+        assert index.last_trace["rescanned"] == len(marked)
 
 
-def test_tail_bound_derivation():
-    """_tail_bound mirrors the per-TASK emission guarantees (each task
-    prunes across all its blocks): n_ph summed stat rows + 2*top_k
-    (single-phrase, exact) or 4*top_k heuristic (multi-phrase) doc rows
-    per query, times the task count."""
+def test_tail_bound_derivation(monkeypatch):
+    """_tail_bound is exact for every query shape: per task, n_ph
+    summed stat rows plus 2*top_k doc rows for a single-phrase or
+    covered query, and for each uncovered multi-phrase query an even
+    split of what the cap leaves, never under 2*top_k; times the task
+    count. _sub_batches cuts a batch over the cap into runs that fit."""
+    import codebased_spark.operators.query as q
     from codebased_spark.operators.query import DRIVER_FINISH_MAX, _tail_bound
 
-    assert _tail_bound(4, [1], 32) == (4 * (2 * 32 + 1), True)
-    assert _tail_bound(10, [3], 32) == (10 * (4 * 32 + 3), False)
+    assert _tail_bound(4, [1], 32) == (4 * (2 * 32 + 1), 64)
+    per_task = DRIVER_FINISH_MAX // 10
+    assert _tail_bound(10, [3], 32) == (DRIVER_FINISH_MAX, per_task - 3)
+    per_task = DRIVER_FINISH_MAX // 5
     assert _tail_bound(5, [1, 2], 32) == (
-        5 * ((2 * 32 + 1) + (4 * 32 + 2)), False)
+        DRIVER_FINISH_MAX, per_task - (2 * 32 + 1) - 2)
+    assert _tail_bound(3, [2, 3], 32) == (
+        3 * (5 + 2 * ((DRIVER_FINISH_MAX // 3 - 5) // 2)),
+        (DRIVER_FINISH_MAX // 3 - 5) // 2)
     # block count never enters: a 32-task scan keeps a 6-query
     # single-phrase batch under the cap however many shards it reads
-    assert _tail_bound(32, [1] * 6, 32) == (32 * 6 * 65, True)
+    assert _tail_bound(32, [1] * 6, 32) == (32 * 6 * 65, 64)
     assert 32 * 6 * 65 <= DRIVER_FINISH_MAX
-    # a bound past the cap still routes straight to the JVM plan
-    bound, exact = _tail_bound(4_000, [1], 32)
-    assert exact and bound > DRIVER_FINISH_MAX
+    # past the cap even at the 2*top_k floor: the bound says so, and the
+    # batch runs one query per sub-batch
+    bound, share = _tail_bound(4_000, [2], 32)
+    assert share == 64 and bound == 4_000 * 66 > DRIVER_FINISH_MAX
+    parsed = [(qi, ["p"] * n_ph, None) for qi, n_ph in enumerate([1, 2, 3])]
+    assert q._sub_batches(parsed, {}, 4_000, 32) == [([p], 64) for p in parsed]
+    # ten queries' floor costs fit, eleven do not
+    monkeypatch.setattr(q, "DRIVER_FINISH_MAX", 4 * 10 * (2 + 2 * 10))
+    parsed = [(qi, ["a", "b"], None) for qi in range(25)]
+    subs = q._sub_batches(parsed, {}, 4, 10)
+    assert [len(s) for s, _share in subs] == [10, 10, 5]
+    assert [p for s, _share in subs for p in s] == parsed
+    for s, share in subs:
+        assert (q._tail_bound(4, [2] * len(s), 10)[1], share >= 20) == \
+            (share, True)
+        assert q._tail_bound(4, [2] * len(s), 10)[0] <= q.DRIVER_FINISH_MAX
+    # a covered query is charged like a single phrase (2*top_k + 1 per
+    # task): under room for eleven of those, eleven covered queries fit
+    # in a run where eleven uncovered ones do not
+    monkeypatch.setattr(q, "DRIVER_FINISH_MAX", 4 * 11 * (1 + 2 * 10))
+    known = {qi: ([1.0, 1.0], [0.0, 0.0]) for qi in range(25)}
+    assert [len(s) for s, _share in q._sub_batches(parsed, known, 4, 10)] \
+        == [11, 11, 3]
+    assert [len(s) for s, _share in q._sub_batches(parsed, {}, 4, 10)] \
+        == [10, 10, 5]
 
 
 def test_tail_bound_charges_per_task(spark, tmp_path, monkeypatch):
     """A 16-block index with DRIVER_FINISH_MAX set between the per-task
     and the per-block candidate bounds: a single search and a batch
-    both finish on the driver, each as exactly ONE Spark job. (A
-    per-block charge sends both to the JVM tail — a persist and extra
-    jobs — although per-task emission keeps the rows under the cap.)"""
+    both run as exactly ONE Spark job, one collect and no rescan. (A
+    per-block charge would split the batch into sub-batches, one job
+    each, although per-task emission keeps its rows under the cap.)"""
     import codebased_spark.operators.query as q
     from codebased_spark.sources.corpus import CORPUS_SCHEMA
 
@@ -880,45 +959,65 @@ def test_tail_bound_charges_per_task(spark, tmp_path, monkeypatch):
 
     n_tasks = q._scan_tasks(spark, n_blocks)
     per_task = q._tail_bound(n_tasks, [1, 1], top_k)[0]
-    per_block = q._tail_bound(n_blocks, [1], top_k)[0]
+    per_block = q._tail_bound(n_blocks, [1, 1], top_k)[0]
     assert per_task < per_block
     monkeypatch.setattr(q, "DRIVER_FINISH_MAX", (per_task + per_block) // 2)
 
-    def no_jvm_tail(*_a):
-        raise AssertionError("JVM tail taken")
-
-    monkeypatch.setattr(q, "_jvm_tail", no_jvm_tail)
-
-    sc = spark.sparkContext
-
-    def jobs_of(group, action):
-        sc.setJobGroup(group, group)
-        try:
-            out = action()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-    rows, n_jobs = jobs_of(
-        "per_task_single", lambda: index.search(queries[0], top_k).collect())
+    rows, n_jobs = _jobs_of(
+        spark, "per_task_single",
+        lambda: index.search(queries[0], top_k).collect())
     assert n_jobs == 1
+    assert len(index.last_trace["collects"]) == 1
+    assert index.last_trace["rescanned"] == 0
     assert sorted((bool(r["name_match"]), round(float(r["rank"]), 12),
                    int(r["doc_id"])) for r in rows) == want[queries[0]]
 
-    rows, n_jobs = jobs_of(
-        "per_task_batch", lambda: index.search_batch(queries, top_k).collect())
+    rows, n_jobs = _jobs_of(
+        spark, "per_task_batch",
+        lambda: index.search_batch(queries, top_k).collect())
     assert n_jobs == 1
+    assert len(index.last_trace["collects"]) == 1
+    assert index.last_trace["rescanned"] == 0
     for qi, qq in enumerate(queries):
         assert sorted((bool(r["name_match"]), round(float(r["rank"]), 12),
                        int(r["doc_id"])) for r in rows
                       if r["qid"] == qi) == want[qq], qq
 
 
+# the generic reader's shuffle by pblock: its map stage and the scan
+GENERIC_SCAN_JOBS = 2
+
+
+@pytest.mark.parametrize("reader,jobs", [
+    ("direct", 0), ("spark", 1), ("generic", GENERIC_SCAN_JOBS)])
+def test_common_path_job_counts(spark, built, monkeypatch, reader, jobs):
+    """The common path gains no job: single-phrase, covered and
+    multi-phrase queries under their share, and the 6-query batch, each
+    run as one scan (one Spark job on the Spark feeder, none on the
+    direct one; the generic reader's pblock shuffle runs its map stage
+    as a job of its own) with one collect and no rescan."""
+    base, _ = built
+    covered = _with_covered(spark, base, monkeypatch)
+    index = _readers(spark, base.index_dir)[reader][0]
+    monkeypatch.setattr(index, "phrase_dfs", base.phrase_dfs)
+    for name, run in [
+            ("single", lambda: index.search('"world"', 10).collect()),
+            ("covered", lambda: index.search(covered, 10).collect()),
+            ("multi", lambda: index.search("code hello", 10).collect()),
+            ("batch6", lambda: index.search_batch(QUERIES[:6], 10).collect())]:
+        _, n_jobs = _jobs_of(spark, f"common_{reader}_{name}", run)
+        trace = index.last_trace
+        assert (trace["route"], n_jobs) == (reader, jobs), name
+        assert len(trace["collects"]) == 1 and trace["rescanned"] == 0, name
+        assert trace["covered"] == int(name == "covered"), name
+
+
 def test_concurrent_searches_one_session(spark, built):
-    """VERDICT r03 #6: two query tails racing on one SparkSession must
-    not corrupt each other via the scoped limit-conf override (now
-    lock-guarded) — results stay deterministic and the session conf is
-    restored."""
+    """VERDICT r03 #6: query tails racing on one SparkSession stay
+    deterministic. The tail once scoped a session-conf override around
+    its collect; every collect is now plain, so the check that the
+    session conf is left as it was pins that the query path sets no
+    session conf at all."""
     import threading
 
     index, _ = built

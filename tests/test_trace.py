@@ -1,7 +1,8 @@
 """The search trace (FtsIndex.last_trace): every search and search_batch
 leaves one record of the route it took, the shards it scanned before
-and after presence pruning, its phrase-df coverage, the candidate rows
-the driver collected, the tail and the phase timings. The record is
+and after presence pruning, its phrase-df coverage, the queries it
+rescanned with known dfs, the rows of each collect and the phase
+timings. The record is
 filled from values the query path computes anyway, so each route's
 record is checked here against the private helpers that compute them
 (shard counts against _prune_batch, candidate rows against a re-run of
@@ -14,10 +15,16 @@ from codebased_spark.operators.phrasedf import build_phrase_df
 from codebased_spark.oracle import Fts5Oracle
 from codebased_spark.plans.engine import FtsIndex, build_index
 from codebased_spark.sources.corpus import CORPUS_SCHEMA, fixture_corpus
-from tests.parity import assert_rank_identical, oracle_hits, spark_hits
+from tests.parity import (
+    assert_rank_identical,
+    oracle_hits,
+    skyband_rows,
+    spark_hits,
+)
 
-FIELDS = {"route", "tail", "shards_total", "shards_scanned", "covered",
-          "candidate_rows", "parse_prune_s", "scan_collect_s", "finish_s"}
+FIELDS = {"route", "rescanned", "shards_total", "shards_scanned", "covered",
+          "collects", "candidate_rows", "parse_prune_s", "scan_collect_s",
+          "finish_s"}
 COVERED = '"server started"'  # one phrase, the fixture's phrase-df table
 TOP_K = 10
 
@@ -94,8 +101,8 @@ def test_direct_route(spark, built):
     index = FtsIndex(spark, idx_dir)
     assert index.last_trace is None and index.driver_direct
     trace = _search(index, oracle, "hello world")
-    assert (trace["route"], trace["tail"], trace["covered"]) == \
-        ("direct", "driver", 0)
+    assert (trace["route"], trace["rescanned"], trace["covered"]) == \
+        ("direct", 0, 0)
     _assert_shards(index, ["hello world"], trace)
     assert trace["shards_scanned"] > 0
     assert trace["candidate_rows"] == \
@@ -107,27 +114,41 @@ def test_spark_route_driver_tail(spark, built):
     index = FtsIndex(spark, idx_dir)
     index.driver_direct = False
     trace = _search(index, oracle, "hello world")
-    assert (trace["route"], trace["tail"]) == ("spark", "driver")
+    assert (trace["route"], trace["rescanned"]) == ("spark", 0)
     _assert_shards(index, ["hello world"], trace)
     assert trace["candidate_rows"] == \
         _candidate_rows(spark, index, ["hello world"], False) > 0
+    assert trace["collects"] == [trace["candidate_rows"]]
 
 
-def test_spark_route_jvm_tail(spark, built, monkeypatch):
-    idx_dir, oracle = built
-    monkeypatch.setattr(q, "DRIVER_FINISH_MAX", 0)
-    index = FtsIndex(spark, idx_dir)
-    trace = _search(index, oracle, "hello world")
-    assert (trace["route"], trace["tail"]) == ("spark", "jvm")
-    assert trace["candidate_rows"] is None
-    _assert_shards(index, ["hello world"], trace)
+def test_spark_route_rescan(spark, tmp_path, monkeypatch):
+    """A two-phrase query whose k-skyband outgrows its per-task share:
+    its first pass yields markers, and it is rescanned as a covered
+    query, so the record holds two collects, each under the cap."""
+    top_k = 3
+    corpus = spark.createDataFrame(skyband_rows(), CORPUS_SCHEMA)
+    index = build_index(spark, corpus, str(tmp_path / "sky"), num_blocks=4)
+    index.driver_direct = False
+    oracle = _oracle(index, corpus)
+    cap = q._scan_tasks(spark, len(index.posting_files)) * (2 * top_k + 2)
+    monkeypatch.setattr(q, "DRIVER_FINISH_MAX", cap)
+    hits = spark_hits(index.search("value xke", top_k))
+    assert_rank_identical(hits, oracle_hits(oracle.search("value xke", top_k)),
+                          top_k)
+    trace = index.last_trace
+    assert set(trace) == FIELDS
+    assert (trace["route"], trace["rescanned"], trace["covered"]) == \
+        ("spark", 1, 0)
+    _assert_shards(index, ["value xke"], trace)
+    assert len(trace["collects"]) == 2 and max(trace["collects"]) <= cap
+    assert trace["candidate_rows"] == sum(trace["collects"])
 
 
 def test_generic_route(spark, built):
     idx_dir, oracle = built
     index = FtsIndex(spark, idx_dir, force_generic_scan=True)
     trace = _search(index, oracle, "hello world")
-    assert (trace["route"], trace["tail"]) == ("generic", "driver")
+    assert (trace["route"], trace["rescanned"]) == ("generic", 0)
     assert trace["shards_total"] is None and trace["shards_scanned"] is None
     assert trace["candidate_rows"] == \
         _candidate_rows(spark, index, ["hello world"], False) > 0
@@ -139,7 +160,8 @@ def test_pruned_to_zero_and_unparsable(spark, built):
     assert index.term_blocks is not None
     for query in ("zqxjkw notthere", "ab"):
         trace = _search(index, oracle, query)
-        assert (trace["route"], trace["tail"]) == ("none", None), query
+        assert (trace["route"], trace["rescanned"], trace["collects"]) == \
+            ("none", 0, []), query
         assert trace["shards_total"] == len(index.posting_files)
         assert trace["shards_scanned"] == 0
         assert trace["candidate_rows"] == 0
@@ -160,8 +182,8 @@ def test_phrase_df_covered(spark, built):
     queries = [COVERED, "hello world", "zqxjkw notthere"]
     rows = index.search_batch(queries, TOP_K).collect()
     trace = index.last_trace
-    assert (trace["route"], trace["tail"], trace["covered"]) == \
-        ("spark", "driver", 1)
+    assert (trace["route"], trace["rescanned"], trace["covered"]) == \
+        ("spark", 0, 1)
     _assert_shards(index, queries, trace)
     assert trace["candidate_rows"] == \
         _candidate_rows(spark, index, queries, False)
@@ -182,8 +204,9 @@ def test_cache_hit(spark, built):
     assert index.search("hello world", TOP_K) is cached
     trace = index.last_trace
     assert set(trace) == FIELDS
-    assert (trace["route"], trace["tail"], trace["shards_scanned"],
-            trace["candidate_rows"]) == ("cache", None, 0, 0)
+    assert (trace["route"], trace["rescanned"], trace["shards_scanned"],
+            trace["collects"], trace["candidate_rows"]) == \
+        ("cache", 0, 0, [], 0)
 
 
 RARE = "zqvx_kw sentinel_jqzz"  # trigrams found in no other file
@@ -223,9 +246,10 @@ def _consistent(trace):
     if set(trace) != FIELDS:
         return False
     if trace["route"] in ("none", "cache"):
-        return trace["tail"] is None and trace["candidate_rows"] == 0 \
+        return trace["collects"] == [] and trace["candidate_rows"] == 0 \
             and trace["shards_scanned"] == 0
-    return trace["tail"] == "driver" and trace["candidate_rows"] > 0 \
+    return trace["rescanned"] == 0 and len(trace["collects"]) == 1 \
+        and trace["candidate_rows"] == trace["collects"][0] > 0 \
         and trace["shards_scanned"] > 0
 
 

@@ -11,11 +11,13 @@ concurrently. Two phases:
 
 Spark local-mode note: concurrent actions from driver threads are a
 supported Spark pattern; the engine's shared mutable state under
-concurrency is the search cache (dict, GIL-atomic ops), the limit-conf
-lock (query.py _LIMIT_CONF_LOCK), and covered-pass memoization — this
-drive is the evidence they compose.
+concurrency is the search cache (lock-guarded), the per-search trace
+records, and covered-pass memoization — this drive is the evidence
+they compose.
 
-Usage: python tools/concurrency_bench.py [n_threads] [index_dir]
+Usage: python tools/concurrency_bench.py [n_threads] [index_dir] [feeder]
+       (feeder: direct or spark pins FtsIndex.driver_direct; default:
+       the index's own gate)
 Env:   SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_SF_DIR
 Prints one JSON line.
 """
@@ -63,7 +65,8 @@ def _distinct_pool(n: int) -> list[str]:
 
 def main() -> None:
     n_threads = int(sys.argv[1]) if len(sys.argv) > 1 else 8
-    idx_dir = sys.argv[2] if len(sys.argv) > 2 else None
+    idx_dir = sys.argv[2] if len(sys.argv) > 2 and sys.argv[2] else None
+    feeder = sys.argv[3] if len(sys.argv) > 3 else None
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from codebased_spark.session import get_spark
@@ -100,6 +103,8 @@ def main() -> None:
             spark, index,
             sorted({p for q in SHARED_QUERIES for p in query_phrases(q)}))
 
+    if feeder is not None:
+        index.driver_direct = {"direct": True, "spark": False}[feeder]
     index.search("warmup", 10).collect()
     index.search("warm once more", 10).collect()
 
@@ -146,6 +151,7 @@ def main() -> None:
         "concurrent_qps": round(len(pool2) / par_sec, 2),
         "concurrency_speedup": round(seq_sec / par_sec, 2),
         "scheduler": scheduler,
+        "feeder": "direct" if index.driver_direct else "spark",
         "cpus": cpus,
     }))
     spark.stop()

@@ -1,8 +1,9 @@
 """Scale demonstration (VERDICT r03 #3): build + query at 10x-50x the
 bench corpus (200k and ~1M files), recording build throughput, per-query
-latency (cold path and phrase-df-covered path), and from each search's
-``index.last_trace`` WHICH tail it took (driver vs JVM), the
-candidate-row count the driver pulled and the shards presence pruning
+latency (cold path and phrase-df-covered path), the Spark jobs each
+search ran (counted through a job group), and from each search's
+``index.last_trace`` its route, the rows of each collect, how many
+queries it rescanned with known dfs and the shards presence pruning
 left it — the honest sandbox proxy for "would these plans survive 100x".
 
 Hot-vs-cold comparison is INTERLEAVED per query (hot first, then cold,
@@ -106,11 +107,23 @@ def main() -> None:
             np.sort(a)
             return round(time.time() - t, 3)
 
+        sc = spark.sparkContext
+
+        def jobs(group: str, action) -> int:
+            sc.setJobGroup(group, group)
+            try:
+                action()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
         def timed(qq: str) -> tuple[float, dict]:
             index.clear_search_cache()
             t = time.time()
-            index.search(qq, 32).collect()
-            return round(time.time() - t, 3), index.last_trace
+            n_jobs = jobs(f"scale_{n_files}_{time.time()}",
+                          lambda: index.search(qq, 32).collect())
+            return round(time.time() - t, 3), dict(index.last_trace,
+                                                   jobs=n_jobs)
 
         probe_before = probe()
         reps = 3
@@ -133,7 +146,10 @@ def main() -> None:
         index.phrase_dfs = saved_dfs
         index.clear_search_cache()
         tb = time.time()
-        index.search_batch(list(QUERIES.values()), 32).count()
+        batch: list = []  # the search's own jobs, not the count's
+        batch_jobs = jobs(f"scale_{n_files}_batch6", lambda: batch.append(
+            index.search_batch(list(QUERIES.values()), 32)))
+        batch[0].count()
         batch_sec = round(time.time() - tb, 3)
 
         lat = sorted(v["sec"] for v in cold.values())
@@ -149,7 +165,7 @@ def main() -> None:
             "p50_hot_sec": lat_hot[len(lat_hot) // 2],
             "phrase_df_build_sec": phrase_df_sec,
             "batch6_per_query_sec": round(batch_sec / len(QUERIES), 3),
-            "batch6_trace": index.last_trace,
+            "batch6_trace": dict(index.last_trace, jobs=batch_jobs),
             "interleaved_reps": reps,
             "hw_np_sort8M_before_sec": probe_before,
             "hw_np_sort8M_after_sec": probe_after,
