@@ -18,7 +18,8 @@ dfs next to the index:
   position verification, tombstones dropped), so the stored dfs are
   the ones a search would count.
 - :class:`~codebased_spark.plans.engine.FtsIndex` loads the table when
-  its fingerprint matches the live corpus_stats; a query whose EVERY
+  its fingerprint (n_docs, total_dl, epoch) matches the index's own,
+  from its latest manifest record; a query whose EVERY
   phrase is covered skips df verification and tightens emission: with
   every idf known in-task, multi-phrase blocks emit their exact branch
   top-k (<= 2*top_k rows) instead of the k-skyband (one emission
@@ -438,30 +439,6 @@ def _phrase_block_stats(spark, index, pts, pblocks=None):
              int(r["df_all"]), int(r["df_name"])) for r in stats.collect()]
 
 
-def incr_epoch_at(fs, index_dir: str) -> int:
-    """Number of incremental-commit manifests under ``index_dir`` —
-    the single definition shared by the commit writer (which names the
-    next ``incr_<epoch>`` manifest) and the phrase-df staleness
-    fingerprint, so the two can never diverge. Raises on listing
-    failure — the writer must not silently restart at epoch 0."""
-    from codebased_spark.plans.engine import _join
-
-    return len([f for f in fs.list_dir(_join(index_dir, "_manifest"))
-                if f.startswith("incr_")])
-
-
-def _incr_epoch(index) -> int:
-    """Number of incremental-commit manifests — part of the phrase-df
-    staleness fingerprint. (n_docs, total_dl) alone can collide: a
-    same-length single-file edit preserves both, and with the delta
-    path the PRE-commit table now survives on disk, so a crash between
-    commit and update_phrase_df must still leave it detectably stale."""
-    try:
-        return incr_epoch_at(index.fs, index.index_dir)
-    except Exception:
-        return 0
-
-
 def _phrase_table_paths(index):
     """(pyarrow-openable dir path or None, spark dir path) for the
     phrase table — None means pyarrow cannot reach the store and the
@@ -549,7 +526,7 @@ def _write_phrase_table(spark, index, block_rows, phrase_order) -> dict:
         "layout": "per_block",
         "n_docs": index.n_docs,
         "total_dl": index.total_dl,
-        "epoch": _incr_epoch(index),
+        "epoch": index.epoch,
         "n_phrases": len(phrase_order),
     })
     agg: dict = {p: [0, 0] for p in phrase_order}
@@ -568,8 +545,8 @@ def build_phrase_df(spark: SparkSession, index, phrases: list[str]) -> dict:
     never match — trigram semantics). The table is stored PER BLOCK
     (phrase, pblock, df_all, df_name) so commits can delta-rebuild just
     the dirty blocks (:func:`update_phrase_df`); the manifest records
-    the live (n_docs, total_dl) fingerprint and FtsIndex refuses a
-    stale table."""
+    the index's (n_docs, total_dl, epoch) fingerprint and FtsIndex
+    refuses a stale table."""
     folded = []
     seen = set()
     for p in phrases:
@@ -639,7 +616,11 @@ def _stored_fingerprint(index) -> "tuple | None":
     """(n_docs, total_dl, epoch) the stored table's manifest was stamped
     with, or None when the manifest is absent, of another format, or
     lacks a field (a table from before per-block rows and epochs reads
-    as absent)."""
+    as absent). The epoch (``FtsIndex.epoch``) is in it because (n_docs,
+    total_dl) alone can collide: a same-length single-file edit keeps
+    both, and the PRE-commit table survives on disk until the commit's
+    delta lands, so a crash in between must leave it detectably
+    stale."""
     from codebased_spark.plans.engine import _current_manifest
 
     man = _current_manifest(index.fs, index.index_dir, PHRASE_DF_MANIFEST)
@@ -655,7 +636,7 @@ def load_phrase_df(spark: SparkSession, index) -> dict:
     built, so its dfs would silently corrupt idf)."""
     stored = _stored_fingerprint(index)
     if stored is None or \
-            stored != (index.n_docs, index.total_dl, _incr_epoch(index)):
+            stored != (index.n_docs, index.total_dl, index.epoch):
         return {}
     try:
         agg: dict = {}

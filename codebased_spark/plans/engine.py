@@ -3,9 +3,10 @@
 On-disk layout (<index_dir>/):
   doc_stats/    parquet — per-doc metadata + lengths (no content)
   postings/     parquet partitioned by pblock, rows sorted by (term, col)
-  corpus_stats/ parquet — single row (n_docs, avgdl, num_blocks, version)
   deletes/      parquet partitioned by pblock — tombstoned doc_ids
-  _manifest/    one JSON per completed stage with lineage + metrics
+  _manifest/    one JSON per completed stage and per commit (incr_<n>)
+                with lineage + metrics; the latest of doc_stats and
+                incr_<n> holds the scalars (n_docs, total_dl, num_blocks)
 
 Resumability (north_rule): each stage commits atomically (parquet
 _SUCCESS + a manifest record written after). ``build_index(...,
@@ -15,17 +16,16 @@ retry/commit is Spark's task-commit protocol. The build and the
 incremental commit (streaming/incremental.py) share one write step,
 :func:`_overlapped_write`: a helper thread with the caller's local
 properties runs the small jobs while the calling thread writes the
-postings. A build's thread writes doc_stats, runs the per-block agg
-and writes corpus_stats, and its three manifests land only after the
-step returns, in dependency order (doc_stats, corpus_stats,
-postings): a postings manifest therefore always comes with the
-doc_stats manifest that records its ``num_blocks``. A commit mutates
-a live index, so it keeps its tables in the order doc_stats, postings,
-tombstones, corpus_stats and only the per-block agg overlaps its
-posting append (see ``incremental_update``). Manifest records carry
-per-pblock row counts and byte sizes — the per-partition lineage +
-metrics record. The tables are written and read back with fixed
-schemas (``*_SCHEMA``), so opening an index infers nothing.
+postings. A build's thread writes doc_stats and runs the per-block agg,
+and its two manifests land only after the step returns, doc_stats
+first: a postings manifest therefore always comes with the doc_stats
+manifest that records its ``num_blocks``. A commit mutates a live
+index, so it writes doc_stats, postings, tombstones, then its
+``incr_<n>`` record, and only the per-block agg overlaps its posting
+append (see ``incremental_update``). Manifest records carry per-pblock
+row counts and byte sizes — the per-partition lineage + metrics
+record. The tables are written and read back with fixed schemas
+(``*_SCHEMA``), so opening an index infers nothing and runs no job.
 (Reference analogue: single SQLite transaction + fts 'optimize' at
 codebased/index.py:336,668-672; stats dump at
 codebased/stats.py:59-69.)
@@ -35,13 +35,16 @@ may live on HDFS/S3A as well as local disk. Queries keep the pyarrow
 shard reader on ANY store pyarrow.fs can open (local paths and
 file:// / hdfs:// / s3:// URIs alike — tasks read shards and
 tombstones through the resolved filesystem); only stores pyarrow
-cannot reach swap in the Spark reader (the posting DataFrame grouped
-per pblock and cogrouped with the tombstone rows) under the same task
-body and tail — nothing is ever materialized on the driver either way.
+cannot reach swap in the Spark reader (the term-filtered posting
+DataFrame and the tombstone rows, repartitioned by pblock) under the
+same task body and tail — nothing is ever materialized on the driver
+either way.
 """
 
 from __future__ import annotations
 
+import functools
+import re
 import threading
 from collections import OrderedDict, deque
 
@@ -55,7 +58,8 @@ from codebased_spark.plans.fsio import IndexFS, is_local, local_path
 
 # v2: deletes/ is partitioned by pblock (task-side tombstone reads — the
 # round-1 driver-materialized numpy array is gone from the query path).
-FORMAT_VERSION = 2
+# v3: the scalars live in the manifest records; no corpus_stats table.
+FORMAT_VERSION = 3
 
 # Posting-shard parquet row-group size. Rows are term-sorted within a
 # shard, so the per-query term filter prunes to O(1) row groups; small
@@ -65,7 +69,6 @@ POSTING_ROW_GROUP_BYTES = 512 * 1024
 # with: opening an index pays no parquet footer-inference job. Each
 # sits beside its writer; doc_stats is DOCS_COLUMNS minus content (a
 # chunked build's extra chunk-geometry columns stay on disk, unread).
-CORPUS_STATS_SCHEMA = "n_docs long, avgdl double, total_dl long, num_blocks int, version int"
 DOC_STATS_SCHEMA = (
     "doc_id long, repo string, path string, commit string, lang string, "
     "name string, kind string, byte_start long, byte_end long, sha256 string, "
@@ -85,27 +88,30 @@ def _join(base: str, *parts: str) -> str:
     return "/".join([base.rstrip("/"), *parts])
 
 
-def _posting_shards(fs: IndexFS, index_dir: str) -> list[tuple[int, str, int]]:
+def _posting_shards(fs: IndexFS, index_dir: str, pblocks=None) -> list[tuple[int, str, int]]:
     """(pblock, path, size) of every posting shard file under
-    ``index_dir``, sorted — the one parse of the ``pblock=`` layout."""
+    ``index_dir`` (or in the ``pblocks`` dirs only), sorted — the one
+    parse of the ``pblock=`` layout."""
+    root = _join(index_dir, "postings")
+    roots = [root] if pblocks is None else [_join(root, f"pblock={b}") for b in pblocks]
     out = []
-    for path, size in fs.list_files(_join(index_dir, "postings")):
+    for path, size in (f for r in roots for f in fs.list_files(r)):
         seg = [s for s in path.split("/") if s.startswith("pblock=")]
         if path.endswith(".parquet") and seg:
             out.append((int(seg[-1].split("=", 1)[1]), path, int(size or 0)))
     return sorted(out)
 
 
-def _postings_footer_metrics(fs: IndexFS, index_dir: str) -> dict:
-    """Per-block lineage metrics straight from parquet footers + the
-    filesystem — zero Spark jobs (driver-side, O(#files)). On remote
-    stores rows come from the footer via the same listing; bytes always
-    from FileStatus."""
+def _postings_footer_metrics(fs: IndexFS, index_dir: str, pblocks=None) -> dict:
+    """Per-block lineage metrics (of ``pblocks`` only, when given)
+    straight from parquet footers + the filesystem — zero Spark jobs
+    (driver-side, O(#files)). On remote stores rows come from the
+    footer via the same listing; bytes always from FileStatus."""
     out: dict[str, dict] = {}
     local = is_local(index_dir)
     if local:
         import pyarrow.parquet as pq
-    for pb, path, size in _posting_shards(fs, index_dir):
+    for pb, path, size in _posting_shards(fs, index_dir, pblocks):
         ent = out.setdefault(str(pb), {"rows": 0, "bytes": 0})
         ent["bytes"] += size
         if local:
@@ -125,17 +131,6 @@ def _write_postings(docs: DataFrame, index_dir: str, mode: str) -> None:
     build_postings_fused(docs).write.mode(mode).option(
         "parquet.block.size", str(POSTING_ROW_GROUP_BYTES)
     ).partitionBy("pblock").parquet(_join(index_dir, "postings"))
-
-
-def _write_corpus_stats(spark: SparkSession, index_dir: str, n: int,
-                        total_dl: int, num_blocks: int) -> None:
-    """(Re)write the single-row corpus_stats table."""
-    from codebased_spark.session import one_row_df
-
-    one_row_df(
-        spark, CORPUS_STATS_SCHEMA,
-        (n, (total_dl / n) if n else 0.0, total_dl, num_blocks, FORMAT_VERSION),
-    ).write.mode("overwrite").parquet(_join(index_dir, "corpus_stats"))
 
 
 def _append_deletes(dead: DataFrame, index_dir: str) -> None:
@@ -183,7 +178,8 @@ def _overlapped_write(spark: SparkSession, docs: DataFrame, index_dir: str,
 
 def get_block_rows(docs: DataFrame) -> list:
     """(pblock, n, sdl) per doc block: one tiny agg yields BOTH the
-    per-block lineage and the global corpus stats (N, total dl)."""
+    per-block lineage and the corpus totals (N, total dl) the manifest
+    record carries."""
     return (
         docs.groupBy(F.shiftright("doc_id", DOC_ID_BLOCK_BITS).alias("pblock"))
         .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sdl"))
@@ -214,8 +210,38 @@ def _write_manifest(fs: IndexFS, index_dir: str, stage: str, payload: dict) -> N
     fs.write_json(_manifest_path(index_dir, stage), payload)
 
 
+_COMMIT_RECORD = re.compile(r"incr_(\d+)\.json")
+
+
+def _open_record(fs: IndexFS, index_dir: str) -> tuple[int, dict]:
+    """(epoch, record) from one listing of ``_manifest/`` and one JSON
+    read. The epoch counts commits: one more than the highest complete
+    ``incr_<n>.json`` (a ``.tmp`` left by a crashed write is none), 0
+    before the first. The record is that commit's, else the build's
+    doc_stats record. Needs the build's postings record."""
+    names = fs.list_dir(_join(index_dir, "_manifest"))
+    if "postings.json" not in names:
+        raise FileNotFoundError(f"no completed build at {index_dir} — "
+                                "build_index(..., resume=True) finishes it")
+    done = [int(m.group(1)) for m in map(_COMMIT_RECORD.fullmatch, names) if m]
+    epoch = max(done) + 1 if done else 0
+    rec = fs.read_json(_manifest_path(
+        index_dir, f"incr_{epoch - 1}" if epoch else "doc_stats"))
+    version = int(rec.get("version", 0))
+    if version != FORMAT_VERSION:
+        raise ValueError(
+            f"index at {index_dir} has format v{version}, engine expects "
+            f"v{FORMAT_VERSION} — rebuild (build_index) or compact with a "
+            f"matching engine version"
+        )
+    return epoch, rec
+
+
 class FtsIndex:
     """A loaded index: handles to the tables + broadcast scalars.
+
+    ``n_docs``, ``total_dl``, ``num_blocks`` and ``epoch`` come from
+    the manifest records (:func:`_open_record`), with no Spark job.
 
     ``last_trace`` is the record of the most recent :meth:`search` or
     :meth:`search_batch` to return (None before the first): a plain
@@ -240,27 +266,11 @@ class FtsIndex:
         self.index_dir = index_dir
         self.force_generic_scan = force_generic_scan
         self.fs = IndexFS(spark, index_dir, force_jvm=force_jvm)
-        stats = spark.read.schema(CORPUS_STATS_SCHEMA).parquet(
-            _join(index_dir, "corpus_stats")).collect()[0]
-        version = int(stats["version"] or 0)
-        if version != FORMAT_VERSION:
-            raise ValueError(
-                f"index at {index_dir} has format v{version}, engine expects "
-                f"v{FORMAT_VERSION} — rebuild (build_index) or compact with a "
-                f"matching engine version"
-            )
-        self.n_docs = int(stats["n_docs"])
-        self.avgdl = float(stats["avgdl"])
-        self.total_dl = int(stats["total_dl"] if stats["total_dl"] is not None
-                            else round(self.avgdl * self.n_docs))
-        self.num_blocks = int(stats["num_blocks"])
-        from codebased_spark.operators.build import POSTING_SCHEMA
-
-        # empty corpora leave the postings dir file-less; pin the schema
-        # so loading never depends on footer inference
-        self.postings = spark.read.schema(POSTING_SCHEMA).parquet(
-            _join(index_dir, "postings")
-        )
+        self.epoch, rec = _open_record(self.fs, index_dir)
+        self.n_docs = int(rec["n_docs"])
+        self.total_dl = int(rec["total_dl"])
+        self.avgdl = self.total_dl / self.n_docs if self.n_docs else 0.0
+        self.num_blocks = int(rec["num_blocks"])
         self.doc_stats = spark.read.schema(DOC_STATS_SCHEMA).parquet(
             _join(index_dir, "doc_stats"))
         self.postings_bytes = 0
@@ -304,6 +314,16 @@ class FtsIndex:
         # service never grows it unbounded.
         self.query_log: "deque[str]" = deque(maxlen=QUERY_LOG_MAX)
         self.last_trace: "dict | None" = None
+
+    @functools.cached_property
+    def postings(self) -> DataFrame:
+        """The posting table, made on first use (only the Spark reader
+        needs it; above 32 ``pblock=`` dirs its listing is a Spark job),
+        with a pinned schema: empty corpora leave no files to infer."""
+        from codebased_spark.operators.build import POSTING_SCHEMA
+
+        return self.spark.read.schema(POSTING_SCHEMA).parquet(
+            _join(self.index_dir, "postings"))
 
     def deletes_df(self) -> "DataFrame | None":
         """Tombstoned doc_ids as a DataFrame (None when absent) — the
@@ -515,58 +535,48 @@ def build_index(
     recorded = _current_manifest(fs, index_dir, "doc_stats") if resume else None
     if recorded is not None:
         num_blocks = int(recorded.get("num_blocks", num_blocks))
-    todo = [s for s in ("doc_stats", "corpus_stats", "postings")
+    todo = [s for s in ("doc_stats", "postings")
             if not (resume and _current_manifest(fs, index_dir, s))]
 
-    if todo:
+    if "doc_stats" in todo:
         docs = build_docs(corpus, num_blocks=num_blocks, chunk=chunk).persist()
 
-        def write_stats() -> tuple[list, int, int]:
-            """doc_stats and corpus_stats data — everything that reads
-            the persisted docs EXCEPT the posting build. Runs in a
-            background thread OVERLAPPED with the posting write (guide
-            §2.6): the posting build is the long pole and these small
-            jobs back-fill its idle capacity."""
-            if "doc_stats" in todo:
-                _write_doc_stats(docs, index_dir, "overwrite")
-            rows = get_block_rows(docs)
-            n = sum(int(r["n"]) for r in rows)
-            total_dl = sum(int(r["sdl"]) for r in rows)
-            if "corpus_stats" in todo:
-                _write_corpus_stats(spark, index_dir, n, total_dl, num_blocks)
-            return rows, n, total_dl
+        def write_stats() -> list:
+            """The doc_stats rows and the per-block agg — everything
+            that reads the persisted docs EXCEPT the posting build. Runs
+            in a background thread OVERLAPPED with the posting write
+            (guide §2.6): the posting build is the long pole and these
+            small jobs back-fill its idle capacity."""
+            _write_doc_stats(docs, index_dir, "overwrite")
+            return get_block_rows(docs)
 
         try:
-            block_rows, n, total_dl = _overlapped_write(
+            block_rows = _overlapped_write(
                 spark, docs, index_dir, "overwrite", write_stats, "postings" in todo)
         finally:
             docs.unpersist()
-
         # manifests only after both writers finished, in dependency
         # order: a postings manifest implies a doc_stats manifest, so a
         # resume never pairs committed postings with a regenerated
         # num_blocks
-        if "doc_stats" in todo:
-            _write_manifest(
-                fs, index_dir, "doc_stats",
-                {"stage": "doc_stats", "version": FORMAT_VERSION,
-                 "num_blocks": num_blocks,
-                 "docs_per_block": {str(r["pblock"]): int(r["n"])
-                                    for r in block_rows}},
-            )
-        if "corpus_stats" in todo:
-            _write_manifest(
-                fs, index_dir, "corpus_stats",
-                {"stage": "corpus_stats", "n_docs": n,
-                 "avgdl": (total_dl / n) if n else 0.0,
-                 "version": FORMAT_VERSION},
-            )
-        if "postings" in todo:
-            _write_manifest(
-                fs, index_dir, "postings",
-                {"stage": "postings", "version": FORMAT_VERSION,
-                 "per_block": _postings_footer_metrics(fs, index_dir)},
-            )
+        _write_manifest(
+            fs, index_dir, "doc_stats",
+            {"stage": "doc_stats", "version": FORMAT_VERSION,
+             "n_docs": sum(int(r["n"]) for r in block_rows),
+             "total_dl": sum(int(r["sdl"]) for r in block_rows),
+             "num_blocks": num_blocks,
+             "docs_per_block": {str(r["pblock"]): int(r["n"])
+                                for r in block_rows}},
+        )
+    elif "postings" in todo:  # no stats agg: the doc_stats record has the totals
+        _write_postings(build_docs(corpus, num_blocks=num_blocks, chunk=chunk),
+                        index_dir, "overwrite")
+    if "postings" in todo:
+        _write_manifest(
+            fs, index_dir, "postings",
+            {"stage": "postings", "version": FORMAT_VERSION,
+             "per_block": _postings_footer_metrics(fs, index_dir)},
+        )
 
     if not (resume and _current_manifest(fs, index_dir, "term_blocks")):
         # term->block presence manifest (operators/presence.py): a

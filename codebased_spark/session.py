@@ -44,9 +44,8 @@ def one_row_df(spark: SparkSession, schema: str, row: tuple):
     into a single task that replays every python partition
     sequentially, so its cost grows with the core count. A one-row
     parquet write took 0.75-0.78 s that way against 0.13-0.16 s for
-    this shape (local[4], 4 cores) — and the engine writes a
-    single-row table (corpus_stats, IVF centroids) on every build and
-    every incremental commit. ``schema`` is a DDL string
+    this shape (local[4], 4 cores). ``ivf_topk`` builds its one-row
+    probe this way. ``schema`` is a DDL string
     (``StructType.fromDDL``), so a parameterized type such as
     ``decimal(10,2)`` keeps its comma; values are scalar literals."""
     from pyspark.sql import functions as F

@@ -17,7 +17,8 @@ Mirrors the reference's semantics on Spark's storage model:
   paths present in the batch, exactly like the background worker's
   scoped re-index (index.py:332-334).
 - stats: N/avgdl are maintained exactly from (old totals - tombstoned
-  + appended) — FTS5's 'averages' row update.
+  + appended) — FTS5's 'averages' row update — and carried by the
+  commit's ``incr_<epoch>`` manifest record, the commit's last write.
 - compaction (the fts 'optimize' analogue, index.py:670): rebuilding
   tombstone-heavy blocks needs the corpus content and is a full-build
   over live paths; ``tombstone_ratio`` tells operators when it's due.
@@ -40,7 +41,6 @@ from codebased_spark.plans.engine import (
     _append_deletes,
     _overlapped_write,
     _postings_footer_metrics,
-    _write_corpus_stats,
     _write_doc_stats,
     _write_manifest,
     get_block_rows,
@@ -53,7 +53,6 @@ def incremental_update(
     corpus_batch: DataFrame,
     chunk: bool = False,
     full_snapshot: bool = False,
-    num_blocks: int | None = None,
     force_jvm: bool = False,
     force_generic_scan: bool = False,
     rebuild_phrase_df: bool = True,
@@ -64,11 +63,12 @@ def incremental_update(
     path that is absent from the batch (delete-not-visited).
     ``force_jvm``/``force_generic_scan`` apply to both the working and
     the returned index handle (a caller that opted out of the pyarrow
-    fast path must not get it silently re-enabled by a commit).
+    fast path must not get it silently re-enabled by a commit). The new
+    docs go into ``idx.num_blocks`` fresh blocks.
 
     Stages, in order (``stage_timings`` keys):
 
-    - ``load_index``: open the index (one job: the corpus_stats row).
+    - ``load_index``: open the index (no Spark job: its manifest record).
     - ``sha_gate_probe``: the change-set pass. One relation, the batch
       rows that fail the sha gate with the live docs of their paths, is
       materialized once (``localCheckpoint``); every scalar the commit
@@ -80,18 +80,21 @@ def incremental_update(
       (:func:`~codebased_spark.plans.engine._overlapped_write`): the
       posting append, with the new docs' per-block agg in a helper
       thread.
-    - ``deletes_append``, ``corpus_stats_write``: the tombstones, then
-      the exact new totals.
-    - ``incr_manifest_footer_metrics``: the ``incr_<epoch>`` manifest.
+    - ``deletes_append``: the tombstones.
+    - ``incr_manifest_footer_metrics``: the ``incr_<epoch>`` manifest
+      record: the exact new totals (n_docs, total_dl, num_blocks), the
+      appended block range ``blocks`` and the footer metrics of those
+      blocks' shards.
     - ``presence_delta``, ``reload_index``, ``phrase_df_delta``: after
       the manifest, in that order.
 
-    The tables change in the order doc_stats, postings, tombstones,
-    corpus_stats, so a commit that fails part-way never leaves posting
-    blocks without their doc_stats rows, nor the old docs tombstoned
-    before the new postings landed. A re-apply after a failed posting
-    append is still a sha-gated no-op, though: the failed commit's
-    doc_stats rows count as live (the strict xfail
+    The writes land in the order doc_stats, postings, tombstones, then
+    the manifest record, so a commit that fails part-way never leaves
+    posting blocks without their doc_stats rows, nor the old docs
+    tombstoned before the new postings landed, and until the record
+    lands the index keeps its old totals and epoch. A re-apply after a
+    failed posting append is still a sha-gated no-op, though: the
+    failed commit's doc_stats rows count as live (the strict xfail
     ``test_reapply_after_a_failed_posting_append``).
 
     A live hot-phrase df side table (operators/phrasedf.py) is kept
@@ -129,11 +132,7 @@ def incremental_update(
     # the PRE-commit fingerprint the dirty set is derived from: the
     # delta splice refuses a stored table from any other generation
     # (ADVICE r06 — see update_phrase_df)
-    prior_fp = None
-    if prior_phrases:
-        from codebased_spark.operators.phrasedf import _incr_epoch
-
-        prior_fp = (idx.n_docs, idx.total_dl, _incr_epoch(idx))
+    prior_fp = (idx.n_docs, idx.total_dl, idx.epoch)
     _mark("load_index")
 
     # the highest stored block (for the fresh-block offset), observed
@@ -201,7 +200,7 @@ def incremental_update(
     # their block, ADVICE.md r01)
     max_pb = stored_obs.get["max_pb"]
     offset = int(max_pb) + 1 if max_pb is not None else 0
-    n_blocks = num_blocks or idx.num_blocks
+    n_blocks = idx.num_blocks
 
     block_rows: list = []
     if n_changed:
@@ -224,24 +223,23 @@ def incremental_update(
             new_docs.unpersist()
     n_add = sum(int(r["n"]) for r in block_rows)
     dl_add = sum(int(r["sdl"]) for r in block_rows)
+    # the blocks the new docs went to (build_docs)
+    blocks = (offset, offset + n_blocks if n_add else offset)
     # the old docs die and the totals move only once the new postings
     # have landed
     if n_dead:
         _append_deletes(delta.where(F.col("doc_id").isNotNull()), index_dir)
         _mark("deletes_append")
-    _write_corpus_stats(spark, index_dir, idx.n_docs - n_dead + n_add,
-                        idx.total_dl - dl_dead + dl_add, n_blocks)
-    _mark("corpus_stats_write")
-
-    from codebased_spark.operators.phrasedf import incr_epoch_at
-
-    epoch = incr_epoch_at(idx.fs, index_dir)
+    stage = f"incr_{idx.epoch}"
     _write_manifest(
-        idx.fs, index_dir, f"incr_{epoch}",
-        {"stage": f"incr_{epoch}", "version": FORMAT_VERSION,
+        idx.fs, index_dir, stage,
+        {"stage": stage, "version": FORMAT_VERSION,
+         "n_docs": idx.n_docs - n_dead + n_add,
+         "total_dl": idx.total_dl - dl_dead + dl_add,
+         "num_blocks": n_blocks, "blocks": list(blocks),
          "docs_added": n_add, "docs_tombstoned": n_dead,
          "full_snapshot": full_snapshot,
-         "per_block": _postings_footer_metrics(idx.fs, index_dir)},
+         "per_block": _postings_footer_metrics(idx.fs, index_dir, range(*blocks))},
     )
     _mark("incr_manifest_footer_metrics")
     if n_add:
@@ -267,11 +265,8 @@ def incremental_update(
 
         # delta path: recompute only tombstone-touched + appended
         # blocks (O(changed blocks)); full rebuild only when no
-        # per-block table survives to splice into. Appended docs sit
-        # in blocks [offset, offset + n_blocks) (build_docs)
-        dirty = set(seen["dead_pblocks"])
-        if n_add:
-            dirty |= set(range(offset, offset + n_blocks))
+        # per-block table survives to splice into
+        dirty = set(seen["dead_pblocks"]) | set(range(*blocks))
         if update_phrase_df(spark, out, dirty,
                             prior_fingerprint=prior_fp) is None:
             build_phrase_df(spark, out, prior_phrases)

@@ -125,7 +125,7 @@ def test_resume_adopts_manifest_num_blocks(spark, tmp_path):
             "repo", "path", "doc_id").collect()
     }
 
-    # simulate a crash after doc_stats+corpus_stats: postings missing
+    # simulate a crash after doc_stats: postings missing
     os.remove(os.path.join(idx_dir, "_manifest", "postings.json"))
     index = build_index(spark, corpus, idx_dir, num_blocks=16, resume=True)
 

@@ -84,7 +84,7 @@ def test_batch_search_respects_tombstones(spark, tmp_path):
     build_index(spark, spark.createDataFrame(v1, CORPUS_SCHEMA), idx_dir, num_blocks=2)
     idx = incremental_update(
         spark, idx_dir, spark.createDataFrame(v2, CORPUS_SCHEMA),
-        full_snapshot=True, num_blocks=2,
+        full_snapshot=True,
     )
     res = idx.search_batch(["ALPHABRAVO"], 10).collect()
     assert len(res) == 1  # the tombstoned doc is gone from batch results too

@@ -62,7 +62,7 @@ def test_incremental_matches_fresh_oracle(spark, tmp_path):
 
     build_index(spark, v1, idx_dir, num_blocks=2)
     index = incremental_update(
-        spark, idx_dir, v2, full_snapshot=True, num_blocks=2
+        spark, idx_dir, v2, full_snapshot=True
     )
 
     assert index.n_docs == 4  # a.py(new), b.md, srv.js, new.go
@@ -92,7 +92,7 @@ def test_incremental_noop_when_unchanged(spark, tmp_path):
     v1 = spark.createDataFrame(V1, CORPUS_SCHEMA)
     build_index(spark, v1, idx_dir, num_blocks=2)
     before = sorted(os.listdir(os.path.join(idx_dir, "postings")))
-    index = incremental_update(spark, idx_dir, v1, full_snapshot=True, num_blocks=2)
+    index = incremental_update(spark, idx_dir, v1, full_snapshot=True)
     assert index.n_docs == 4
     assert _deleted(index) == set()
     assert sorted(os.listdir(os.path.join(idx_dir, "postings"))) == before
@@ -106,9 +106,9 @@ def test_resurfacing_old_content_is_reindexed(spark, tmp_path):
     b = [("r", "f.py", "c" * 40, "python", "BBB version two")]
     build_index(spark, spark.createDataFrame(a, CORPUS_SCHEMA), idx_dir, num_blocks=2)
     incremental_update(spark, idx_dir, spark.createDataFrame(b, CORPUS_SCHEMA),
-                       full_snapshot=True, num_blocks=2)
+                       full_snapshot=True)
     index = incremental_update(spark, idx_dir, spark.createDataFrame(a, CORPUS_SCHEMA),
-                               full_snapshot=True, num_blocks=2)
+                               full_snapshot=True)
     assert index.n_docs == 1
     hits = spark_hits(index.search("AAA", 10))
     assert len(hits) == 1
@@ -123,7 +123,7 @@ def test_compaction_drops_tombstones_same_results(spark, tmp_path):
     v1 = spark.createDataFrame(V1, CORPUS_SCHEMA)
     v2 = spark.createDataFrame(V2, CORPUS_SCHEMA)
     build_index(spark, v1, idx_dir, num_blocks=2)
-    before = incremental_update(spark, idx_dir, v2, full_snapshot=True, num_blocks=2)
+    before = incremental_update(spark, idx_dir, v2, full_snapshot=True)
     pre = {
         q: [(r["name_match"], round(r["score"], 9)) for r in before.search(q, 10).collect()]
         for q in QUERIES
@@ -332,15 +332,15 @@ def committed(spark, tmp_path_factory):
 
 
 def test_commit_runs_in_a_handful_of_jobs(spark, committed):
-    """One change-set pass, the build's write step and opens without
-    schema inference: a 2-file commit starts at most 16 Spark jobs, a
-    sha-gated re-apply at most 6. The tables it writes equal the
+    """One change-set pass, the build's write step and opens that read
+    the manifest records: a 2-file commit starts at most 11 Spark jobs,
+    a sha-gated re-apply at most 4. The tables it writes equal the
     reference commit, and the result stays rank-identical to FTS5."""
     from tests.test_index_parity import _postings_digest
 
     index = committed["index"]
-    assert len(committed["jobs"]) + committed["ungrouped"] <= 16, committed["jobs"]
-    assert len(committed["noop_jobs"]) + committed["noop_ungrouped"] <= 6
+    assert len(committed["jobs"]) + committed["ungrouped"] <= 11, committed["jobs"]
+    assert len(committed["noop_jobs"]) + committed["noop_ungrouped"] <= 4
     # the write step's helper thread runs with the caller's job group,
     # and its jobs keep their engine call sites
     assert committed["ungrouped"] == 0
@@ -362,34 +362,118 @@ def test_commit_runs_in_a_handful_of_jobs(spark, committed):
 
 def test_table_schemas_are_the_reader_constants(spark, committed):
     """The schemas a build and a commit write (inferred from the files)
-    equal the constants the index opens with, so opening an index runs
-    one Spark job: the corpus_stats row."""
+    equal the constants the index opens with, so opening an index
+    infers nothing."""
     from pyspark.sql.types import StructType
 
     from codebased_spark.operators.docs import DOCS_COLUMNS
-    from codebased_spark.plans.engine import (
-        CORPUS_STATS_SCHEMA,
-        DELETES_SCHEMA,
-        DOC_STATS_SCHEMA,
-        FtsIndex,
-    )
+    from codebased_spark.plans.engine import DELETES_SCHEMA, DOC_STATS_SCHEMA
 
     d = committed["dir"]
-    for table, ddl in (("corpus_stats", CORPUS_STATS_SCHEMA),
-                       ("doc_stats", DOC_STATS_SCHEMA),
+    for table, ddl in (("doc_stats", DOC_STATS_SCHEMA),
                        ("deletes", DELETES_SCHEMA)):
         inferred = spark.read.parquet(os.path.join(d, table)).schema
         assert inferred == StructType.fromDDL(ddl), table
     assert StructType.fromDDL(DOC_STATS_SCHEMA).names == [
         c for c in DOCS_COLUMNS if c != "content"]
-    _, jobs, ungrouped = _count_jobs(spark, "open", lambda: FtsIndex(spark, d))
-    assert len(jobs) + ungrouped == 1
+
+
+def test_open_runs_no_spark_job(spark, committed, tmp_path):
+    """Opening an index reads its scalars from the latest manifest
+    record and lists its shards on the driver: no Spark job, also past
+    the 32 ``pblock=`` dirs above which making the posting DataFrame
+    runs a Spark listing job (it is made on first use)."""
+    from codebased_spark.plans.engine import FtsIndex
+
+    _, jobs, ungrouped = _count_jobs(
+        spark, "open", lambda: FtsIndex(spark, committed["dir"]))
+    assert len(jobs) + ungrouped == 0
+    idx_dir = str(tmp_path / "wide")
+    files = [("r", f"f{i}.py", "c" * 40, "python", f"def fn{i}(): return {i}")
+             for i in range(400)]
+    built = build_index(spark, spark.createDataFrame(files, CORPUS_SCHEMA), idx_dir,
+                        num_blocks=40)
+    assert len({pb for pb, _ in built.posting_files}) > 32
+    index, jobs, ungrouped = _count_jobs(
+        spark, "open_wide", lambda: FtsIndex(spark, idx_dir))
+    assert len(jobs) + ungrouped == 0
+    assert (index.n_docs, index.total_dl, index.num_blocks, index.epoch) == (
+        built.n_docs, built.total_dl, 40, 0)
+    assert index.postings.count() == built.postings.count() > 0
+
+
+def test_commit_record_carries_the_totals(committed):
+    """The commit's ``incr_0`` record holds the totals the index opens
+    with, and names the blocks the commit appended; its footer metrics
+    cover those blocks only."""
+    import json
+
+    index = committed["index"]
+    with open(os.path.join(committed["dir"], "_manifest", "incr_0.json")) as f:
+        rec = json.load(f)
+    dead = _deleted(index)
+    live = [r for r in index.doc_stats.collect() if int(r["doc_id"]) not in dead]
+    assert index.epoch == committed["same"].epoch == 1
+    assert (rec["n_docs"], rec["total_dl"], rec["num_blocks"]) == (
+        index.n_docs, index.total_dl, index.num_blocks) == (
+        len(live), sum(int(r["dl"]) for r in live), 2)
+    assert rec["blocks"] == [2, 4]  # above the build's blocks 0 and 1
+    appended = {str(pb) for pb, _ in index.posting_files if pb >= 2}
+    assert set(rec["per_block"]) == appended != set()
+
+
+def test_other_format_version_fails_to_open(spark, tmp_path):
+    """A manifest record of another FORMAT_VERSION does not open: the
+    error names both versions and says to rebuild."""
+    import json
+
+    from codebased_spark.plans.engine import FORMAT_VERSION, FtsIndex
+
+    idx_dir = str(tmp_path / "old")
+    build_index(spark, fixture_corpus(spark), idx_dir, num_blocks=2)
+    man = os.path.join(idx_dir, "_manifest", "doc_stats.json")
+    with open(man) as f:
+        rec = json.load(f)
+    rec["version"] = FORMAT_VERSION - 1
+    with open(man, "w") as f:
+        json.dump(rec, f)
+    with pytest.raises(ValueError, match=(
+            f"v{FORMAT_VERSION - 1}, engine expects v{FORMAT_VERSION} — rebuild")):
+        FtsIndex(spark, idx_dir)
+
+
+def test_leftover_tmp_record_is_no_commit(spark, tmp_path):
+    """An ``incr_<n>.json.tmp`` left by a crashed manifest write is not
+    a commit: the index keeps the build's totals and epoch 0 (so its
+    phrase-df table stays live), and the next commit is ``incr_0``."""
+    from codebased_spark.operators.phrasedf import build_phrase_df
+    from codebased_spark.plans.engine import FtsIndex
+
+    idx_dir = str(tmp_path / "tmp_rec")
+    built = build_index(spark, spark.createDataFrame(V1, CORPUS_SCHEMA), idx_dir,
+                        num_blocks=2)
+    build_phrase_df(spark, built, ["hello world"])
+    manifests = os.path.join(idx_dir, "_manifest")
+    with open(os.path.join(manifests, "incr_0.json.tmp"), "w") as f:
+        f.write('{"stage": "incr_0", "n_docs": 99')
+    index = FtsIndex(spark, idx_dir)
+    assert (index.epoch, index.n_docs, index.total_dl) == (0, 4, built.total_dl)
+    assert index.phrase_dfs
+    index = incremental_update(spark, idx_dir, spark.createDataFrame(V2, CORPUS_SCHEMA),
+                               full_snapshot=True)
+    assert (index.epoch, index.n_docs) == (1, 4)
+    assert sorted(f for f in os.listdir(manifests) if f.startswith("incr_")) == [
+        "incr_0.json"]
+    assert index.phrase_dfs
 
 
 def _failed_commit(spark, tmp_path, monkeypatch, table):
     """A 6-file index, and a commit of a new ``f1.py`` whose write of
-    ``table`` raises. Returns the index dir and the batch."""
+    ``table`` (or of its manifest record, for ``manifest``) raises.
+    Returns the index dir and the batch."""
     from pyspark.sql.readwriter import DataFrameWriter
+
+    import codebased_spark.streaming.incremental as incremental
 
     idx_dir = str(tmp_path / "crash")
     files = [("r", f"f{i}.py", "c" * 40, "python", f"def fn{i}(): return 'common oldtok{i}'")
@@ -405,7 +489,13 @@ def _failed_commit(spark, tmp_path, monkeypatch, table):
             raise RuntimeError(f"killed during the {table} write")
         return real(self, path, *args, **kwargs)
 
-    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    def manifest(*_a, **_k):
+        raise RuntimeError("killed during the manifest write")
+
+    if table == "manifest":
+        monkeypatch.setattr(incremental, "_write_manifest", manifest)
+    else:
+        monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
     with pytest.raises(RuntimeError, match="killed"):
         incremental_update(spark, idx_dir, batch)
     monkeypatch.undo()
@@ -419,8 +509,8 @@ def _hit_counts(index):
 @pytest.mark.parametrize("table", ["doc_stats", "postings"])
 def test_a_failed_commit_write_keeps_the_old_content_live(spark, tmp_path, monkeypatch,
                                                           table):
-    """A commit writes doc_stats, postings, tombstones, corpus_stats in
-    that order: when the doc_stats or the posting append fails, no new
+    """A commit writes doc_stats, postings, tombstones, then its
+    manifest record: when the doc_stats or the posting append fails, no new
     posting block is searchable and the old doc is not tombstoned. A
     failed doc_stats append leaves nothing behind, so a re-apply
     commits cleanly."""
@@ -434,6 +524,19 @@ def test_a_failed_commit_write_keeps_the_old_content_live(spark, tmp_path, monke
         index = incremental_update(spark, idx_dir, batch)
         assert index.n_docs == index.doc_stats.count() - 1 == 6
         assert _hit_counts(index) == [1, 0, 6]
+
+
+def test_a_failed_manifest_write_keeps_the_old_totals(spark, tmp_path, monkeypatch):
+    """The commit's manifest record is its last write: when it raises,
+    the old doc is already tombstoned and the new content searchable,
+    but the index keeps its old totals and epoch."""
+    from codebased_spark.plans.engine import FtsIndex
+
+    idx_dir, _ = _failed_commit(spark, tmp_path, monkeypatch, "manifest")
+    index = FtsIndex(spark, idx_dir)
+    assert (index.n_docs, index.epoch) == (6, 0)
+    assert len(_deleted(index)) == 1
+    assert _hit_counts(index) == [1, 0, 6]
 
 
 @pytest.mark.xfail(strict=True, raises=AssertionError, reason=(

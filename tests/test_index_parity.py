@@ -330,15 +330,30 @@ def test_fused_build_matches_two_stage(spark):
         docs.unpersist()
 
 
-def test_resume_skips_completed_stages(spark, tmp_path):
+def test_resume_skips_completed_stages(spark, tmp_path, monkeypatch):
+    """Wiping the postings record re-runs only that stage, and with no
+    stats aggregation: the doc_stats record already holds the totals."""
+    import codebased_spark.plans.engine as engine
+
     idx_dir = str(tmp_path / "resume")
     corpus = fixture_corpus(spark, ALL_FIXTURES)
     build_index(spark, corpus, idx_dir, num_blocks=4)
-    # wipe one stage's manifest -> only that stage re-runs
-    os.remove(os.path.join(idx_dir, "_manifest", "corpus_stats.json"))
+    want = _postings_digest(spark, idx_dir)
+    doc_stats = os.path.join(idx_dir, "_manifest", "doc_stats.json")
+    with open(doc_stats) as f:
+        recorded = f.read()
+    os.remove(os.path.join(idx_dir, "_manifest", "postings.json"))
+
+    def no_agg(*_a, **_k):
+        raise AssertionError("a postings-only resume ran the stats aggregation")
+
+    monkeypatch.setattr(engine, "get_block_rows", no_agg)
     idx = build_index(spark, corpus, idx_dir, num_blocks=4, resume=True)
     assert idx.n_docs == len(ALL_FIXTURES)
-    assert os.path.exists(os.path.join(idx_dir, "_manifest", "corpus_stats.json"))
+    assert os.path.exists(os.path.join(idx_dir, "_manifest", "postings.json"))
+    with open(doc_stats) as f:
+        assert f.read() == recorded
+    assert _postings_digest(spark, idx_dir) == want
 
 
 def test_resume_rebuilds_stale_format_stages(spark, tmp_path):

@@ -160,7 +160,8 @@ def test_covered_path_with_tombstones(spark, tmp_path):
 
 def test_stale_fingerprint_rejected(spark, indexed):
     """A manifest whose (n_docs, total_dl) fingerprint disagrees with
-    corpus_stats must cause load_phrase_df to return {}."""
+    the index's manifest record must cause load_phrase_df to return
+    {}."""
     import json
     import os
 

@@ -229,26 +229,28 @@ def test_dense_cap_applies_to_large_deltas(spark, tmp_path):
     against ITS OWN scanned blocks and writes sentinel rows for its
     dense terms (an over-approximation against the full covered set —
     pruning-safe); search through the mixed exact+sentinel table stays
-    correct."""
+    correct. A commit appends as many blocks as the index has, so the
+    index has MIN_BLOCKS_FOR_DENSE blocks, built from two files: none
+    of its terms can be dense."""
     import pyarrow.parquet as pq
 
     from codebased_spark.operators.presence import (
         DENSE_SENTINEL,
         MIN_BLOCKS_FOR_DENSE,
     )
-    from codebased_spark.sources.corpus import gen_corpus
+    from codebased_spark.sources.corpus import ALL_FIXTURES, gen_corpus
     from codebased_spark.streaming.incremental import incremental_update
 
     idx_dir = str(tmp_path / "idx")
-    build_index(spark, fixture_corpus(spark), idx_dir, num_blocks=2)
+    build_index(spark, fixture_corpus(spark, ALL_FIXTURES[:2]), idx_dir,
+                num_blocks=MIN_BLOCKS_FOR_DENSE)
     before = {os.path.basename(p) for p in
               os.listdir(os.path.join(idx_dir, "term_blocks"))
               if p.endswith(".parquet")}
     batch = fixture_corpus(spark).unionByName(
         gen_corpus(spark, 10, 12, seed=3).withColumn(
             "path", F.concat(F.lit("new/"), F.col("path"))))
-    idx = incremental_update(spark, idx_dir, batch,
-                             num_blocks=MIN_BLOCKS_FOR_DENSE)
+    idx = incremental_update(spark, idx_dir, batch)
     tb = idx.term_blocks
     assert {pb for pb, _ in idx.posting_files} <= tb.covered
     # the delta file (and only it) must hold sentinel rows

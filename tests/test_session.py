@@ -1,4 +1,4 @@
-"""session.one_row_df: the single-row table writer behind corpus_stats."""
+"""session.one_row_df: the single-row DataFrame behind ivf_topk's probe."""
 
 from decimal import Decimal
 

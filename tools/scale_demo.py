@@ -19,7 +19,11 @@ Env:   SPARK_GRAFT_CPUS (default 32)
 
 Prints one JSON line per scale. The corpus is materialized to parquet
 BEFORE the build timer (the engine's job is indexing an existing table,
-not generating synthetic data).
+not generating synthetic data). A ``scale_corpus_<n>.source.json``
+beside it records what it was made from (file count, resolved sf dir,
+size and mtime of its documents file, generator seed); a corpus on disk
+is reused only when that record matches, and the record is printed as
+``corpus_source``.
 """
 
 from __future__ import annotations
@@ -42,6 +46,18 @@ QUERIES = {
     "q5_code_hello": "hello world",
     "q6_special_chars": "print('print(\"Hello world\");');",
 }
+
+
+# gen_corpus seed of the synthetic files
+SEED = 42
+
+
+def corpus_source(n_files: int, sf_dir: str) -> dict:
+    """What a scale corpus of ``n_files`` over ``sf_dir`` is made from."""
+    sf_dir = os.path.realpath(sf_dir)
+    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
+    return {"n_files": n_files, "sf_dir": sf_dir, "documents_bytes": st.st_size,
+            "documents_mtime_ns": st.st_mtime_ns, "seed": SEED}
 
 
 def main() -> None:
@@ -69,14 +85,24 @@ def main() -> None:
         # every bench query shape has real hits) + deterministic
         # synthetic code files up to n_files
         corpus_dir = os.path.join(tempfile.gettempdir(), f"scale_corpus_{n_files}")
-        if not os.path.exists(os.path.join(corpus_dir, "_SUCCESS")):
+        source_path = corpus_dir + ".source.json"
+        source = corpus_source(n_files, sf_dir)
+        try:
+            with open(source_path) as fh:
+                reused = json.load(fh) == source and os.path.exists(
+                    os.path.join(corpus_dir, "_SUCCESS"))
+        except (OSError, ValueError):
+            reused = False
+        if not reused:
             shutil.rmtree(corpus_dir, ignore_errors=True)
             docs = documents_as_corpus(spark, sf_dir)
             synth = gen_corpus(
                 spark, n_repos=max(1, (n_files - docs.count()) // 10),
-                files_per_repo=10,
+                files_per_repo=10, seed=SEED,
             )
             docs.unionByName(synth).write.mode("overwrite").parquet(corpus_dir)
+            with open(source_path, "w") as fh:
+                json.dump(source, fh)
         corpus = spark.read.parquet(corpus_dir)
 
         # blocks scale with corpus so per-block posting shards stay
@@ -159,6 +185,7 @@ def main() -> None:
             "files": int(index.n_docs),
             "num_blocks": num_blocks,
             "cpus": cpus,
+            "corpus_source": dict(source, reused=reused),
             "build_sec": round(build_sec, 3),
             "build_files_per_sec": round(index.n_docs / build_sec, 1),
             "p50_query_sec": lat[len(lat) // 2],
