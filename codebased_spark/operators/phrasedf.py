@@ -35,8 +35,10 @@ dfs next to the index:
   an uncovered index, never stale dfs. compact_index rebuilds the
   table over the compacted index from the same phrase list; a
   non-resume build_index deletes it.
-- Both query readers serve the stats job: the pyarrow shard reader,
-  or the posting DataFrame on stores pyarrow cannot reach.
+- The table follows the index's reader (FtsIndex chooses it at open):
+  the stats job runs through the query path's reader dispatch, and
+  the table is read and written through pyarrow on the driver when
+  the index reads its shards through pyarrow, through Spark otherwise.
 
 Scores are bit-identical with or without the table: the stored dfs
 equal the stats the blocks would have emitted (pinned by test), and the
@@ -375,7 +377,7 @@ def hot_phrases_from_query_log(queries, top_n: int = 64) -> list[str]:
 
 def _phrase_stats_body(phrases_terms):
     """The stats-only block body: (pblock, rows, deleted) blocks from
-    either reader (operators/query._shard_reader / _generic_scan) ->
+    the index's reader (operators/query._reader) ->
     one (pblock, phrase_idx, df_all, df_name) row per phrase matching
     in a block. Each phrase's live matches come from
     query._phrase_block_docs, the per-phrase pass the uncovered query
@@ -403,68 +405,41 @@ def _phrase_stats_body(phrases_terms):
 
 
 _PHRASE_STATS_SCHEMA = "pblock int, phrase_idx int, df_all long, df_name long"
+_PHRASE_TABLE_SCHEMA = "phrase string, pblock int, df_all long, df_name long"
 
 
-def _phrase_block_stats(spark, index, pts, pblocks=None):
+def _phrase_block_stats(index, pts, pblocks=None):
     """[(pblock, phrase_idx, df_all, df_name)] over every block, or only
-    ``pblocks`` — the one Spark job behind build/update_phrase_df, read
-    by the index's reader: its pyarrow-reachable shards, else the
-    posting DataFrame (the same choice its searches make). Row count
-    is bounded by |phrases| x |blocks| (tiny), so no aggregation runs
-    in the job; the caller sums driver-side."""
-    from codebased_spark.operators.query import (
-        _generic_scan,
-        _scan_df,
-        _shard_reader,
-    )
+    ``pblocks`` — the one scan behind build/update_phrase_df (one Spark
+    job; two behind the Spark reader), run through the query path's
+    reader dispatch (operators/query._reader), so on the reader the
+    index's searches use. Row count is bounded by
+    |phrases| x |blocks| (tiny), so no aggregation runs in the job; the
+    caller sums driver-side."""
+    from codebased_spark.operators.query import _reader
 
-    body = _phrase_stats_body(pts)
     needed = sorted({int(t) for ts in pts for t in ts})
-    if index.posting_files:
-        files = [(pb, f) for pb, f in index.posting_files
-                 if pblocks is None or pb in pblocks]
-        if not files:
-            return []
-        stats = _scan_df(
-            spark, files,
-            _shard_reader(needed, index._task_deletes_dir(), body),
-            _PHRASE_STATS_SCHEMA)
-    else:
-        postings = index.postings
-        if pblocks is not None:
-            postings = postings.filter(F.col("pblock").isin(sorted(pblocks)))
-        stats = _generic_scan(postings, index.deletes_df(), needed, body,
-                              _PHRASE_STATS_SCHEMA)
+    _route, _n_tasks, scan = _reader(index, needed, pblocks)
     return [(int(r["pblock"]), int(r["phrase_idx"]),
-             int(r["df_all"]), int(r["df_name"])) for r in stats.collect()]
-
-
-def _phrase_table_paths(index):
-    """(pyarrow-openable dir path or None, spark dir path) for the
-    phrase table — None means pyarrow cannot reach the store and the
-    Spark reader/writer must serve."""
-    from codebased_spark.plans.engine import _join
-    from codebased_spark.plans.fsio import canonical_uri, pyarrow_fs_path
-
-    out_dir = _join(index.index_dir, PHRASE_DF_DIR)
-    try:
-        pyarrow_fs_path(out_dir)
-    except Exception:
-        return None, out_dir
-    return canonical_uri(out_dir), out_dir
+             int(r["df_all"]), int(r["df_name"]))
+            for r in scan(_phrase_stats_body(pts), _PHRASE_STATS_SCHEMA)]
 
 
 def _read_phrase_rows(spark, index) -> "list[dict]":
-    """The stored table as plain dicts via a DRIVER-side pyarrow read
-    (the table is tiny: |phrases| x |blocks| rows), so index loads and
-    delta rebuilds cost no Spark job for it; a Spark read only where
-    pyarrow cannot reach the store."""
-    pa_dir, spark_dir = _phrase_table_paths(index)
-    if pa_dir is None:
-        return [r.asDict() for r in spark.read.parquet(spark_dir).collect()]
-    from codebased_spark.operators.query import _pa_read_table
+    """The stored table as plain dicts, read the way the index reads its
+    shards: a DRIVER-side pyarrow read (the table is tiny: |phrases| x
+    |blocks| rows), so index loads and delta rebuilds cost no Spark job
+    for it, or a Spark read behind the Spark reader."""
+    from codebased_spark.plans.engine import _join
 
-    return _pa_read_table(pa_dir, {}).to_pylist()
+    out_dir = _join(index.index_dir, PHRASE_DF_DIR)
+    if not index.posting_files:
+        return [r.asDict() for r in
+                spark.read.schema(_PHRASE_TABLE_SCHEMA).parquet(out_dir).collect()]
+    from codebased_spark.operators.query import _pa_read_table
+    from codebased_spark.plans.fsio import canonical_uri
+
+    return _pa_read_table(canonical_uri(out_dir), {}).to_pylist()
 
 
 def _write_phrase_table(spark, index, block_rows, phrase_order) -> dict:
@@ -472,10 +447,10 @@ def _write_phrase_table(spark, index, block_rows, phrase_order) -> dict:
     phrases with no matches — including sub-trigram ones — in the
     table: the covered AND-fail short-circuit depends on their (0,0)
     entries), stamp the manifest with the CURRENT corpus fingerprint,
-    and return the aggregated dict. The write is DRIVER-side pyarrow
-    whenever the store is pyarrow-reachable — the table is tiny, and
-    skipping the Spark write removes a whole job from every (re)build;
-    only unreachable stores pay the Spark path."""
+    and return the aggregated dict. The write follows the index's
+    reader: DRIVER-side pyarrow when it reads shards through pyarrow —
+    the table is tiny, and skipping the Spark write removes a whole job
+    from every (re)build — else a Spark write."""
     from codebased_spark.plans.engine import (
         FORMAT_VERSION,
         _join,
@@ -491,10 +466,12 @@ def _write_phrase_table(spark, index, block_rows, phrase_order) -> dict:
     # (harmless — load ignores it) but never manifest-without-data
     index.fs.delete(_manifest_path(index.index_dir, PHRASE_DF_MANIFEST))
     index.fs.delete(out_dir)
-    pa_dir, _ = _phrase_table_paths(index)
-    if pa_dir is not None:
+    if index.posting_files:
         import pyarrow as pa
         import pyarrow.parquet as pq
+        from pyarrow import fs as pafs
+
+        from codebased_spark.plans.fsio import _scheme, canonical_uri
 
         tbl = pa.table({
             "phrase": pa.array([r[0] for r in table_rows], pa.string()),
@@ -502,23 +479,16 @@ def _write_phrase_table(spark, index, block_rows, phrase_order) -> dict:
             "df_all": pa.array([int(r[2]) for r in table_rows], pa.int64()),
             "df_name": pa.array([int(r[3]) for r in table_rows], pa.int64()),
         })
-        if "://" not in pa_dir:
-            import os as _os
-
-            _os.makedirs(pa_dir, exist_ok=True)
-            pq.write_table(tbl, pa_dir + "/part-00000.parquet")
-        else:
-            from codebased_spark.plans.fsio import pyarrow_fs_path
-
-            fs, real = pyarrow_fs_path(pa_dir)
-            fs.create_dir(real, recursive=True)
-            pq.write_table(tbl, real + "/part-00000.parquet", filesystem=fs)
+        uri = canonical_uri(out_dir)  # a plain path may be relative
+        fs, real = pafs.FileSystem.from_uri(uri) if _scheme(uri) else \
+            (pafs.LocalFileSystem(), uri)
+        fs.create_dir(real, recursive=True)
+        pq.write_table(tbl, real + "/part-00000.parquet", filesystem=fs)
     else:
         # 1-slice parallelize, not coalesce(1): the latter replays
         # defaultParallelism python partitions through one task (~5 s)
         spark.createDataFrame(
-            spark.sparkContext.parallelize(table_rows, 1),
-            "phrase string, pblock int, df_all long, df_name long",
+            spark.sparkContext.parallelize(table_rows, 1), _PHRASE_TABLE_SCHEMA,
         ).write.mode("overwrite").parquet(out_dir)
     _write_manifest(index.fs, index.index_dir, PHRASE_DF_MANIFEST, {
         "stage": PHRASE_DF_MANIFEST,
@@ -558,8 +528,7 @@ def build_phrase_df(spark: SparkSession, index, phrases: list[str]) -> dict:
     block_rows: list = []
     term_lists = [(p, phrase_terms(p)) for p in folded if len(p) >= 3]
     if term_lists and index.n_docs:
-        stats = _phrase_block_stats(
-            spark, index, [ts for _, ts in term_lists])
+        stats = _phrase_block_stats(index, [ts for _, ts in term_lists])
         block_rows = [
             (term_lists[pi][0], pb, da, dn) for pb, pi, da, dn in stats]
     return _write_phrase_table(spark, index, block_rows, folded)
@@ -574,8 +543,8 @@ def update_phrase_df(spark: SparkSession, index, dirty_pblocks,
     across blocks). Returns the refreshed dict, or None when no usable
     per-block table exists (caller falls back to a full
     :func:`build_phrase_df`). ``index`` must be the POST-commit handle
-    (the manifest is stamped with its fingerprint); either reader
-    serves the dirty blocks (:func:`_phrase_block_stats`).
+    (the manifest is stamped with its fingerprint); its reader serves
+    the dirty blocks (:func:`_phrase_block_stats`).
 
     This is O(changed blocks) instead of O(all blocks) — the shape a
     debounced micro-batch loop needs: a 10-file batch touches 1-2
@@ -607,7 +576,7 @@ def update_phrase_df(spark: SparkSession, index, dirty_pblocks,
     fresh: list = []
     if term_lists and index.n_docs and dirty:
         stats = _phrase_block_stats(
-            spark, index, [ts for _, ts in term_lists], dirty)
+            index, [ts for _, ts in term_lists], dirty)
         fresh = [(term_lists[pi][0], pb, da, dn) for pb, pi, da, dn in stats]
     return _write_phrase_table(spark, index, kept + fresh, phrase_order)
 

@@ -355,10 +355,15 @@ def _extend_term_blocks(
 def load_term_blocks(index) -> "TermBlocks | None":
     """The index's presence handle, or None when absent/unreadable/
     version-mismatched (queries then scan every shard — slower, never
-    wrong)."""
+    wrong), and always behind the Spark reader (``posting_files ==
+    []``): that reader has no shard list to prune, and the handle reads
+    through pyarrow."""
+    from codebased_spark.operators.query import DRIVER_DIRECT_MAX_BYTES
     from codebased_spark.plans.engine import _current_manifest, _join
     from codebased_spark.plans.fsio import canonical_uri
 
+    if not index.posting_files:
+        return None
     man = _current_manifest(index.fs, index.index_dir, TERM_BLOCKS_MANIFEST)
     data_dir = _join(index.index_dir, TERM_BLOCKS_DIR)
     if man is None or not index.fs.exists(data_dir):
@@ -368,9 +373,9 @@ def load_term_blocks(index) -> "TermBlocks | None":
                           if p.endswith(".parquet"))
     except Exception:
         table_bytes = None
-    # small tables preload whole (see TermBlocks.__init__); the 4 MiB
-    # line matches the direct-path regime where cold-lookup latency
-    # (~27 ms) would be a meaningful share of a ~20 ms query
-    preload = table_bytes is not None and 0 < table_bytes <= 4 * 1024 * 1024
+    # small tables preload whole (see TermBlocks.__init__): up to the
+    # direct-path regime's size, where cold-lookup latency (~27 ms)
+    # would be a meaningful share of a ~20 ms query
+    preload = table_bytes is not None and 0 < table_bytes <= DRIVER_DIRECT_MAX_BYTES
     return TermBlocks(canonical_uri(data_dir), man.get("covered_pblocks", []),
                       preload=preload)

@@ -1,19 +1,22 @@
 """Index-backed query execution (operators Q1-Q7 of SURVEY.md §2.4).
 
-One query path — a single search is a batch of one
-(search_index_files_batch):
+One query path — a single search is a batch of one, and FtsIndex
+reaches it through one entry (run_search, which takes the index
+handle):
 
   driver: parse (_parse_batch; sub-trigram phrases drop out, as in
     |     FTS5) -> presence-prune the shard list (_prune_batch) ->
     |     exact candidate-row bound and per-task share (_tail_bound),
     |     charged per task; a batch over DRIVER_FINISH_MAX splits into
     |     sub-batches that fit (_sub_batches)
-    |  scan feeder, the ONE fork:
+  reader dispatch (_reader), the ONE fork, on the reader FtsIndex
+    |  chose at open:
     |    Spark   spark.range over the shard list -> mapInPandas
     |            (_scan_df): one Spark job
     |    direct  the same task body run on the driver
     |            (_direct_scan_rows): no Spark job; small stores only
     |            (DRIVER_DIRECT_MAX_BYTES / DRIVER_DIRECT_MAX_SHARDS)
+    |    generic the Spark reader (_generic_scan), below
   pyarrow reader (_shard_reader), per shard:
     |  pyarrow read of the row groups holding the query trigrams
     |  (rows sorted by term; footer min/max pruning) and the block's
@@ -35,14 +38,14 @@ One query path — a single search is a batch of one
      before any prune), so it is rescanned as a covered query.
 
 Stores pyarrow cannot reach (FtsIndex.posting_files == []) swap the
-pyarrow reader for the Spark reader (_generic_scan, behind
-search_index_batch): a term filter pushed into the posting DataFrame
-scan, the rows (and tombstones, as tagged rows) hash-partitioned by
-pblock into _scan_tasks tasks and sorted, each task's pblock runs its
-blocks for the same task body; its candidates take the same bound and
-tail. The phrase-df stats job (operators/phrasedf.py) runs its own body
-over either reader; it counts each phrase's block df from the same
-_phrase_block_docs pass.
+pyarrow reader for the Spark reader (_generic_scan): a term filter
+pushed into the posting DataFrame scan, the rows (and tombstones, as
+tagged rows) hash-partitioned by pblock into _scan_tasks tasks and
+sorted, each task's pblock runs its blocks for the same task body; its
+candidates take the same bound and tail (two Spark jobs: the shuffle
+map stage and the scan). The phrase-df stats job (operators/
+phrasedf.py) runs its own body through the same dispatch; it counts
+each phrase's block df from the same _phrase_block_docs pass.
 
 Every search fills one trace record (the ``trace`` dict argument;
 FtsIndex keeps it as ``last_trace``) from values the path computes
@@ -95,7 +98,6 @@ from __future__ import annotations
 
 import threading
 import time
-from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -1121,15 +1123,6 @@ def _shard_reader(needed, deletes_dir, body):
     return lambda it: body(blocks(it))
 
 
-def _batch_candidates_fn(queries_terms, needed, deletes_dir, top_k, avgdl,
-                         known_idfs_by_qid=None, *, share=None):
-    """The candidate task body behind the pyarrow reader: the function
-    mapInPandas or :func:`_direct_scan_rows` runs over (pblock, path)
-    row batches for a batch of queries."""
-    return _shard_reader(needed, deletes_dir, _candidate_body(
-        queries_terms, top_k, avgdl, known_idfs_by_qid, share=share))
-
-
 def _generic_scan(postings: DataFrame, deletes, needed, body, schema: str):
     """The Spark reader, for stores pyarrow cannot reach: ``postings``
     (the posting DataFrame) filtered to the ``needed`` terms — the
@@ -1216,78 +1209,99 @@ def _scan_df(spark, posting_files, fn, schema):
     return spark.range(0, len(files), 1, n_part).mapInPandas(outer, schema)
 
 
-def search_index_files_batch(
-    spark,
-    posting_files: list[tuple[int, str]],
-    queries: list[str],
-    n_docs: int,
-    avgdl: float,
-    top_k: int = DEFAULT_TOP_K,
-    deletes_dir=None,
-    phrase_dfs_by_query: "dict[int, list[tuple[int, int]]] | None" = None,
-    presence=None,
-    direct: bool = False,
-    trace: "dict | None" = None,
-) -> DataFrame:
-    """Two-branch FTS search of a batch of queries over the posting
-    shards: the engine's query path (FtsIndex.search runs a batch of
-    one). Returns (qid, doc_id, name_match, rank, score); queries
-    yielding no results (no phrase of 3+ chars, failed AND, pruned to
-    zero shards, top_k < 1) simply have no rows.
+def _reader(index, needed, pblocks=None, direct=False):
+    """THE reader dispatch: the one place a scan acts on the reader
+    FtsIndex chose at open. Returns (route, n_tasks, scan) for the
+    blocks of ``index`` in ``pblocks`` (None: every block), read for
+    the ``needed`` terms: ``scan(body, schema)`` runs a block body
+    (:func:`_candidate_body` or the phrase-df stats body) over them
+    and returns the rows it yields, as ``schema`` rows; ``n_tasks``
+    counts the body instances, the unit :func:`_tail_bound` charges.
 
-    One parse/prune, one task body (:func:`_batch_candidates_fn`) and
-    one scoring tail (:func:`_finish`) serve every caller. The only
-    fork is the scan feeder:
-    - ``direct=False``: Spark (:func:`_scan_df`) — ONE Spark job for a
-      batch that fits DRIVER_FINISH_MAX and needs no rescan;
-    - ``direct=True``: the same task body run driver-side
-      (:func:`_direct_scan_rows`) — ZERO Spark jobs, the latency floor
-      for small (embedded-regime) stores; FtsIndex picks it by the
-      DRIVER_DIRECT_MAX_BYTES / _MAX_SHARDS gate. Sub-batches and
-      rescans stay on it.
+    - ``index.posting_files`` listed: the pyarrow shard reader
+      (:func:`_shard_reader`), route ``direct`` when ``direct`` (the
+      driver runs it, :func:`_direct_scan_rows`: no Spark job), else
+      ``spark`` (:func:`_scan_df`: one Spark job);
+    - none listed (a store pyarrow cannot reach, or
+      force_generic_scan): the Spark reader (:func:`_generic_scan`,
+      route ``generic``) over the posting DataFrame and the tombstone
+      rows — the only route that touches them."""
+    spark = index.spark
+    if not index.posting_files:
+        postings = index.postings
+        if pblocks is not None:
+            postings = postings.filter(F.col("pblock").isin(sorted(pblocks)))
+        return "generic", _scan_tasks(spark), lambda body, schema: _generic_scan(
+            postings, index.deletes_df(), needed, body, schema).collect()
+    files = [f for f in index.posting_files if pblocks is None or f[0] in pblocks]
+    deletes_dir = index._task_deletes_dir()
+    if direct:
+        chunks = _direct_chunks(files)
+        return "direct", len(chunks), lambda body, _schema: _direct_scan_rows(
+            _shard_reader(needed, deletes_dir, body), chunks)
 
-    ``phrase_dfs_by_query`` ({qid: one (df_all, df_name) per kept
-    phrase}, from the phrase-df side table) enables the covered fast
-    path for those queries: idfs are computed driver-side, blocks run
-    multi-trigram WAND with exact branch-top-k emission, and no df-stat
-    rows flow. ``presence`` (a presence.TermBlocks) prunes
-    provably-irrelevant shards before any read. Results are
-    bit-identical in every combination (pinned by tests). ``trace``
-    (a dict) receives the search's record (module docstring)."""
+    def scan(body, schema):  # no shard in ``pblocks``: nothing to read
+        return _scan_df(spark, files, _shard_reader(needed, deletes_dir, body),
+                        schema).collect() if files else []
+
+    return "spark", _scan_tasks(spark, len(files)), scan
+
+
+def run_search(index, queries: list[str], top_k: int = DEFAULT_TOP_K,
+               trace: "dict | None" = None) -> DataFrame:
+    """Two-branch FTS search of a batch of queries over ``index`` (an
+    FtsIndex): the engine's one query entry (FtsIndex.search runs a
+    batch of one). Returns (qid, doc_id, name_match, rank, score);
+    queries yielding no results (no phrase of 3+ chars, failed AND,
+    pruned to zero shards, top_k < 1) simply have no rows.
+
+    One parse/prune, one task body (:func:`_candidate_body`), one
+    reader dispatch (:func:`_reader`) and one scoring tail
+    (:func:`_finish`) serve every route. A query whose every phrase is
+    in the index's phrase-df side table (FtsIndex._covering_dfs) takes
+    the covered fast path: idfs are computed driver-side, blocks run
+    multi-trigram WAND with exact branch-top-k emission, and no
+    df-stat rows flow. The index's presence manifest
+    (``index.term_blocks``) prunes provably-irrelevant shards before
+    any read. Results are bit-identical on every route and in every
+    combination (pinned by tests). ``trace`` (a dict) receives the
+    search's record (module docstring)."""
     t0 = time.perf_counter()
-    trace = _new_trace(trace, len(posting_files))
-    phrase_dfs_by_query = phrase_dfs_by_query or {}
+    files = index.posting_files  # [] behind the Spark reader: no shard list
+    trace = _new_trace(trace, len(files) if files else None)
+    phrase_dfs_by_query = {
+        qi: dfs for qi, dfs in (
+            (qi, index._covering_dfs(q)) for qi, q in enumerate(queries)
+        ) if dfs is not None
+    }
     parsed, known_idfs_by_qid = _parse_batch(
-        queries, n_docs, phrase_dfs_by_query)
+        queries, index.n_docs, phrase_dfs_by_query)
     trace["covered"] = len(known_idfs_by_qid)
-    files = posting_files if parsed else []
-    if files:
-        files, parsed, known_idfs_by_qid, _ = _prune_batch(
-            files, parsed, known_idfs_by_qid, presence)
+    files, parsed, known_idfs_by_qid, _ = _prune_batch(
+        files, parsed, known_idfs_by_qid, index.term_blocks)
     trace["parse_prune_s"] = time.perf_counter() - t0
-    if not parsed or not files or top_k < 1:
-        return _batch_result_df(spark, [])
-    trace.update(route="direct" if direct else "spark",
-                 shards_scanned=len(files))
+    if not parsed or top_k < 1:
+        return _batch_result_df(index.spark, [])
+    trace["shards_scanned"] = len(files) if files else None
 
     def feed(batch, known):
         files_b, batch, known, needed = _prune_batch(
-            files, batch, known, presence)
-        chunks = _direct_chunks(files_b) if direct else None
-        n_tasks = len(chunks) if direct else _scan_tasks(spark, len(files_b))
+            files, batch, known, index.term_blocks)
+        # every listed shard of the blocks kept (none listed: all blocks)
+        trace["route"], n_tasks, scan = _reader(
+            index, needed, {pb for pb, _ in files_b} or None,
+            index.driver_direct)
 
         def collect(share):
-            fn = partial(_batch_candidates_fn,
-                         [(qi, tids) for qi, _, tids in batch], needed,
-                         deletes_dir, top_k, avgdl, known, share=share)
-            if direct:
-                return _direct_scan_rows(fn, chunks)
-            return _scan_df(spark, files_b, fn(), BATCH_SCHEMA).collect()
+            return scan(_candidate_body(
+                [(qi, tids) for qi, _, tids in batch], top_k, index.avgdl,
+                known, share=share), BATCH_SCHEMA)
 
         return batch, n_tasks, collect
 
-    return _finish(spark, feed, parsed, known_idfs_by_qid,
-                   phrase_dfs_by_query, n_docs, avgdl, top_k, trace)
+    return _finish(index.spark, feed, parsed, known_idfs_by_qid,
+                   phrase_dfs_by_query, index.n_docs, index.avgdl, top_k,
+                   trace)
 
 
 _POSTING_READ_COLUMNS = [
@@ -1295,64 +1309,6 @@ _POSTING_READ_COLUMNS = [
     "skip_last", "skip_max_tf", "skip_min_dl",
     "skip_doc_off", "skip_tf_off", "skip_pos_off", "skip_dl_off",
 ]
-
-
-def search_index_batch(
-    postings: DataFrame,
-    queries: list[str],
-    n_docs: int,
-    avgdl: float,
-    top_k: int = DEFAULT_TOP_K,
-    deletes: "DataFrame | None" = None,
-    phrase_dfs_by_query: "dict[int, list[tuple[int, int]]] | None" = None,
-    trace: "dict | None" = None,
-) -> DataFrame:
-    """Two-branch FTS search of a batch of queries through the Spark
-    reader (:func:`_generic_scan`): the route for stores pyarrow cannot
-    reach (FtsIndex.posting_files == []), working against any
-    Spark-readable posting DataFrame. ``deletes`` (a doc_id DataFrame)
-    carries the tombstones; ``phrase_dfs_by_query`` and
-    ``trace`` are :func:`search_index_files_batch`'s. The parse, the
-    task body, the candidate bound and the tail are the shard scan's;
-    there is no shard list to prune. Returns (qid, doc_id, name_match,
-    rank, score)."""
-    t0 = time.perf_counter()
-    trace = _new_trace(trace, None)
-    spark = postings.sparkSession
-    phrase_dfs_by_query = phrase_dfs_by_query or {}
-    parsed, known_idfs_by_qid = _parse_batch(
-        queries, n_docs, phrase_dfs_by_query)
-    trace.update(covered=len(known_idfs_by_qid),
-                 parse_prune_s=time.perf_counter() - t0)
-    if not parsed or top_k < 1:
-        return _batch_result_df(spark, [])
-    trace.update(route="generic", shards_scanned=None)
-
-    def feed(batch, known):
-        def collect(share):
-            body = _candidate_body([(qi, tids) for qi, _, tids in batch],
-                                   top_k, avgdl, known, share=share)
-            return _generic_scan(postings, deletes, _needed(batch), body,
-                                 BATCH_SCHEMA).collect()
-
-        return batch, _scan_tasks(spark), collect
-
-    return _finish(spark, feed, parsed, known_idfs_by_qid,
-                   phrase_dfs_by_query, n_docs, avgdl, top_k, trace)
-
-
-def search_index(
-    postings: DataFrame,
-    query: str,
-    n_docs: int,
-    avgdl: float,
-    top_k: int = DEFAULT_TOP_K,
-    deletes: "DataFrame | None" = None,
-) -> DataFrame:
-    """:func:`search_index_batch` for a batch of one: (doc_id,
-    name_match, rank, score) best-first."""
-    return search_index_batch(postings, [query], n_docs, avgdl, top_k,
-                              deletes).drop("qid")
 
 
 # The most candidate rows one collect brings to the driver: _tail_bound
@@ -1464,19 +1420,19 @@ def _direct_chunks(posting_files) -> list[pd.DataFrame]:
             for i in range(n)]
 
 
-def _direct_scan_rows(make_fn, chunks):
-    """The candidate-scan task body executed DRIVER-SIDE: ``make_fn()``
-    returns the same generator function Spark's mapInPandas runs
-    (identical reads, block machinery and emission pruning), one fresh
-    instance — with its own fs/tombstone caches — per chunk of
-    :func:`_direct_chunks`. More than a few chunks go through the
-    shared reader pool; rows gather in chunk order, so the result is
+def _direct_scan_rows(fn, chunks):
+    """The candidate-scan task body executed DRIVER-SIDE: ``fn`` is the
+    same function Spark's mapInPandas runs (identical reads, block
+    machinery and emission pruning); each call of it over one chunk of
+    :func:`_direct_chunks` is a fresh task body with its own
+    fs/tombstone caches. More than a few chunks go through the shared
+    reader pool; rows gather in chunk order, so the result is
     deterministic."""
-    fn = lambda chunk: list(make_fn()([chunk]))  # noqa: E731
+    run = lambda chunk: list(fn([chunk]))  # noqa: E731
     if len(chunks) <= 4:
-        outs = [fn(c) for c in chunks]
+        outs = [run(c) for c in chunks]
     else:
-        outs = list(_direct_pool().map(fn, chunks))
+        outs = list(_direct_pool().map(run, chunks))
     rows: list = []
     for out in outs:
         for pdf in out:
@@ -1656,8 +1612,8 @@ def _finish(spark, feed, parsed, known_idfs_by_qid, phrase_dfs_by_query,
             n_docs, avgdl, top_k, trace):
     """The scoring tail, always on the driver (reference CTE
     codebased/search.py:240-302). ``feed(batch, known_idfs)`` gives a
-    (sub-)batch's (batch, n_tasks, collect(share)) on the caller's
-    feeder, presence-pruned to its queries. A batch runs as
+    (sub-)batch's (batch, n_tasks, collect(share)) on the index's
+    reader (:func:`_reader`), presence-pruned to its queries. A batch runs as
     :func:`_sub_batches`, one plain collect each, finished by
     :func:`_driver_tail` as it lands; queries that carried a marker
     then run once more as covered queries with their summed dfs."""

@@ -31,14 +31,19 @@ codebased/index.py:336,668-672; stats dump at
 codebased/stats.py:59-69.)
 
 Storage: all lifecycle IO goes through plans/fsio.IndexFS, so the index
-may live on HDFS/S3A as well as local disk. Queries keep the pyarrow
-shard reader on ANY store pyarrow.fs can open (local paths and
-file:// / hdfs:// / s3:// URIs alike — tasks read shards and
-tombstones through the resolved filesystem); only stores pyarrow
-cannot reach swap in the Spark reader (the term-filtered posting
-DataFrame and the tombstone rows, repartitioned by pblock) under the
-same task body and tail — nothing is ever materialized on the driver
-either way.
+may live on HDFS/S3A as well as local disk. FtsIndex chooses the
+index's reader once, at open: the pyarrow shard reader on ANY store
+pyarrow.fs can read (local paths and file:// / hdfs:// / s3:// URIs
+alike — tasks read shards and tombstones through the resolved
+filesystem; ``posting_files`` lists the shards), else the Spark reader
+(the term-filtered posting DataFrame and the tombstone rows,
+repartitioned by pblock; ``posting_files == []``). Everything that
+reads follows that choice: searches go through the one query entry
+(operators/query.run_search) and, with the phrase-df stats job,
+through its one reader dispatch (query._reader); the phrase-df table
+is read and written through pyarrow exactly when the shards are; the
+presence manifest, read through pyarrow, is loaded only then. Nothing
+is ever materialized on the driver either way.
 """
 
 from __future__ import annotations
@@ -261,7 +266,8 @@ class FtsIndex:
         # force_generic_scan: opt out of the pyarrow shard fast path for
         # stores whose credentials live only in Hadoop conf (fs.s3a.*
         # keys/endpoints are not visible to pyarrow — ADVICE r03); the
-        # generic Spark DataFrame scan then serves every query.
+        # Spark reader then serves every query, and the phrase-df
+        # table is read and written through Spark.
         self.spark = spark
         self.index_dir = index_dir
         self.force_generic_scan = force_generic_scan
@@ -424,44 +430,22 @@ class FtsIndex:
 
     def search_batch(self, queries: list[str], top_k: int = DEFAULT_TOP_K) -> DataFrame:
         """Batched search: one shared posting scan for the whole batch —
-        one Spark job unless it overflows DRIVER_FINISH_MAX or needs a
-        rescan, none on the driver-direct route (the shape for offline
-        batch scoring).
+        unless it overflows DRIVER_FINISH_MAX or needs a rescan, that
+        is one Spark job on the Spark feeder, two on the Spark reader
+        (its shuffle map stage and the scan) and none on the
+        driver-direct route (the shape for offline batch scoring).
         Returns (qid, doc_id, name_match, rank, score); rank-identical
         per query to :meth:`search` (tested)."""
         self.query_log.extend(queries)
         return self._search_batch(queries, top_k)
 
     def _search_batch(self, queries: list[str], top_k: int) -> DataFrame:
-        """A batch with this index's tombstones and phrase-df coverage,
-        read by the pyarrow shard reader (driver-direct or Spark feeder,
-        presence-pruned) — or, when ``posting_files`` is empty (a store
-        pyarrow cannot reach, or force_generic_scan), by the Spark
-        reader over the posting DataFrame."""
-        from codebased_spark.operators.query import (
-            search_index_batch,
-            search_index_files_batch,
-        )
+        """A batch through the one query entry (query.run_search), on
+        the reader this handle chose at open."""
+        from codebased_spark.operators.query import run_search
 
-        phrase_dfs_by_query = {
-            qi: dfs for qi, dfs in (
-                (qi, self._covering_dfs(q)) for qi, q in enumerate(queries)
-            ) if dfs is not None
-        }
         trace: dict = {}
-        if not self.posting_files:
-            out = search_index_batch(
-                self.postings, queries, self.n_docs, self.avgdl, top_k,
-                deletes=self.deletes_df(),
-                phrase_dfs_by_query=phrase_dfs_by_query, trace=trace)
-        else:
-            out = search_index_files_batch(
-                self.spark, self.posting_files, queries, self.n_docs,
-                self.avgdl, top_k, deletes_dir=self._task_deletes_dir(),
-                phrase_dfs_by_query=phrase_dfs_by_query,
-                presence=self.term_blocks,
-                direct=self.driver_direct, trace=trace,
-            )
+        out = run_search(self, queries, top_k, trace)
         self.last_trace = trace
         return out
 

@@ -280,13 +280,33 @@ def test_generic_batch_is_one_scan(spark, tmp_path):
     assert jobs_of("generic_batch_6", 6) == one
 
 
+class _BlindFS:
+    """Constructs fine (like pyarrow S3FileSystem with no creds) but
+    sees nothing on metadata calls."""
+
+    def get_file_info(self, paths):
+        from pyarrow import fs as pafs
+
+        return [pafs.FileInfo(p, type=pafs.FileType.NotFound) for p in paths]
+
+
+def _blind_pyarrow(monkeypatch):
+    """Resolve every pyarrow path to a :class:`_BlindFS`."""
+    from codebased_spark.plans import engine as eng
+    from codebased_spark.plans import fsio
+
+    def blind(path):
+        return _BlindFS(), fsio.local_path(fsio.canonical_uri(path))
+
+    monkeypatch.setattr(eng, "pyarrow_fs_path", blind, raising=False)
+    monkeypatch.setattr(fsio, "pyarrow_fs_path", blind)
+
+
 def test_remote_probe_requires_readable_shard(spark, tmp_path, monkeypatch):
     """ADVICE r03 (engine.py:209): the fast-path probe must make a real
     metadata call — a filesystem that constructs fine but cannot see
     the shard (S3 with Hadoop-only credentials) must fall back to the
     generic scan instead of failing at task read time."""
-    from codebased_spark.plans import engine as eng
-    from codebased_spark.plans import fsio
     from codebased_spark.plans.engine import FtsIndex, build_index
     from codebased_spark.sources.corpus import CORPUS_SCHEMA
 
@@ -294,23 +314,111 @@ def test_remote_probe_requires_readable_shard(spark, tmp_path, monkeypatch):
     idx = str(tmp_path / "probe_idx")
     build_index(spark, spark.createDataFrame(rows, CORPUS_SCHEMA), idx, num_blocks=2)
 
-    class _BlindFS:
-        """Constructs fine (like pyarrow S3FileSystem with no creds)
-        but sees nothing on metadata calls."""
-
-        def get_file_info(self, paths):
-            from pyarrow import fs as pafs
-
-            return [pafs.FileInfo(p, type=pafs.FileType.NotFound) for p in paths]
-
-    def blind(path):
-        return _BlindFS(), fsio.local_path(fsio.canonical_uri(path))
-
-    monkeypatch.setattr(eng, "pyarrow_fs_path", blind, raising=False)
-    monkeypatch.setattr(fsio, "pyarrow_fs_path", blind)
+    _blind_pyarrow(monkeypatch)
     blinded = FtsIndex(spark, "file://" + idx)
     assert blinded.posting_files == []  # probe rejected the unreadable store
 
     # sanity: the REAL pyarrow fs still passes the metadata probe
     monkeypatch.undo()
     assert FtsIndex(spark, "file://" + idx).posting_files
+
+
+PHRASES = ["hello world", "world"]
+COVERED_QUERY = '"hello world" world'
+
+
+def test_phrase_table_follows_the_reader(spark, tmp_path, monkeypatch):
+    """The phrase-df table is read and written by the reader the index
+    chose at open. On a store whose filesystem pyarrow can build but
+    not read (the probe sends it to the Spark reader), build_phrase_df
+    succeeds, a reopened handle loads the dfs the readable store gets,
+    and a covered query ranks as the uncovered one. A local handle
+    opened with force_generic_scan builds and loads its table without
+    a pyarrow write or read."""
+    import pyarrow.parquet as pq
+
+    import codebased_spark.operators.query as q
+    from codebased_spark.operators.phrasedf import build_phrase_df
+    from codebased_spark.plans.engine import FtsIndex, build_index
+    from codebased_spark.sources.corpus import CORPUS_SCHEMA
+    from tests.parity import spark_hits
+
+    rows = [
+        ("r1", "a.py", "c" * 40, "python", 'print("hello world")'),
+        ("r1", "b.py", "c" * 40, "python", "goodbye cruel world"),
+        ("r1", "c.md", "c" * 40, "text", "hello hello world hello world"),
+        ("r1", "world.txt", "c" * 40, "text", "type ab world"),
+    ]
+    idx = str(tmp_path / "blind_pdf")
+    uri = "file://" + idx
+    build_index(spark, spark.createDataFrame(rows, CORPUS_SCHEMA), idx, num_blocks=2)
+
+    _blind_pyarrow(monkeypatch)
+    blinded = FtsIndex(spark, uri)
+    assert blinded.posting_files == [] and blinded.term_blocks is None
+    got = build_phrase_df(spark, blinded, PHRASES)
+    reopened = FtsIndex(spark, uri)
+    assert reopened.posting_files == [] and reopened.phrase_dfs == got
+    assert reopened._covering_dfs(COVERED_QUERY) is not None
+    covered = spark_hits(reopened.search(COVERED_QUERY, 10))
+    assert (reopened.last_trace["route"], reopened.last_trace["covered"]) == \
+        ("generic", 1)
+    reopened.phrase_dfs = {}
+    reopened.clear_search_cache()
+    uncovered = spark_hits(reopened.search(COVERED_QUERY, 10))
+    assert reopened.last_trace["covered"] == 0
+    assert covered and covered == uncovered
+    monkeypatch.undo()
+
+    readable = FtsIndex(spark, uri)
+    assert readable.posting_files
+    assert build_phrase_df(spark, readable, PHRASES) == got
+    assert spark_hits(FtsIndex(spark, uri).search(COVERED_QUERY, 10)) == covered
+
+    def no_pyarrow(*_a, **_k):
+        raise AssertionError("phrase table went through pyarrow")
+
+    monkeypatch.setattr(pq, "write_table", no_pyarrow)
+    monkeypatch.setattr(q, "_pa_read_table", no_pyarrow)
+    slow = FtsIndex(spark, idx, force_generic_scan=True)
+    assert build_phrase_df(spark, slow, PHRASES) == got
+    assert FtsIndex(spark, idx, force_generic_scan=True).phrase_dfs == got
+
+
+def test_one_reader_decision():
+    """FtsIndex's open-time reader choice is acted on in one place: only
+    plans/engine.py calls the query entry, only the reader dispatch
+    reaches the three scan feeders, and the phrase-df module never
+    resolves a pyarrow filesystem of its own."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    feeders = {"_scan_df", "_direct_scan_rows", "_generic_scan"}
+    entry_callers, feeder_callers = set(), set()
+    files = [*root.glob("*.py"), *(root / "codebased_spark").rglob("*.py"),
+             *(root / "tools").rglob("*.py"), *(root / "scripts").rglob("*.py"),
+             *(root / "tests").rglob("*.py")]
+    for path in files:
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text())
+        for top in tree.body:
+            for node in ast.walk(top):
+                if not isinstance(node, ast.Call):
+                    continue
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else \
+                    f.attr if isinstance(f, ast.Attribute) else None
+                where = (rel, getattr(top, "name", None))
+                if name == "run_search":
+                    entry_callers.add(where)
+                if name in feeders:
+                    feeder_callers.add(where)
+    assert entry_callers == {("codebased_spark/plans/engine.py", "FtsIndex")}
+    assert feeder_callers == {("codebased_spark/operators/query.py", "_reader")}
+    phrasedf = ast.parse((root / "codebased_spark/operators/phrasedf.py").read_text())
+    names = {n.id if isinstance(n, ast.Name) else
+             n.attr if isinstance(n, ast.Attribute) else n.name
+             for n in ast.walk(phrasedf)
+             if isinstance(n, (ast.Name, ast.Attribute, ast.alias))}
+    assert "pyarrow_fs_path" not in names and "_reader" in names

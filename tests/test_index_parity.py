@@ -9,7 +9,7 @@ import pytest
 
 from codebased_spark.operators.score import search_bruteforce
 from codebased_spark.oracle import Fts5Oracle
-from codebased_spark.plans.engine import build_index
+from codebased_spark.plans.engine import FtsIndex, build_index
 from codebased_spark.sources.corpus import ALL_FIXTURES, fixture_corpus, gen_corpus
 from tests.parity import assert_rank_identical, oracle_hits, spark_hits
 
@@ -123,7 +123,6 @@ def test_sub_trigram_phrase_drops_like_fts5(spark, sub_trigram, query):
     exactly as FTS5 does: the index on both scan feeders, the generic
     DataFrame scan and the brute-force scan."""
     from codebased_spark.operators.docs import build_docs
-    from codebased_spark.operators.query import search_index
 
     index, oracle, corpus = sub_trigram
     ref = oracle_hits(oracle.search(query, 10))
@@ -137,8 +136,8 @@ def test_sub_trigram_phrase_drops_like_fts5(spark, sub_trigram, query):
     finally:
         index.driver_direct = auto
         index._search_cache.clear()
-    generic = search_index(index.postings, query, index.n_docs, index.avgdl, 10)
-    assert_rank_identical(spark_hits(generic), ref, 10)
+    generic = FtsIndex(spark, index.index_dir, force_generic_scan=True)
+    assert_rank_identical(spark_hits(generic.search(query, 10)), ref, 10)
     brute = search_bruteforce(build_docs(corpus, num_blocks=2), query, 10,
                               index.n_docs, index.avgdl)
     assert_rank_identical(spark_hits(brute), ref, 10)
@@ -179,13 +178,11 @@ def test_index_build_deterministic(spark, tmp_path):
 def test_file_scan_path_matches_df_path(spark, built, query):
     """The pyarrow shard-scan search must equal the generic DataFrame
     scan bit-for-bit."""
-    from codebased_spark.operators.query import search_index
-
     index, _ = built
     assert index.posting_files
     fast = spark_hits(index.search(query, 32))
     generic = spark_hits(
-        search_index(index.postings, query, index.n_docs, index.avgdl, 32)
+        FtsIndex(spark, index.index_dir, force_generic_scan=True).search(query, 32)
     )
     assert [(d, n, round(s, 12)) for d, n, s in fast] == [
         (d, n, round(s, 12)) for d, n, s in generic
@@ -219,12 +216,10 @@ def _generic_rows(index, query, top_k):
     """(name_match, rank, doc_id) of the generic DataFrame scan — the
     independent reference for the shard-scan path (no shard list, no
     presence pruning, no task-level prune, per-block candidates)."""
-    from codebased_spark.operators.query import search_index
-
+    generic = FtsIndex(index.spark, index.index_dir, force_generic_scan=True)
     return sorted(
         (bool(r["name_match"]), round(float(r["rank"]), 12), int(r["doc_id"]))
-        for r in search_index(index.postings, query, index.n_docs,
-                              index.avgdl, top_k).collect()
+        for r in generic.search(query, top_k).collect()
     )
 
 
@@ -530,7 +525,6 @@ def test_cogrouped_deletes_match_fast_path(spark, tmp_path):
     """The generic DataFrame scan applies tombstones via a per-pblock
     cogroup (distributed — nothing on the driver); results must equal
     the pyarrow fast path, which reads deletes/pblock=N task-side."""
-    from codebased_spark.operators.query import search_index
     from codebased_spark.sources.corpus import CORPUS_SCHEMA
     from codebased_spark.streaming.incremental import incremental_update
 
@@ -549,8 +543,7 @@ def test_cogrouped_deletes_match_fast_path(spark, tmp_path):
 
     fast = spark_hits(index.search("hello world", 32))
     generic = spark_hits(
-        search_index(index.postings, "hello world", index.n_docs, index.avgdl, 32,
-                     deletes=index.deletes_df())
+        FtsIndex(spark, idx_dir, force_generic_scan=True).search("hello world", 32)
     )
     assert fast == generic
     live_paths = {r["path"] for r in index.search_with_metadata("hello world", 32).collect()}
@@ -699,7 +692,6 @@ def _readers(spark, idx_dir):
     """{reader: (FtsIndex, task count)} over one index: the direct and
     Spark feeders of the pyarrow reader, and the generic reader."""
     import codebased_spark.operators.query as q
-    from codebased_spark.plans.engine import FtsIndex
 
     direct, spark_fed = FtsIndex(spark, idx_dir), FtsIndex(spark, idx_dir)
     direct.driver_direct, spark_fed.driver_direct = True, False

@@ -15,11 +15,7 @@ from codebased_spark.operators.presence import (
     load_term_blocks,
     update_term_blocks,
 )
-from codebased_spark.operators.query import (
-    _prune_posting_files,
-    search_index,
-    search_index_files_batch,
-)
+from codebased_spark.operators.query import _prune_posting_files
 from codebased_spark.plans.engine import FtsIndex, build_index
 from codebased_spark.sources.corpus import CORPUS_SCHEMA, fixture_corpus
 
@@ -44,19 +40,26 @@ def _rows(df):
              float(r["score"])) for r in df.collect()]
 
 
+def _search(index, queries, direct, presence):
+    """The batch's rows on ``index`` with its feeder and presence
+    handle pinned (both restored after)."""
+    auto = index.driver_direct, index.term_blocks
+    index.driver_direct, index.term_blocks = direct, presence
+    try:
+        return index.search_batch(queries, 10)
+    finally:
+        index.driver_direct, index.term_blocks = auto
+
+
 def _pruned_and_unpruned(spark, index, query, presence):
     """One query's rows through the shard scan with presence pruning on
     both feeders, and through the generic DataFrame scan — an
     independent path that reads every block (no shard list at all)."""
-    pruned = [
-        _rows(search_index_files_batch(
-            spark, index.posting_files, [query], index.n_docs, index.avgdl,
-            10, presence=presence, direct=direct).drop("qid"))
-        for direct in (True, False)
-    ]
-    generic = _rows(search_index(
-        index.postings, query, index.n_docs, index.avgdl, 10))
-    return pruned, generic
+    pruned = [_rows(_search(index, [query], direct, presence).drop("qid"))
+              for direct in (True, False)]
+    generic = FtsIndex(spark, index.index_dir, force_generic_scan=True)
+    assert generic.term_blocks is None
+    return pruned, _rows(generic.search(query, 10))
 
 
 def test_build_creates_manifest_and_matches_bruteforce(spark, built):
@@ -90,12 +93,8 @@ def test_pruned_search_bit_identical(spark, built, query):
 
 def test_pruned_batch_bit_identical(spark, built):
     index, _ = built
-    base = search_index_files_batch(
-        spark, index.posting_files, QUERIES, index.n_docs, index.avgdl, 10)
-    pruned = search_index_files_batch(
-        spark, index.posting_files, QUERIES, index.n_docs, index.avgdl, 10,
-        presence=index.term_blocks)
-    key = lambda r: (int(r["qid"]), int(r["doc_id"]))  # noqa: E731
+    base = _search(index, QUERIES, False, None)
+    pruned = _search(index, QUERIES, False, index.term_blocks)
     assert sorted(map(tuple, pruned.collect()), key=lambda t: (t[0], t[1])) == \
         sorted(map(tuple, base.collect()), key=lambda t: (t[0], t[1]))
 

@@ -312,13 +312,13 @@ def test_call_guard_catches_a_changed_signature():
         "from codebased_spark.streaming.incremental import compact_index\n"
         "import codebased_spark.operators.query as q\n"
         "compact_index(spark, d, corpus, rebuild_phrase_df=True)\n"
-        "q._batch_candidates_fn(a, b, c, d, e, f, g)\n"
+        "q._candidate_body(a, b, c, d, e, f, g)\n"
         "compact_index(spark, d, corpus, num_blocks=4)\n"
     )
     checked, bad = _call_mismatches(tree)
     assert checked == 3
     assert [(ln, name) for ln, name, _ in bad] == [
-        (3, "compact_index"), (4, "q._batch_candidates_fn")]
+        (3, "compact_index"), (4, "q._candidate_body")]
 
 
 def test_trigram_code_defined_once():

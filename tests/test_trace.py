@@ -5,8 +5,9 @@ rescanned with known dfs, the rows of each collect and the phase
 timings. The record is
 filled from values the query path computes anyway, so each route's
 record is checked here against the private helpers that compute them
-(shard counts against _prune_batch, candidate rows against a re-run of
-the same scan), and each route's results against SQLite FTS5."""
+(shard counts against _prune_batch, the route and candidate rows
+against a re-run of the same scan through the reader dispatch), and
+each route's results against SQLite FTS5."""
 
 import pytest
 
@@ -57,24 +58,15 @@ def _pruned(index, queries):
     return q._prune_batch(index.posting_files, parsed, known, index.term_blocks)
 
 
-def _candidate_rows(spark, index, queries, direct):
-    """The candidate rows of the same scan, re-run through the helpers."""
-    if not index.posting_files:
-        parsed, known = _parsed(index, queries)
-        body = q._candidate_body([(qi, t) for qi, _, t in parsed], TOP_K,
-                                 index.avgdl, known)
-        return q._generic_scan(index.postings, index.deletes_df(),
-                               q._needed(parsed), body, q.BATCH_SCHEMA).count()
+def _candidate_rows(index, queries):
+    """(route, candidate rows) of the same scan, re-run through the
+    reader dispatch on the index's own reader and feeder."""
     files, parsed, known, needed = _pruned(index, queries)
-
-    def fn():
-        return q._batch_candidates_fn(
-            [(qi, t) for qi, _, t in parsed], needed,
-            index._task_deletes_dir(), TOP_K, index.avgdl, known)
-
-    if direct:
-        return len(q._direct_scan_rows(fn, q._direct_chunks(files)))
-    return q._scan_df(spark, files, fn(), q.BATCH_SCHEMA).count()
+    route, _n_tasks, scan = q._reader(
+        index, needed, {pb for pb, _ in files} or None, index.driver_direct)
+    body = q._candidate_body([(qi, t) for qi, _, t in parsed], TOP_K,
+                             index.avgdl, known)
+    return route, len(scan(body, q.BATCH_SCHEMA))
 
 
 def _search(index, oracle, query):
@@ -105,8 +97,9 @@ def test_direct_route(spark, built):
         ("direct", 0, 0)
     _assert_shards(index, ["hello world"], trace)
     assert trace["shards_scanned"] > 0
-    assert trace["candidate_rows"] == \
-        _candidate_rows(spark, index, ["hello world"], True) > 0
+    assert (trace["route"], trace["candidate_rows"]) == \
+        _candidate_rows(index, ["hello world"])
+    assert trace["candidate_rows"] > 0
 
 
 def test_spark_route_driver_tail(spark, built):
@@ -116,8 +109,9 @@ def test_spark_route_driver_tail(spark, built):
     trace = _search(index, oracle, "hello world")
     assert (trace["route"], trace["rescanned"]) == ("spark", 0)
     _assert_shards(index, ["hello world"], trace)
-    assert trace["candidate_rows"] == \
-        _candidate_rows(spark, index, ["hello world"], False) > 0
+    assert (trace["route"], trace["candidate_rows"]) == \
+        _candidate_rows(index, ["hello world"])
+    assert trace["candidate_rows"] > 0
     assert trace["collects"] == [trace["candidate_rows"]]
 
 
@@ -150,8 +144,9 @@ def test_generic_route(spark, built):
     trace = _search(index, oracle, "hello world")
     assert (trace["route"], trace["rescanned"]) == ("generic", 0)
     assert trace["shards_total"] is None and trace["shards_scanned"] is None
-    assert trace["candidate_rows"] == \
-        _candidate_rows(spark, index, ["hello world"], False) > 0
+    assert (trace["route"], trace["candidate_rows"]) == \
+        _candidate_rows(index, ["hello world"])
+    assert trace["candidate_rows"] > 0
 
 
 def test_pruned_to_zero_and_unparsable(spark, built):
@@ -176,8 +171,9 @@ def test_phrase_df_covered(spark, built):
     trace = _search(index, oracle, COVERED)
     assert (trace["route"], trace["covered"]) == ("spark", 1)
     _assert_shards(index, [COVERED], trace)
-    assert trace["candidate_rows"] == \
-        _candidate_rows(spark, index, [COVERED], False) > 0
+    assert (trace["route"], trace["candidate_rows"]) == \
+        _candidate_rows(index, [COVERED])
+    assert trace["candidate_rows"] > 0
 
     queries = [COVERED, "hello world", "zqxjkw notthere"]
     rows = index.search_batch(queries, TOP_K).collect()
@@ -185,8 +181,8 @@ def test_phrase_df_covered(spark, built):
     assert (trace["route"], trace["rescanned"], trace["covered"]) == \
         ("spark", 0, 1)
     _assert_shards(index, queries, trace)
-    assert trace["candidate_rows"] == \
-        _candidate_rows(spark, index, queries, False)
+    assert (trace["route"], trace["candidate_rows"]) == \
+        _candidate_rows(index, queries)
     for qi, qq in enumerate(queries):
         got = sorted(((int(r["doc_id"]), bool(r["name_match"]),
                        float(r["score"])) for r in rows if r["qid"] == qi),
