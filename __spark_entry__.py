@@ -565,8 +565,9 @@ def q_fts_index_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx_dir = tempfile.mkdtemp(prefix="gate_fts_idx_")
     try:
         index = build_index(spark, corpus, idx_dir, num_blocks=8)
-        # this entry pins the DISTRIBUTED plan (the gate corpus is small
-        # enough to auto-route direct, which has its own entry below)
+        # this entry pins the DISTRIBUTED plan (the route rule may send
+        # a single search of this store direct, which has its own entry
+        # below)
         index.driver_direct = False
         hits = index.search('"value"', K_ALL)
         out = (
@@ -664,11 +665,12 @@ def q_fts_hot_covered(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_fts_direct_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ZERO-JOB driver-direct read-through under the oracle (r5):
     the same real index as fts_bm25_index_path, searched with
-    driver_direct forced ON (the direct feeder of operators/query.run_search,
+    driver_direct pinned ON (the direct feeder of operators/query.run_search,
     the one query entry — driver-side pyarrow scan of the same task body,
-    numpy scoring, Arrow result relation, no Spark job). Same oracle SQL as
-    fts_bm25_index_path: cross-engine proof the small-index fast path
-    changes execution, not values."""
+    numpy scoring, Arrow result relation, no Spark job), whatever the
+    route rule would pick. Same oracle SQL as fts_bm25_index_path:
+    cross-engine proof the direct feeder changes execution, not
+    values."""
     import shutil
     import tempfile
 

@@ -410,16 +410,20 @@ _PHRASE_TABLE_SCHEMA = "phrase string, pblock int, df_all long, df_name long"
 
 def _phrase_block_stats(index, pts, pblocks=None):
     """[(pblock, phrase_idx, df_all, df_name)] over every block, or only
-    ``pblocks`` — the one scan behind build/update_phrase_df (one Spark
-    job; two behind the Spark reader), run through the query path's
-    reader dispatch (operators/query._reader), so on the reader the
-    index's searches use. Row count is bounded by
-    |phrases| x |blocks| (tiny), so no aggregation runs in the job; the
-    caller sums driver-side."""
+    ``pblocks`` — the one scan behind build/update_phrase_df, run
+    through the query path's reader dispatch (operators/query._reader),
+    so on the reader and by the route rule the index's searches use:
+    its work is phrases x shards read (one Spark job on the Spark
+    feeder, none direct; two behind the Spark reader). Row count is
+    bounded by |phrases| x |blocks| (tiny), so no aggregation runs in
+    the job; the caller sums driver-side."""
     from codebased_spark.operators.query import _reader
 
     needed = sorted({int(t) for ts in pts for t in ts})
-    _route, _n_tasks, scan = _reader(index, needed, pblocks)
+    n_shards = sum(pblocks is None or pb in pblocks
+                   for pb, _ in index.posting_files)
+    _route, _n_tasks, scan, _basis = _reader(
+        index, needed, pblocks, len(pts) * n_shards)
     return [(int(r["pblock"]), int(r["phrase_idx"]),
              int(r["df_all"]), int(r["df_name"]))
             for r in scan(_phrase_stats_body(pts), _PHRASE_STATS_SCHEMA)]

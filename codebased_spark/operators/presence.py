@@ -374,7 +374,7 @@ def load_term_blocks(index) -> "TermBlocks | None":
     except Exception:
         table_bytes = None
     # small tables preload whole (see TermBlocks.__init__): up to the
-    # direct-path regime's size, where cold-lookup latency (~27 ms)
+    # direct route's byte bound, where cold-lookup latency (~27 ms)
     # would be a meaningful share of a ~20 ms query
     preload = table_bytes is not None and 0 < table_bytes <= DRIVER_DIRECT_MAX_BYTES
     return TermBlocks(canonical_uri(data_dir), man.get("covered_pblocks", []),

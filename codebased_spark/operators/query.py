@@ -10,12 +10,15 @@ handle):
     |     charged per task; a batch over DRIVER_FINISH_MAX splits into
     |     sub-batches that fit (_sub_batches)
   reader dispatch (_reader), the ONE fork, on the reader FtsIndex
-    |  chose at open:
+    |  chose at open; the pyarrow reader's feeder is chosen per
+    |  (sub-)batch by the route rule (_direct_route) from the work the
+    |  batch will do after pruning:
     |    Spark   spark.range over the shard list -> mapInPandas
     |            (_scan_df): one Spark job
     |    direct  the same task body run on the driver
-    |            (_direct_scan_rows): no Spark job; small stores only
-    |            (DRIVER_DIRECT_MAX_BYTES / DRIVER_DIRECT_MAX_SHARDS)
+    |            (_direct_scan_rows): no Spark job; batches whose kept
+    |            shards, summed over their queries, and kept bytes are
+    |            under DRIVER_DIRECT_MAX_SHARDS / DRIVER_DIRECT_MAX_BYTES
     |    generic the Spark reader (_generic_scan), below
   pyarrow reader (_shard_reader), per shard:
     |  pyarrow read of the row groups holding the query trigrams
@@ -51,6 +54,9 @@ Every search fills one trace record (the ``trace`` dict argument;
 FtsIndex keeps it as ``last_trace``) from values the path computes
 anyway, so tracing adds no job, no collect and no branch: ``route``
 (direct / spark / generic, or none when nothing is scanned),
+``route_work`` and ``route_bytes`` (the figures the route rule chose
+it from; None on the generic reader, which has no route to choose;
+a search that scans more than once records its last scan's),
 ``shards_total`` and ``shards_scanned`` (before and after presence
 pruning; None behind the Spark reader, which has no shard list),
 ``covered`` (phrase-df-covered queries), ``rescanned`` (queries re-run
@@ -1209,42 +1215,48 @@ def _scan_df(spark, posting_files, fn, schema):
     return spark.range(0, len(files), 1, n_part).mapInPandas(outer, schema)
 
 
-def _reader(index, needed, pblocks=None, direct=False):
+def _reader(index, needed, pblocks, work):
     """THE reader dispatch: the one place a scan acts on the reader
-    FtsIndex chose at open. Returns (route, n_tasks, scan) for the
-    blocks of ``index`` in ``pblocks`` (None: every block), read for
-    the ``needed`` terms: ``scan(body, schema)`` runs a block body
+    FtsIndex chose at open. Returns (route, n_tasks, scan, basis) for
+    the blocks of ``index`` in ``pblocks`` (None: every block), read
+    for the ``needed`` terms: ``scan(body, schema)`` runs a block body
     (:func:`_candidate_body` or the phrase-df stats body) over them
     and returns the rows it yields, as ``schema`` rows; ``n_tasks``
-    counts the body instances, the unit :func:`_tail_bound` charges.
+    counts the body instances, the unit :func:`_tail_bound` charges;
+    ``basis`` is the (work, bytes) the route was chosen from.
 
     - ``index.posting_files`` listed: the pyarrow shard reader
-      (:func:`_shard_reader`), route ``direct`` when ``direct`` (the
-      driver runs it, :func:`_direct_scan_rows`: no Spark job), else
-      ``spark`` (:func:`_scan_df`: one Spark job);
+      (:func:`_shard_reader`), route ``direct`` when the route rule
+      (:func:`_direct_route`) says so for the caller's ``work`` and
+      the bytes of the shards read (the driver runs it,
+      :func:`_direct_scan_rows`: no Spark job), else ``spark``
+      (:func:`_scan_df`: one Spark job);
     - none listed (a store pyarrow cannot reach, or
       force_generic_scan): the Spark reader (:func:`_generic_scan`,
-      route ``generic``) over the posting DataFrame and the tombstone
-      rows — the only route that touches them."""
+      route ``generic``, basis (None, None)) over the posting
+      DataFrame and the tombstone rows — the only route that touches
+      them."""
     spark = index.spark
     if not index.posting_files:
         postings = index.postings
         if pblocks is not None:
             postings = postings.filter(F.col("pblock").isin(sorted(pblocks)))
         return "generic", _scan_tasks(spark), lambda body, schema: _generic_scan(
-            postings, index.deletes_df(), needed, body, schema).collect()
+            postings, index.deletes_df(), needed, body, schema).collect(), \
+            (None, None)
     files = [f for f in index.posting_files if pblocks is None or f[0] in pblocks]
+    nbytes = sum(index.shard_bytes[p] for _pb, p in files)
     deletes_dir = index._task_deletes_dir()
-    if direct:
+    if _direct_route(index, work, nbytes):
         chunks = _direct_chunks(files)
         return "direct", len(chunks), lambda body, _schema: _direct_scan_rows(
-            _shard_reader(needed, deletes_dir, body), chunks)
+            _shard_reader(needed, deletes_dir, body), chunks), (work, nbytes)
 
     def scan(body, schema):  # no shard in ``pblocks``: nothing to read
         return _scan_df(spark, files, _shard_reader(needed, deletes_dir, body),
                         schema).collect() if files else []
 
-    return "spark", _scan_tasks(spark, len(files)), scan
+    return "spark", _scan_tasks(spark, len(files)), scan, (work, nbytes)
 
 
 def run_search(index, queries: list[str], top_k: int = DEFAULT_TOP_K,
@@ -1277,7 +1289,7 @@ def run_search(index, queries: list[str], top_k: int = DEFAULT_TOP_K,
     parsed, known_idfs_by_qid = _parse_batch(
         queries, index.n_docs, phrase_dfs_by_query)
     trace["covered"] = len(known_idfs_by_qid)
-    files, parsed, known_idfs_by_qid, _ = _prune_batch(
+    files, parsed, known_idfs_by_qid, _, _ = _prune_batch(
         files, parsed, known_idfs_by_qid, index.term_blocks)
     trace["parse_prune_s"] = time.perf_counter() - t0
     if not parsed or top_k < 1:
@@ -1285,12 +1297,12 @@ def run_search(index, queries: list[str], top_k: int = DEFAULT_TOP_K,
     trace["shards_scanned"] = len(files) if files else None
 
     def feed(batch, known):
-        files_b, batch, known, needed = _prune_batch(
+        files_b, batch, known, needed, work = _prune_batch(
             files, batch, known, index.term_blocks)
         # every listed shard of the blocks kept (none listed: all blocks)
-        trace["route"], n_tasks, scan = _reader(
-            index, needed, {pb for pb, _ in files_b} or None,
-            index.driver_direct)
+        (trace["route"], n_tasks, scan,
+         (trace["route_work"], trace["route_bytes"])) = _reader(
+            index, needed, {pb for pb, _ in files_b} or None, work)
 
         def collect(share):
             return scan(_candidate_body(
@@ -1321,10 +1333,10 @@ def _new_trace(trace, shards_total, route="none") -> dict:
     """``trace`` (or a fresh dict) reset to the record of a search
     that scans nothing; the query path fills in what it does."""
     trace = {} if trace is None else trace
-    trace.update(route=route, rescanned=0, shards_total=shards_total,
-                 shards_scanned=0, covered=0, collects=[],
-                 candidate_rows=0, parse_prune_s=0.0, scan_collect_s=0.0,
-                 finish_s=0.0)
+    trace.update(route=route, route_work=0, route_bytes=0, rescanned=0,
+                 shards_total=shards_total, shards_scanned=0, covered=0,
+                 collects=[], candidate_rows=0, parse_prune_s=0.0,
+                 scan_collect_s=0.0, finish_s=0.0)
     return trace
 
 
@@ -1361,23 +1373,26 @@ def _batch_result_df(spark, out_rows) -> DataFrame:
     return spark.createDataFrame(tbl)
 
 
-# Read-through ceiling for the ZERO-JOB direct feeder: an index whose
-# entire posting store is at most this many bytes is "small" — the
-# embedded-engine regime the reference lives in (ONE repository,
-# "searches in milliseconds", single process). Median single search
-# over gen_corpus stores (local[4], 4 cores): direct wins ~3x at a
-# 1.5 MB, 4-shard store (60 ms vs 193 ms) but LOSES at a 14.8 MB,
-# 16-shard store (0.31 s vs 0.23 s — the GIL-bound block machinery
-# can't overlap once term-filtered reads grow), so the gate sits at
-# the conservative end of the crossover; above it every query keeps
-# the distributed plan.
+# The route rule's bounds (_direct_route), measured on local[4], 4
+# cores, with warm Python workers (crossover table in
+# BENCH_route_r15.json). The direct feeder runs a batch's task body
+# serially on the driver, so its cost grows with the shard visits the
+# batch makes (each query's kept shards, summed) and with the size of
+# those shards, while a Spark job pays a floor of ~0.15-0.2 s and
+# spreads the visits over its tasks. Work: at most this many shard
+# visits run direct. Over the first k shards of a 32-shard, 2.4 MB
+# store, a single query ran direct in 0.12 s against 0.22 s on Spark at
+# 16 shards and broke even at 32; 5 queries over 16 shards (80 visits)
+# took 0.32 s against 0.28 s.
+DRIVER_DIRECT_MAX_SHARDS = 16
+# Bytes: ...and the shards read hold at most this many bytes, since the
+# decode work per visit grows with the shard. Over a 14 MB, 32-shard
+# store a single query won direct through 8 shards (3.5 MB: 0.12-0.14 s
+# against 0.20 s) and broke even at 16 (7 MB); at 200k files it won on
+# one 4 MB shard and broke even on two. The presence manifest
+# (presence.load_term_blocks) also preloads whole tables up to this
+# size.
 DRIVER_DIRECT_MAX_BYTES = 4 * 1024 * 1024
-# ...and at most this many shards: the serial driver scan costs
-# ~per-block-work x n_blocks, so a small-BYTES store fragmented into
-# many blocks meets the distributed job floor (same probe: a 2.2 MB,
-# 32-shard store — direct 0.18 s vs distributed 0.17 s). Setting
-# FtsIndex.driver_direct pins either route regardless of both gates.
-DRIVER_DIRECT_MAX_SHARDS = 8
 # pyarrow's C++ reader releases the GIL, so a few reader threads
 # overlap I/O+decode without fighting the numpy block machinery
 DRIVER_DIRECT_THREADS = 8
@@ -1385,6 +1400,20 @@ DRIVER_DIRECT_THREADS = 8
 
 _DIRECT_POOL = None
 _DIRECT_POOL_LOCK = threading.Lock()
+
+
+def _direct_route(index, work, nbytes) -> bool:
+    """THE route rule: whether a (sub-)batch that will make ``work``
+    shard visits over shards holding ``nbytes`` bytes runs on the direct
+    feeder. ``index.driver_direct`` pins it (True: direct, False:
+    Spark); unpinned (None), it runs direct when both figures are under
+    their bounds. Concurrent callers do not change the verdict: sending
+    a batch to Spark while another runs direct was measured slower than
+    either feeder alone (BENCH_route_r15.json), since the direct body
+    holds the driver's GIL that the Spark job's driver side needs too."""
+    if index.driver_direct is not None:
+        return bool(index.driver_direct)
+    return work <= DRIVER_DIRECT_MAX_SHARDS and nbytes <= DRIVER_DIRECT_MAX_BYTES
 
 
 def _direct_pool():
@@ -1550,14 +1579,18 @@ def _prune_batch(posting_files, parsed, known_idfs_by_qid, presence):
     for query B emits nothing for query A whose set excluded it —
     same argument as single-query pruning). Queries whose own set is
     empty are dropped (they provably yield no rows). Returns
-    (files, parsed, known_idfs_by_qid, needed) where ``needed`` is the
-    surviving queries' sorted term-id union — dropped queries' terms
-    need not be read in the shared scan."""
+    (files, parsed, known_idfs_by_qid, needed, work) where ``needed``
+    is the surviving queries' sorted term-id union — dropped queries'
+    terms need not be read in the shared scan — and ``work`` sums the
+    shards each surviving query keeps (the route rule's work,
+    :func:`_direct_route`)."""
     if presence is None or not posting_files:
-        return posting_files, parsed, known_idfs_by_qid, _needed(parsed)
+        return posting_files, parsed, known_idfs_by_qid, _needed(parsed), \
+            len(posting_files) * len(parsed)
     keep_paths: dict = {}
     parsed2 = []
     known2 = {}
+    work = 0
     for qi, phrases, tids in parsed:
         files_q = _prune_posting_files(
             posting_files, tids, known_idfs_by_qid.get(qi), presence)
@@ -1566,10 +1599,11 @@ def _prune_batch(posting_files, parsed, known_idfs_by_qid, presence):
         parsed2.append((qi, phrases, tids))
         if qi in known_idfs_by_qid:
             known2[qi] = known_idfs_by_qid[qi]
+        work += len(files_q)
         for pb, p in files_q:
             keep_paths[(pb, p)] = None
     files = [fp for fp in posting_files if fp in keep_paths]
-    return files, parsed2, known2, _needed(parsed2)
+    return files, parsed2, known2, _needed(parsed2), work
 
 
 def _tail_bound(n_tasks, phrase_counts, top_k):
@@ -1613,8 +1647,11 @@ def _finish(spark, feed, parsed, known_idfs_by_qid, phrase_dfs_by_query,
     """The scoring tail, always on the driver (reference CTE
     codebased/search.py:240-302). ``feed(batch, known_idfs)`` gives a
     (sub-)batch's (batch, n_tasks, collect(share)) on the index's
-    reader (:func:`_reader`), presence-pruned to its queries. A batch runs as
-    :func:`_sub_batches`, one plain collect each, finished by
+    reader (:func:`_reader`), presence-pruned to its queries, on the
+    feeder the route rule picks for it. A batch runs as
+    :func:`_sub_batches`, each fed again (its own, narrower shard list
+    and its own route, whose task count sizes its share) and cut again
+    if that route has more tasks, one plain collect each, finished by
     :func:`_driver_tail` as it lands; queries that carried a marker
     then run once more as covered queries with their summed dfs."""
     out_rows: list = []
@@ -1622,21 +1659,21 @@ def _finish(spark, feed, parsed, known_idfs_by_qid, phrase_dfs_by_query,
     def run_pass(batch, known, dfs_by_qid):
         batch, n_tasks, collect = feed(batch, known)
         subs = _sub_batches(batch, known, n_tasks, top_k)
-        rescan: dict = {}
-        for sub, share in subs:
-            if len(subs) > 1:  # its own, narrower shard list
-                sub, _n, collect = feed(sub, known)
-            t = time.perf_counter()
-            rows = collect(share)
-            t_fin = time.perf_counter()
-            got, marked = _driver_tail(rows, sub, dfs_by_qid, n_docs,
-                                       avgdl, top_k)
-            out_rows.extend(got)
-            rescan.update(marked)
-            trace["collects"].append(len(rows))
-            trace["scan_collect_s"] += t_fin - t
-            trace["finish_s"] += time.perf_counter() - t_fin
-        return rescan
+        if len(subs) != 1:
+            rescan: dict = {}
+            for sub, _share in subs:
+                rescan.update(run_pass(sub, known, dfs_by_qid))
+            return rescan
+        t = time.perf_counter()
+        rows = collect(subs[0][1])
+        t_fin = time.perf_counter()
+        got, marked = _driver_tail(rows, batch, dfs_by_qid, n_docs,
+                                   avgdl, top_k)
+        out_rows.extend(got)
+        trace["collects"].append(len(rows))
+        trace["scan_collect_s"] += t_fin - t
+        trace["finish_s"] += time.perf_counter() - t_fin
+        return marked
 
     rescan = run_pass(parsed, known_idfs_by_qid, phrase_dfs_by_query)
     if rescan:

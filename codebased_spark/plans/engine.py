@@ -251,7 +251,8 @@ class FtsIndex:
     ``last_trace`` is the record of the most recent :meth:`search` or
     :meth:`search_batch` to return (None before the first): a plain
     dict with the route (direct, spark, generic, cache for a search
-    cache hit, none when nothing was scanned), shard counts before and
+    cache hit, none when nothing was scanned) and the work and bytes
+    the route rule chose it from, shard counts before and
     after presence pruning, the phrase-df-covered query count, the
     queries rescanned with the dfs their first pass counted, the rows
     of each collect and their sum, and seconds for parse+prune,
@@ -279,19 +280,13 @@ class FtsIndex:
         self.num_blocks = int(rec["num_blocks"])
         self.doc_stats = spark.read.schema(DOC_STATS_SCHEMA).parquet(
             _join(index_dir, "doc_stats"))
-        self.postings_bytes = 0
+        # {path: bytes} of the listed shards: the route rule's bytes
+        self.shard_bytes: dict[str, int] = {}
         self.posting_files = self._list_posting_files()
-        # zero-job read-through for small (embedded-regime) indexes:
-        # on when the whole posting store fits the byte and shard
-        # gates; assigning the attribute pins either route
-        from codebased_spark.operators.query import (
-            DRIVER_DIRECT_MAX_BYTES,
-            DRIVER_DIRECT_MAX_SHARDS,
-        )
-
-        self.driver_direct = bool(self.posting_files) and \
-            0 < self.postings_bytes <= DRIVER_DIRECT_MAX_BYTES and \
-            len(self.posting_files) <= DRIVER_DIRECT_MAX_SHARDS
+        # the feeder pin: None routes each (sub-)batch by the work it
+        # will do (operators/query._direct_route); True forces the
+        # zero-job driver-direct feeder, False the Spark one
+        self.driver_direct: "bool | None" = None
         self.deletes_dir = _join(index_dir, "deletes")
         self.has_deletes = self.fs.exists(self.deletes_dir)
         # Q13 search cache (codebased/index.py:186-209): per-(query, k)
@@ -356,12 +351,10 @@ class FtsIndex:
         scheme = "" if is_local(self.index_dir) else "remote"
         if self.index_dir.startswith("file:"):
             scheme = "file"
-        shards = _posting_shards(self.fs, self.index_dir)
-        self.postings_bytes = sum(size for _pb, _p, size in shards)  # direct-path gate
         out = []
-        for pb, path, _size in shards:
+        for pb, path, size in _posting_shards(self.fs, self.index_dir):
             if scheme == "":
-                out.append((pb, local_path(path)))
+                p = local_path(path)
             elif scheme == "file":
                 # local listings return POSIX paths; JVM listings return
                 # file:/ URIs — either way, ship a canonical file:// URI
@@ -369,9 +362,10 @@ class FtsIndex:
                 # remote store would
                 p = canonical_uri(path) if path.startswith("file:") \
                     else "file://" + local_path(path)
-                out.append((pb, p))
             else:
-                out.append((pb, canonical_uri(path)))
+                p = canonical_uri(path)
+            out.append((pb, p))
+            self.shard_bytes[p] = size
         if out and scheme != "":
             # Reachability probe with a REAL metadata call (ADVICE r03):
             # constructing an S3FileSystem succeeds even with no valid
@@ -433,7 +427,11 @@ class FtsIndex:
         unless it overflows DRIVER_FINISH_MAX or needs a rescan, that
         is one Spark job on the Spark feeder, two on the Spark reader
         (its shuffle map stage and the scan) and none on the
-        driver-direct route (the shape for offline batch scoring).
+        driver-direct feeder (the shape for offline batch scoring).
+        The feeder follows the route rule (operators/query.
+        _direct_route): a batch runs direct only while its queries'
+        kept shards, summed, and their bytes are small, so a batch of
+        many queries over many shards takes the Spark feeder.
         Returns (qid, doc_id, name_match, rank, score); rank-identical
         per query to :meth:`search` (tested)."""
         self.query_log.extend(queries)
@@ -441,7 +439,8 @@ class FtsIndex:
 
     def _search_batch(self, queries: list[str], top_k: int) -> DataFrame:
         """A batch through the one query entry (query.run_search), on
-        the reader this handle chose at open."""
+        the reader this handle chose at open and the feeder the route
+        rule chooses per (sub-)batch."""
         from codebased_spark.operators.query import run_search
 
         trace: dict = {}

@@ -1,11 +1,11 @@
-"""Zero-job driver-direct read-through (operators/query.py r5): for
-small (embedded-regime, single-repo-sized) indexes FtsIndex routes
-search/search_batch through a driver-side pyarrow scan — same reads,
-same block machinery, same scoring pipeline, NO Spark job. Results
-must be bit-identical to the distributed path in every shape (covered,
+"""Zero-job driver-direct read-through (operators/query.py r5): a
+(sub-)batch whose work is small runs through a driver-side pyarrow
+scan — same reads, same block machinery, same scoring pipeline, NO
+Spark job. Results must be bit-identical to the distributed path in every shape (covered,
 uncovered, tombstones, batch, empty) and rank-identical to FTS5,
-routing must obey the byte and shard gates and the ``driver_direct``
-pin, and the path must genuinely never launch the distributed scan."""
+routing must obey the route rule (operators/query._direct_route) and
+the ``driver_direct`` pin, and the path must genuinely never launch
+the distributed scan."""
 
 import pytest
 
@@ -33,7 +33,7 @@ def pair(spark, tmp_path_factory):
     build_index(spark, fixture_corpus(spark), idx_dir, num_blocks=4)
     direct = FtsIndex(spark, idx_dir)
     dist = FtsIndex(spark, idx_dir)
-    dist.driver_direct = False
+    direct.driver_direct, dist.driver_direct = True, False
     return direct, dist, idx_dir
 
 
@@ -42,22 +42,85 @@ def _hits(df):
              float(r["score"])) for r in df.collect()]
 
 
-def test_routing_flags(spark, pair, monkeypatch):
-    """The byte and shard gates pick the feeder at load; assigning
-    ``driver_direct`` pins it."""
+def _route_store(spark, tmp_path_factory):
+    """A 16-shard store: every file holds "server started" and "value",
+    and three hold a rare phrase found in no other file."""
+    from codebased_spark.sources.corpus import CORPUS_SCHEMA
+
+    rows = [(f"r{i % 12}", f"src/f{i}.py", "c" * 40, "python",
+             f"def handler_{i}():\n    return value + {i}  # server started\n")
+            for i in range(180)]
+    rows += [("rare", f"src/rare_{i}.py", "e" * 40, "python",
+              f'"""{RARE} module."""\nRARE = "{RARE} {i}"\n')
+             for i in range(3)]
+    idx_dir = str(tmp_path_factory.mktemp("route") / "idx")
+    build_index(spark, spark.createDataFrame(rows, CORPUS_SCHEMA), idx_dir,
+                num_blocks=16)
+    return idx_dir
+
+
+RARE = "zqvx_kw sentinel_jqzz"
+
+
+def _routed(spark, index, run):
+    """(rows, route, Spark jobs) of ``run(index)`` past the cache."""
+    index.clear_search_cache()
+    group = f"route_{id(index)}_{len(index.query_log)}"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        rows = sorted(tuple(r) for r in run(index).collect())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return rows, index.last_trace["route"], \
+        len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_routing_flags(spark, tmp_path_factory, monkeypatch):
+    """The route rule, read back from ``last_trace``: a single query
+    over a 16-shard store runs direct (no Spark job), a 32-query batch
+    on the same store runs on Spark, and under a byte bound the store
+    exceeds a rare phrase presence-pruned to a few shards still runs
+    direct while a query keeping every shard does not; both pins
+    override the rule. Results agree on every route."""
     import codebased_spark.operators.query as q
 
-    direct, dist, idx_dir = pair
-    assert direct.postings_bytes > 0
-    assert direct.driver_direct          # tiny index -> auto-on
-    assert not dist.driver_direct        # attribute pin respected
-    # each gate alone routes a store past it to the Spark feeder
-    monkeypatch.setattr(q, "DRIVER_DIRECT_MAX_BYTES", direct.postings_bytes - 1)
-    assert not FtsIndex(spark, idx_dir).driver_direct
+    idx_dir = _route_store(spark, tmp_path_factory)
+    auto, dist, direct = (FtsIndex(spark, idx_dir) for _ in range(3))
+    dist.driver_direct, direct.driver_direct = False, True
+    assert auto.driver_direct is None
+    assert len(auto.posting_files) == 16
+    single = lambda ix: ix.search("server started", 10)  # noqa: E731
+    batch = lambda ix: ix.search_batch(  # noqa: E731
+        [f"handler_{i} value" for i in range(32)], 10)
+    rare = lambda ix: ix.search(f'"{RARE}"', 10)  # noqa: E731
+
+    rows, route, jobs = _routed(spark, auto, single)
+    assert (route, jobs, auto.last_trace["route_work"]) == ("direct", 0, 16)
+    assert rows == _routed(spark, dist, single)[0]
+    rows, route, _ = _routed(spark, auto, batch)
+    assert route == "spark" and auto.last_trace["route_work"] > 16
+    assert rows == _routed(spark, direct, batch)[0]
+
+    # a byte bound the kept shards of the rare phrase fit, the store not
+    kept = sum(auto.shard_bytes[p] for _pb, p in
+               q._prune_batch(auto.posting_files,
+                              *q._parse_batch([f'"{RARE}"'], auto.n_docs, {}),
+                              auto.term_blocks)[0])
+    assert kept < sum(auto.shard_bytes.values())
+    monkeypatch.setattr(q, "DRIVER_DIRECT_MAX_BYTES", kept)
+    rows, route, _ = _routed(spark, auto, rare)
+    assert (route, auto.last_trace["route_bytes"]) == ("direct", kept)
+    assert 0 < auto.last_trace["route_work"] <= 3
+    assert rows == _routed(spark, dist, rare)[0] and len(rows) == 3
+    assert _routed(spark, auto, single)[1] == "spark"
+
+    # both pins override the rule
+    assert _routed(spark, direct, single)[1:] == ("direct", 0)
+    assert _routed(spark, direct, batch)[1] == "direct"
+    assert _routed(spark, dist, rare)[1] == "spark"
     monkeypatch.undo()
-    monkeypatch.setattr(q, "DRIVER_DIRECT_MAX_SHARDS",
-                        len(direct.posting_files) - 1)
-    assert not FtsIndex(spark, idx_dir).driver_direct
+    assert _routed(spark, dist, single)[1] == "spark"
 
 
 def test_direct_bit_identical_single_and_batch(spark, pair):
@@ -109,9 +172,8 @@ def test_direct_covered_and_tombstones(spark, tmp_path):
     build_phrase_df(spark, index, ["hello world", "hello", "zqxjkw"])
 
     direct = FtsIndex(spark, idx_dir)
-    assert direct.driver_direct
     dist = FtsIndex(spark, idx_dir)
-    dist.driver_direct = False
+    direct.driver_direct, dist.driver_direct = True, False
     for qq in ['"hello world"', '"hello world" hello', "hello",
                '"hello world" zqxjkw']:
         assert direct._covering_dfs(qq) is not None, qq

@@ -118,7 +118,8 @@ def sub_trigram(spark, tmp_path_factory):
 
 
 @pytest.mark.parametrize("query", SUB_TRIGRAM_QUERIES)
-def test_sub_trigram_phrase_drops_like_fts5(spark, sub_trigram, query):
+def test_sub_trigram_phrase_drops_like_fts5(spark, sub_trigram, query,
+                                            monkeypatch):
     """Every engine path ranks a query holding a sub-trigram phrase
     exactly as FTS5 does: the index on both scan feeders, the generic
     DataFrame scan and the brute-force scan."""
@@ -127,14 +128,12 @@ def test_sub_trigram_phrase_drops_like_fts5(spark, sub_trigram, query):
     index, oracle, corpus = sub_trigram
     ref = oracle_hits(oracle.search(query, 10))
     assert ref or query == '"ab" "cd"'  # the probe must match something
-    auto = index.driver_direct
     try:
         for direct in (True, False):
-            index.driver_direct = direct
+            monkeypatch.setattr(index, "driver_direct", direct)
             index._search_cache.clear()
             assert_rank_identical(spark_hits(index.search(query, 10)), ref, 10)
     finally:
-        index.driver_direct = auto
         index._search_cache.clear()
     generic = FtsIndex(spark, index.index_dir, force_generic_scan=True)
     assert_rank_identical(spark_hits(generic.search(query, 10)), ref, 10)
@@ -258,6 +257,7 @@ def test_batch_search_100_queries_sub_batches(spark, built, monkeypatch):
              "return", "port", "table", "merge"]
     queries = [f"{words[i % 10]} {words[(i * 3 + 1) % 10]}" for i in range(100)]
     want = {qi: _generic_rows(index, queries[qi], 10) for qi in range(0, 100, 11)}
+    monkeypatch.setattr(index, "driver_direct", True)
     n_tasks = len(q._direct_chunks(index.posting_files))
     cap = 10 * n_tasks * (2 + 2 * 10)  # ten queries at a 2*top_k share
     monkeypatch.setattr(q, "DRIVER_FINISH_MAX", cap)

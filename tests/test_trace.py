@@ -5,8 +5,10 @@ rescanned with known dfs, the rows of each collect and the phase
 timings. The record is
 filled from values the query path computes anyway, so each route's
 record is checked here against the private helpers that compute them
-(shard counts against _prune_batch, the route and candidate rows
-against a re-run of the same scan through the reader dispatch), and
+(shard counts against _prune_batch, the route against the route
+rule's verdict on the work and bytes it records, the route and
+candidate rows against a re-run of the same scan through the reader
+dispatch), and
 each route's results against SQLite FTS5."""
 
 import pytest
@@ -23,9 +25,9 @@ from tests.parity import (
     spark_hits,
 )
 
-FIELDS = {"route", "rescanned", "shards_total", "shards_scanned", "covered",
-          "collects", "candidate_rows", "parse_prune_s", "scan_collect_s",
-          "finish_s"}
+FIELDS = {"route", "route_work", "route_bytes", "rescanned", "shards_total",
+          "shards_scanned", "covered", "collects", "candidate_rows",
+          "parse_prune_s", "scan_collect_s", "finish_s"}
 COVERED = '"server started"'  # one phrase, the fixture's phrase-df table
 TOP_K = 10
 
@@ -60,10 +62,11 @@ def _pruned(index, queries):
 
 def _candidate_rows(index, queries):
     """(route, candidate rows) of the same scan, re-run through the
-    reader dispatch on the index's own reader and feeder."""
-    files, parsed, known, needed = _pruned(index, queries)
-    route, _n_tasks, scan = q._reader(
-        index, needed, {pb for pb, _ in files} or None, index.driver_direct)
+    reader dispatch on the index's own reader, with the work the route
+    rule chooses its feeder from."""
+    files, parsed, known, needed, work = _pruned(index, queries)
+    route, _n_tasks, scan, _basis = q._reader(
+        index, needed, {pb for pb, _ in files} or None, work)
     body = q._candidate_body([(qi, t) for qi, _, t in parsed], TOP_K,
                              index.avgdl, known)
     return route, len(scan(body, q.BATCH_SCHEMA))
@@ -88,14 +91,30 @@ def _assert_shards(index, queries, trace):
     assert trace["shards_scanned"] == len(files)
 
 
+def _assert_route(index, queries, trace):
+    """The record's route is the route rule's verdict on the record's
+    work and bytes, and those are the shards each query keeps, summed,
+    and the bytes of the shards the scan reads."""
+    parsed, known = _parsed(index, queries)
+    kept = [q._prune_posting_files(index.posting_files, tids, known.get(qi),
+                                   index.term_blocks)
+            for qi, _, tids in parsed]
+    read = {fp for files_q in kept for fp in files_q}
+    assert trace["route_work"] == sum(len(files_q) for files_q in kept)
+    assert trace["route_bytes"] == sum(index.shard_bytes[p] for _, p in read)
+    direct = q._direct_route(index, trace["route_work"], trace["route_bytes"])
+    assert trace["route"] == ("direct" if direct else "spark")
+
+
 def test_direct_route(spark, built):
     idx_dir, oracle = built
     index = FtsIndex(spark, idx_dir)
-    assert index.last_trace is None and index.driver_direct
+    assert index.last_trace is None and index.driver_direct is None
     trace = _search(index, oracle, "hello world")
     assert (trace["route"], trace["rescanned"], trace["covered"]) == \
         ("direct", 0, 0)
     _assert_shards(index, ["hello world"], trace)
+    _assert_route(index, ["hello world"], trace)
     assert trace["shards_scanned"] > 0
     assert (trace["route"], trace["candidate_rows"]) == \
         _candidate_rows(index, ["hello world"])
@@ -109,6 +128,7 @@ def test_spark_route_driver_tail(spark, built):
     trace = _search(index, oracle, "hello world")
     assert (trace["route"], trace["rescanned"]) == ("spark", 0)
     _assert_shards(index, ["hello world"], trace)
+    _assert_route(index, ["hello world"], trace)
     assert (trace["route"], trace["candidate_rows"]) == \
         _candidate_rows(index, ["hello world"])
     assert trace["candidate_rows"] > 0
@@ -144,6 +164,7 @@ def test_generic_route(spark, built):
     trace = _search(index, oracle, "hello world")
     assert (trace["route"], trace["rescanned"]) == ("generic", 0)
     assert trace["shards_total"] is None and trace["shards_scanned"] is None
+    assert trace["route_work"] is None and trace["route_bytes"] is None
     assert (trace["route"], trace["candidate_rows"]) == \
         _candidate_rows(index, ["hello world"])
     assert trace["candidate_rows"] > 0
@@ -171,6 +192,7 @@ def test_phrase_df_covered(spark, built):
     trace = _search(index, oracle, COVERED)
     assert (trace["route"], trace["covered"]) == ("spark", 1)
     _assert_shards(index, [COVERED], trace)
+    _assert_route(index, [COVERED], trace)
     assert (trace["route"], trace["candidate_rows"]) == \
         _candidate_rows(index, [COVERED])
     assert trace["candidate_rows"] > 0
@@ -181,6 +203,7 @@ def test_phrase_df_covered(spark, built):
     assert (trace["route"], trace["rescanned"], trace["covered"]) == \
         ("spark", 0, 1)
     _assert_shards(index, queries, trace)
+    _assert_route(index, queries, trace)
     assert (trace["route"], trace["candidate_rows"]) == \
         _candidate_rows(index, queries)
     for qi, qq in enumerate(queries):
@@ -233,6 +256,8 @@ def test_presence_prunes_a_query_with_hits(spark, tmp_path):
     assert len(got) == n_rare
     assert 0 < trace["shards_scanned"] <= n_rare
     assert trace["shards_total"] == len(index.posting_files)
+    _assert_route(index, [query], trace)
+    assert trace["route"] == "direct"
     assert got == spark_hits(unpruned.search(query, TOP_K))
     assert unpruned.last_trace["shards_scanned"] == len(index.posting_files)
 
@@ -257,7 +282,7 @@ def test_concurrent_searches_leave_whole_records(spark, built):
 
     idx_dir, _ = built
     index = FtsIndex(spark, idx_dir)
-    assert index.driver_direct  # no Spark job: the threads really race
+    index.driver_direct = True  # no Spark job: the threads really race
     queries = ["hello world", "zqxjkw notthere", "server started", "ab"]
     seen, errors = [], []
 

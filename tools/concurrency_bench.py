@@ -17,7 +17,9 @@ they compose.
 
 Usage: python tools/concurrency_bench.py [n_threads] [index_dir] [feeder]
        (feeder: direct or spark pins FtsIndex.driver_direct; default:
-       the index's own gate)
+       auto, the route rule. ``routes`` counts the routes the
+       throughput phase's searches took, read from ``last_trace`` after
+       each; concurrent callers may read one another's records)
 Env:   SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_SF_DIR
 Prints one JSON line.
 """
@@ -28,6 +30,7 @@ import json
 import os
 import sys
 import time
+from collections import Counter
 from concurrent.futures import ThreadPoolExecutor
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -125,11 +128,17 @@ def main() -> None:
     deterministic = all(r == baseline for r in results)
 
     # phase 2: throughput on distinct queries (cache-proof)
+    routes: dict[str, list] = {"sequential": [], "concurrent": []}
+
+    def search(q: str, phase: str) -> None:
+        index.search(q, 16).collect()
+        routes[phase].append(index.last_trace["route"])
+
     pool = _distinct_pool(48)
     index.clear_search_cache()
     t0 = time.time()
     for q in pool:
-        index.search(q, 16).collect()
+        search(q, "sequential")
     seq_sec = time.time() - t0
 
     pool2 = [q + " batch" for q in pool]  # distinct from phase-2a too
@@ -137,8 +146,7 @@ def main() -> None:
     chunks = [pool2[i::n_threads] for i in range(n_threads)]
     t0 = time.time()
     with ThreadPoolExecutor(max_workers=n_threads) as ex:
-        list(ex.map(lambda c: [index.search(q, 16).collect() for q in c],
-                    chunks))
+        list(ex.map(lambda c: [search(q, "concurrent") for q in c], chunks))
     par_sec = time.time() - t0
 
     print(json.dumps({
@@ -151,7 +159,9 @@ def main() -> None:
         "concurrent_qps": round(len(pool2) / par_sec, 2),
         "concurrency_speedup": round(seq_sec / par_sec, 2),
         "scheduler": scheduler,
-        "feeder": "direct" if index.driver_direct else "spark",
+        "feeder": {None: "auto", True: "direct", False: "spark"}[
+            index.driver_direct],
+        "routes": {phase: dict(Counter(r)) for phase, r in routes.items()},
         "cpus": cpus,
     }))
     spark.stop()

@@ -2,9 +2,17 @@
 bench corpus (200k and ~1M files), recording build throughput, per-query
 latency (cold path and phrase-df-covered path), the Spark jobs each
 search ran (counted through a job group), and from each search's
-``index.last_trace`` its route, the rows of each collect, how many
-queries it rescanned with known dfs and the shards presence pruning
-left it — the honest sandbox proxy for "would these plans survive 100x".
+``index.last_trace`` its route (with the work and bytes the route
+rule chose it from), the rows of each collect, how many queries it
+rescanned with known dfs and the shards presence pruning left it — the
+honest sandbox proxy for "would these plans survive 100x".
+
+``routes`` is the route crossover table: for each single query, the
+6-query batch, a 32-query batch and a rare phrase presence-pruned to
+the blocks of a 3-file commit planted after the timings, the route
+the rule picks unpinned with its ``route_work`` and ``route_bytes``,
+and the best-of-2 wall with each feeder pinned (uncovered, pins
+interleaved per rep).
 
 Hot-vs-cold comparison is INTERLEAVED per query (hot first, then cold,
 3 reps each, best-of per arm) rather than sequential passes: this VM's
@@ -51,6 +59,40 @@ QUERIES = {
 # gen_corpus seed of the synthetic files
 SEED = 42
 
+# the route table's 32-query batch: distinct gen_corpus word pairs
+BATCH32 = [f"{a} {b}" for a in ("alpha", "beta", "gamma", "delta", "sigma",
+                                "omega", "buffer", "stream")
+           for b in ("handler", "worker", "parser", "engine")]
+# planted in 3 files by a commit after the timings: trigrams no other
+# file has, so presence prunes the phrase to the commit's blocks
+RARE = "zqvx_kw sentinel_jqzz"
+
+
+def route_table(index, shapes: dict, reps: int = 2) -> dict:
+    """Per shape (name -> run()): the route the rule picks unpinned,
+    with the work and bytes it picked it from, and the best-of-``reps``
+    wall on each feeder pinned, the pins interleaved per rep."""
+    out = {}
+    for name, run in shapes.items():
+        index.driver_direct = None
+        index.clear_search_cache()
+        run()
+        trace = index.last_trace
+        row = {k: trace[k] for k in ("route", "route_work", "route_bytes",
+                                     "shards_scanned")}
+        secs: dict = {"direct": [], "spark": []}
+        for _ in range(reps):
+            for feeder, pin in (("direct", True), ("spark", False)):
+                index.driver_direct = pin
+                index.clear_search_cache()
+                t = time.time()
+                run()
+                secs[feeder].append(round(time.time() - t, 3))
+        index.driver_direct = None
+        out[name] = dict(row, direct_sec=min(secs["direct"]),
+                         spark_sec=min(secs["spark"]), reps=secs)
+    return out
+
 
 def corpus_source(n_files: int, sf_dir: str) -> dict:
     """What a scale corpus of ``n_files`` over ``sf_dir`` is made from."""
@@ -76,7 +118,12 @@ def main() -> None:
     from codebased_spark.functions.fts5 import query_phrases
     from codebased_spark.operators.phrasedf import build_phrase_df
     from codebased_spark.plans.engine import build_index
-    from codebased_spark.sources.corpus import documents_as_corpus, gen_corpus
+    from codebased_spark.sources.corpus import (
+        CORPUS_SCHEMA,
+        documents_as_corpus,
+        gen_corpus,
+    )
+    from codebased_spark.streaming.incremental import incremental_update
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -178,6 +225,23 @@ def main() -> None:
         batch[0].count()
         batch_sec = round(time.time() - tb, 3)
 
+        batch6_trace = dict(index.last_trace, jobs=batch_jobs)
+
+        index.phrase_dfs = {}
+        shapes = {name: (lambda qq=qq: index.search(qq, 32).collect())
+                  for name, qq in QUERIES.items()}
+        shapes["batch6"] = lambda: index.search_batch(
+            list(QUERIES.values()), 32).collect()
+        shapes["batch32"] = lambda: index.search_batch(BATCH32, 32).collect()
+        routes = route_table(index, shapes)
+        rare_rows = [("rare", f"src/rare_{i}.py", "e" * 40, "python",
+                      f'"""{RARE} module."""\nRARE = "{RARE} {i}"\n')
+                     for i in range(3)]
+        planted = incremental_update(
+            spark, idx_dir, spark.createDataFrame(rare_rows, CORPUS_SCHEMA))
+        routes.update(route_table(planted, {
+            "rare_phrase": lambda: planted.search(f'"{RARE}"', 32).collect()}))
+
         lat = sorted(v["sec"] for v in cold.values())
         lat_hot = sorted(v["sec"] for v in hot.values())
         print(json.dumps({
@@ -192,12 +256,13 @@ def main() -> None:
             "p50_hot_sec": lat_hot[len(lat_hot) // 2],
             "phrase_df_build_sec": phrase_df_sec,
             "batch6_per_query_sec": round(batch_sec / len(QUERIES), 3),
-            "batch6_trace": dict(index.last_trace, jobs=batch_jobs),
+            "batch6_trace": batch6_trace,
             "interleaved_reps": reps,
             "hw_np_sort8M_before_sec": probe_before,
             "hw_np_sort8M_after_sec": probe_after,
             "queries": cold,
             "queries_hot": hot,
+            "routes": routes,
         }), flush=True)
 
     spark.stop()
